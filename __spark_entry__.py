@@ -32,7 +32,7 @@ from hierarchical_to_relational_spark.operators.merge import (
     read_transcripts,
 )
 from hierarchical_to_relational_spark.operators.joins import asof_join, interval_join
-from hierarchical_to_relational_spark.operators.normalize import normalize_envelopes
+from hierarchical_to_relational_spark.operators.normalize import normalize_envelopes_fused
 from hierarchical_to_relational_spark.table import SnapshotTable
 from hierarchical_to_relational_spark.operators.merge import table_schema_for
 
@@ -255,8 +255,8 @@ def _run_cdc(spark: SparkSession, sf_dir: str, n_batches: int = 3, n_buckets: in
     table = SnapshotTable.create(os.path.join(root, "transcripts"), table_schema_for(turn_cols), n_buckets)
     for b in range(n_batches):
         batch = env.where(F.col("lsn") % n_batches == b)
-        upserts, deletes = normalize_envelopes(batch, text_mode="none")
-        apply_cdc_batch(spark, table, upserts, deletes, batch_id=f"replay-{b}")
+        apply_cdc_batch(spark, table, normalize_envelopes_fused(batch, text_mode="none"),
+                        batch_id=f"replay-{b}")
     return read_transcripts(spark, table).select("conv_id", "turn_idx", "role", "text", "ts")
 
 
@@ -288,8 +288,8 @@ def q_cdc_changes_since(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 = None
     for b in range(3):
         batch = env.where(F.col("lsn") % 3 == b)
-        upserts, deletes = normalize_envelopes(batch, text_mode="none")
-        apply_cdc_batch(spark, table, upserts, deletes, batch_id=f"replay-{b}")
+        apply_cdc_batch(spark, table, normalize_envelopes_fused(batch, text_mode="none"),
+                        batch_id=f"replay-{b}")
         if b == 1:
             v1 = table.current_version()
     return changes_since(spark, table, v1).select(
@@ -423,17 +423,17 @@ def _cdc_table(spark: SparkSession, sf_dir: str, n_batches: int = 3,
             for ref, parity in ((table, 0), (br, 1)):
                 if parity == 1:
                     v_main = table.current_version()
-                ups, dels = normalize_envelopes(
+                rows = normalize_envelopes_fused(
                     batch.where(F.col("lsn") % 2 == parity), text_mode="none")
-                apply_cdc_batch(spark, ref, ups, dels,
+                apply_cdc_batch(spark, ref, rows,
                                 batch_id=f"replay-{b}-p{parity}")
             # isolation: the branch commit never moved main's log
             assert table.current_version() == v_main
             assert table.merge_branch("stage", batch_id=f"merge-{b}") is True
             table.drop_branch("stage")
             continue
-        upserts, deletes = normalize_envelopes(batch, text_mode="none")
-        apply_cdc_batch(spark, table, upserts, deletes, batch_id=f"replay-{b}")
+        apply_cdc_batch(spark, table, normalize_envelopes_fused(batch, text_mode="none"),
+                        batch_id=f"replay-{b}")
         if after_batch is not None:
             after_batch(table, b)
     return table
@@ -609,14 +609,14 @@ def q_cdc_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     for b in (0, 1):  # narrow int batches
-        ups, dels = normalize_envelopes(
+        rows = normalize_envelopes_fused(
             envs(F.col("event_id") % 3 == b, (F.col("event_id") % 100).cast("int")),
             text_mode="none")
-        apply_cdc_batch(spark, table, ups, dels, batch_id=f"w-{b}")
-    ups, dels = normalize_envelopes(  # wide long batch: values > int32
+        apply_cdc_batch(spark, table, rows, batch_id=f"w-{b}")
+    rows = normalize_envelopes_fused(  # wide long batch: values > int32
         envs(F.col("event_id") % 3 == 2, (F.col("event_id") + F.lit(5_000_000_000)).cast("long")),
         text_mode="none")
-    apply_cdc_batch(spark, table, ups, dels, batch_id="w-2")
+    apply_cdc_batch(spark, table, rows, batch_id="w-2")
     assert table.schema()["score"].dataType == T.LongType()
     return read_transcripts(spark, table).select(
         "conv_id", "turn_idx", "role", "text", "score"

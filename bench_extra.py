@@ -106,7 +106,7 @@ def cdc_batch(spark, sf_dir) -> dict:
     segs = sorted(os.path.join(binlog, p) for p in os.listdir(binlog) if p.endswith(".parquet"))
     work = tempfile.mkdtemp(prefix="h2r-bx-")
     from hierarchical_to_relational_spark.sources import binlog as binlog_source
-    from hierarchical_to_relational_spark.operators.normalize import normalize_envelopes
+    from hierarchical_to_relational_spark.operators.normalize import normalize_envelopes_fused
 
     pipe = CdcPipeline(spark, binlog, os.path.join(work, "t"), os.path.join(work, "ck"),
                        n_buckets=32, text_mode="arrow")
@@ -117,8 +117,8 @@ def cdc_batch(spark, sf_dir) -> dict:
     env = binlog_source.read_binlog(spark, segs[2 * per:3 * per], pipe.envelope_schema)
     out = {}
     for mode in ("none", "arrow"):
-        ups, dels = normalize_envelopes(env, text_mode=mode)
-        out[f"normalize_{mode}"] = _t2(lambda u=ups: u)
+        rows = normalize_envelopes_fused(env, text_mode=mode)
+        out[f"normalize_{mode}"] = _t2(lambda r=rows: r)
     t0 = time.monotonic()
     pipe.replay_batch(segs[2 * per:3 * per], "b3")
     out["full_batch_s"] = round(time.monotonic() - t0, 3)

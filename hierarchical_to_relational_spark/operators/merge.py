@@ -173,25 +173,22 @@ def collapse_patches(df: DataFrame, schema: T.StructType) -> DataFrame:
 def apply_cdc_batch(
     spark: SparkSession,
     table: SnapshotTable,
-    upserts: DataFrame,
-    deletes: DataFrame | None,
+    batch: DataFrame,
     batch_id: str,
     mode: str = "mor",
-    collect_stats: bool = True,
 ) -> dict:
     """Apply one normalized change batch to the table, exactly-once.
 
-    upserts: conv_id, <turn columns...>, _lsn, _commit_ts  (from normalize)
-    deletes: conv_id, _lsn — one row per delete event; or ``None`` when
-             ``upserts`` is the FUSED frame from
-             ``normalize_envelopes_fused`` (r6): its _op='d' rows already
-             carry the tombstone shape (null payload/_commit_ts), so the
-             whole batch is one projection over one scan — no union of a
-             second delete-leg scan of the same source.
+    batch: conv_id, <turn columns...>, _lsn, _commit_ts, _op — the one
+           frame ``normalize_envelopes_fused`` emits: upsert ('u'), patch
+           ('p') and tombstone ('d') rows together, the tombstones already
+           in the stored shape (null payload, null _commit_ts).
 
     Widens the target schema first if the batch is additively wider; the
     commit (append or bucket-rewrite per ``mode``) is idempotent on
-    ``batch_id``.
+    ``batch_id``. Commit stats (rows, max applied LSN, tombstone/upsert
+    counts) come from the written files' parquet footers — no extra
+    Spark job.
     """
     t0 = time.monotonic()
     schema = table.schema()
@@ -208,7 +205,7 @@ def apply_cdc_batch(
     )
 
     have = {f.name: f.dataType for f in schema.fields}
-    incoming = [f for f in upserts.schema.fields if f.name not in (META_LSN, META_TS, META_OP)]
+    incoming = [f for f in batch.schema.fields if f.name not in (META_LSN, META_TS, META_OP)]
     changed = False
     for f in incoming:
         cur = have.get(f.name)
@@ -236,28 +233,16 @@ def apply_cdc_batch(
 
     # single select (not chained withColumn — each one re-runs Catalyst
     # analysis and the sum is real per-micro-batch driver constant)
-    bucket_of = table.bucket_col()
-    have_cols = set(upserts.columns)
-    ups_cols = [bucket_of(F.col("conv_id")).alias(META_BUCKET)]
+    have_cols = set(batch.columns)
+    cols = [table.bucket_col()(F.col("conv_id")).alias(META_BUCKET)]
     for fld in schema.fields:
         if fld.name in have_cols:
             # cast to the (possibly wider) table type; no-op casts fold away
-            ups_cols.append(F.col(fld.name).cast(fld.dataType).alias(fld.name))
-        elif fld.name == META_OP:  # pre-patch callers: everything full-row
-            ups_cols.append(F.lit("u").alias(META_OP))
+            cols.append(F.col(fld.name).cast(fld.dataType).alias(fld.name))
         else:  # older-schema batches: null-fill evolved cols
-            ups_cols.append(F.lit(None).cast(fld.dataType).alias(fld.name))
-    ups = upserts.select(*ups_cols)
-    if deletes is None:
-        batch = ups  # fused frame: tombstone rows are already inline
-    else:
-        dels = deletes.withColumn(META_BUCKET, bucket_of(F.col("conv_id")))
-        batch = ups.unionByName(_tombstone_rows(dels, schema))
+            cols.append(F.lit(None).cast(fld.dataType).alias(fld.name))
+    batch = batch.select(*cols)
 
-    # stats (rows, max applied LSN, tombstone/upsert counts) come from the
-    # written files' parquet footers — no extra Spark job (collect_stats
-    # retained in the signature for compatibility; footer stats are free)
-    del collect_stats
     if mode == "mor":
         committed = table.commit_append(batch, batch_id=batch_id)
         buckets: list[int] = []

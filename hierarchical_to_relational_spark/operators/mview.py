@@ -47,6 +47,7 @@ from pyspark.sql import types as T
 
 from hierarchical_to_relational_spark.operators.merge import (
     META_LSN,
+    META_OP,
     META_TS,
     apply_cdc_batch,
     changes_since,
@@ -201,9 +202,13 @@ class ConvAggregateView:
             *[F.col(n) for n in self.aggs],
             F.lit(2 * v_now).alias(META_LSN),
             F.current_timestamp().alias(META_TS),
+            F.lit("u").alias(META_OP),
         )
-        dels = dead.select("conv_id", F.lit(2 * v_now - 1).alias(META_LSN))
-        rep = apply_cdc_batch(self.spark, table, ups, dels,
+        # tombstone rows: every other column null (null _commit_ts too)
+        tombs = dead.select("conv_id", F.lit(2 * v_now - 1).alias(META_LSN),
+                            F.lit("d").alias(META_OP))
+        batch = ups.unionByName(tombs, allowMissingColumns=True)
+        rep = apply_cdc_batch(self.spark, table, batch,
                               batch_id=batch_id, mode="mor")
         rep["commit_mode"] = rep.pop("mode")
         self._write_cursor(v_now)

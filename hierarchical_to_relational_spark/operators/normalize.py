@@ -4,7 +4,9 @@ This is the engine's echo of the reference's hierarchical→relational
 flattening (HierarchyFlattener.java:127-351): a nested structure (change
 envelopes carrying arrays of turn structs) becomes flat relational rows,
 purely via Column algebra — ``explode`` + struct projection, zero per-row
-Python (the reference's zero-UDF discipline, SURVEY.md §2.1). The optional
+Python (the reference's zero-UDF discipline, SURVEY.md §2.1). There is one
+form, ``normalize_envelopes_fused``: upsert, patch and tombstone rows come
+out of a single projection over one scan of the envelopes. The optional
 text-normalization step is a **vectorized Arrow-native UDF** (batch
 transfer, no per-row Python), the only permitted Python on the hot path.
 
@@ -33,46 +35,20 @@ META_BUCKET = "_bucket"
 # spells out the remainder so the C++ pass is bit-identical to the
 # reference semantics (the \x0b\x0c\x1c-\x1f members of White_Space cannot
 # appear here — the control-strip pass removes them first). Fuzz-proven
-# equal to the pure-pandas body in test_cdc.
+# equal to the pure-pandas body in test_property_based.
 _WS_CLASS = (r"[\s\x{0085}\x{00a0}\x{1680}\x{2000}-\x{200a}"
              r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]+")
 
 
-def _normalize_series(texts: pd.Series) -> pd.Series:
-    """The normalize body, shared by the pandas_udf and its parity tests:
-    Unicode NFC, strip control chars, collapse whitespace, trim.
-
-    Round-5 split of where the time goes (645k real corpus texts): NFC map
-    0.13 s, control-strip 0.64 s, whitespace-collapse+trim 2.18 s — the
-    regex passes dominate 20× over NFC. So the regexes run in pyarrow's
-    RE2 (C++, 2.2× the pandas object-loop passes, measured bit-equal) and
-    only NFC stays Python-side — further gated by ``str.isascii`` (a C
-    check; NFC is the identity on ASCII), so a mostly-ASCII corpus skips
-    the normalize call entirely. This pyarrow's ``utf8_normalize`` remains
-    unusable (returns decomposed output for every form — re-verified on
-    pyarrow 16.1.0), else NFC would be C++ too."""
-    import unicodedata
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    # explicit string type: an all-None/empty batch would otherwise infer
-    # a null-typed array, which the regex kernels reject
-    try:
-        arr = pa.Array.from_pandas(texts, type=pa.string())
-    except (UnicodeEncodeError, pa.ArrowInvalid):
-        # a lone surrogate (invalid UTF-8) can't cross into Arrow. It can
-        # never arrive via Spark — Arrow batch transfer guarantees valid
-        # UTF-8 — but the direct-Python surface (tests, notebooks) may
-        # carry one; keep the contract by running that batch through the
-        # pure-pandas body, which Python str handles fine.
-        return _normalize_series_pandas(texts)
-    return _normalize_array(arr).to_pandas()
-
-
 def _normalize_array(arr):
-    """Arrow-native normalize body (r6): the batch stays a pyarrow Array
-    end to end. ascii gate vectorized — the old per-row
+    """Arrow-native normalize body (r6): Unicode NFC, strip control chars,
+    collapse whitespace, trim; the batch stays a pyarrow Array end to end.
+
+    The regex passes dominate NFC ~20× (round-5 split on 645k corpus
+    texts), so they run in pyarrow's RE2 (C++) and only NFC stays
+    Python-side. This pyarrow's ``utf8_normalize`` returns decomposed
+    output for every form (re-verified on pyarrow 16.1.0), else NFC would
+    be C++ too. The ascii gate is vectorized — the old per-row
     ``texts.map(...isascii...)`` lambda was a Python loop over EVERY row
     even when the whole batch is ASCII (the common corpus case);
     string_is_ascii is one C++ pass and the NFC map runs only on the
@@ -114,8 +90,7 @@ def normalize_text_arrow(texts: pa.Array) -> pa.Array:
     arrive and leave as pyarrow Arrays, skipping the pandas object-array
     round-trip the pandas_udf form paid on BOTH sides of a body that is
     pyarrow.compute anyway. Input from Spark's Arrow transfer is valid
-    UTF-8 by construction, so the surrogate fallback lives only on the
-    direct-Python surface (``_normalize_series``)."""
+    UTF-8 by construction, so no lone surrogate can reach the body."""
     import pyarrow as pa
 
     if isinstance(texts, pa.ChunkedArray):  # defensive: combine chunks
@@ -134,79 +109,30 @@ def turn_fields(envelope_df: DataFrame) -> list[T.StructField]:
     return list(payload["turns"].dataType.elementType.fields)
 
 
-def normalize_envelopes(
-    envelopes: DataFrame,
-    text_mode: str = "builtin",  # "builtin" | "arrow" | "none"
-) -> tuple[DataFrame, DataFrame]:
-    """Split an envelope batch into (upsert turn rows, delete watermarks).
-
-    Returns:
-      upserts — one row per (event, turn): all turn-struct columns +
-                ``_lsn``/``_commit_ts``/``_op`` metadata, plus ``conv_id``.
-                ``_op`` is 'u' for full-row upserts (op insert/update) and
-                'p' for PARTIAL upserts (op ``patch``): a patch turn sets
-                only its non-null columns, null columns mean "keep the
-                previous value" (merge-patch, the shape real CDC feeds send
-                for column-subset updates). Resolution semantics live in
-                operators.merge.resolve / collapse_patches.
-      deletes — ``(conv_id, _lsn)``: one row per delete EVENT
-                (whole-conversation tombstone). Not pre-aggregated (r6):
-                the per-conversation max is folded by ``resolve``'s
-                tombstone aggregation anyway (max is associative and
-                order-insensitive), and the old per-batch ``groupBy max``
-                bought nothing except an extra exchange + AQE stage
-                barrier in EVERY micro-batch's write job — the tombstone
-                leg now rides the same map stage as the upsert leg.
-                Duplicate / multiple delete rows per conversation are
-                collapsed by resolution exactly like duplicate upserts.
-    """
-    tfields = turn_fields(envelopes)
-    upserts = (
-        envelopes.where(F.col("op") != "delete")
-        .select(
-            F.col("conv_id"),
-            F.col("lsn").alias(META_LSN),
-            F.col("commit_ts").alias(META_TS),
-            F.when(F.col("op") == "patch", F.lit("p")).otherwise(F.lit("u")).alias(META_OP),
-            F.explode("payload.turns").alias("t"),
-        )
-        .select("conv_id", META_LSN, META_TS, META_OP, "t.*")
-    )
-    if text_mode == "arrow":
-        upserts = upserts.withColumn("text", normalize_text_arrow(F.col("text")))
-    elif text_mode == "builtin":
-        upserts = upserts.withColumn("text", normalize_text_builtin(F.col("text")))
-    elif text_mode != "none":
-        raise ValueError(f"unknown text_mode {text_mode!r}")
-    # stable column order: conv_id, turn columns, metadata
-    out_cols = ["conv_id"] + [f.name for f in tfields] + [META_LSN, META_TS, META_OP]
-    upserts = upserts.select(*out_cols)
-
-    deletes = envelopes.where(F.col("op") == "delete").select(
-        "conv_id", F.col("lsn").alias(META_LSN)
-    )
-    return upserts, deletes
-
-
 def normalize_envelopes_fused(
     envelopes: DataFrame,
     text_mode: str = "builtin",  # "builtin" | "arrow" | "none"
 ) -> DataFrame:
-    """ONE-SCAN variant of ``normalize_envelopes`` (r6): upsert turn rows
-    AND delete tombstone rows come out of a single projection over a
-    single pass of the envelope source, ``_op`` ∈ {'u','p','d'}. The
-    two-frame form unions two scan legs of the same segment files (the
-    delete leg narrow but still a second parquet read + a second source in
-    every streaming micro-batch); here delete events explode a one-element
-    null-turn array instead, so each yields exactly one row with every
-    turn column null — bit-identical to ``_tombstone_rows``'s shape
-    (null payload, null ``_commit_ts``, ``_lsn`` = the delete LSN).
-    Row-level semantics are pinned equal to the two-frame form by test:
-    upserts explode per turn (events with empty/null turn arrays drop),
-    patches keep ``_op='p'``, duplicate deletes stay duplicate rows (the
-    resolve tombstone max folds them, associatively, same as before).
+    """Flatten an envelope batch into ONE frame of turn rows (r6):
+    ``conv_id``, every turn-struct column, then ``_lsn``/``_commit_ts``/
+    ``_op``, from a single projection over a single pass of the envelope
+    source.
 
-    Feed the result to ``apply_cdc_batch(..., deletes=None)``."""
+    ``_op`` is 'u' for full-row upserts (op insert/update), 'p' for
+    PARTIAL upserts (op ``patch``: only non-null columns are set, null
+    means "keep the previous value" — merge-patch, the shape real CDC
+    feeds send for column-subset updates) and 'd' for whole-conversation
+    tombstones. Upserts explode per turn (events with empty/null turn
+    arrays drop). A delete event explodes a one-element null-turn array,
+    so it yields exactly one row with every turn column null, null
+    ``_commit_ts`` and ``_lsn`` = the delete LSN — ``_tombstone_rows``'s
+    stored shape. Delete rows are not pre-aggregated: duplicate deletes
+    stay duplicate rows and ``resolve``'s tombstone max folds them
+    (associative, order-insensitive), so no per-batch ``groupBy`` adds an
+    exchange to the write job. Resolution semantics live in
+    operators.merge.resolve / collapse_patches.
+
+    Feed the result to ``apply_cdc_batch``."""
     tfields = turn_fields(envelopes)
     turn_elem = envelopes.schema["payload"].dataType["turns"].dataType.elementType
     ts_type = envelopes.schema["commit_ts"].dataType

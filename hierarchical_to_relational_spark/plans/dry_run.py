@@ -22,41 +22,35 @@ def plan_flatten(input_schema: T.StructType, cfg: FlattenConfig) -> T.StructType
     return cfg.output_schema(input_schema)
 
 
-def plan_normalize(envelope_schema: T.StructType) -> tuple[T.StructType, T.StructType]:
-    """(upserts schema, deletes schema) the normalize stage will emit for a
-    given envelope schema — additive turn fields flow through."""
+def plan_normalize(envelope_schema: T.StructType) -> T.StructType:
+    """Schema of the one frame ``normalize_envelopes_fused`` emits for a
+    given envelope schema: upsert, patch and tombstone rows together —
+    additive turn fields flow through. ``_commit_ts`` is nullable because
+    tombstone rows carry null."""
     payload = envelope_schema["payload"].dataType
     turn_fields = list(payload["turns"].dataType.elementType.fields)
-    upserts = T.StructType(
+    return T.StructType(
         [T.StructField("conv_id", T.StringType(), False)]
         + turn_fields
         + [
             T.StructField(META_LSN, T.LongType(), False),
-            T.StructField(META_TS, T.TimestampType(), False),
+            T.StructField(META_TS, T.TimestampType(), True),
             T.StructField(META_OP, T.StringType(), False),
         ]
     )
-    deletes = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType(), False),
-            T.StructField(META_LSN, T.LongType(), True),
-        ]
-    )
-    return upserts, deletes
 
 
 def plan_cdc_table(envelope_schema: T.StructType) -> T.StructType:
     """Physical target-table schema for a given envelope schema (user
     columns + merge metadata), as the streaming driver will create it."""
-    upserts, _ = plan_normalize(envelope_schema)
-    user_fields = [f for f in upserts.fields if f.name not in (META_LSN, META_TS, META_OP)]
+    user_fields = [f for f in plan_normalize(envelope_schema).fields
+                   if f.name not in (META_LSN, META_TS, META_OP)]
     return table_schema_for(user_fields)
 
 
 def plan_pipeline(envelope_schema: T.StructType) -> dict[str, T.StructType]:
     """End-to-end schema propagation for the CDC pipeline: every stage
     boundary, resolvable before any data moves."""
-    upserts, deletes = plan_normalize(envelope_schema)
     table = plan_cdc_table(envelope_schema)
     read = T.StructType([f for f in table.fields if not f.name.startswith("_")])
-    return {"upserts": upserts, "deletes": deletes, "table": table, "read": read}
+    return {"batch": plan_normalize(envelope_schema), "table": table, "read": read}

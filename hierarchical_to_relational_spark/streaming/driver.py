@@ -93,7 +93,6 @@ class CdcPipeline:
         expire_every: int | None = None,
         retain_snapshots: int = 100,
         orphan_grace_seconds: float = 3600.0,
-        collect_stats: bool = True,
         source_format: str = "parquet",
         binpack_every: int | None = None,
         binpack_target_bytes: int = 64 << 20,
@@ -113,7 +112,6 @@ class CdcPipeline:
         self.retain_snapshots = retain_snapshots
         self.orphan_grace_seconds = orphan_grace_seconds
         self._batches_applied = 0
-        self.collect_stats = collect_stats
         self.source_format = source_format
         # cold-bucket file-count hygiene: every N batches, verbatim-merge
         # small delta dirs table-wide (no resolve shuffle, no base rewrite)
@@ -144,8 +142,7 @@ class CdcPipeline:
         # ONE pass over the segment files instead of two scan legs
         batch = normalize_envelopes_fused(envelopes, text_mode=self.text_mode)
         metrics = apply_cdc_batch(
-            self.spark, self.table, batch, None, batch_id=str(batch_id),
-            mode=self.mode, collect_stats=self.collect_stats,
+            self.spark, self.table, batch, batch_id=str(batch_id), mode=self.mode,
         )
         # merge-on-read: fold deltas down once they stack too deep (count
         # trigger) or grow too heavy (size trigger) — PARTIAL: only the

@@ -51,6 +51,7 @@ from __future__ import annotations
 
 import glob
 import json
+import logging
 import os
 import re
 import shutil
@@ -60,9 +61,12 @@ import uuid
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+log = logging.getLogger(__name__)
+
 SNAPSHOT_DIR = "_snapshots"
 DATA_DIR = "data"
 FILE_STATS_NAME = "_file_stats.json"  # per-commit-dir file min-max sidecar
+_WRITE_SALT = 8  # salt domain of the append write shuffle (_write_commit_data)
 
 # Parquet bloom filters on the merge key, for point lookups on files the
 # min-max sidecar CANNOT prune (hash-ordered delta appends span the full
@@ -193,9 +197,9 @@ def _bloom_maybe(bloom: dict, v, xxh64) -> bool:
 
 
 class _ListAccumulatorParam(AccumulatorParam):
-    """Accumulator param collecting lists of small tuples (the fold-mode
-    bloom payloads: (partition_id, col, m, k, b64) — a few hundred bytes
-    per written file). Module-level so executors can unpickle it."""
+    """Accumulator param collecting lists of small tuples (the fold
+    build's bloom payloads: (partition_id, col, m, k, b64) — a few hundred
+    bytes per written file). Module-level so executors can unpickle it."""
 
     def zero(self, value):
         return []
@@ -353,39 +357,6 @@ class SnapshotTable:
         self._ledger_stamp: tuple | None = None
         # per-commit-dir min-max sidecar memo (dirs are immutable)
         self._file_stats_cache: dict[str, dict | None] = {}
-        # Per-commit accounting source. "observe" piggybacks the per-bucket
-        # rows/max-LSN/tombstone aggregates on the WRITE JOB itself via
-        # df.observe — executor-side, zero extra pass, NO driver read of
-        # just-written data files. "pyarrow" reads the (bucket, lsn)
-        # columns driver-side. "auto" (default) picks by ROOT LOCALITY,
-        # from a round-5 measurement on a 3.4M-row commit: the driver
-        # pyarrow read costs ~150 ms (page-cached local files, vectorized
-        # numpy ≈ 45 ms per M rows, serial) while the observe aggregates
-        # cost ~1.2 s of parallel executor time (2·n_buckets+3 interpreted
-        # CollectMetrics expressions per row ≈ 0.35 µs/row) — so on a
-        # POSIX-local root the driver read wins outright, and on an object
-        # store (where a driver data read is remote I/O on the commit hot
-        # path, or impossible) observe is the only sane choice and its
-        # cost rides the cluster's parallelism. Either way the per-file
-        # min-max sidecar comes from parquet FOOTERS only (metadata pages,
-        # ~5 ms), never data pages.
-        self.stats_mode: str = "auto"
-        # secondary-index bloom build: "fold" (r6 default: built INSIDE
-        # the write job via a mapInArrow pass-through — the indexed
-        # commit makes ONE pass over the batch, nothing is re-read, and
-        # the bloom hashing is distributed across the write tasks),
-        # "pyarrow" (driver column re-read + DRIVER-side build: fine for
-        # tiny distinct sets, single-threaded disaster for the hash-like
-        # high-cardinality columns the index exists for), "spark"
-        # (executor-side applyInPandas RE-READ of the commit — superseded
-        # by fold, kept selectable), "auto" (= fold). 10^6-row commit,
-        # warm, local[32] (unindexed baseline ~1.0-1.2 s): 10^6-distinct
-        # index col — fold 2.4 s, spark 4.4-4.7 s, pyarrow 18.5-20.3 s;
-        # 64-distinct col — fold 1.57-1.59 s, pyarrow 1.63-1.65 s, spark
-        # 1.9-2.1 s. Fold also never re-reads the commit, which on an
-        # object store is remote I/O on the commit hot path. All paths
-        # produce bit-identical sidecars (tested).
-        self.bloom_mode: str = "auto"
 
     # ---------- snapshot log ----------
 
@@ -395,8 +366,8 @@ class SnapshotTable:
         """``index_cols``: non-key string/int columns to cover with a
         per-file Bloom sidecar at every commit — equality probes on
         hash-like high-cardinality columns (where min-max bounds span
-        everything) then prune at FILE granularity. Opt-in: building the
-        bloom reads the indexed column back once per commit."""
+        everything) then prune at FILE granularity. Opt-in: the bloom is
+        built inside every commit's write job (``_attach_bloom_fold``)."""
         t = SnapshotTable(root)
         os.makedirs(t._snap_dir, exist_ok=True)
         os.makedirs(t._data_dir, exist_ok=True)
@@ -1105,7 +1076,6 @@ class SnapshotTable:
         schema: T.StructType,
         repartition: bool,
         cluster_by: str | None = None,
-        n_buckets: int | None = None,
     ) -> tuple[str, set[str]]:
         """Write one FLAT commit dir (``data/c-<uuid>/part-*.parquet``) with
         ``_bucket`` stored as a data column; per-file bucket membership and
@@ -1176,58 +1146,15 @@ class SnapshotTable:
                 # a larger domain has a real cost: more distinct buckets
                 # per written file (8 -> ~all at domain 64), which defeats
                 # per-file bucket-set pruning on uncompacted deltas for
-                # single-key lookups. Default stays 8; H2R_WRITE_SALT
-                # overrides for skew-stress deployments.
-                salt = F.pmod(F.xxhash64(*[c for c in ordered if c != "_bucket"][:2]), F.lit(int(os.environ.get("H2R_WRITE_SALT", "8"))))
+                # single-key lookups. So the domain stays _WRITE_SALT = 8.
+                salt = F.pmod(F.xxhash64(*[c for c in ordered if c != "_bucket"][:2]), F.lit(_WRITE_SALT))
                 sort_cols = ["_bucket"] + (["conv_id"] if "conv_id" in ordered else [])
                 out = out.repartition(F.col("_bucket"), salt).sortWithinPartitions(*sort_cols)
-            # EXECUTOR-SIDE per-commit accounting (round 5): piggyback the
-            # per-bucket rows / max-LSN / tombstone aggregates on the write
-            # job itself via df.observe — a map-side accumulator pass, zero
-            # extra job, and (the point at scale) no driver-side read of
-            # just-written DATA files: at the production 10^7-events/batch
-            # trigger the old pyarrow path re-read ~160 MB of (bucket, lsn)
-            # columns per commit on the driver, which on an object store is
-            # remote I/O on the commit hot path. 2·n_buckets+3 conditional
-            # aggregates stay cheap through codegen for ≤256 buckets; wider
-            # specs fall back to the pyarrow read.
-            nb = self.n_buckets if n_buckets is None else n_buckets
-            obs = None
-            mode = self.stats_mode
-            if mode == "auto":
-                # remote roots (scheme://) can't be read driver-side with
-                # pyarrow/os — executor-side observe is the only path;
-                # local roots measured faster with the driver column read
-                mode = "observe" if "://" in self.root else "pyarrow"
-            if mode == "observe" and nb <= 256:
-                from pyspark.sql import Observation
-
-                cols = set(ordered)
-                aggs = [F.count(F.lit(1)).alias("rows")]
-                if "_lsn" in cols:
-                    aggs.append(F.max("_lsn").alias("max_lsn"))
-                if "turn_idx" in cols:
-                    aggs.append(F.sum(F.when(F.col("turn_idx").isNull(), 1)
-                                      .otherwise(0)).alias("deletes"))
-                for k in range(nb):
-                    aggs.append(F.sum(F.when(F.col("_bucket") == k, 1)
-                                      .otherwise(0)).alias(f"r{k}"))
-                    if "_lsn" in cols:
-                        aggs.append(F.max(F.when(F.col("_bucket") == k,
-                                                 F.col("_lsn"))).alias(f"l{k}"))
-                obs = Observation()
-                out = out.observe(obs, *aggs)
-            # secondary-index blooms, resolved BEFORE the write so fold
-            # mode can ride the write job itself (ONE pass over the batch)
+            # secondary-index blooms, resolved BEFORE the write so the
+            # build rides the write job itself (ONE pass over the batch)
             index_cols = [c for c in self.snapshot().get("index_cols", [])
                           if c in schema.fieldNames()]
-            bmode = self.bloom_mode
-            if index_cols and bmode == "auto":
-                # fold wins or ties in every measured regime (see the
-                # bloom_mode comment) and never re-reads the commit
-                bmode = "fold"
-            bloom_acc = None
-            if index_cols and bmode == "fold":
+            if index_cols:
                 out, bloom_acc = self._attach_bloom_fold(out, index_cols)
             writer = out.write.mode("overwrite")
             if cluster_by is None:
@@ -1241,42 +1168,27 @@ class SnapshotTable:
         finally:
             if persisted is not None:
                 persisted.unpersist()
-        observed = None
-        if obs is not None:
-            try:
-                observed = obs.get
-            except Exception:
-                observed = None  # metrics unavailable → pyarrow fallback
-        if observed is not None and observed.get("rows") is not None:
-            self.last_commit_stats, written = self._observed_stats(
-                observed, nb, commit_abs
-            )
-            _, file_stats, _ = self._footer_stats(commit_abs, read_data=False)
-        else:
-            self.last_commit_stats, file_stats, written = self._footer_stats(commit_abs)
+        self.last_commit_stats, file_stats, written = self._footer_stats(commit_abs)
         # per-file min-max sidecar (Iceberg manifest-entry stats analog):
         # read-side file pruning reads this tiny JSON instead of footers.
         # Lives inside the commit dir ("_"-prefixed → invisible to Spark
         # scans) so snapshot expiration GCs it with the data.
         if index_cols:
-            if bmode == "fold":
-                self._attach_fold_blooms(bloom_acc, file_stats)
-            elif bmode == "spark":
-                self._build_bloom_sidecar_spark(
-                    df.sparkSession, commit_abs, file_stats, index_cols)
-            else:
-                self._build_bloom_sidecar(commit_abs, file_stats, index_cols)
+            self._attach_fold_blooms(bloom_acc, file_stats)
         with open(os.path.join(commit_abs, FILE_STATS_NAME), "w") as f:
             json.dump(file_stats, f)
         return commit_rel, written
 
     @staticmethod
     def _attach_bloom_fold(out: DataFrame, index_cols: list[str]):
-        """FOLD-mode bloom build (r6, VERDICT r5 next-round #2): wrap the
-        write input in a mapInArrow PASS-THROUGH that accumulates each
-        partition's distinct indexed values while the batch streams to the
-        parquet writer in the SAME task — the indexed commit makes ONE
-        pass over the batch, nothing is re-read afterwards. The finished
+        """The secondary-index bloom build (r6 "fold", VERDICT r5 next-round
+        #2): wrap the write input in a mapInArrow PASS-THROUGH that
+        accumulates each partition's distinct indexed values while the
+        batch streams to the parquet writer in the SAME task — the indexed
+        commit makes ONE pass over the batch, nothing is re-read
+        afterwards. 10^6-row commit, 10^6-distinct index column, local[32]:
+        2.4 s, against 4.4-4.7 s for an executor-side re-read of the commit
+        and 18.5-20.3 s for a driver-side pyarrow build. The finished
         blooms (a few hundred bytes per file) travel to the driver through
         an accumulator, not the filesystem, so the path works unchanged on
         object-store roots. Write partitions map 1:1 to ``part-NNNNN-*``
@@ -1315,13 +1227,17 @@ class SnapshotTable:
 
     @staticmethod
     def _attach_fold_blooms(acc, file_stats: dict) -> None:
-        """Driver half of fold mode: match each accumulated bloom to its
-        written file by the ``part-NNNNN`` partition-id prefix."""
+        """Driver half of the fold build: match each accumulated bloom to
+        its written file by the ``part-NNNNN`` partition-id prefix. A
+        bloom whose partition matches no file is dropped with a warning;
+        pruning stays correct (a file without a bloom is never pruned by
+        one), only the index loses its reach."""
         by_pid: dict[tuple[int, str], dict] = {}
         for pid, col, m, k, b64 in (acc.value or []):
             by_pid.setdefault((int(pid), col), {"m": int(m), "k": int(k), "b64": b64})
         if not by_pid:
             return
+        matched: set[int] = set()
         for rel, st in file_stats.items():
             try:
                 pid = int(rel.split("-")[1])
@@ -1330,117 +1246,11 @@ class SnapshotTable:
             blooms = {col: bloom for (p, col), bloom in by_pid.items() if p == pid}
             if blooms:
                 st["bloom"] = blooms
-
-    @staticmethod
-    def _build_bloom_sidecar(commit_abs: str, file_stats: dict,
-                             index_cols: list[str]) -> None:
-        """Per-file Bloom filters for the table's ``index_cols``, stored in
-        the same sidecar the min-max bounds live in. One column-pruned
-        pyarrow read per indexed column per file (opt-in at table create /
-        enable_index); ~9.6 bits per distinct value ≈ 1% false-keep — a
-        false keep only costs a wasted file scan, never wrong results
-        (pruning stays superset semantics). This is the Iceberg/parquet
-        bloom idea lifted to the MANIFEST level: the probe consults a tiny
-        JSON instead of opening every candidate file's footer."""
-        import pyarrow.parquet as papq
-
-        from hierarchical_to_relational_spark.functions.xxh64 import xxh64
-
-        for rel, st in file_stats.items():
-            path = os.path.join(commit_abs, rel)
-            pf = papq.ParquetFile(path)
-            present = {pf.metadata.schema.column(i).name
-                       for i in range(pf.metadata.num_columns)}
-            blooms = {}
-            for col in index_cols:
-                if col not in present:
-                    continue
-                vals = set(pf.read(columns=[col]).column(0).to_pylist())
-                vals.discard(None)
-                if vals:
-                    blooms[col] = _bloom_build(vals, xxh64)
-            if blooms:
-                st["bloom"] = blooms
-
-    @staticmethod
-    def _build_bloom_sidecar_spark(spark, commit_abs: str, file_stats: dict,
-                                   index_cols: list[str]) -> None:
-        """EXECUTOR-SIDE twin of ``_build_bloom_sidecar``: one Spark job
-        reads the just-written files where they live (remote object store
-        included — the reason this path exists: the pyarrow variant is a
-        driver-side re-read of the indexed columns, which on s3://-style
-        roots is remote IO on the commit path), groups rows by source file,
-        and builds each file's per-column bloom INSIDE an applyInPandas
-        task. Only the finished blooms — a few hundred bytes per file —
-        travel to the driver. Bit-identical to the pyarrow build (bloom
-        bits are an order-independent OR over the distinct-value set, and
-        sizing depends only on the distinct count), asserted by test."""
-        import pandas as pd
-
-        from pyspark.sql import functions as F
-
-        from hierarchical_to_relational_spark.functions.xxh64 import xxh64
-
-        df = spark.read.parquet(commit_abs)
-        present = [c for c in index_cols if c in df.columns]
-        if not present:
-            return
-        # integral pandas columns go float under nulls; remember which
-        # columns must coerce back to int for the canonical byte form
-        integral = {f.name for f in df.schema.fields
-                    if f.name in present and f.dataType.typeName()
-                    in ("byte", "short", "integer", "long")}
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = []
-            fname = os.path.basename(pdf["_f"].iloc[0])
-            for col in present:
-                vals = set(pdf[col].dropna().tolist())
-                if col in integral:
-                    vals = {int(v) for v in vals}
-                if vals:
-                    b = _bloom_build(vals, xxh64)
-                    out.append((fname, col, b["m"], b["k"], b["b64"]))
-            return pd.DataFrame(out, columns=["file", "col", "m", "k", "b64"])
-
-        rows = (
-            df.select(F.input_file_name().alias("_f"), *present)
-            .groupBy("_f")
-            .applyInPandas(build, "file string, col string, m long, k int, b64 string")
-            .collect()
-        )
-        for r in rows:
-            if r["file"] in file_stats:
-                file_stats[r["file"]].setdefault("bloom", {})[r["col"]] = {
-                    "m": int(r["m"]), "k": int(r["k"]), "b64": r["b64"],
-                }
-
-    @staticmethod
-    def _observed_stats(m: dict, nb: int, commit_abs: str) -> tuple[dict, dict]:
-        """Executor-computed commit metrics (from the write job's
-        ``df.observe`` row) → (metrics, written-bytes manifest). Per-bucket
-        byte attribution is rows-proportional across the COMMIT (the
-        pyarrow fallback attributes within each file) — manifest bytes feed
-        compaction pressure, where commit-level proportionality is just as
-        good and costs nothing."""
-        rows = int(m["rows"])
-        bucket_rows = {str(k): int(m[f"r{k}"]) for k in range(nb) if m.get(f"r{k}")}
-        bucket_max_lsn = {str(k): int(m[f"l{k}"]) for k in range(nb)
-                          if m.get(f"l{k}") is not None and bucket_rows.get(str(k))}
-        deletes = int(m.get("deletes") or 0)
-        total_bytes = sum(os.path.getsize(f)
-                          for f in glob.glob(os.path.join(commit_abs, "*.parquet")))
-        written = {b: int(round(total_bytes * r / rows))
-                   for b, r in bucket_rows.items()} if rows else {}
-        metrics = {
-            "rows_written": rows,
-            "max_lsn": None if m.get("max_lsn") is None else int(m["max_lsn"]),
-            "deletes": deletes,
-            "upserts": rows - deletes,
-            "bucket_max_lsn": bucket_max_lsn,
-            "bucket_rows": bucket_rows,
-        }
-        return metrics, written
+                matched.add(pid)
+        unmatched = sorted({p for p, _ in by_pid} - matched)
+        if unmatched:
+            log.warning("bloom index: blooms of write partitions %s match no "
+                        "written file and are dropped", unmatched)
 
     @staticmethod
     def _footer_stats(
@@ -1449,7 +1259,6 @@ class SnapshotTable:
         tombstone_null_col: str = "turn_idx",
         key_col: str = "conv_id",
         bucket_col: str = "_bucket",
-        read_data: bool = True,
     ) -> tuple[dict, dict, dict]:
         """Commit metrics + per-file pruning stats + per-bucket accounting,
         driver-side with NO Spark job. Returns ``(metrics, file_stats,
@@ -1474,7 +1283,9 @@ class SnapshotTable:
         max-LSN; bytes are attributed rows-proportionally within each
         file. The files were written this instant (page-cached) and two
         int64 columns of even a 10^7-row production batch are ~160 MB of
-        vectorized C scanning — cheap, exact, and no Spark job, where
+        vectorized C scanning — cheap, exact, and no Spark job (round 5,
+        3.4M-row commit: ~150 ms, against ~1.2 s of executor time for the
+        same aggregates piggybacked on the write job), where
         footer row-group stats alone could not attribute LSN watermarks to
         buckets inside hash-scattered delta files."""
         import numpy as np
@@ -1575,7 +1386,7 @@ class SnapshotTable:
                 "cols": {c: mm for c, mm in col_mm.items() if mm is not None},
             }
             # exact per-bucket rows + max-LSN from the data columns
-            if read_data and bucket_col in names and md.num_rows > 0:
+            if bucket_col in names and md.num_rows > 0:
                 cols = [bucket_col] + ([lsn_col] if lsn_col in names else [])
                 tbl = pf.read(columns=cols)
                 b = tbl.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
@@ -1851,7 +1662,6 @@ class SnapshotTable:
         schema = self.schema()
         commit_rel, written = self._write_commit_data(
             df, schema, repartition=True, cluster_by=cluster_by,
-            n_buckets=new_n_buckets,
         )
 
         def update(live: dict) -> dict:

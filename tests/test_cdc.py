@@ -817,29 +817,22 @@ def test_csv_binlog_embedded_newlines(spark, tmp_path):
     assert got2 == got
 
 
-def test_fused_normalize_equals_two_frame_form(spark, tmp_path):
-    """r6 single-scan normalize: the fused frame (upserts + inline
-    tombstone rows, _op ∈ u/p/d) must be row-for-row identical to the
-    legacy two-frame form unioned through apply_cdc_batch's tombstone
-    shaping — across text modes and the edge cases (duplicate deletes,
-    empty turn arrays dropping, a delete that still carries turns)."""
-    from pyspark.sql import functions as F
-
+def test_fused_normalize_pinned_rows(spark, tmp_path):
+    """The normalize stage's one frame (upserts + inline tombstone rows,
+    _op ∈ u/p/d), pinned row for row to literal expected rows in every
+    text mode, across the edge cases: a patch keeps _op='p', duplicate
+    deletes stay two rows, an empty turn array drops, a delete carrying
+    turns still yields exactly one all-null tombstone row with a null
+    _commit_ts. Applied to a table, the stored state is pinned too."""
     from hierarchical_to_relational_spark.operators.merge import (
         apply_cdc_batch,
-        read_transcripts,
         table_schema_for,
     )
     from hierarchical_to_relational_spark.operators.normalize import (
-        META_LSN,
-        META_OP,
-        META_TS,
-        normalize_envelopes,
         normalize_envelopes_fused,
         turn_fields,
     )
     from hierarchical_to_relational_spark.table.snapshot_table import SnapshotTable
-    from pyspark.sql import types as T
 
     env = _env_rows(spark, [
         (1, "insert", "cA", [(0, "user", "  hello\t world ", None),
@@ -851,33 +844,38 @@ def test_fused_normalize_equals_two_frame_form(spark, tmp_path):
         (6, "update", "cC", [(0, "user", None, None)]),
         (7, "delete", "cA", [(0, "x", "y", "z")]),  # delete carrying turns
     ])
-    for mode in ("none", "builtin", "arrow"):
-        ups, dels = normalize_envelopes(env, text_mode=mode)
-        types = {f.name: f.dataType for f in ups.schema.fields}
-        tomb = dels.select(
-            "conv_id",
-            *[F.lit(None).cast(types[c]).alias(c) for c in ups.columns
-              if c not in ("conv_id", META_LSN, META_TS, META_OP)],
-            F.col(META_LSN),
-            F.lit(None).cast("timestamp").alias(META_TS),
-            F.lit("d").alias(META_OP),
-        ).select(*ups.columns)
-        legacy = ups.unionByName(tomb)
+    ts = pd.Timestamp("2026-01-01").to_pydatetime()
+    # text of lsn 1 turn 0 and lsn 2, per mode: builtin collapses
+    # whitespace and trims (Java \s leaves \x01); arrow also strips
+    # control chars
+    texts = {
+        "none": ("  hello\t world ", "h\x01i"),
+        "builtin": ("hello world", "h\x01i"),
+        "arrow": ("hello world", "hi"),
+    }
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts",
+            "_lsn", "_commit_ts", "_op"]
+    for mode, (t1, t2) in texts.items():
         fused = normalize_envelopes_fused(env, text_mode=mode)
-        assert fused.exceptAll(legacy).count() == 0, mode
-        assert legacy.exceptAll(fused).count() == 0, mode
+        assert fused.columns == cols, mode
+        want = [
+            ("cA", 0, "user", t1, None, ts, 1, ts, "u"),
+            ("cA", 1, "assistant", "hi", "bash", ts, 1, ts, "u"),
+            ("cA", 0, None, t2, None, ts, 2, ts, "p"),
+            ("cB", None, None, None, None, None, 3, None, "d"),
+            ("cB", None, None, None, None, None, 4, None, "d"),
+            ("cC", 0, "user", None, None, ts, 6, ts, "u"),
+            ("cA", None, None, None, None, None, 7, None, "d"),
+        ]
+        got = sorted((tuple(r) for r in fused.collect()),
+                     key=lambda r: (r[6], -1 if r[1] is None else r[1]))
+        assert got == want, mode
 
-    # end-to-end: two tables, one applied two-frame, one fused — the
-    # stored state must be frame-equal
+    # end-to-end: cA and cB die by tombstone, cC's update survives
     base_cols = [T.StructField("conv_id", T.StringType(), False)] + turn_fields(env)
-    t_leg = SnapshotTable.create(str(tmp_path / "legacy"),
-                                 table_schema_for(base_cols), n_buckets=4)
-    t_fus = SnapshotTable.create(str(tmp_path / "fused"),
-                                 table_schema_for(base_cols), n_buckets=4)
-    ups, dels = normalize_envelopes(env, text_mode="none")
-    apply_cdc_batch(spark, t_leg, ups, dels, batch_id="b0")
-    apply_cdc_batch(spark, t_fus, normalize_envelopes_fused(env, text_mode="none"),
-                    None, batch_id="b0")
-    a = read_transcripts(spark, t_leg)
-    b = read_transcripts(spark, t_fus)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    t = SnapshotTable.create(str(tmp_path / "t"), table_schema_for(base_cols), n_buckets=4)
+    apply_cdc_batch(spark, t, normalize_envelopes_fused(env, text_mode="none"),
+                    batch_id="b0")
+    got = [tuple(r) for r in read_transcripts(spark, t)
+           .select("conv_id", "turn_idx", "role", "text", "tool", "ts").collect()]
+    assert got == [("cC", 0, "user", None, None, ts)]

@@ -30,6 +30,28 @@ def test_query_runs_and_has_rows(spark, name):
     assert df.count() > 0, f"{name} returned no rows at sf0.001"
 
 
+# the CDC engine's gate rows: every cdc_* query plus the normalize round trip
+CDC_GATE = sorted(q for q in E.queries() if q.startswith("cdc_")) + ["normalize_roundtrip"]
+
+
+@pytest.fixture(scope="module")
+def duck():
+    from tools.check_oracle import connect
+
+    con = connect(SF)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", CDC_GATE)
+def test_cdc_gate_matches_oracle(spark, duck, name):
+    """Exact parity with the DuckDB oracle (the gate's comparison), not
+    just a non-empty result."""
+    from tools.check_oracle import compare
+
+    assert compare(name, E.queries()[name](spark, SF), duck, E.oracle_sql()[name])
+
+
 def test_entry_smoke(spark):
     df = E.entry(spark)
     assert df.schema.simpleString() == (

@@ -271,12 +271,12 @@ def test_mview_action(spark, tmp_path, capsys, table):
     from hierarchical_to_relational_spark.operators.mview import ConvAggregateView
     from hierarchical_to_relational_spark.operators.merge import apply_cdc_batch
     from tests.test_cdc import _env_rows
-    from hierarchical_to_relational_spark.operators.normalize import normalize_envelopes
+    from hierarchical_to_relational_spark.operators.normalize import normalize_envelopes_fused
 
-    ups, dels = normalize_envelopes(_env_rows(spark, [
+    rows = normalize_envelopes_fused(_env_rows(spark, [
         (10_000, "insert", "cli-added", [(0, "user", "x", None)]),
     ]), text_mode="none")
-    apply_cdc_batch(spark, SnapshotTable(root), ups, dels, batch_id="extra")
+    apply_cdc_batch(spark, SnapshotTable(root), rows, batch_id="extra")
     r3 = _run(capsys, "--table", root, "mview", "--root", mv_root)
     assert r3["mode"] == "incremental" and r3["changed_convs"] == 1
 

@@ -12,7 +12,7 @@ from hierarchical_to_relational_spark.plans import (
     plan_normalize,
     plan_pipeline,
 )
-from hierarchical_to_relational_spark.operators.normalize import normalize_envelopes
+from hierarchical_to_relational_spark.operators.normalize import normalize_envelopes_fused
 from hierarchical_to_relational_spark.sources.binlog import envelope_schema
 
 
@@ -34,15 +34,17 @@ def test_plan_flatten_matches_runtime(spark):
 def test_plan_normalize_matches_runtime(spark):
     env_schema = envelope_schema([T.StructField("model", T.StringType(), True)])
     env = spark.createDataFrame([], env_schema)
-    ups, dels = normalize_envelopes(env, text_mode="none")
-    p_ups, p_dels = plan_normalize(env_schema)
-    assert ups.schema.fieldNames() == p_ups.fieldNames()
-    assert dels.schema.fieldNames() == p_dels.fieldNames()
-    assert [f.dataType for f in ups.schema.fields] == [f.dataType for f in p_ups.fields]
+    rows = normalize_envelopes_fused(env, text_mode="none")
+    planned = plan_normalize(env_schema)
+    assert rows.schema.fieldNames() == planned.fieldNames()
+    assert [f.dataType for f in rows.schema.fields] == [f.dataType for f in planned.fields]
+    # tombstone rows carry a null _commit_ts
+    assert rows.schema["_commit_ts"].nullable and planned["_commit_ts"].nullable
 
 
 def test_plan_pipeline_surface():
     plans = plan_pipeline(envelope_schema())
+    assert set(plans) == {"batch", "table", "read"}
     assert plans["read"].fieldNames() == ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
     assert plans["table"].fieldNames()[-3:] == ["_lsn", "_commit_ts", "_op"]
     assert plan_cdc_table(envelope_schema()).fieldNames() == plans["table"].fieldNames()

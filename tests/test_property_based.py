@@ -266,7 +266,10 @@ def test_changes_since_net_diff_property(spark, tmp_path_factory, seed, split, p
     st.none(),
     st.text(
         alphabet=st.one_of(
-            st.characters(),  # anything, combining marks included
+            # anything, combining marks included — but no lone surrogates
+            # (category Cs): Spark's Arrow transfer only delivers valid
+            # UTF-8, and characters() includes them by default
+            st.characters(exclude_categories=("Cs",)),
             # over-weight the hazard classes: control chars, every Unicode
             # White_Space member, and NFC-sensitive combining sequences
             st.sampled_from(list("\x00\x01\x08\x0b\x0c\x0e\x1f\x7f")
@@ -284,13 +287,13 @@ def test_normalize_re2_body_matches_pandas_reference(texts):
     sequences, Nones. This is the parity gate that lets the 2.2×-faster
     C++ passes onto the north-star hot path."""
     import pandas as pd
+    import pyarrow as pa
 
     from hierarchical_to_relational_spark.operators.normalize import (
-        _normalize_series,
+        _normalize_array,
         _normalize_series_pandas,
     )
 
-    s = pd.Series(texts, dtype=object)
-    got = _normalize_series(s).tolist()
-    want = _normalize_series_pandas(s).tolist()
+    got = _normalize_array(pa.array(texts, pa.string())).to_pylist()
+    want = _normalize_series_pandas(pd.Series(texts, dtype=object)).tolist()
     assert got == want

@@ -955,13 +955,12 @@ def test_pruning_keeps_file_on_incomparable_bounds(spark, tmp_path):
     assert out.count() == 2, "incomparable bound kept every file"
 
 
-def test_observe_accounting_matches_pyarrow_and_skips_data_read(spark, tmp_path, monkeypatch):
-    """Round-5: per-commit accounting (rows / max-LSN / tombstones, global
-    and per bucket) comes from the WRITE JOB's df.observe aggregates —
-    executor-side, no driver read of just-written data files. It must agree
-    exactly with the legacy pyarrow column-read path, and the observe-mode
-    commit must never touch data pages on the driver (footer metadata
-    only)."""
+def test_commit_accounting_exact_per_bucket(spark, tmp_path):
+    """Per-commit accounting (rows / max-LSN / tombstones, global and per
+    bucket) from the driver's footer + (bucket, lsn) column read is EXACT:
+    pinned to figures computed here from the input rows and the table's
+    own bucket function, for both the append and the bucket-overwrite
+    commit."""
     schema = T.StructType([
         T.StructField("conv_id", T.StringType(), False),
         T.StructField("turn_idx", T.IntegerType(), True),
@@ -970,38 +969,29 @@ def test_observe_accounting_matches_pyarrow_and_skips_data_read(spark, tmp_path,
     rows = ([(f"c{i % 7}", i, 100 + i) for i in range(40)]
             + [("c1", None, 500), ("c3", None, 501)])  # tombstones
 
-    def build(mode):
-        t = SnapshotTable.create(str(tmp_path / f"t-{mode}"), schema, n_buckets=4)
-        t.stats_mode = mode
+    for kind in ("append", "overwrite"):
+        t = SnapshotTable.create(str(tmp_path / f"t-{kind}"), schema, n_buckets=4)
         df = (spark.createDataFrame(rows, "conv_id string, turn_idx int, _lsn long")
               .withColumn("_bucket", t.bucket_col()(F.col("conv_id"))))
-        bks = sorted(r[0] for r in df.select("_bucket").distinct().collect())
-        t.commit_overwrite_buckets(df, bks, "b1")
-        return t
+        bucket_of = {r["conv_id"]: r["_bucket"]
+                     for r in df.select("conv_id", "_bucket").distinct().collect()}
+        want_rows: dict[str, int] = {}
+        want_lsn: dict[str, int] = {}
+        for cid, _, lsn in rows:
+            b = str(bucket_of[cid])
+            want_rows[b] = want_rows.get(b, 0) + 1
+            want_lsn[b] = max(want_lsn.get(b, lsn), lsn)
+        assert len(want_rows) > 1, "the keys must spread over several buckets"
 
-    t_obs = build("observe")
-
-    # observe mode: data pages must never be read driver-side on commit
-    import pyarrow.parquet as papq
-
-    def no_data_read(self, *a, **k):
-        raise AssertionError("driver read data pages on the commit hot path")
-
-    monkeypatch.setattr(papq.ParquetFile, "read", no_data_read)
-    t_obs2 = SnapshotTable.create(str(tmp_path / "t-obs2"), schema, n_buckets=4)
-    t_obs2.stats_mode = "observe"
-    df2 = (spark.createDataFrame(rows, "conv_id string, turn_idx int, _lsn long")
-           .withColumn("_bucket", t_obs2.bucket_col()(F.col("conv_id"))))
-    t_obs2.commit_append(df2, "b1")
-    monkeypatch.undo()
-
-    t_py = build("pyarrow")
-    mo, mp = t_obs.last_commit_stats, t_py.last_commit_stats
-    assert mo == mp, f"observe metrics diverge from pyarrow: {mo} vs {mp}"
-    assert mo["rows_written"] == 42 and mo["deletes"] == 2
-    assert mo["max_lsn"] == 501
-    assert mo["bucket_rows"] == mp["bucket_rows"]
-    assert mo["bucket_max_lsn"] == mp["bucket_max_lsn"]
+        if kind == "append":
+            t.commit_append(df, "b1")
+        else:
+            t.commit_overwrite_buckets(df, sorted(int(b) for b in want_rows), "b1")
+        m = t.last_commit_stats
+        assert m["rows_written"] == 42 and m["deletes"] == 2 and m["upserts"] == 40
+        assert m["max_lsn"] == 501
+        assert m["bucket_rows"] == want_rows, kind
+        assert m["bucket_max_lsn"] == want_lsn, kind
 
 
 def test_scan_range_key_set_phase2_prunes_far_apart_candidates(spark, tmp_path, monkeypatch):
@@ -1201,15 +1191,47 @@ def test_binpack_deltas_preserves_state_and_reduces_dirs(spark, tmp_path):
                           min_dirs=5) == []
 
 
-def test_bloom_sidecar_spark_build_bit_identical(spark, tmp_path):
-    """bloom_mode='spark' (executor-side applyInPandas build) AND
-    bloom_mode='fold' (r6: built inside the write job itself — the
-    indexed commit makes ONE pass over the batch, no re-read) write
-    sidecars BIT-IDENTICAL to the driver-side pyarrow build on the same
-    data, and equality probes prune identically."""
+def _sidecar_entries(t):
+    """(commit dir, file, sidecar entry) for every live written file."""
+    import json as _json
+
+    for d in {d for ds in t.snapshot()["live"].values() for d in ds}:
+        with open(os.path.join(t.root, d, "_file_stats.json")) as f:
+            for rel, st in _json.load(f).items():
+                yield d, rel, st
+
+
+def _reference_blooms(t, index_cols) -> dict:
+    """Pure-Python reference bloom build: one pyarrow read per written
+    file of its indexed columns, then ``_bloom_build`` over each column's
+    distinct non-null values. Keyed (commit dir, file) like the sidecars."""
+    import pyarrow.parquet as papq
+
+    from hierarchical_to_relational_spark.functions.xxh64 import xxh64
+    from hierarchical_to_relational_spark.table.snapshot_table import _bloom_build
+
+    out = {}
+    for d, rel, _ in _sidecar_entries(t):
+        tbl = papq.read_table(os.path.join(t.root, d, rel), columns=index_cols)
+        blooms = {}
+        for c in index_cols:
+            vals = set(tbl.column(c).to_pylist())
+            vals.discard(None)
+            if vals:
+                blooms[c] = _bloom_build(vals, xxh64)
+        if blooms:
+            out[(d, rel)] = blooms
+    return out
+
+
+def test_bloom_fold_build_bit_identical_to_reference(spark, tmp_path):
+    """The bloom index is built inside the write job (the fold build: the
+    indexed commit makes ONE pass over the batch, no re-read). Its
+    sidecars are BIT-IDENTICAL to a pure-Python reference build over the
+    written files, for a string AND an integral column, and equality
+    probes prune files while returning the exact probe result."""
     import hashlib
     import json as _json
-    import os
 
     from hierarchical_to_relational_spark.operators.merge import table_schema_for
     from hierarchical_to_relational_spark.streaming.driver import CdcPipeline
@@ -1223,67 +1245,62 @@ def test_bloom_sidecar_spark_build_bit_identical(spark, tmp_path):
         T.StructField("tool", T.StringType(), True),
         T.StructField("ts", T.TimestampType(), True),
     ]
+    index_cols = ["text", "turn_idx"]
+    root = str(tmp_path / "t")
+    SnapshotTable.create(root, table_schema_for(turn_cols), 4, index_cols=index_cols)
+    pipe = CdcPipeline(spark, str(tmp_path / "bl"), root, str(tmp_path / "ck"),
+                       n_buckets=4, text_mode="none")
+    lsn = 0
+    for b in range(2):
+        rows = []
+        for i in range(10):
+            lsn += 1
+            tx = hashlib.md5(f"{b}-{i}".encode()).hexdigest()
+            rows.append((lsn, "insert", f"c{b}{i}", [(i, "user", tx, None)]))
+        pipe.apply_batch(_env_rows(spark, rows), f"b{b}")
+    t = pipe.table
 
-    def build(root, ck, bloom_mode):
-        SnapshotTable.create(root, table_schema_for(turn_cols), 4,
-                             index_cols=["text", "turn_idx"])
-        pipe = CdcPipeline(spark, str(tmp_path / "bl"), root, ck,
-                           n_buckets=4, text_mode="none")
-        pipe.table.bloom_mode = bloom_mode
-        lsn = 0
-        for b in range(2):
-            rows = []
-            for i in range(10):
-                lsn += 1
-                tx = hashlib.md5(f"{b}-{i}".encode()).hexdigest()
-                rows.append((lsn, "insert", f"c{b}{i}", [(i, "user", tx, None)]))
-            pipe.apply_batch(_env_rows(spark, rows), f"b{b}")
-        return pipe.table
-
-    ta = build(str(tmp_path / "ta"), str(tmp_path / "cka"), "pyarrow")
-    tb = build(str(tmp_path / "tb"), str(tmp_path / "ckb"), "spark")
-    tc = build(str(tmp_path / "tc"), str(tmp_path / "ckc"), "fold")
-
-    def blooms(t):
-        # commit dirs carry uuid names: walk them in VERSION order (the
-        # deterministic order both tables share); files inside a commit
-        # sort by their part index
-        seen, out = set(), []
-        for v in range(1, t.current_version() + 1):
-            dirs = {d for ds in t.snapshot(v)["live"].values() for d in ds}
-            for d in sorted(dirs - seen):
-                sc = os.path.join(t.root, d, "_file_stats.json")
-                if os.path.exists(sc):
-                    with open(sc) as f:
-                        fs = _json.load(f)
-                    out.extend(fs[rel]["bloom"] for rel in sorted(fs)
-                               if "bloom" in fs[rel])
-            seen |= dirs
-        return out
-
-    ba, bb, bc = blooms(ta), blooms(tb), blooms(tc)
-    assert ba and len(ba) == len(bb) == len(bc)
-    # same data partitioned the same way → same per-file distinct sets →
-    # identical bloom bits, both columns (string AND integral, whose
-    # pandas null-float round trip must coerce back)
-    assert _json.dumps(ba, sort_keys=True) == _json.dumps(bb, sort_keys=True)
-    assert _json.dumps(ba, sort_keys=True) == _json.dumps(bc, sort_keys=True)
+    fold = {(d, rel): st["bloom"] for d, rel, st in _sidecar_entries(t) if "bloom" in st}
+    ref = _reference_blooms(t, index_cols)
+    assert ref and set(fold) == set(ref)
+    assert _json.dumps(sorted(fold.items()), sort_keys=True) == \
+        _json.dumps(sorted(ref.items()), sort_keys=True)
 
     probe = hashlib.md5(b"1-3").hexdigest()
-    kept_a = ta.read(spark, col_eq={"text": probe}).inputFiles()
-    kept_b = tb.read(spark, col_eq={"text": probe}).inputFiles()
-    kept_c = tc.read(spark, col_eq={"text": probe}).inputFiles()
-    # identical blooms → identical pruning decisions (file NAMES differ:
-    # uuid part files — the counts and the result rows are the invariant)
-    assert len(kept_a) == len(kept_b) == len(kept_c) and kept_a
-    assert len(kept_a) < len(ta.read(spark).inputFiles())
+    kept = t.read(spark, col_eq={"text": probe}).inputFiles()
+    assert kept and len(kept) < len(t.read(spark).inputFiles())
     # col_eq prunes FILES (superset semantics); the row filter is the
-    # caller's — together they give the exact probe result on both builds
-    for t in (ta, tb, tc):
-        assert ({tuple(r) for r in t.read(spark, col_eq={"text": probe})
-                 .where(F.col("text") == probe)
-                 .select("conv_id", "text").collect()}
-                == {("c13", probe)})
+    # caller's — together they give the exact probe result
+    assert ({tuple(r) for r in t.read(spark, col_eq={"text": probe})
+             .where(F.col("text") == probe)
+             .select("conv_id", "text").collect()}
+            == {("c13", probe)})
+
+
+def test_fold_bloom_matching_no_file_warns(caplog):
+    """A fold bloom whose write partition matches no written file is
+    dropped (the file it belonged to stays unpruned by bloom, which is
+    superset-safe) — with a warning naming the partition, not silently."""
+    import logging
+    from types import SimpleNamespace
+
+    acc = SimpleNamespace(value=[(0, "text", 64, 7, "AA=="),
+                                 (9, "text", 64, 7, "AQ=="),
+                                 (9, "turn_idx", 64, 7, "Ag==")])
+    file_stats = {"part-00000-x.c000.zstd.parquet": {}}
+    logger = "hierarchical_to_relational_spark.table.snapshot_table"
+    with caplog.at_level(logging.WARNING, logger=logger):
+        SnapshotTable._attach_fold_blooms(acc, file_stats)
+    assert file_stats["part-00000-x.c000.zstd.parquet"]["bloom"] == {
+        "text": {"m": 64, "k": 7, "b64": "AA=="}}
+    [rec] = caplog.records
+    assert rec.levelno == logging.WARNING and "[9]" in rec.getMessage()
+
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger=logger):
+        SnapshotTable._attach_fold_blooms(acc, {"part-00000-x.parquet": {},
+                                                "part-00009-y.parquet": {}})
+    assert not caplog.records, "every bloom matched a file: no warning"
 
 
 def test_tagged_snapshot_survives_expiration(spark, tmp_path):
@@ -1299,7 +1316,7 @@ def test_tagged_snapshot_survives_expiration(spark, tmp_path):
         table_schema_for,
     )
     from hierarchical_to_relational_spark.operators.normalize import (
-        normalize_envelopes,
+        normalize_envelopes_fused,
     )
     from tests.test_cdc import _env_rows
 
@@ -1312,9 +1329,9 @@ def test_tagged_snapshot_survives_expiration(spark, tmp_path):
     t = SnapshotTable.create(str(tmp_path / "t"), table_schema_for(cols), 2)
 
     def _apply(lsn, op, cid, turns, bid):
-        u, d = normalize_envelopes(_env_rows(spark, [(lsn, op, cid, turns)]),
-                                   text_mode="none")
-        apply_cdc_batch(spark, t, u, d, batch_id=bid)
+        rows = normalize_envelopes_fused(_env_rows(spark, [(lsn, op, cid, turns)]),
+                                         text_mode="none")
+        apply_cdc_batch(spark, t, rows, batch_id=bid)
 
     _apply(1, "insert", "cA", [(0, "user", "a0", None)], "b0")
     v_tagged = t.tag("audit-2026q1")
@@ -1357,7 +1374,7 @@ def test_read_by_tag_name(spark, tmp_path):
         table_schema_for,
     )
     from hierarchical_to_relational_spark.operators.normalize import (
-        normalize_envelopes,
+        normalize_envelopes_fused,
     )
     from tests.test_cdc import _env_rows
 
@@ -1368,13 +1385,13 @@ def test_read_by_tag_name(spark, tmp_path):
             T.StructField("tool", T.StringType(), True),
             T.StructField("ts", T.TimestampType(), True)]
     t = SnapshotTable.create(str(tmp_path / "t"), table_schema_for(cols), 2)
-    u, d = normalize_envelopes(_env_rows(spark, [
+    rows = normalize_envelopes_fused(_env_rows(spark, [
         (1, "insert", "cA", [(0, "user", "v1", None)])]), text_mode="none")
-    apply_cdc_batch(spark, t, u, d, batch_id="b0")
+    apply_cdc_batch(spark, t, rows, batch_id="b0")
     t.tag("prod")
-    u, d = normalize_envelopes(_env_rows(spark, [
+    rows = normalize_envelopes_fused(_env_rows(spark, [
         (2, "update", "cA", [(0, "user", "v2", None)])]), text_mode="none")
-    apply_cdc_batch(spark, t, u, d, batch_id="b1")
+    apply_cdc_batch(spark, t, rows, batch_id="b1")
 
     assert [r["text"] for r in read_transcripts(spark, t, version="prod").collect()] == ["v1"]
     assert [r["text"] for r in read_transcripts(spark, t).collect()] == ["v2"]

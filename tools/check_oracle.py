@@ -92,6 +92,16 @@ def compare(name, spark_df, con, sql):
     return not issues
 
 
+def connect(sf_dir):
+    """DuckDB connection with one view per sf table present in ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -100,11 +110,7 @@ def main():
 
     spark = get_spark(master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
                       extra_conf={"spark.driver.memory": "16g"})
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    con = connect(sf_dir)
 
     qs, os_ = E.queries(), E.oracle_sql()
     ok = bad = no_oracle = 0
