@@ -33,6 +33,7 @@ from hierarchical_to_relational_spark.operators.normalize import META_BUCKET, ME
 from hierarchical_to_relational_spark.table.snapshot_table import (
     ConcurrentOverwriteError,
     SnapshotTable,
+    scan_schema,
 )
 
 
@@ -459,19 +460,16 @@ def binpack_deltas(
     for b, ds in picked.items():
         for d in ds:
             by_dir.setdefault(d, []).append(int(b))
+    # the snapshot schema reads every dir up to the current columns
+    # (null-fill, widening casts) with no schema-inference job
+    read_schema = scan_schema(table.schema())
     parts = []
     for d, bs in sorted(by_dir.items()):
-        df = spark.read.parquet(os.path.join(table.root, d))
+        df = spark.read.schema(read_schema).parquet(os.path.join(table.root, d))
         parts.append(df.where(F.col(META_BUCKET).isin(bs)))
     packed = parts[0]
     for p in parts[1:]:
-        packed = packed.unionByName(p, allowMissingColumns=True)
-    schema = table.schema()
-    missing = [f for f in schema.fields if f.name not in packed.columns]
-    if missing:  # dirs written before an additive evolution: null-fill
-        packed = packed.select(
-            "*", *[F.lit(None).cast(f.dataType).alias(f.name) for f in missing]
-        )
+        packed = packed.unionByName(p)
     if table.commit_binpack(packed, picked, batch_id):
         return sorted(int(b) for b in picked)
     return []
@@ -863,18 +861,18 @@ def changes_since(
     for b, ds in added.items():
         for d in ds:
             by_dir.setdefault(d, []).append(b)
+    read_schema = scan_schema(schema)
     for d, bs in sorted(by_dir.items()):
         base = os.path.join(table.root, d)
         if os.path.isdir(base):
             # flat commit dirs: _bucket is a data column; restrict to the
             # buckets whose live entry actually gained this dir (parquet
-            # row-group stats serve the IN-filter — writes sort by _bucket)
-            df = spark.read.parquet(base).where(
+            # row-group stats serve the IN-filter — writes sort by _bucket).
+            # The snapshot schema null-fills columns of dirs written before
+            # an evolve, with no schema-inference job.
+            df = spark.read.schema(read_schema).parquet(base).where(
                 F.col(META_BUCKET).isin([int(b) for b in bs])
             )
-            for c in ("conv_id", "turn_idx", META_OP, META_LSN):
-                if c not in df.columns:  # dirs written before an evolve
-                    df = df.withColumn(c, F.lit(None))
             parts.append(df.select(META_BUCKET, "conv_id", "turn_idx", META_OP, META_LSN))
     if parts:
         delta = parts[0]

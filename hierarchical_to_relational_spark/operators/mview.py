@@ -71,6 +71,13 @@ def default_aggs() -> dict[str, Column]:
     }
 
 
+def _id_frame(spark: SparkSession, ids: list[str]) -> DataFrame:
+    """One-column ``conv_id`` frame of the given ids, built from a literal
+    array in the JVM: ``createDataFrame`` over Python rows plans a
+    PythonRDD, which starts Python workers on every refresh commit."""
+    return spark.range(1).select(F.explode(F.lit(ids)).alias("conv_id"))
+
+
 class ConvAggregateView:
     def __init__(
         self,
@@ -241,9 +248,7 @@ class ConvAggregateView:
         if len(ids) <= self.key_set_threshold:
             current = lookup_conversations(self.spark, self.source, ids,
                                            version=v_now)
-            affected = self.spark.createDataFrame(
-                [(i,) for i in ids], "conv_id string"
-            )
+            affected = _id_frame(self.spark, ids)
         else:
             current = read_transcripts(
                 self.spark, self.source, version=v_now
@@ -404,8 +409,7 @@ def refresh_many(views: list[ConvAggregateView]) -> list[dict]:
             return [reports[i] for i in range(len(views))]
         if len(ids) <= thr:
             current = lookup_conversations(spark, source, ids, version=v_now)
-            affected = spark.createDataFrame([(i,) for i in ids],
-                                             "conv_id string")
+            affected = _id_frame(spark, ids)
             n_changed = len(ids)
         else:
             current = read_transcripts(spark, source, version=v_now).join(

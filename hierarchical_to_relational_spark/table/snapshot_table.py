@@ -223,6 +223,13 @@ def _widens(frm: T.DataType, to: T.DataType) -> bool:
     return False
 
 
+def scan_schema(schema: T.StructType) -> T.StructType:
+    """Read schema of a table's data files: ``_bucket`` plus the snapshot
+    schema. Passed to ``spark.read.schema`` so scans skip schema inference;
+    Parquet's reader null-fills missing columns and casts widened ones up."""
+    return T.StructType([T.StructField("_bucket", T.IntegerType(), True)] + list(schema.fields))
+
+
 def _cast_equivalent(a: T.DataType, b: T.DataType) -> bool:
     """Types that are interchangeable by a value-preserving cast under the
     engine's UTC session timezone (parquet sources surface TIMESTAMP_NTZ
@@ -866,11 +873,15 @@ class SnapshotTable:
         col_eq: dict | None = None,
     ) -> DataFrame:
         """Scan the live table state (or a historical version), optionally
-        pruned to a bucket subset. Old files are projected up to the current
-        schema (additive evolution → missing columns read as null).
+        pruned to a bucket subset. Old files read up to the current schema
+        (additive evolution → missing columns read as null, widened
+        columns read cast-up).
 
         A bucket may map to several commit dirs (merge-on-read appends);
-        the scan unions them all — LWW resolution happens in the caller
+        the surviving files of every flat-layout dir are read by ONE
+        Parquet scan with the snapshot schema (no schema-inference job),
+        and only pre-round-4 ``_bucket=k/`` dirs add a per-dir scan to a
+        union — LWW resolution happens in the caller
         (operators.merge.resolve) where required.
 
         ``key_range=(lo, hi)`` / ``lsn_range=(lo, hi)`` (inclusive; either
@@ -937,42 +948,37 @@ class SnapshotTable:
         for c, v in (col_eq or {}).items():
             eff_ranges.setdefault(c, (v, v))
         eff_ranges = eff_ranges or None
-        parts: list[DataFrame] = []
+        read_schema = scan_schema(schema)
+        files: list[str] = []
+        legacy: list[DataFrame] = []
         for commit_dir, bks in sorted(by_commit.items()):
-            base = os.path.join(self.root, commit_dir)
             paths = self._pruned_paths(
                 commit_dir, set(bks), key_range, lsn_range, eff_ranges, key_set,
                 col_eq,
             )
-            if paths is None:
-                paths = [base]  # no sidecar: scan the whole flat commit dir
-            if not paths:
+            if paths == []:
                 continue  # every file in this commit dir pruned
-            # basePath keeps PRE-round-4 commit dirs readable: their files
-            # live under physical ``_bucket=k/`` partition subdirs, and an
-            # explicit leaf-file read without basePath would never
-            # reconstruct the ``_bucket`` partition column (AnalysisException
-            # on the select below). For flat-layout dirs (no partition
-            # subdirs, ``_bucket`` is a data column) the option is a no-op.
-            df = spark.read.option("basePath", base).parquet(*paths)
-            # project old files up to the current schema in ONE select:
-            # null-fill columns added after this commit, cast columns the
-            # schema has since WIDENED (files keep narrow physical types)
-            df_types = {f.name: f.dataType for f in df.schema.fields}
-            sel = [F.col("_bucket").cast("int").alias("_bucket")]
-            for fld in schema.fields:
-                if fld.name not in df_types:
-                    sel.append(F.lit(None).cast(fld.dataType).alias(fld.name))
-                elif df_types[fld.name] != fld.dataType:
-                    sel.append(F.col(fld.name).cast(fld.dataType).alias(fld.name))
-                else:
-                    sel.append(F.col(fld.name))
-            parts.append(df.select(*sel))
+            if not self._legacy_layout(commit_dir):
+                files += paths  # flat layout: joins the one shared scan
+                continue
+            # PRE-round-4 commit dirs (files under physical ``_bucket=k/``
+            # partition subdirs, or no sidecar at all) keep a per-dir read:
+            # basePath is what reconstructs the ``_bucket`` partition column
+            # from an explicit leaf-file list
+            base = os.path.join(self.root, commit_dir)
+            legacy.append(spark.read.schema(read_schema)
+                          .option("basePath", base).parquet(*(paths or [base])))
+        # ONE scan over every flat dir's surviving files, read with the
+        # snapshot schema: no per-dir schema-inference job, no per-dir
+        # union. Parquet's reader null-fills columns a file predates and
+        # reads every ``_widens`` type up (int→long, float→double, decimal
+        # precision up), so old files need no projection.
+        parts = ([spark.read.schema(read_schema).parquet(*files)] if files else []) + legacy
         if not parts:
-            empty = T.StructType([T.StructField("_bucket", T.IntegerType(), True)] + list(schema.fields))
-            return spark.createDataFrame([], empty)
+            return spark.createDataFrame([], read_schema)
         out = parts[0]
         for p in parts[1:]:
+            # by name: a legacy scan puts its ``_bucket`` partition column last
             out = out.unionByName(p)
         if buckets is not None:
             # exact bucket membership on top of the superset file selection
@@ -994,6 +1000,12 @@ class SnapshotTable:
             pass
         self._file_stats_cache[commit_dir] = stats
         return stats
+
+    def _legacy_layout(self, commit_dir: str) -> bool:
+        """True for a commit dir in the pre-round-4 layout: no sidecar, or
+        sidecar rel paths under physical ``_bucket=k/`` partition subdirs."""
+        stats = self._file_stats(commit_dir)
+        return stats is None or any("_bucket=" in rel for rel in stats)
 
     def _pruned_paths(
         self,
@@ -1312,7 +1324,12 @@ class SnapshotTable:
             # under the broken pre-PARQUET-686 binary sort order.)
             if st is None or not st.has_min_max:
                 return None
-            return [st.min, st.max]
+            try:
+                return [st.min, st.max]
+            except NotImplementedError:
+                # pyarrow cannot decode stats of INT32/INT64-backed
+                # decimals (precision <= 18): no bound, never pruned
+                return None
 
         # per-file work is independent (footer parse + two-column pyarrow
         # read, both GIL-releasing C++); a small thread pool cuts the

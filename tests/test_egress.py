@@ -556,3 +556,60 @@ def test_window_stats_guard_map_columns(spark):
     # map-free schema would — and audit recomputes through the same
     # helper, so write and audit stay comparable
     assert ChangeFollower._window_stats(nested)["upserts"] == 1
+
+
+def test_audit_checks_counts_of_counts_only_window(spark, tmp_path):
+    """ADVICE r6: a journal line carrying counts but no hash (a window
+    fingerprinted counts-only) is still audited — a row deleted from its
+    export shows up as an upsert-count divergence, not a silent pass."""
+    import json
+
+    import pyarrow.parquet as papq
+    from pyspark.sql import types as T
+
+    from hierarchical_to_relational_spark.operators.merge import (
+        apply_cdc_batch,
+        table_schema_for,
+    )
+    from hierarchical_to_relational_spark.table import SnapshotTable
+
+    payload = [T.StructField("conv_id", T.StringType(), False),
+               T.StructField("turn_idx", T.IntegerType(), True),
+               T.StructField("attrs", T.MapType(T.StringType(), T.IntegerType()), True)]
+    table = SnapshotTable.create(str(tmp_path / "t"), table_schema_for(payload), n_buckets=2)
+    batch_schema = T.StructType(payload + [
+        T.StructField("_lsn", T.LongType(), False),
+        T.StructField("_commit_ts", T.TimestampType(), True),
+        T.StructField("_op", T.StringType(), False),
+    ])
+
+    def apply(rows, batch_id):
+        apply_cdc_batch(spark, table, spark.createDataFrame(rows, batch_schema), batch_id)
+
+    apply([("cA", 0, {"a": 1}, 1, None, "u")], "b0")
+    out = str(tmp_path / "egress")
+    f = ChangeFollower(spark, table, str(tmp_path / "cursor.json"), out_dir=out)
+    f.poll_once()  # pin
+    apply([("cB", 0, {"b": 2}, 2, None, "u"), ("cC", 0, {"c": 3}, 3, None, "u")], "b1")
+    p = f.poll_once()
+    assert (p["upserts"], p["deletes"]) == (2, 0)
+
+    # the window's journal line keeps its counts but carries no hash
+    jp = os.path.join(out, "_windows.jsonl")
+    lines = [json.loads(x) for x in open(jp).read().splitlines()]
+    for w in lines:
+        w.pop("hash", None)
+    with open(jp, "w") as fh:
+        fh.write("\n".join(json.dumps(w) for w in lines) + "\n")
+    assert f.audit_exports() == []
+
+    # delete one row from the published export
+    exported = papq.read_table(p["out_path"])
+    for name in os.listdir(p["out_path"]):
+        if name.endswith(".parquet"):
+            os.unlink(os.path.join(p["out_path"], name))
+    papq.write_table(exported.slice(1), os.path.join(p["out_path"], "part-00000.parquet"))
+    bad = f.audit_exports()
+    assert len(bad) == 1 and bad[0]["from"] == p["from"]
+    assert bad[0]["expected"] == {"upserts": 2, "deletes": 0}
+    assert bad[0]["found"] == {"upserts": 1, "deletes": 0}

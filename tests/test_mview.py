@@ -407,3 +407,42 @@ def test_refresh_dag_duplicate_view_instance_refreshes_once(spark, tmp_path):
     reps = refresh_dag([v, v])
     assert [r["mode"] for r in reps] == ["incremental", "incremental"]
     assert _mv_state(v) == _recompute(spark, pipe.table)
+
+
+def test_incremental_refresh_batch_plans_no_python_rdd(spark, tmp_path, monkeypatch):
+    """The affected-conversation frame of an incremental refresh is built
+    in the JVM: the batch handed to apply_cdc_batch plans no PythonRDD, so
+    a refresh commit starts no Python workers (refresh and refresh_many)."""
+    from hierarchical_to_relational_spark.operators import mview
+    from hierarchical_to_relational_spark.operators.mview import refresh_many
+
+    pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
+                       str(tmp_path / "ck"), n_buckets=2, text_mode="none")
+    one = ConvAggregateView(spark, pipe.table, str(tmp_path / "mv1"))
+    two = ConvAggregateView(spark, pipe.table, str(tmp_path / "mv2"))
+    pipe.apply_batch(_env_rows(spark, [
+        (1, "insert", "cA", [(0, "user", "a0", None)]),
+        (2, "insert", "cB", [(0, "user", "b0", None)]),
+    ]), "b0")
+    one.refresh()
+    two.refresh()
+
+    batches = []
+    real_apply = mview.apply_cdc_batch
+
+    def capture(spark_, table, batch, *a, **kw):
+        batches.append(batch)
+        return real_apply(spark_, table, batch, *a, **kw)
+
+    monkeypatch.setattr(mview, "apply_cdc_batch", capture)
+    pipe.apply_batch(_env_rows(spark, [
+        (3, "update", "cA", [(1, "assistant", "a1", None)]),
+        (4, "delete", "cB", None),
+    ]), "b1")
+    assert one.refresh()["mode"] == "incremental"
+    assert [x["mode"] for x in refresh_many([two])] == ["incremental"]
+    assert len(batches) == 2
+    for batch in batches:
+        rdd = batch._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in rdd, rdd
+    assert _mv_state(one) == _mv_state(two) == _recompute(spark, pipe.table)

@@ -114,6 +114,68 @@ def test_additive_evolution_and_null_fill(spark, tmp_path):
     assert out == {("a", 1, None), ("b", 2, "x")}
 
 
+def test_mixed_schema_dirs_read_in_one_scan(spark, tmp_path):
+    """Three live commit dirs with different physical schemas — before an
+    added column, before a short→long / float→double / decimal(5,2)→
+    decimal(12,2) widening, and after it — read back null-filled and
+    cast up (vectorized reader on and off) through ONE parquet scan built
+    with no Spark job (no per-dir schema inference)."""
+    from decimal import Decimal
+
+    narrow = T.StructType([
+        T.StructField("k", T.StringType(), False),
+        T.StructField("s", T.ShortType(), True),
+        T.StructField("f", T.FloatType(), True),
+        T.StructField("d", T.DecimalType(5, 2), True),
+    ])
+    t = SnapshotTable.create(str(tmp_path / "t"), narrow, n_buckets=4)
+
+    def append(rows, schema, batch_id):
+        df = spark.createDataFrame(rows, schema)
+        assert t.commit_append(df.withColumn("_bucket", t.bucket_col()(F.col("k"))), batch_id)
+
+    append([("a", 1, 1.5, Decimal("1.25"))], narrow, "b1")
+    assert t.evolve([T.StructField("w", T.StringType(), True)], "b2")
+    added = t.schema()
+    append([("b", 2, 2.5, Decimal("2.50"), "x")], added, "b3")
+    wide = T.StructType([
+        T.StructField("k", T.StringType(), False),
+        T.StructField("s", T.LongType(), True),
+        T.StructField("f", T.DoubleType(), True),
+        T.StructField("d", T.DecimalType(12, 2), True),
+        T.StructField("w", T.StringType(), True),
+    ])
+    assert t.evolve_to(wide, "b4")
+    assert t.schema() == wide
+    append([("c", 1 << 40, 0.1, Decimal("1234567890.12"), "y")], wide, "b5")
+    dirs = {d for ds in t.snapshot()["live"].values() for d in ds}
+    assert len(dirs) == 3
+
+    sc = spark.sparkContext
+    key = "spark.sql.parquet.enableVectorizedReader"
+    prev = spark.conf.get(key)
+    try:
+        for vectorized in ("true", "false"):
+            spark.conf.set(key, vectorized)
+            sc.setJobGroup("one-scan-read", "read() must launch no job")
+            try:
+                out = t.read(spark)
+            finally:
+                sc._jsc.clearJobGroup()
+            assert list(sc.statusTracker().getJobIdsForGroup("one-scan-read")) == []
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("FileScan parquet") == 1, plan
+            assert out.schema["s"].dataType == T.LongType()
+            got = {r["k"]: tuple(r)[1:] for r in out.select("k", "s", "f", "d", "w").collect()}
+            assert got == {
+                "a": (1, 1.5, Decimal("1.25"), None),
+                "b": (2, 2.5, Decimal("2.50"), "x"),
+                "c": (1 << 40, 0.1, Decimal("1234567890.12"), "y"),
+            }
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_non_additive_evolution_rejected(spark, tmp_path):
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=4)
     df = _bucketed(spark, t, [("a", 1)])
