@@ -33,7 +33,6 @@ from hierarchical_to_relational_spark.operators.normalize import META_BUCKET, ME
 from hierarchical_to_relational_spark.table.snapshot_table import (
     ConcurrentOverwriteError,
     SnapshotTable,
-    scan_schema,
 )
 
 
@@ -460,16 +459,7 @@ def binpack_deltas(
     for b, ds in picked.items():
         for d in ds:
             by_dir.setdefault(d, []).append(int(b))
-    # the snapshot schema reads every dir up to the current columns
-    # (null-fill, widening casts) with no schema-inference job
-    read_schema = scan_schema(table.schema())
-    parts = []
-    for d, bs in sorted(by_dir.items()):
-        df = spark.read.schema(read_schema).parquet(os.path.join(table.root, d))
-        parts.append(df.where(F.col(META_BUCKET).isin(bs)))
-    packed = parts[0]
-    for p in parts[1:]:
-        packed = packed.unionByName(p)
+    packed = table.scan_dirs(spark, by_dir, snap)
     if table.commit_binpack(packed, picked, batch_id):
         return sorted(int(b) for b in picked)
     return []
@@ -855,72 +845,35 @@ def changes_since(
         return spark.createDataFrame([], out_schema)
 
     keys = [META_BUCKET, "conv_id", "turn_idx"]
-    # phase 1: scan exactly the appended delta files → candidate keys
-    parts = []
+    snap = table.snapshot(v2)
+    # phase 1: scan exactly the appended delta dirs, each for the buckets
+    # whose live entry gained it → candidate keys
     by_dir: dict[str, list[str]] = {}
     for b, ds in added.items():
         for d in ds:
             by_dir.setdefault(d, []).append(b)
-    read_schema = scan_schema(schema)
-    for d, bs in sorted(by_dir.items()):
-        base = os.path.join(table.root, d)
-        if os.path.isdir(base):
-            # flat commit dirs: _bucket is a data column; restrict to the
-            # buckets whose live entry actually gained this dir (parquet
-            # row-group stats serve the IN-filter — writes sort by _bucket).
-            # The snapshot schema null-fills columns of dirs written before
-            # an evolve, with no schema-inference job.
-            df = spark.read.schema(read_schema).parquet(base).where(
-                F.col(META_BUCKET).isin([int(b) for b in bs])
-            )
-            parts.append(df.select(META_BUCKET, "conv_id", "turn_idx", META_OP, META_LSN))
-    if parts:
-        delta = parts[0]
-        for p in parts[1:]:
-            delta = delta.unionByName(p)
-        changed_keys = delta.where(F.col(META_OP) != "d").select(*keys).distinct()
-        tomb_added = (
-            delta.where(F.col(META_OP) == "d")
-            .groupBy(META_BUCKET, "conv_id")
-            .agg(F.max(META_LSN).alias("change_lsn"))
-        )
-    else:
-        empty_keys = T.StructType(
-            [T.StructField(META_BUCKET, T.IntegerType()), schema["conv_id"], schema["turn_idx"]]
-        )
-        changed_keys = spark.createDataFrame([], empty_keys)
-        tomb_added = spark.createDataFrame(
-            [], T.StructType(
-                [T.StructField(META_BUCKET, T.IntegerType()), schema["conv_id"],
-                 T.StructField("change_lsn", T.LongType())]
-            )
-        )
+    delta = table.scan_dirs(spark, by_dir, snap)
+    changed_keys = delta.where(F.col(META_OP) != "d").select(*keys).distinct()
+    tomb_added = (
+        delta.where(F.col(META_OP) == "d")
+        .groupBy(META_BUCKET, "conv_id")
+        .agg(F.max(META_LSN).alias("change_lsn"))
+    )
 
     # rollback-retracted dirs → synthetic conversation deletes: any conv
     # with a row in a dir the rollback un-referenced may have lost state
     # with no tombstone to say so; emit 'd' (change_lsn = newest retracted
     # LSN) and let the superset re-emission re-add whatever survives.
     if removed:
-        rparts = []
-        for d, bs in sorted(removed.items()):
-            base = os.path.join(table.root, d)
-            if not os.path.isdir(base):
+        for d in sorted(removed):
+            if not os.path.isdir(os.path.join(table.root, d)):
                 raise ValueError(
                     f"rollback-retracted dir {d} expired before the window "
                     f"({since_version}, {v2}] was consumed — the synthetic "
                     "deletes are unrecoverable, full resync required"
                 )
-            rdf = spark.read.parquet(base)
-            if bs is not None and META_BUCKET in rdf.columns:
-                rdf = rdf.where(F.col(META_BUCKET).isin([int(b) for b in bs]))
-            rparts.append(rdf.select(
-                F.col(META_BUCKET).cast("int").alias(META_BUCKET)
-                if META_BUCKET in rdf.columns else F.lit(-1).alias(META_BUCKET),
-                "conv_id", META_LSN))
-        rb = rparts[0]
-        for p2 in rparts[1:]:
-            rb = rb.unionByName(p2)
-        tomb_rollback = (rb.groupBy(META_BUCKET, "conv_id")
+        tomb_rollback = (table.scan_dirs(spark, removed, snap)
+                         .groupBy(META_BUCKET, "conv_id")
                          .agg(F.max(META_LSN).alias("change_lsn")))
         tomb_added = tomb_added.unionByName(tomb_rollback)
 

@@ -225,41 +225,7 @@ class ConvAggregateView:
         """One maintenance step: advance the view to the source's current
         version. Returns the commit report plus {"mode": "noop" |
         "incremental" | "full", "from", "to", "changed_convs"}."""
-        v_now = self.source.current_version()
-        cur = self.cursor()
-        if cur is not None and v_now <= cur:
-            return {"mode": "noop", "from": cur, "to": v_now,
-                    "changed_convs": 0, "committed": False}
-        if cur is None:
-            return self.full_refresh()
-        try:
-            ch = changes_since(self.spark, self.source, cur, version=v_now)
-        except (FileNotFoundError, ValueError):
-            # cursor's snapshot expired / rollback dirs gone — the one
-            # case that costs a full recompute (same contract as any CDF
-            # follower losing its window)
-            return self.full_refresh()
-        affected = ch.select("conv_id").distinct()
-        ids = [r[0] for r in affected.limit(self.key_set_threshold + 1).collect()]
-        if not ids:
-            self._write_cursor(v_now)
-            return {"mode": "noop", "from": cur, "to": v_now,
-                    "changed_convs": 0, "committed": False}
-        if len(ids) <= self.key_set_threshold:
-            current = lookup_conversations(self.spark, self.source, ids,
-                                           version=v_now)
-            affected = _id_frame(self.spark, ids)
-        else:
-            current = read_transcripts(
-                self.spark, self.source, version=v_now
-            ).join(affected, "conv_id", "semi")
-        agg = self._agg_df(current)
-        # every touched conversation is tombstoned-then-readded (_apply);
-        # vanished ones simply have no re-add
-        rep = self._apply(agg, affected, v_now, f"mview::{cur}->{v_now}")
-        return {"mode": "incremental", "from": cur, "to": v_now,
-                "changed_convs": len(ids) if len(ids) <= self.key_set_threshold
-                else affected.count(), **rep}
+        return refresh_many([self])[0]
 
     def full_refresh(self) -> dict:
         """Aggregate the whole resolved source state (first build, or
@@ -392,6 +358,9 @@ def refresh_many(views: list[ConvAggregateView]) -> list[dict]:
         try:
             ch = changes_since(spark, source, since, version=v_now)
         except (FileNotFoundError, ValueError):
+            # cursor's snapshot expired / rollback dirs gone — the one
+            # case that costs a full recompute (same contract as any CDF
+            # follower losing its window)
             for i, v in enumerate(views):
                 if v in live:
                     reports[i] = v.full_refresh()
@@ -415,17 +384,22 @@ def refresh_many(views: list[ConvAggregateView]) -> list[dict]:
             current = read_transcripts(spark, source, version=v_now).join(
                 affected, "conv_id", "semi")
             n_changed = affected.count()
-        # the slice is read once and served to every view's aggregation
-        current = current.persist()
-        affected = affected.persist()
+        # the slice is read once and served to every view's aggregation;
+        # a single view reads it once anyway, so only a shared slice is cached
+        shared = len(live) > 1
+        if shared:
+            current = current.persist()
+            affected = affected.persist()
         try:
             for i, v in enumerate(views):
                 if v in live:
                     rep = v._refresh_from(current, affected, v_now, cursors[i])
                     rep["changed_convs"] = n_changed
-                    rep["shared_scan"] = True
+                    if shared:
+                        rep["shared_scan"] = True
                     reports[i] = rep
         finally:
-            current.unpersist()
-            affected.unpersist()
+            if shared:
+                current.unpersist()
+                affected.unpersist()
     return [reports[i] for i in range(len(views))]

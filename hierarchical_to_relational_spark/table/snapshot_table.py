@@ -878,11 +878,9 @@ class SnapshotTable:
         columns read cast-up).
 
         A bucket may map to several commit dirs (merge-on-read appends);
-        the surviving files of every flat-layout dir are read by ONE
-        Parquet scan with the snapshot schema (no schema-inference job),
-        and only pre-round-4 ``_bucket=k/`` dirs add a per-dir scan to a
-        union — LWW resolution happens in the caller
-        (operators.merge.resolve) where required.
+        the dirs are read by ``scan_dirs``, each for exactly the wanted
+        buckets whose live entry lists it — LWW resolution happens in the
+        caller (operators.merge.resolve) where required.
 
         ``key_range=(lo, hi)`` / ``lsn_range=(lo, hi)`` (inclusive; either
         end None = open) additionally skip FILES whose recorded conv_id /
@@ -920,12 +918,12 @@ class SnapshotTable:
         Bucket pruning is sidecar-driven too (flat commit dirs, round 4):
         files are skipped when their recorded ``_bucket`` range cannot
         contain a wanted bucket — file-granular on range-clustered bases,
-        superset on hash-scattered deltas — and an exact
-        ``_bucket IN (...)`` filter is applied on top, which parquet
-        row-group stats serve cheaply because writes sort within
+        superset on hash-scattered deltas — and ``scan_dirs`` filters
+        ``_bucket`` per dir where a dir also holds other rows, which
+        parquet row-group stats serve cheaply because writes sort within
         partitions by ``_bucket``. The returned rows are therefore EXACTLY
-        the wanted buckets' rows, same contract as the old per-bucket-dir
-        layout.
+        the wanted buckets' live rows, same contract as the old
+        per-bucket-dir layout.
 
         ``as_of_ts`` (epoch seconds) is timestamp time travel — resolved to
         the latest retained version committed at or before it."""
@@ -934,55 +932,95 @@ class SnapshotTable:
                 raise ValueError("pass either version or as_of_ts, not both")
             version = self.version_as_of(as_of_ts)
         snap = self.snapshot(version)
-        schema = T.StructType.fromJson(json.loads(snap["schema"]))
         live: dict[str, list[str]] = snap["live"]
-        wanted = {str(b) for b in buckets} if buckets is not None else set(live.keys())
-        # group wanted buckets by owning commit dir → one scan per commit
-        by_commit: dict[str, list[str]] = {}
+        wanted = {str(b) for b in buckets} if buckets is not None else set(live)
+        # each commit dir contributes exactly the wanted buckets listing it
+        dirs: dict[str, set[str]] = {}
         for b, commit_dirs in live.items():
             if b in wanted:
                 for commit_dir in commit_dirs:
-                    by_commit.setdefault(commit_dir, []).append(b)
+                    dirs.setdefault(commit_dir, set()).add(b)
+        return self.scan_dirs(spark, dirs, snap, key_range, lsn_range,
+                              col_ranges, key_set, col_eq)
+
+    def scan_dirs(
+        self,
+        spark: SparkSession,
+        dirs: dict,
+        snap: dict,
+        key_range: tuple | None = None,
+        lsn_range: tuple | None = None,
+        col_ranges: dict | None = None,
+        key_set: list | None = None,
+        col_eq: dict | None = None,
+    ) -> DataFrame:
+        """The one reader of table data files: the rows of the commit dirs
+        in ``dirs`` ({commit dir: buckets whose rows it returns, or None =
+        every row}), read with the schema of ``snap`` and pruned like
+        ``read``. Each dir returns exactly its own buckets' rows.
+
+        Flat dirs whose written buckets (``snap``'s ``commit_bytes`` keys)
+        inside the union *U* of all bucket sets lie within their own set
+        share ONE Parquet scan with the snapshot schema — no
+        schema-inference job, no per-dir union; Parquet's reader
+        null-fills columns a file predates and reads every ``_widens``
+        type up. That scan is filtered ``_bucket IN U`` only when a member
+        also holds rows outside *U*. Every other dir — one holding STALE
+        rows of a bucket it no longer serves (a partial compaction folded
+        that bucket away), or with no ``commit_bytes`` entry in ``snap``
+        (pre-stats dirs, dirs compacted away since, rollback-retracted
+        dirs) — is read by one scan per distinct bucket set, filtered by
+        that set (None: unfiltered). Pre-round-4 dirs (files under
+        physical ``_bucket=k/`` partition subdirs, or no sidecar, which
+        reads the dir whole) keep a per-dir ``basePath`` read — basePath
+        is what reconstructs the ``_bucket`` partition column from an
+        explicit leaf-file list — filtered by their own set."""
+        read_schema = scan_schema(T.StructType.fromJson(json.loads(snap["schema"])))
+        written = snap.get("commit_bytes", {})
         # an equality probe also implies a [v, v] bounds check for free
         eff_ranges = dict(col_ranges or {})
         for c, v in (col_eq or {}).items():
             eff_ranges.setdefault(c, (v, v))
         eff_ranges = eff_ranges or None
-        read_schema = scan_schema(schema)
-        files: list[str] = []
+        sets = {d: None if bs is None else frozenset(int(b) for b in bs)
+                for d, bs in dirs.items()}
+        union = frozenset().union(*(bs for bs in sets.values() if bs is not None))
+        shared: list[str] = []
+        shared_exact = True  # no shared member holds rows outside ``union``
+        by_set: dict[frozenset | None, list[str]] = {}
         legacy: list[DataFrame] = []
-        for commit_dir, bks in sorted(by_commit.items()):
-            paths = self._pruned_paths(
-                commit_dir, set(bks), key_range, lsn_range, eff_ranges, key_set,
-                col_eq,
-            )
+
+        def only(df: DataFrame, bs: frozenset | None) -> DataFrame:
+            return df if bs is None else df.where(F.col("_bucket").isin(sorted(bs)))
+
+        for d in sorted(sets):
+            bs = sets[d]
+            paths = self._pruned_paths(d, bs, key_range, lsn_range, eff_ranges,
+                                       key_set, col_eq)
             if paths == []:
                 continue  # every file in this commit dir pruned
-            if not self._legacy_layout(commit_dir):
-                files += paths  # flat layout: joins the one shared scan
+            if self._legacy_layout(d):
+                base = os.path.join(self.root, d)
+                legacy.append(only(spark.read.schema(read_schema).option("basePath", base)
+                                   .parquet(*(paths or [base])), bs))
                 continue
-            # PRE-round-4 commit dirs (files under physical ``_bucket=k/``
-            # partition subdirs, or no sidecar at all) keep a per-dir read:
-            # basePath is what reconstructs the ``_bucket`` partition column
-            # from an explicit leaf-file list
-            base = os.path.join(self.root, commit_dir)
-            legacy.append(spark.read.schema(read_schema)
-                          .option("basePath", base).parquet(*(paths or [base])))
-        # ONE scan over every flat dir's surviving files, read with the
-        # snapshot schema: no per-dir schema-inference job, no per-dir
-        # union. Parquet's reader null-fills columns a file predates and
-        # reads every ``_widens`` type up (int→long, float→double, decimal
-        # precision up), so old files need no projection.
-        parts = ([spark.read.schema(read_schema).parquet(*files)] if files else []) + legacy
+            held = {int(b) for b in written[d]} if d in written else None
+            if bs is not None and held is not None and held & union <= bs:
+                shared += paths
+                shared_exact = shared_exact and held <= union
+            else:
+                by_set.setdefault(bs, []).extend(paths)
+        parts = [only(spark.read.schema(read_schema).parquet(*shared),
+                      None if shared_exact else union)] if shared else []
+        parts += [only(spark.read.schema(read_schema).parquet(*files), bs)
+                  for bs, files in by_set.items()]
+        # by name: a legacy scan puts its ``_bucket`` partition column last
+        parts += legacy
         if not parts:
             return spark.createDataFrame([], read_schema)
         out = parts[0]
         for p in parts[1:]:
-            # by name: a legacy scan puts its ``_bucket`` partition column last
             out = out.unionByName(p)
-        if buckets is not None:
-            # exact bucket membership on top of the superset file selection
-            out = out.where(F.col("_bucket").isin([int(b) for b in wanted]))
         return out
 
     def _file_stats(self, commit_dir: str) -> dict | None:
@@ -1010,7 +1048,7 @@ class SnapshotTable:
     def _pruned_paths(
         self,
         commit_dir: str,
-        wanted_buckets: set[str],
+        wanted_buckets: set | None,
         key_range: tuple | None,
         lsn_range: tuple | None,
         col_ranges: dict | None = None,
@@ -1018,13 +1056,13 @@ class SnapshotTable:
         col_eq: dict | None = None,
     ) -> list[str] | None:
         """File list for a commit dir after sidecar pruning (bucket range ∩
-        wanted buckets, then key/lsn min-max, key-set bisect, and any
-        ``col_ranges`` bounds), or None when no sidecar exists — caller
-        then scans the whole commit dir."""
+        wanted buckets — None: no bucket pruning — then key/lsn min-max,
+        key-set bisect, and any ``col_ranges`` bounds), or None when no
+        sidecar exists — caller then scans the whole commit dir."""
         stats = self._file_stats(commit_dir)
         if stats is None:
             return None
-        wanted_ints = {int(b) for b in wanted_buckets}
+        wanted_ints = None if wanted_buckets is None else {int(b) for b in wanted_buckets}
         sorted_keys = sorted(key_set) if key_set else None
         norm_ranges = None
         if col_ranges:
@@ -1054,7 +1092,8 @@ class SnapshotTable:
                 # physical partition dir, not the sidecar — file-exact
                 b = int(rel.split("_bucket=", 1)[1].split(os.sep, 1)[0].split("/", 1)[0])
                 bmm = [b, b]
-            if bmm is not None and not any(bmm[0] <= b <= bmm[1] for b in wanted_ints):
+            if (bmm is not None and wanted_ints is not None
+                    and not any(bmm[0] <= b <= bmm[1] for b in wanted_ints)):
                 continue
             if not (overlaps(st.get("conv_id"), key_range) and overlaps(st.get("_lsn"), lsn_range)):
                 continue

@@ -879,3 +879,54 @@ def test_fused_normalize_pinned_rows(spark, tmp_path):
     got = [tuple(r) for r in read_transcripts(spark, t)
            .select("conv_id", "turn_idx", "role", "text", "tool", "ts").collect()]
     assert got == [("cC", 0, "user", None, None, ts)]
+
+
+def _file_scans(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count("FileScan parquet")
+
+
+def test_feed_binpack_and_rollback_share_one_scan(spark, tmp_path, monkeypatch):
+    """The change feed, bin-packing and the rollback scan read commit dirs
+    through the table's one shared reader: a wider feed window adds no
+    scan nodes, a rollback window is built with no Spark job (no schema
+    inference per retracted dir), and bin-packing reads its small dirs in
+    one scan."""
+    from hierarchical_to_relational_spark.operators.merge import binpack_deltas, changes_since
+
+    pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
+                       str(tmp_path / "ck"), n_buckets=2, text_mode="none",
+                       compact_every=10_000)
+    t = pipe.table
+    versions = []
+    for b in range(6):
+        pipe.apply_batch(_env_rows(spark, [
+            (10 * b + i, "insert", f"c{i}", [(b, "user", f"t{b}-{i}", None)])
+            for i in range(4)
+        ]), f"b{b}")
+        versions.append(t.current_version())
+    wide = changes_since(spark, t, versions[0])   # 5 appended dirs
+    narrow = changes_since(spark, t, versions[4])  # 1 appended dir
+    assert _file_scans(wide) == _file_scans(narrow)
+    assert wide.where(F.col("change_op") == "u").count() == 4 * 5
+
+    captured = []
+    real = t.commit_binpack
+    monkeypatch.setattr(t, "commit_binpack",
+                        lambda df, *a, **k: captured.append(df) or real(df, *a, **k))
+    assert binpack_deltas(spark, t, "bp0", target_bytes=10 << 20, min_dirs=3)
+    assert len(captured) == 1 and _file_scans(captured[0]) == 1
+
+    v_ckpt = t.current_version()
+    pipe.apply_batch(_env_rows(spark, [(100, "insert", "cX", [(0, "user", "bad", None)])]), "bad")
+    v_bad = t.current_version()
+    state_bad = _final_state(spark, t)
+    t.rollback(v_ckpt, batch_id="rb0")
+    sc = spark.sparkContext
+    sc.setJobGroup("feed-build", "building the feed frame must launch no job")
+    try:
+        changes = changes_since(spark, t, v_bad)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup("feed-build")) == []
+    got = _apply_diff(state_bad, changes.collect())
+    pd.testing.assert_frame_equal(got, _final_state(spark, t), check_dtype=False)

@@ -631,21 +631,30 @@ def test_lsn_range_pruning_skips_old_deltas(spark, tmp_path):
 
 def test_pruning_superset_without_sidecar(spark, tmp_path):
     """Commit dirs without a sidecar (pre-feature tables) are never pruned:
-    key_range reads fall back to full bucket scans."""
+    key_range reads fall back to full scans — and a bucket read of such a
+    dir, read whole, still returns only that bucket's rows."""
     import os as _os
+    from hierarchical_to_relational_spark.functions.xxh64 import bucket_of_key
     from hierarchical_to_relational_spark.table.snapshot_table import FILE_STATS_NAME
     from hierarchical_to_relational_spark.streaming.driver import CdcPipeline
 
+    nb = 4
+    ids = [f"c{i}" for i in range(8)]
+    assert len({bucket_of_key(c, nb) for c in ids}) >= 2
     pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
-                       str(tmp_path / "ck"), n_buckets=1, text_mode="none")
-    pipe.apply_batch(_envs(spark, [(1, "insert", "cA", [(0, "x")]),
-                                   (2, "insert", "cB", [(0, "y")])]), "b0")
+                       str(tmp_path / "ck"), n_buckets=nb, text_mode="none")
+    pipe.apply_batch(_envs(spark, [(i + 1, "insert", c, [(0, "x")])
+                                   for i, c in enumerate(ids)]), "b0")
     t = pipe.table
-    for d in t.snapshot()["live"]["0"]:
+    for d in {d for ds in t.snapshot()["live"].values() for d in ds}:
         _os.unlink(_os.path.join(t.root, d, FILE_STATS_NAME))
     t._file_stats_cache.clear()
-    pruned = t.read(spark, key_range=("cA", "cA"))
+    pruned = t.read(spark, key_range=("c0", "c0"))
     assert set(pruned.inputFiles()) == set(t.read(spark).inputFiles())
+    b = bucket_of_key("c0", nb)
+    rows = t.read(spark, buckets=[b]).select("_bucket", "conv_id").collect()
+    assert {r["_bucket"] for r in rows} == {b}
+    assert {r["conv_id"] for r in rows} == {c for c in ids if bucket_of_key(c, nb) == b}
 
 
 def test_bloom_filters_on_delta_appends(spark, tmp_path, monkeypatch):
@@ -798,6 +807,44 @@ def test_partial_compaction_folds_only_pressured_buckets(spark, tmp_path):
     v2 = t.current_version()
     assert compact_pressured(spark, t, batch_id="pc1", depth_threshold=4) == []
     assert t.current_version() == v2
+
+
+def test_partial_compaction_stale_dir_rows_stay_out_of_reads(spark, tmp_path):
+    """A dir that a partial compaction folded away from one bucket stays
+    live in another; full and multi-bucket reads must not return its old
+    rows of the folded bucket. Here the fold expired a tombstone, so a
+    leaked row would resurrect the deleted conversation."""
+    from hierarchical_to_relational_spark.functions.xxh64 import bucket_of_key
+    from hierarchical_to_relational_spark.operators.merge import (
+        compact, lookup_conversations, read_transcripts,
+    )
+    from hierarchical_to_relational_spark.streaming.driver import CdcPipeline
+
+    nb = 4
+    pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
+                       str(tmp_path / "ck"), n_buckets=nb, text_mode="none",
+                       compact_every=10_000)
+    t = pipe.table
+    keep = "c0"
+    gone = next(c for c in (f"c{i}" for i in range(1, 50))
+                if bucket_of_key(c, nb) != bucket_of_key(keep, nb))
+    keep_b, gone_b = bucket_of_key(keep, nb), bucket_of_key(gone, nb)
+    # one dir holds both buckets' rows
+    pipe.apply_batch(_envs(spark, [(1, "insert", keep, [(0, "k")]),
+                                   (2, "insert", gone, [(0, "g")])]), "b0")
+    pipe.apply_batch(_envs(spark, [(3, "delete", gone, None)]), "b1")
+    assert compact(spark, t, batch_id="c-gone", buckets=[gone_b],
+                   expire_tombstones_below=100)
+    assert str(gone_b) not in t.snapshot()["live"]
+
+    def rows(df):
+        return sorted(map(tuple, df.select("conv_id", "turn_idx", "text").collect()))
+
+    state = rows(read_transcripts(spark, t))
+    assert gone not in {r[0] for r in state}
+    assert state == rows(lookup_conversations(spark, t, [keep, gone]))
+    both = t.read(spark, buckets=[keep_b, gone_b]).select("_bucket").collect()
+    assert {r["_bucket"] for r in both} == {keep_b}
 
 
 def test_timestamp_time_travel_and_age_expiry(spark, tmp_path, monkeypatch):
