@@ -7,8 +7,8 @@ purely via Column algebra — ``explode`` + struct projection, zero per-row
 Python (the reference's zero-UDF discipline, SURVEY.md §2.1). There is one
 form, ``normalize_envelopes_fused``: upsert, patch and tombstone rows come
 out of a single projection over one scan of the envelopes. The optional
-text-normalization step is a **vectorized Arrow-native UDF** (batch
-transfer, no per-row Python), the only permitted Python on the hot path.
+text-normalization step is a JVM Column expression too, so the CDC write
+path runs no Python at all.
 
 Turn-struct columns are discovered from the schema, so additively-evolved
 envelopes (extra turn fields, FIXTURES.md F6b) flow through without code
@@ -19,58 +19,16 @@ before applying them.
 from __future__ import annotations
 
 import pandas as pd
-import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F, types as T
-from pyspark.sql.functions import arrow_udf
 
 META_LSN = "_lsn"
 META_TS = "_commit_ts"
 META_OP = "_op"
 META_BUCKET = "_bucket"
 
-
-# Python re's ``\s`` on str is ASCII whitespace PLUS the Unicode
-# White_Space set; RE2 (pyarrow.compute) ``\s`` is ASCII-only. This class
-# spells out the remainder so the C++ pass is bit-identical to the
-# reference semantics (the \x0b\x0c\x1c-\x1f members of White_Space cannot
-# appear here — the control-strip pass removes them first). Fuzz-proven
-# equal to the pure-pandas body in test_property_based.
-_WS_CLASS = (r"[\s\x{0085}\x{00a0}\x{1680}\x{2000}-\x{200a}"
-             r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]+")
-
-
-def _normalize_array(arr):
-    """Arrow-native normalize body (r6): Unicode NFC, strip control chars,
-    collapse whitespace, trim; the batch stays a pyarrow Array end to end.
-
-    The regex passes dominate NFC ~20× (round-5 split on 645k corpus
-    texts), so they run in pyarrow's RE2 (C++) and only NFC stays
-    Python-side. This pyarrow's ``utf8_normalize`` returns decomposed
-    output for every form (re-verified on pyarrow 16.1.0), else NFC would
-    be C++ too. The ascii gate is vectorized — the old per-row
-    ``texts.map(...isascii...)`` lambda was a Python loop over EVERY row
-    even when the whole batch is ASCII (the common corpus case);
-    string_is_ascii is one C++ pass and the NFC map runs only on the
-    non-ASCII remainder (bit-equal: NFC is the identity on ASCII; the
-    fuzz parity test covers the gate)."""
-    import unicodedata
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    ascii_mask = pc.string_is_ascii(arr)
-    if not pc.min(ascii_mask).as_py():
-        vals = arr.to_pylist()
-        for i, ok in enumerate(ascii_mask.to_pylist()):
-            if ok is False and vals[i] is not None:
-                vals[i] = unicodedata.normalize("NFC", vals[i])
-        arr = pa.array(vals, pa.string())
-    arr = pc.replace_substring_regex(
-        arr, pattern=r"[\x00-\x08\x0b\x0c\x0e-\x1f]", replacement=""
-    )
-    arr = pc.replace_substring_regex(arr, pattern=_WS_CLASS, replacement=" ")
-    return pc.utf8_trim(arr, " ")
+# the C0 controls other than \t \n \r, deleted by one translate() pass
+_C0_STRIP = "".join(chr(c) for c in range(0x20) if chr(c) not in "\t\n\r")
 
 
 def _normalize_series_pandas(texts: pd.Series) -> pd.Series:
@@ -83,19 +41,24 @@ def _normalize_series_pandas(texts: pd.Series) -> pd.Series:
     return s.str.replace(r"\s+", " ", regex=True).str.strip()
 
 
-@arrow_udf(T.StringType())
-def normalize_text_arrow(texts: pa.Array) -> pa.Array:
-    """Vectorized text cleanup: Unicode NFC, strip control chars, collapse
-    whitespace. Arrow-NATIVE UDF (r6, Spark 4.1 ``arrow_udf``): batches
-    arrive and leave as pyarrow Arrays, skipping the pandas object-array
-    round-trip the pandas_udf form paid on BOTH sides of a body that is
-    pyarrow.compute anyway. Input from Spark's Arrow transfer is valid
-    UTF-8 by construction, so no lone surrogate can reach the body."""
-    import pyarrow as pa
+def normalize_text(col):
+    r"""Full text cleanup as one JVM Column expression: Unicode NFC, strip
+    control chars, collapse whitespace, trim. Equal to
+    ``_normalize_series_pandas`` (fuzz-tested in test_property_based).
 
-    if isinstance(texts, pa.ChunkedArray):  # defensive: combine chunks
-        texts = texts.combine_chunks()
-    return _normalize_array(texts)
+    NFC comes from ICU4J, which Spark ships, through ``reflect``; the null
+    guard keeps tombstone rows' null text null (ICU throws on null). ICU
+    77 implements Unicode 16, while Python's ``unicodedata`` may be older
+    (Python 3.11: Unicode 14). The two can differ on sequences of code
+    points the older version leaves unassigned: U+16D63 U+16D67 composes
+    to U+16D69 under ICU only. Java's ``(?U)\s`` is the Unicode
+    White_Space set, which equals Python's ``str`` ``\s`` once the control
+    strip has removed ``\x1c-\x1f``."""
+    nfc = F.when(col.isNotNull(), F.call_function(
+        "reflect", F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"),
+        col, F.lit(False)))
+    stripped = F.translate(nfc, _C0_STRIP, "")
+    return F.trim(F.regexp_replace(stripped, r"(?U)\s+", " "))
 
 
 def normalize_text_builtin(col):
@@ -132,6 +95,10 @@ def normalize_envelopes_fused(
     exchange to the write job. Resolution semantics live in
     operators.merge.resolve / collapse_patches.
 
+    ``text_mode`` "arrow" (the historical name of the full Unicode
+    normalize) applies ``normalize_text``; "builtin" applies
+    ``normalize_text_builtin``; "none" leaves text as it is.
+
     Feed the result to ``apply_cdc_batch``."""
     tfields = turn_fields(envelopes)
     turn_elem = envelopes.schema["payload"].dataType["turns"].dataType.elementType
@@ -154,9 +121,9 @@ def normalize_envelopes_fused(
         .select("conv_id", META_LSN, META_TS, META_OP, "t.*")
     )
     if text_mode == "arrow":
-        # null text on tombstone rows passes through as null (RE2 kernels
-        # and the NFC gate are null-propagating), so one UDF covers all ops
-        rows = rows.withColumn("text", normalize_text_arrow(F.col("text")))
+        # null text on tombstone rows stays null (every step is
+        # null-propagating), so one expression covers all ops
+        rows = rows.withColumn("text", normalize_text(F.col("text")))
     elif text_mode == "builtin":
         rows = rows.withColumn("text", normalize_text_builtin(F.col("text")))
     elif text_mode != "none":

@@ -1304,13 +1304,7 @@ class SnapshotTable:
                         "written file and are dropped", unmatched)
 
     @staticmethod
-    def _footer_stats(
-        commit_abs: str,
-        lsn_col: str = "_lsn",
-        tombstone_null_col: str = "turn_idx",
-        key_col: str = "conv_id",
-        bucket_col: str = "_bucket",
-    ) -> tuple[dict, dict, dict]:
+    def _footer_stats(commit_abs: str) -> tuple[dict, dict, dict]:
         """Commit metrics + per-file pruning stats + per-bucket accounting,
         driver-side with NO Spark job. Returns ``(metrics, file_stats,
         written)``:
@@ -1342,6 +1336,8 @@ class SnapshotTable:
         import numpy as np
         import pyarrow.parquet as papq
 
+        lsn_col, key_col, bucket_col = "_lsn", "conv_id", "_bucket"
+        tombstone_null_col = "turn_idx"
         rows, max_lsn, nulls = 0, None, 0
         bucket_max_lsn: dict[str, int] = {}
         bucket_rows: dict[int, int] = {}

@@ -49,7 +49,10 @@ def main(argv: list[str] | None = None) -> int:
                         "aggregate view (default profile) at this path")
     p.add_argument("--mview-every", type=int, default=1,
                    help="refresh the --mview-root view every N batches")
-    p.add_argument("--text-mode", choices=["builtin", "arrow", "none"], default="builtin")
+    p.add_argument("--text-mode", choices=["builtin", "arrow", "none"], default="builtin",
+                   help="text cleanup: builtin = whitespace collapse + trim; arrow = "
+                        "the full Unicode normalize (NFC, control strip, Unicode "
+                        "whitespace collapse, trim); none = text as written")
     p.add_argument("--source-format", choices=["parquet", "json", "csv"], default="parquet")
     p.add_argument("--max-files-per-trigger", type=int, default=16)
     p.add_argument("--stream", action="store_true",

@@ -274,19 +274,28 @@ def test_lineage_records(spark, tmp_path, binlog):
 
 
 def test_arrow_normalize_text(spark, tmp_path):
-    """The vectorized Arrow normalize path cleans whitespace/control chars
-    and matches the builtin-column path on plain input."""
+    """text_mode "arrow" (the full Unicode normalize) stores exactly the
+    pure-pandas reference's output, NFC and Unicode whitespace included,
+    and plans no Python UDF evaluation."""
+    from hierarchical_to_relational_spark.operators.normalize import (
+        _normalize_series_pandas,
+        normalize_envelopes_fused,
+    )
+
     ts = pd.Timestamp("2026-01-01").to_pydatetime()
-    data = [
-        (1, ts, "insert", "cA",
-         {"turns": [{"turn_idx": 0, "role": "user", "text": "  hello\t\tworld \x00!", "tool": None, "ts": ts}]})
-    ]
-    env = spark.createDataFrame(data, envelope_schema())
+    texts = ["  hello\t\tworld \x00!", "Cafe\u0301", "a\u3000b", "x\u0085 y\x07z"]
+    turns = [{"turn_idx": i, "role": "user", "text": t, "tool": None, "ts": ts}
+             for i, t in enumerate(texts)]
+    env = spark.createDataFrame([(1, ts, "insert", "cA", {"turns": turns})],
+                                envelope_schema())
+    plan = normalize_envelopes_fused(env, text_mode="arrow")._jdf.queryExecution().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"), str(tmp_path / "ck"),
                        n_buckets=2, text_mode="arrow")
     pipe.apply_batch(env, "b1")
-    (row,) = read_transcripts(spark, pipe.table).collect()
-    assert row["text"] == "hello world !"
+    got = [r["text"] for r in read_transcripts(spark, pipe.table).orderBy("turn_idx").collect()]
+    assert got == _normalize_series_pandas(pd.Series(texts, dtype=object)).tolist()
+    assert got[:2] == ["hello world !", "Caf\u00e9"]
 
 
 def test_cow_mode_matches_oracle(spark, tmp_path, binlog):

@@ -267,9 +267,11 @@ def test_changes_since_net_diff_property(spark, tmp_path_factory, seed, split, p
     st.text(
         alphabet=st.one_of(
             # anything, combining marks included — but no lone surrogates
-            # (category Cs): Spark's Arrow transfer only delivers valid
-            # UTF-8, and characters() includes them by default
-            st.characters(exclude_categories=("Cs",)),
+            # (category Cs): a Spark string is valid UTF-8, and
+            # characters() includes them by default; and nothing this
+            # Python's Unicode data leaves unassigned (category Cn), where
+            # the reference's NFC is undefined (see normalize_text)
+            st.characters(exclude_categories=("Cs", "Cn")),
             # over-weight the hazard classes: control chars, every Unicode
             # White_Space member, and NFC-sensitive combining sequences
             st.sampled_from(list("\x00\x01\x08\x0b\x0c\x0e\x1f\x7f")
@@ -280,20 +282,43 @@ def test_changes_since_net_diff_property(spark, tmp_path_factory, seed, split, p
         max_size=40,
     ),
 ), max_size=30))
-def test_normalize_re2_body_matches_pandas_reference(texts):
-    """Round-5 normalize rewrite (pyarrow RE2 regex passes + ascii-gated
-    NFC) is BIT-IDENTICAL to the original pure-pandas body on adversarial
-    input: control chars, the full Unicode White_Space set, combining
-    sequences, Nones. This is the parity gate that lets the 2.2×-faster
-    C++ passes onto the north-star hot path."""
+def test_normalize_text_matches_pandas_reference(spark, texts):
+    """The JVM normalize (ICU NFC, control strip, Unicode whitespace
+    collapse, trim) is BIT-IDENTICAL to the pure-pandas reference body on
+    adversarial input: control chars, the full Unicode White_Space set,
+    combining sequences, Nones. Each example is one Spark job over a
+    literal array."""
     import pandas as pd
-    import pyarrow as pa
 
     from hierarchical_to_relational_spark.operators.normalize import (
-        _normalize_array,
         _normalize_series_pandas,
+        normalize_text,
     )
 
-    got = _normalize_array(pa.array(texts, pa.string())).to_pylist()
+    arr = F.array(*map(F.lit, texts)).cast("array<string>")
+    (row,) = spark.range(1).select(F.transform(arr, normalize_text).alias("n")).collect()
     want = _normalize_series_pandas(pd.Series(texts, dtype=object)).tolist()
-    assert got == want
+    assert row["n"] == want
+
+
+def test_normalize_text_icu_unicode_gap(spark):
+    """Pins the ICU NFC behind ``normalize_text``: ICU 77 (Unicode 16)
+    composes U+16D63 U+16D67 to U+16D69, which Unicode 14's
+    ``unicodedata`` leaves unassigned and unchanged; null text stays null.
+    Fails if ``Normalizer.compose(String, boolean)`` goes away or NFC
+    switches to ``java.text.Normalizer``."""
+    import pandas as pd
+
+    from hierarchical_to_relational_spark.operators.normalize import (
+        _normalize_series_pandas,
+        normalize_text,
+    )
+
+    pair = "\U00016D63\U00016D67"
+    (row,) = spark.range(1).select(
+        normalize_text(F.lit(pair)).alias("gap"),
+        normalize_text(F.lit(None).cast("string")).alias("null"),
+    ).collect()
+    assert row["gap"] == "\U00016D69"
+    assert row["null"] is None
+    assert _normalize_series_pandas(pd.Series([pair], dtype=object)).tolist() == [pair]
