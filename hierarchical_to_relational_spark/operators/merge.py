@@ -184,52 +184,21 @@ def apply_cdc_batch(
            ('p') and tombstone ('d') rows together, the tombstones already
            in the stored shape (null payload, null _commit_ts).
 
-    Widens the target schema first if the batch is additively wider; the
-    commit (append or bucket-rewrite per ``mode``) is idempotent on
-    ``batch_id``. Commit stats (rows, max applied LSN, tombstone/upsert
-    counts) come from the written files' parquet footers — no extra
-    Spark job.
+    Widens the target schema first (``SnapshotTable.evolve_to``, a
+    metadata commit ``<batch_id>::evolve``) when the batch has a new
+    column or a losslessly wider type; a batch that lacks table columns
+    lands with them null, a narrower type is cast up. The commit (append
+    or bucket-rewrite per ``mode``) is idempotent on ``batch_id``. Commit
+    stats (rows, max applied LSN, tombstone/upsert counts) come from the
+    written files' parquet footers — no extra Spark job.
     """
     t0 = time.monotonic()
-    schema = table.schema()
-
-    # --- schema evolution (widen target before merge): additive new
-    # columns AND lossless type widenings (int→long, float→double,
-    # decimal precision up — real CDC feeds widen types routinely).
-    # Metadata-only commit; old files are cast up at read. The check is
-    # pure driver-side dict comparison — no Spark job, and the ::evolve
-    # commit only happens when something actually changed.
-    from hierarchical_to_relational_spark.table.snapshot_table import (
-        _cast_equivalent,
-        _widens,
-    )
-
-    have = {f.name: f.dataType for f in schema.fields}
+    # widen the target before the merge under the table's one rule; a
+    # steady-state batch costs a driver-side schema comparison — no Spark
+    # job, no ::evolve commit
     incoming = [f for f in batch.schema.fields if f.name not in (META_LSN, META_TS, META_OP)]
-    changed = False
-    for f in incoming:
-        cur = have.get(f.name)
-        if cur is None or _widens(cur, f.dataType):
-            changed = True
-        elif (cur != f.dataType and not _widens(f.dataType, cur)
-              and not _cast_equivalent(f.dataType, cur)):
-            raise ValueError(
-                f"incompatible type change for {f.name!r}: "
-                f"{cur.simpleString()} -> {f.dataType.simpleString()}"
-            )
-    if changed:
-        inc_by = {f.name: f for f in incoming}
-        target = T.StructType(
-            [
-                T.StructField(f.name, inc_by[f.name].dataType, f.nullable)
-                if f.name in inc_by and _widens(f.dataType, inc_by[f.name].dataType)
-                else f
-                for f in schema.fields
-            ]
-            + [T.StructField(f.name, f.dataType, True) for f in incoming if f.name not in have]
-        )
-        table.evolve_to(target, batch_id=f"{batch_id}::evolve")
-        schema = table.schema()
+    table.evolve_to(T.StructType(incoming), batch_id=f"{batch_id}::evolve")
+    schema = table.schema()
 
     # single select (not chained withColumn — each one re-runs Catalyst
     # analysis and the sum is real per-micro-batch driver constant)

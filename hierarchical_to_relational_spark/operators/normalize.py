@@ -67,8 +67,8 @@ def normalize_text_builtin(col):
     return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
-def turn_fields(envelope_df: DataFrame) -> list[T.StructField]:
-    payload = envelope_df.schema["payload"].dataType
+def turn_fields(envelope_schema: T.StructType) -> list[T.StructField]:
+    payload = envelope_schema["payload"].dataType
     return list(payload["turns"].dataType.elementType.fields)
 
 
@@ -100,7 +100,7 @@ def normalize_envelopes_fused(
     ``normalize_text_builtin``; "none" leaves text as it is.
 
     Feed the result to ``apply_cdc_batch``."""
-    tfields = turn_fields(envelopes)
+    tfields = turn_fields(envelopes.schema)
     turn_elem = envelopes.schema["payload"].dataType["turns"].dataType.elementType
     ts_type = envelopes.schema["commit_ts"].dataType
     one_null_turn = F.array(F.lit(None).cast(turn_elem))

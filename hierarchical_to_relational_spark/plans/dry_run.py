@@ -6,7 +6,7 @@ from pyspark.sql import types as T
 
 from hierarchical_to_relational_spark.config import FlattenConfig
 from hierarchical_to_relational_spark.operators.merge import table_schema_for
-from hierarchical_to_relational_spark.operators.normalize import META_LSN, META_OP, META_TS
+from hierarchical_to_relational_spark.operators.normalize import META_LSN, META_OP, META_TS, turn_fields
 
 
 def plan_flatten(input_schema: T.StructType, cfg: FlattenConfig) -> T.StructType | None:
@@ -27,11 +27,9 @@ def plan_normalize(envelope_schema: T.StructType) -> T.StructType:
     given envelope schema: upsert, patch and tombstone rows together —
     additive turn fields flow through. ``_commit_ts`` is nullable because
     tombstone rows carry null."""
-    payload = envelope_schema["payload"].dataType
-    turn_fields = list(payload["turns"].dataType.elementType.fields)
     return T.StructType(
         [T.StructField("conv_id", T.StringType(), False)]
-        + turn_fields
+        + turn_fields(envelope_schema)
         + [
             T.StructField(META_LSN, T.LongType(), False),
             T.StructField(META_TS, T.TimestampType(), True),

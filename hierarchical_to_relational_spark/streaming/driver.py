@@ -27,12 +27,9 @@ from hierarchical_to_relational_spark.lineage import LineageStore
 from hierarchical_to_relational_spark.operators.merge import (
     apply_cdc_batch,
     compact_pressured,
-    table_schema_for,
 )
-from hierarchical_to_relational_spark.operators.normalize import (
-    normalize_envelopes_fused,
-    turn_fields,
-)
+from hierarchical_to_relational_spark.operators.normalize import normalize_envelopes_fused
+from hierarchical_to_relational_spark.plans import plan_cdc_table
 from hierarchical_to_relational_spark.sources import binlog as binlog_source
 from hierarchical_to_relational_spark.table.snapshot_table import SnapshotTable
 
@@ -131,9 +128,8 @@ class CdcPipeline:
         if SnapshotTable.exists(table_root):
             self.table = SnapshotTable(table_root)
         else:
-            probe = spark.createDataFrame([], self.envelope_schema)
-            base_cols = [T.StructField("conv_id", T.StringType(), False)] + turn_fields(probe)
-            self.table = SnapshotTable.create(table_root, table_schema_for(base_cols), n_buckets)
+            self.table = SnapshotTable.create(
+                table_root, plan_cdc_table(self.envelope_schema), n_buckets)
         self.lineage = LineageStore(table_root)
 
     # -- one micro-batch (also usable standalone for pure batch ingest) --

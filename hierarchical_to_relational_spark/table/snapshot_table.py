@@ -17,12 +17,16 @@ north rule needs:
   touches and re-points the bucket→files mapping. Readers prune to the
   buckets they need. This is the same physical shape Iceberg copy-on-write
   MERGE produces.
-- **Additive schema evolution**: a commit may carry a widened schema
-  (new nullable columns only — mirroring the reference's additive
-  output-schema generation, HierarchyConfig.java:239-253); readers project
-  old files up to the current schema with null-filled columns.
-- **Time travel**: every snapshot is retained; ``read(version=n)`` serves
-  historical states (the lineage store records batch→version).
+- **Additive schema evolution**: one rule, ``_union_schema`` — new
+  columns append nullable and existing columns may only widen losslessly
+  (mirroring the reference's additive output-schema generation,
+  HierarchyConfig.java:239-253). Evolution is its own metadata commit
+  (``evolve_to``, kind ``evolve``); data commits never change the schema.
+  Readers project old files up to the current schema, null-filling added
+  columns and casting widened ones up.
+- **Time travel**: every retained snapshot serves ``read(version=n)``
+  (the lineage store records batch→version); ``expire_snapshots`` drops
+  old ones under a retention policy.
 
 Layout (FLAT commit dirs, round 4)::
 
@@ -246,15 +250,19 @@ class BranchDivergedError(RuntimeError):
     and re-apply, or resolve manually."""
 
 
-def _union_schema(a: T.StructType, b: T.StructType) -> T.StructType:
-    """Field-wise union of two schemas that diverged from a common
-    ancestor under the evolution rules: common fields keep the WIDER type
-    (must be a lossless widening one way or the other), fields unique to
-    either side append nullable. Incompatible common fields raise."""
-    a_by = {f.name: f for f in a.fields}
+def _union_schema(cur: T.StructType, incoming: T.StructType) -> T.StructType:
+    """The engine's one schema-evolution rule: the table schema ``cur``
+    widened to admit ``incoming`` (a batch's schema, a target schema or a
+    branch's schema). The table keeps its columns, their order and their
+    nullability. A common column takes the incoming type only when that is
+    a lossless widening (``_widens``); a narrower or cast-equivalent
+    incoming type keeps the table's type (batches are cast up at write).
+    A column only ``incoming`` has is appended nullable — every existing
+    row reads null for it. Any other type change raises."""
+    inc_by = {f.name: f for f in incoming.fields}
     out: list[T.StructField] = []
-    for f in a.fields:
-        g = next((x for x in b.fields if x.name == f.name), None)
+    for f in cur.fields:
+        g = inc_by.get(f.name)
         if g is None or g.dataType == f.dataType:
             out.append(f)
         elif _widens(f.dataType, g.dataType):
@@ -263,11 +271,12 @@ def _union_schema(a: T.StructType, b: T.StructType) -> T.StructType:
             out.append(f)
         else:
             raise ValueError(
-                f"cannot merge schemas: {f.name!r} is "
-                f"{f.dataType.simpleString()} vs {g.dataType.simpleString()}"
+                f"incompatible type change for {f.name!r}: "
+                f"{f.dataType.simpleString()} -> {g.dataType.simpleString()}"
             )
+    have = set(cur.fieldNames())
     out += [T.StructField(g.name, g.dataType, True)
-            for g in b.fields if g.name not in a_by]
+            for g in incoming.fields if g.name not in have]
     return T.StructType(out)
 
 
@@ -849,7 +858,7 @@ class SnapshotTable:
             f = schema[c]  # KeyError for unknown columns — deliberate
             if f.dataType.typeName() not in ("string", "byte", "short", "integer", "long"):
                 raise ValueError(f"bloom index needs a string/int column, {c} is {f.dataType}")
-        return self._commit(batch_id, schema, lambda live: live,
+        return self._commit(batch_id, None, lambda live: live,
                             index_cols_override=list(cols), kind="evolve")
 
     def bucket_col(self):
@@ -1150,10 +1159,13 @@ class SnapshotTable:
         ordered = ["_bucket"] + [n for n in schema.fieldNames()]
         # cast to the manifest schema (no-op casts are optimized away):
         # guarantees the files' physical types never drift from the
-        # snapshot schema, e.g. a narrow batch landing after a widening
+        # snapshot schema, e.g. a narrow batch landing after a widening;
+        # a column the frame predates is written null
+        have = set(df.columns)
         out = df.select(
             F.col("_bucket").cast("int").alias("_bucket"),
-            *[F.col(n).cast(schema[n].dataType).alias(n) for n in schema.fieldNames()],
+            *[(F.col(n) if n in have else F.lit(None)).cast(schema[n].dataType).alias(n)
+              for n in schema.fieldNames()],
         )
         persisted = None
         if cluster_by is not None:
@@ -1500,7 +1512,7 @@ class SnapshotTable:
     def _commit(
         self,
         batch_id: str,
-        schema,  # StructType, or a () -> StructType re-resolved per attempt
+        schema,  # StructType, () -> StructType, or None: the current one
         update_live,
         commit_meta: tuple[str, dict] | None = None,
         retries: int = 20,
@@ -1532,12 +1544,16 @@ class SnapshotTable:
             if batch_id in self.committed_batch_ids():
                 return False
             cur = self.snapshot()
-            # schema may be a callable: re-resolved EVERY attempt so a
-            # commit that loses the pointer race to a concurrent schema
-            # evolution folds the winner's columns in instead of
-            # publishing a stale schema (merge_branch's union is the case
-            # that needs this — update_live is already per-attempt).
-            resolved_schema = schema() if callable(schema) else schema
+            # schema is re-resolved EVERY attempt (None keeps the schema
+            # of the snapshot the attempt builds on; a callable re-runs
+            # the union) so a commit that loses the pointer race to a
+            # concurrent schema evolution keeps the winner's columns
+            # instead of publishing a stale schema. Data commits pass None:
+            # only evolve_to, merge_branch and rollback change the schema.
+            if schema is None:
+                resolved_schema = cur["schema"]
+            else:
+                resolved_schema = (schema() if callable(schema) else schema).json()
             new_live = update_live({b: list(ds) for b, ds in cur["live"].items()})
             referenced = {d for ds in new_live.values() for d in ds}
             prev_bytes = cur.get("commit_bytes", {})
@@ -1554,7 +1570,7 @@ class SnapshotTable:
                 "batch_id": batch_id,
                 "kind": kind,
                 "committed_at": time.time(),
-                "schema": resolved_schema.json(),
+                "schema": resolved_schema,
                 "n_buckets": n_buckets_override if n_buckets_override is not None else cur["n_buckets"],
                 "index_cols": (index_cols_override if index_cols_override is not None
                                else cur.get("index_cols", [])),
@@ -1568,46 +1584,11 @@ class SnapshotTable:
                 continue
         raise CommitConflictError(f"gave up committing {batch_id!r} after {retries} attempts")
 
-    def _resolve_schema(self, new_schema: T.StructType | None) -> T.StructType:
-        """Merge an incoming batch schema into the table schema under the
-        evolution rules: new nullable columns append (additive — the
-        reference's rule, HierarchyConfig.java:239-253) and existing
-        columns may WIDEN losslessly (int→long, float→double, decimal
-        precision up — the Iceberg promotion set; real CDC feeds widen
-        types routinely). A NARROWER incoming column keeps the table's
-        wide type (the batch is cast up at write); anything else —
-        dropped columns, incompatible changes — raises."""
-        cur_schema = self.schema()
-        if new_schema is None:
-            return cur_schema
-        cur_by = {f.name: f for f in cur_schema.fields}
-        new_names = {f.name for f in new_schema.fields}
-        dropped = set(cur_by) - new_names
-        if dropped:
-            raise ValueError(f"schema evolution must be additive; dropped: {dropped}")
-        out: list[T.StructField] = []
-        for f in new_schema.fields:
-            c = cur_by.get(f.name)
-            if c is None or c.dataType == f.dataType:
-                out.append(f if c is None else c)
-            elif _widens(c.dataType, f.dataType):
-                out.append(T.StructField(f.name, f.dataType, c.nullable))
-            elif _widens(f.dataType, c.dataType) or _cast_equivalent(f.dataType, c.dataType):
-                out.append(c)  # incoming narrower/equivalent: keep, cast at write
-            else:
-                raise ValueError(
-                    f"incompatible type change for {f.name!r}: "
-                    f"{c.dataType.simpleString()} -> {f.dataType.simpleString()} "
-                    "(only lossless widenings are accepted)"
-                )
-        return T.StructType(out)
-
     def commit_overwrite_buckets(
         self,
         df: DataFrame,
         buckets: list[int],
         batch_id: str,
-        new_schema: T.StructType | None = None,
         base_version: int | None = None,
         cluster_by: str | None = None,
         kind: str = "overwrite",
@@ -1627,18 +1608,14 @@ class SnapshotTable:
           become the new entry (correct because readers LWW-resolve:
           resolve(rewrite ∪ delta) == resolve(base ∪ batch ∪ delta));
         - changed any other way (a racing overwrite) →
-          ``ConcurrentOverwriteError`` — the caller must re-read+re-resolve.
-
-        ``new_schema`` (additive only) widens the table schema in the same
-        atomic snapshot."""
+          ``ConcurrentOverwriteError`` — the caller must re-read+re-resolve."""
         if batch_id in self.committed_batch_ids():
             return False
         if base_version is None:
             base_version = self.current_version()
         base_live: dict[str, list[str]] = self.snapshot(base_version)["live"]
-        schema = self._resolve_schema(new_schema)
         commit_rel, written = self._write_commit_data(
-            df, schema, repartition=True, cluster_by=cluster_by
+            df, self.schema(), repartition=True, cluster_by=cluster_by
         )
 
         def update(live: dict) -> dict:
@@ -1660,15 +1637,10 @@ class SnapshotTable:
             return live
 
         return self._commit(
-            batch_id, schema, update, commit_meta=(commit_rel, written), kind=kind
+            batch_id, None, update, commit_meta=(commit_rel, written), kind=kind
         )
 
-    def commit_append(
-        self,
-        df: DataFrame,
-        batch_id: str,
-        new_schema: T.StructType | None = None,
-    ) -> bool:
+    def commit_append(self, df: DataFrame, batch_id: str) -> bool:
         """Merge-on-read commit: append ``df`` (with ``_bucket`` column) as
         delta files on top of each touched bucket — O(batch) write cost,
         independent of table size. Readers union base + deltas and resolve
@@ -1676,10 +1648,9 @@ class SnapshotTable:
         Idempotent on batch_id like every commit."""
         if batch_id in self.committed_batch_ids():
             return False
-        schema = self._resolve_schema(new_schema)
         # repartition even for appends: batches are small and this keeps
         # files-per-bucket at one instead of tasks×buckets
-        commit_rel, written = self._write_commit_data(df, schema, repartition=True)
+        commit_rel, written = self._write_commit_data(df, self.schema(), repartition=True)
 
         def update(live: dict) -> dict:
             for b in written:
@@ -1687,7 +1658,7 @@ class SnapshotTable:
             return live
 
         return self._commit(
-            batch_id, schema, update, commit_meta=(commit_rel, written), kind="append"
+            batch_id, None, update, commit_meta=(commit_rel, written), kind="append"
         )
 
     def commit_rebucket(
@@ -1711,9 +1682,8 @@ class SnapshotTable:
         if base_version is None:
             base_version = self.current_version()
         base_live = self.snapshot(base_version)["live"]
-        schema = self.schema()
         commit_rel, written = self._write_commit_data(
-            df, schema, repartition=True, cluster_by=cluster_by,
+            df, self.schema(), repartition=True, cluster_by=cluster_by,
         )
 
         def update(live: dict) -> dict:
@@ -1724,7 +1694,7 @@ class SnapshotTable:
             return {b: [commit_rel] for b in written}
 
         return self._commit(
-            batch_id, schema, update,
+            batch_id, None, update,
             commit_meta=(commit_rel, written), n_buckets_override=new_n_buckets,
             kind="rebucket",
         )
@@ -1747,8 +1717,7 @@ class SnapshotTable:
         incremental readers."""
         if batch_id in self.committed_batch_ids():
             return False
-        schema = self.schema()
-        commit_rel, written = self._write_commit_data(df, schema, repartition=True)
+        commit_rel, written = self._write_commit_data(df, self.schema(), repartition=True)
 
         def update(live: dict) -> dict:
             for b, olds in replace.items():
@@ -1767,7 +1736,7 @@ class SnapshotTable:
                     live.pop(b, None)
             return live
 
-        return self._commit(batch_id, schema, update,
+        return self._commit(batch_id, None, update,
                             commit_meta=(commit_rel, written), kind="compact")
 
     def delta_depth(self) -> int:
@@ -2036,28 +2005,20 @@ class SnapshotTable:
             "ledger_ids": len(ids.ids),
         }
 
-    def evolve(self, add_fields: list[T.StructField], batch_id: str) -> bool:
-        """Metadata-only additive widening (no data rewrite)."""
-        if batch_id in self.committed_batch_ids():
-            return False
-        schema = self.schema()
-        existing = set(schema.fieldNames())
-        for fld in add_fields:
-            if fld.name not in existing:
-                schema = schema.add(T.StructField(fld.name, fld.dataType, True))
-        return self._commit(batch_id, schema, lambda live: live, kind="evolve")
-
     def evolve_to(self, target: T.StructType, batch_id: str) -> bool:
-        """Metadata-only schema evolution to ``target`` under the full rule
-        set of ``_resolve_schema`` — additive new columns AND lossless type
-        widenings (int→long, float→double, decimal precision up). No data
-        rewrite: old files keep their narrow physical types and every read
-        casts them up to the current schema (the same mechanism as
-        null-filling added columns), exactly how Iceberg serves promoted
-        columns."""
-        if batch_id in self.committed_batch_ids():
-            return False
-        merged = self._resolve_schema(target)
-        if merged == self.schema():
-            return False  # nothing to evolve
-        return self._commit(batch_id, merged, lambda live: live, kind="evolve")
+        """Metadata-only schema evolution: widen the table to admit
+        ``target`` under the one rule, ``_union_schema`` — new columns
+        append nullable, existing columns widen losslessly (int→long,
+        float→double, decimal precision up), columns ``target`` lacks are
+        kept. No data rewrite: old files keep their narrow physical types
+        and every read null-fills and casts them up to the current schema,
+        exactly how Iceberg serves promoted columns. Returns False, with
+        no commit, when the rule leaves the schema as it is or
+        ``batch_id`` was already committed."""
+        cur = self.schema()
+        if _union_schema(cur, target) == cur:
+            return False  # nothing to evolve; checked before the ledger
+        # re-resolved per commit attempt, so losing the race to another
+        # evolution folds the winner's columns in instead of reverting them
+        return self._commit(batch_id, lambda: _union_schema(self.schema(), target),
+                            lambda live: live, kind="evolve")

@@ -109,10 +109,9 @@ def test_branch_schema_union_on_merge(spark, tmp_path):
     br = t.create_branch("exp")
     wide = T.StructType(list(SCHEMA.fields) +
                         [T.StructField("w", T.StringType(), True)])
+    assert br.evolve_to(wide, "b1-evolve") is True
     br.commit_append(
-        _bucketed(spark, br, [("c", 3, "new")], "k string, v int, w string"),
-        "b1", new_schema=wide,
-    )
+        _bucketed(spark, br, [("c", 3, "new")], "k string, v int, w string"), "b1")
     assert t.merge_branch("exp", "merge-4") is True
     assert [f.name for f in t.schema().fields] == ["k", "v", "w"]
     assert _state(spark, t, ("k", "v", "w")) == {

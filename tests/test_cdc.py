@@ -163,21 +163,26 @@ def test_schema_evolution_widens_target(spark, tmp_path):
     assert n_new > 0 and n_old > 0
 
 
-def _rating_envs(spark, rows, rating_type):
-    """rows: (lsn, op, conv_id, [(turn_idx, role, text, rating)]) with a
-    numeric ``rating`` turn column of the given Spark type."""
-    import pandas as pd
-
+def _extra_envs(spark, rows, extra=None):
+    """rows: (lsn, op, conv_id, [(turn_idx, role, text, value)]) → envelopes
+    whose turns carry the extra turn field ``extra`` (a StructField) set to
+    ``value``; with ``extra=None`` the base envelope schema (value unused)."""
     ts = pd.Timestamp("2026-01-01").to_pydatetime()
-    schema = envelope_schema([T.StructField("rating", rating_type, True)])
     data = [
         (lsn, ts, op, cid,
          None if turns is None else {"turns": [
-             {"turn_idx": i, "role": r, "text": t, "tool": None, "ts": ts, "rating": rt}
-             for (i, r, t, rt) in turns]})
+             {"turn_idx": i, "role": r, "text": t, "tool": None, "ts": ts,
+              **({extra.name: x} if extra else {})}
+             for (i, r, t, x) in turns]})
         for (lsn, op, cid, turns) in rows
     ]
-    return spark.createDataFrame(data, schema)
+    return spark.createDataFrame(data, envelope_schema([extra] if extra else None))
+
+
+def _rating_envs(spark, rows, rating_type):
+    """rows: (lsn, op, conv_id, [(turn_idx, role, text, rating)]) with a
+    numeric ``rating`` turn column of the given Spark type."""
+    return _extra_envs(spark, rows, T.StructField("rating", rating_type, True))
 
 
 def test_type_widening_evolution(spark, tmp_path):
@@ -224,6 +229,59 @@ def test_type_widening_evolution(spark, tmp_path):
             (5, "insert", "cD", [(0, "user", "d0", "five-stars")]),
         ], T.StringType()), "b3")
     assert pipe.table.schema()["rating"].dataType == T.LongType()
+
+
+def test_old_schema_batch_after_widening(spark, tmp_path):
+    """A batch without an evolved turn column, arriving after the table
+    was widened for it, makes no ::evolve commit, leaves the schema as
+    it is and lands with the column null — equal to an LWW fold."""
+    model = T.StructField("model", T.StringType(), True)
+    pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
+                       str(tmp_path / "ck"), n_buckets=4, text_mode="none")
+    evolved = [
+        (1, "insert", "cA", [(0, "user", "a0", "m1"), (1, "assistant", "a1", "m1")]),
+        (2, "insert", "cB", [(0, "user", "b0", "m2")]),
+    ]
+    base = [
+        (3, "update", "cA", [(1, "assistant", "a1-v2", None)]),
+        (4, "insert", "cC", [(0, "user", "c0", None)]),
+    ]
+    pipe.apply_batch(_extra_envs(spark, evolved, model), "b0")
+    widened = pipe.table.schema()
+    assert "model" in widened.fieldNames()
+    v = pipe.table.current_version()
+
+    pipe.apply_batch(_extra_envs(spark, base), "b1")
+    assert pipe.table.schema() == widened
+    assert "b1::evolve" not in pipe.table.committed_batch_ids()
+    kinds = [s["kind"] for s in pipe.table.history() if s["version"] > v]
+    assert kinds[0] == "append" and "evolve" not in kinds
+
+    # independent oracle: LWW fold by (conv, turn) on lsn; a full row
+    # from the base schema sets model to null
+    want: dict = {}
+    for lsn, _, cid, turns in evolved + base:
+        for i, _, text, m in turns:
+            if (cid, i) not in want or want[(cid, i)][0] < lsn:
+                want[(cid, i)] = (lsn, text, m)
+    got = {(r["conv_id"], r["turn_idx"]): (r["text"], r["model"])
+           for r in read_transcripts(spark, pipe.table).collect()}
+    assert got == {key: row[1:] for key, row in want.items()}
+    assert got[("cA", 1)] == ("a1-v2", None) and got[("cC", 0)] == ("c0", None)
+
+
+def test_pipeline_table_schema_is_the_planned_schema(spark, tmp_path):
+    """CdcPipeline creates its table with exactly the schema the dry-run
+    planner derives, for the base and an evolved envelope schema."""
+    from hierarchical_to_relational_spark.plans import plan_cdc_table
+
+    model = T.StructField("model", T.StringType(), True)
+    for i, env in enumerate([envelope_schema(), envelope_schema([model])]):
+        pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / f"t{i}"),
+                           str(tmp_path / f"ck{i}"), n_buckets=2, text_mode="none",
+                           envelope_schema=env)
+        assert pipe.table.schema() == plan_cdc_table(env)
+    assert "model" in pipe.table.schema().fieldNames()
 
 
 def test_evolve_to_rules(spark, tmp_path):
@@ -881,7 +939,7 @@ def test_fused_normalize_pinned_rows(spark, tmp_path):
         assert got == want, mode
 
     # end-to-end: cA and cB die by tombstone, cC's update survives
-    base_cols = [T.StructField("conv_id", T.StringType(), False)] + turn_fields(env)
+    base_cols = [T.StructField("conv_id", T.StringType(), False)] + turn_fields(env.schema)
     t = SnapshotTable.create(str(tmp_path / "t"), table_schema_for(base_cols), n_buckets=4)
     apply_cdc_batch(spark, t, normalize_envelopes_fused(env, text_mode="none"),
                     batch_id="b0")

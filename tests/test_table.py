@@ -99,13 +99,14 @@ def test_additive_evolution_and_null_fill(spark, tmp_path):
     df = _bucketed(spark, t, [("a", 1)])
     t.commit_overwrite_buckets(df, _buckets(df), "b1")
 
-    assert t.evolve([T.StructField("w", T.StringType(), True)], "b2") is True
+    assert t.evolve_to(t.schema().add("w", T.StringType()), "b2") is True
     assert t.schema().fieldNames() == ["k", "v", "w"]
     # old files read with the new column null-filled
     row = t.read(spark).select("k", "v", "w").collect()[0]
     assert tuple(row) == ("a", 1, None)
     # evolution is idempotent on batch_id too
-    assert t.evolve([T.StructField("w2", T.StringType(), True)], "b2") is False
+    assert t.evolve_to(t.schema().add("w2", T.StringType()), "b2") is False
+    assert t.schema().fieldNames() == ["k", "v", "w"]
 
     wide = spark.createDataFrame([("b", 2, "x")], "k string, v int, w string")
     wide = wide.withColumn("_bucket", t.bucket_col()(F.col("k")))
@@ -135,7 +136,7 @@ def test_mixed_schema_dirs_read_in_one_scan(spark, tmp_path):
         assert t.commit_append(df.withColumn("_bucket", t.bucket_col()(F.col("k"))), batch_id)
 
     append([("a", 1, 1.5, Decimal("1.25"))], narrow, "b1")
-    assert t.evolve([T.StructField("w", T.StringType(), True)], "b2")
+    assert t.evolve_to(t.schema().add("w", T.StringType()), "b2")
     added = t.schema()
     append([("b", 2, 2.5, Decimal("2.50"), "x")], added, "b3")
     wide = T.StructType([
@@ -177,11 +178,96 @@ def test_mixed_schema_dirs_read_in_one_scan(spark, tmp_path):
 
 
 def test_non_additive_evolution_rejected(spark, tmp_path):
+    """No path drops a column: evolving to a narrower schema is a no-op,
+    and a frame that lacks a column lands with that column null."""
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=4)
     df = _bucketed(spark, t, [("a", 1)])
+    t.commit_overwrite_buckets(df, _buckets(df), "b1")
+    v = t.current_version()
     narrower = T.StructType([T.StructField("k", T.StringType(), False)])
-    with pytest.raises(ValueError, match="additive"):
-        t.commit_overwrite_buckets(df, _buckets(df), "b1", new_schema=narrower)
+    assert t.evolve_to(narrower, "b2") is False
+    assert t.current_version() == v and t.schema() == SCHEMA
+    narrow = spark.createDataFrame([("b",)], "k string")
+    assert t.commit_append(narrow.withColumn("_bucket", t.bucket_col()(F.col("k"))), "b3")
+    assert t.schema() == SCHEMA
+    out = {tuple(r) for r in t.read(spark).select("k", "v").collect()}
+    assert out == {("a", 1), ("b", None)}
+
+
+def test_evolve_to_is_the_union_rule(spark, tmp_path):
+    """evolve_to applies the table's one rule (``_union_schema``): a new
+    column is recorded nullable whatever the target says, the table keeps
+    its column order, a target lacking a table column is a no-op with no
+    commit, and evolve_to, merge_branch and apply_cdc_batch refuse a
+    bigint → string change with the same message."""
+    from hierarchical_to_relational_spark.operators.merge import apply_cdc_batch
+
+    t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
+    t.commit_append(_bucketed(spark, t, [("a", 1)]), "b0")
+    br = t.create_branch("exp")
+
+    # a non-nullable new field is recorded nullable: old rows read null
+    strict = T.StructType(list(SCHEMA.fields) + [T.StructField("w", T.StringType(), False)])
+    assert t.evolve_to(strict, "e1") is True
+    assert t.schema()["w"].nullable is True
+    assert [tuple(r) for r in t.read(spark).select("k", "v", "w").collect()] == [("a", 1, None)]
+
+    # a reordered target keeps the table's order; the new column appends
+    reordered = T.StructType([
+        T.StructField("x", T.LongType(), True),
+        T.StructField("w", T.StringType(), True),
+        T.StructField("v", T.IntegerType(), True),
+        T.StructField("k", T.StringType(), False),
+    ])
+    assert t.evolve_to(reordered, "e2") is True
+    assert t.schema().fieldNames() == ["k", "v", "w", "x"]
+
+    # a target lacking table columns: False, no commit, columns kept
+    v = t.current_version()
+    assert t.evolve_to(SCHEMA, "e3") is False
+    assert t.current_version() == v and t.schema().fieldNames() == ["k", "v", "w", "x"]
+    assert "e3" not in t.committed_batch_ids()
+
+    # bigint -> string is refused with one message on every path
+    msg = "incompatible type change for 'x': bigint -> string"
+    as_string = T.StructType([T.StructField("x", T.StringType(), True)])
+    with pytest.raises(ValueError, match=msg):
+        t.evolve_to(as_string, "e4")
+    # the branch evolved x as string since the fork
+    assert br.evolve_to(as_string, "br-e1") is True
+    with pytest.raises(ValueError, match=msg):
+        t.merge_branch("exp", "merge-1")
+    batch = spark.createDataFrame(
+        [("c", "five", 5, None, "u")],
+        "k string, x string, _lsn long, _commit_ts timestamp, _op string")
+    with pytest.raises(ValueError, match=msg):
+        apply_cdc_batch(spark, t, batch, batch_id="a1")
+    assert t.current_version() == v and t.schema()["x"].dataType == T.LongType()
+
+
+def test_data_commit_keeps_a_concurrent_evolution(spark, tmp_path):
+    """A data commit publishes the schema of the snapshot it lands on:
+    an evolution that another writer commits while the data files are
+    being written survives the data commit (the new rows read null)."""
+    wide = T.StructType(list(SCHEMA.fields) + [T.StructField("w", T.StringType(), True)])
+    for kind in ("append", "overwrite"):
+        t = SnapshotTable.create(str(tmp_path / kind), SCHEMA, n_buckets=2)
+        other = SnapshotTable(t.root)
+        write = t._write_commit_data
+
+        def racing_write(*args, **kwargs):
+            out = write(*args, **kwargs)
+            assert other.evolve_to(wide, "evolve-w")
+            return out
+
+        t._write_commit_data = racing_write
+        df = _bucketed(spark, t, [("a", 1)])
+        if kind == "append":
+            assert t.commit_append(df, "b1")
+        else:
+            assert t.commit_overwrite_buckets(df, _buckets(df), "b1")
+        assert t.schema().fieldNames() == ["k", "v", "w"], kind
+        assert [tuple(r) for r in t.read(spark).select("k", "v", "w").collect()] == [("a", 1, None)]
 
 
 def test_time_travel(spark, tmp_path):
