@@ -404,16 +404,13 @@ def binpack_deltas(
     are exactly who this sweeps; schedule it wide (``buckets=None``) on a
     slow cadence beside pressure-driven partial compaction."""
     snap = table.snapshot()
-    cb = snap.get("commit_bytes", {})
+    cb = snap["commit_bytes"]
     want = None if buckets is None else {int(b) for b in buckets}
     picked: dict[str, list[str]] = {}
     for b, ds in snap["live"].items():
         if want is not None and int(b) not in want:
             continue
-        sized = sorted(
-            (cb.get(d, {}).get(b, 0), d) for d in ds
-            if cb.get(d, {}).get(b) is not None and cb[d][b] < target_bytes
-        )
+        sized = sorted((cb[d][b], d) for d in ds if cb[d][b] < target_bytes)
         chosen, acc = [], 0
         for sz, d in sized:
             if acc + sz > target_bytes and chosen:
@@ -707,18 +704,9 @@ def _diff_live_dirs(
     for v in range(since_version + 1, version + 1):
         snap = table.snapshot(v)
         cur = snap["live"]
-        kind = snap.get("kind")
+        kind = snap["kind"]
         if kind == "rebucket" or snap["n_buckets"] != start["n_buckets"]:
             respec = True
-        if kind is None and snap["batch_id"].endswith(("::compact", "::evolve")):
-            kind = "compact"  # pre-kind snapshots from this engine's pipeline
-        if kind is None and snap["batch_id"].startswith("maintenance-rollback-"):
-            # pre-kind rollbacks from the maintenance CLI's derived ids:
-            # superset emission would be WRONG (rollback removes rows
-            # without tombstones), so sniff them into the raise below.
-            # Pre-kind rollbacks under caller-chosen ids remain
-            # undetectable — a legacy-table limitation.
-            kind = "rollback"
         if kind == "rollback":
             # Round-5: emit THROUGH a rollback. Rolled-back rows vanish
             # without tombstones, but every such row physically lives in a

@@ -665,7 +665,7 @@ class IvfIndex:
         )
         cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
         # base invfile + any MoR-style append deltas: each root is its own
-        # hive-partitioned dir (no common basePath), so read-and-union —
+        # hive-partitioned dir (no common base path), so read-and-union —
         # every read prunes to the probed cells' directories
         parts = []
         for p in self._inv_paths():

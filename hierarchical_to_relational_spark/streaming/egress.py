@@ -67,6 +67,7 @@ from __future__ import annotations
 
 import glob
 import json
+import logging
 import os
 import re
 import shutil
@@ -77,6 +78,8 @@ from pyspark.sql import SparkSession
 
 from hierarchical_to_relational_spark.operators.merge import changes_since
 from hierarchical_to_relational_spark.table.snapshot_table import SnapshotTable
+
+log = logging.getLogger(__name__)
 
 
 class ChangeFollower:
@@ -398,6 +401,8 @@ class ChangeFollower:
             # would publish an overlapping export) runs ahead
             redelivered, ok = self._redeliver(acked, since, on_changes)
             if not ok:
+                log.warning("feed resync v%s..v%s: unacked windows from v%s cannot be "
+                            "re-delivered", since, v_now, acked)
                 return {"from": since, "to": v_now, "upserts": 0, "deletes": 0,
                         "out_path": None, "needs_resync": True,
                         "redelivered": redelivered}
@@ -407,8 +412,9 @@ class ChangeFollower:
                     "redelivered": redelivered}
         try:
             df = changes_since(self.spark, self.table, since, version=v_now)
-        except ValueError:
+        except ValueError as e:
             # a rollback whose retracted dirs already expired: full resync
+            log.warning("feed resync v%s..v%s: %s", since, v_now, e)
             return {"from": since, "to": v_now, "upserts": 0, "deletes": 0,
                     "out_path": None, "needs_resync": True}
         except FileNotFoundError:
@@ -417,6 +423,7 @@ class ChangeFollower:
             # snapshot file should propagate and be retried next poll — a
             # spurious resync is a full-table rebuild at scale.
             if not os.path.exists(self.table._snapshot_path(since)):
+                log.warning("feed resync v%s..v%s: the cursor's snapshot expired", since, v_now)
                 return {"from": since, "to": v_now, "upserts": 0, "deletes": 0,
                         "out_path": None, "needs_resync": True}
             raise

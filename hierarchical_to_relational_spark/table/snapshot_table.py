@@ -28,17 +28,21 @@ north rule needs:
   (the lineage store records batch→version); ``expire_snapshots`` drops
   old ones under a retention policy.
 
-Layout (FLAT commit dirs, round 4)::
+Layout (one format: FLAT commit dirs)::
 
     <root>/data/c-<commit-uuid>/part-*.parquet   # _bucket is a DATA column
     <root>/data/c-<commit-uuid>/_file_stats.json # per-file bucket/key/lsn
                                                  # bounds (manifest stats)
-    <root>/_snapshots/v<10-digit>.json   # {version, batch_id, schema,
-                                          #  live: {bucket: [commit dirs]}, ...}
+    <root>/_snapshots/v<10-digit>.json   # {version, batch_id, kind, schema, live:
+                                          #  {bucket: [dirs]}, commit_bytes, ...}
+
+This is the only format: an older table (no sidecar, no ``kind``), or a
+snapshot whose ``commit_bytes`` misses a live dir, raises ``TableFormatError``
+instead of being read; a rollback from such a snapshot still works.
 
 Bucket membership is tracked in metadata (sidecar per-file bucket ranges +
 exact per-bucket accounting computed at write time), not in physical
-``_bucket=k`` subdirectories — the same move Iceberg makes by tracking
+per-bucket partition subdirectories — the same move Iceberg makes by tracking
 files in manifests instead of Hive-style partition dirs. Measured round 4:
 Spark's dynamic-partition write machinery costs ~0.5-0.7 s near-constant
 per commit at 32 buckets (per-dir writer churn + committer dir moves) vs
@@ -88,6 +92,11 @@ PARQUET_BLOOM_OPTS = {
 
 class CommitConflictError(RuntimeError):
     pass
+
+
+class TableFormatError(RuntimeError):
+    """A snapshot or commit dir not in the one table format. Not a
+    ValueError, which feed followers take as a resync signal."""
 
 
 # Lossless type widenings accepted by schema evolution (the Iceberg v2
@@ -372,7 +381,7 @@ class SnapshotTable:
         self._ids_cache = CommittedIds()
         self._ledger_stamp: tuple | None = None
         # per-commit-dir min-max sidecar memo (dirs are immutable)
-        self._file_stats_cache: dict[str, dict | None] = {}
+        self._file_stats_cache: dict[str, dict] = {}
 
     # ---------- snapshot log ----------
 
@@ -399,6 +408,7 @@ class SnapshotTable:
                         "n_buckets": n_buckets,
                         "index_cols": list(index_cols or []),
                         "live": {},
+                        "commit_bytes": {},
                     }
                 )
             except CommitConflictError:
@@ -426,12 +436,11 @@ class SnapshotTable:
         latest RETAINED version committed at or before epoch-seconds
         ``ts``. Raises if every retained snapshot is newer (the history
         before the retention window is gone — same failure mode as
-        reading an expired version). Pre-``committed_at`` snapshots
-        (older table formats) are treated as older than any timestamp."""
+        reading an expired version)."""
         best = None
         for v in self._versions():
             try:
-                at = self.snapshot(v).get("committed_at", 0.0)
+                at = self._snapshot_log_entry(v)["committed_at"]
             except FileNotFoundError:
                 continue  # racing expiration
             if at <= ts:
@@ -444,6 +453,18 @@ class SnapshotTable:
         return best
 
     def snapshot(self, version: int | str | None = None) -> dict:
+        snap = self._snapshot_log_entry(version)
+        lost = sorted(f"{d}[{b}]" for b, ds in snap["live"].items()
+                      for d in ds if b not in snap["commit_bytes"].get(d, ()))
+        if lost:
+            raise TableFormatError(f"{self.root} v{snap['version']}: no commit_bytes for {lost}; "
+                                   f"roll back to a version that has them, expire this one")
+        return snap
+
+    def _snapshot_log_entry(self, version: int | str | None = None) -> dict:
+        """``snapshot`` without its ``commit_bytes`` check, for the paths
+        that only walk the log (batch ids, expiration, history, time
+        travel, a rollback's base): a bad snapshot can still be left."""
         # a str version is a named ref: every version-taking surface
         # (read, schema, read_transcripts, time travel) accepts a tag
         # name through this one resolver
@@ -453,7 +474,12 @@ class SnapshotTable:
         if v is None:
             raise FileNotFoundError(f"table {self.root} has no snapshots")
         with open(self._snapshot_path(v)) as f:
-            return json.load(f)
+            snap = json.load(f)
+        snap.setdefault("commit_bytes", {})  # create once wrote v0 without it
+        missing = {"kind", "committed_at", "index_cols"} - snap.keys()
+        if missing:
+            raise TableFormatError(f"{self.root} v{v}: older table format, no {sorted(missing)}")
+        return snap
 
     def _write_snapshot(self, snap: dict) -> None:
         """Atomic create: write tmp, then exclusive-create the final name.
@@ -622,7 +648,7 @@ class SnapshotTable:
         for ver in self._versions():
             if ver <= v:
                 try:
-                    ids.add(self.snapshot(ver)["batch_id"])
+                    ids.add(self._snapshot_log_entry(ver)["batch_id"])
                 except FileNotFoundError:
                     continue  # racing expiration: id is in the ledger
         ids.compact()
@@ -698,7 +724,7 @@ class SnapshotTable:
         # publish a stale union that reverts the winner's columns
         schema = lambda: _union_schema(self.schema(), br_schema)  # noqa: E731
         br_live = br_snap["live"]
-        br_bytes = br_snap.get("commit_bytes", {})
+        br_bytes = br_snap["commit_bytes"]
 
         def update(live: dict) -> dict:
             if self.snapshot()["n_buckets"] != meta["fork_n_buckets"]:
@@ -833,7 +859,7 @@ class SnapshotTable:
         for v in self._versions():
             if v > self._ids_scanned_to:
                 try:
-                    self._ids_cache.add(self.snapshot(v)["batch_id"])
+                    self._ids_cache.add(self._snapshot_log_entry(v)["batch_id"])
                 except FileNotFoundError:
                     # a racing expiration unlinked v between our glob and
                     # open. Its id is NOT lost: expiration writes the
@@ -845,7 +871,7 @@ class SnapshotTable:
 
     @property
     def index_cols(self) -> list[str]:
-        return list(self.snapshot().get("index_cols", []))
+        return list(self.snapshot()["index_cols"])
 
     def enable_index(self, cols: list[str], batch_id: str) -> bool:
         """Turn on the Bloom sidecar for ``cols`` from the NEXT commit on
@@ -898,8 +924,8 @@ class SnapshotTable:
         a SUPERSET file selection: surviving files may still hold
         out-of-range rows, so callers apply the row filter on top (point
         lookups should use ``operators.merge.lookup_conversation``). Files
-        without recorded bounds (pre-sidecar commits, row groups whose
-        writer dropped the stats) are never pruned. At scale this is what
+        without recorded bounds for a column (row groups whose writer
+        dropped the stats) are never pruned on it. At scale this is what
         makes a point lookup touch one file per compacted base dir
         (range-clustered) plus only the delta files whose batches actually
         contained the key — not every file in the bucket.
@@ -924,15 +950,13 @@ class SnapshotTable:
         handle masking themselves. ``key_range``/``lsn_range`` do not
         have this hazard (tombstones carry both columns).
 
-        Bucket pruning is sidecar-driven too (flat commit dirs, round 4):
-        files are skipped when their recorded ``_bucket`` range cannot
-        contain a wanted bucket — file-granular on range-clustered bases,
-        superset on hash-scattered deltas — and ``scan_dirs`` filters
-        ``_bucket`` per dir where a dir also holds other rows, which
-        parquet row-group stats serve cheaply because writes sort within
-        partitions by ``_bucket``. The returned rows are therefore EXACTLY
-        the wanted buckets' live rows, same contract as the old
-        per-bucket-dir layout.
+        Bucket pruning is sidecar-driven too: files are skipped when their
+        recorded ``_bucket`` range cannot contain a wanted bucket —
+        file-granular on range-clustered bases, superset on hash-scattered
+        deltas — and ``scan_dirs`` filters ``_bucket`` per dir where a dir
+        also holds other rows, which parquet row-group stats serve cheaply
+        because writes sort within partitions by ``_bucket``. The returned
+        rows are therefore EXACTLY the wanted buckets' live rows.
 
         ``as_of_ts`` (epoch seconds) is timestamp time travel — resolved to
         the latest retained version committed at or before it."""
@@ -977,15 +1001,11 @@ class SnapshotTable:
         also holds rows outside *U*. Every other dir — one holding STALE
         rows of a bucket it no longer serves (a partial compaction folded
         that bucket away), or with no ``commit_bytes`` entry in ``snap``
-        (pre-stats dirs, dirs compacted away since, rollback-retracted
-        dirs) — is read by one scan per distinct bucket set, filtered by
-        that set (None: unfiltered). Pre-round-4 dirs (files under
-        physical ``_bucket=k/`` partition subdirs, or no sidecar, which
-        reads the dir whole) keep a per-dir ``basePath`` read — basePath
-        is what reconstructs the ``_bucket`` partition column from an
-        explicit leaf-file list — filtered by their own set."""
+        (dirs compacted away before ``snap``, rollback-retracted dirs) —
+        is read by one scan per distinct bucket set, filtered by that set
+        (None: unfiltered)."""
         read_schema = scan_schema(T.StructType.fromJson(json.loads(snap["schema"])))
-        written = snap.get("commit_bytes", {})
+        written = snap["commit_bytes"]
         # an equality probe also implies a [v, v] bounds check for free
         eff_ranges = dict(col_ranges or {})
         for c, v in (col_eq or {}).items():
@@ -997,7 +1017,6 @@ class SnapshotTable:
         shared: list[str] = []
         shared_exact = True  # no shared member holds rows outside ``union``
         by_set: dict[frozenset | None, list[str]] = {}
-        legacy: list[DataFrame] = []
 
         def only(df: DataFrame, bs: frozenset | None) -> DataFrame:
             return df if bs is None else df.where(F.col("_bucket").isin(sorted(bs)))
@@ -1006,13 +1025,8 @@ class SnapshotTable:
             bs = sets[d]
             paths = self._pruned_paths(d, bs, key_range, lsn_range, eff_ranges,
                                        key_set, col_eq)
-            if paths == []:
+            if not paths:
                 continue  # every file in this commit dir pruned
-            if self._legacy_layout(d):
-                base = os.path.join(self.root, d)
-                legacy.append(only(spark.read.schema(read_schema).option("basePath", base)
-                                   .parquet(*(paths or [base])), bs))
-                continue
             held = {int(b) for b in written[d]} if d in written else None
             if bs is not None and held is not None and held & union <= bs:
                 shared += paths
@@ -1023,8 +1037,6 @@ class SnapshotTable:
                       None if shared_exact else union)] if shared else []
         parts += [only(spark.read.schema(read_schema).parquet(*files), bs)
                   for bs, files in by_set.items()]
-        # by name: a legacy scan puts its ``_bucket`` partition column last
-        parts += legacy
         if not parts:
             return spark.createDataFrame([], read_schema)
         out = parts[0]
@@ -1032,27 +1044,25 @@ class SnapshotTable:
             out = out.unionByName(p)
         return out
 
-    def _file_stats(self, commit_dir: str) -> dict | None:
+    def _file_stats(self, commit_dir: str) -> dict:
         """Load (and memoize) a commit dir's per-file min-max sidecar.
         Commit dirs are immutable once written, so the cache never goes
-        stale; None for dirs committed before sidecars existed."""
+        stale. Every commit writes one, so a missing or torn sidecar, or
+        one listing files under subdirs, raises ``TableFormatError``."""
         if commit_dir in self._file_stats_cache:
             return self._file_stats_cache[commit_dir]
         path = os.path.join(self.root, commit_dir, FILE_STATS_NAME)
-        stats = None
         try:
             with open(path) as f:
                 stats = json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            pass
+        except (FileNotFoundError, json.JSONDecodeError) as e:
+            if not os.path.isdir(os.path.dirname(path)):
+                raise  # the dir itself is gone: expired data, not an old format
+            raise TableFormatError(f"commit dir {commit_dir}: no readable {FILE_STATS_NAME} ({e})") from e
+        if any(os.sep in rel for rel in stats):
+            raise TableFormatError(f"commit dir {commit_dir}: files under subdirs (older table format)")
         self._file_stats_cache[commit_dir] = stats
         return stats
-
-    def _legacy_layout(self, commit_dir: str) -> bool:
-        """True for a commit dir in the pre-round-4 layout: no sidecar, or
-        sidecar rel paths under physical ``_bucket=k/`` partition subdirs."""
-        stats = self._file_stats(commit_dir)
-        return stats is None or any("_bucket=" in rel for rel in stats)
 
     def _pruned_paths(
         self,
@@ -1063,14 +1073,11 @@ class SnapshotTable:
         col_ranges: dict | None = None,
         key_set: list | None = None,
         col_eq: dict | None = None,
-    ) -> list[str] | None:
-        """File list for a commit dir after sidecar pruning (bucket range ∩
-        wanted buckets — None: no bucket pruning — then key/lsn min-max,
-        key-set bisect, and any ``col_ranges`` bounds), or None when no
-        sidecar exists — caller then scans the whole commit dir."""
+    ) -> list[str]:
+        """File list for a commit dir after sidecar pruning: bucket range ∩
+        wanted buckets (None: no bucket pruning), then key/lsn min-max,
+        key-set bisect, any ``col_ranges`` bounds and ``col_eq`` blooms."""
         stats = self._file_stats(commit_dir)
-        if stats is None:
-            return None
         wanted_ints = None if wanted_buckets is None else {int(b) for b in wanted_buckets}
         sorted_keys = sorted(key_set) if key_set else None
         norm_ranges = None
@@ -1096,11 +1103,6 @@ class SnapshotTable:
         keep = []
         for rel, st in sorted(stats.items()):
             bmm = st.get("_bucket")
-            if bmm is None and "_bucket=" in rel:
-                # pre-round-4 layout: bucket membership is encoded in the
-                # physical partition dir, not the sidecar — file-exact
-                b = int(rel.split("_bucket=", 1)[1].split(os.sep, 1)[0].split("/", 1)[0])
-                bmm = [b, b]
             if (bmm is not None and wanted_ints is not None
                     and not any(bmm[0] <= b <= bmm[1] for b in wanted_ints)):
                 continue
@@ -1139,21 +1141,10 @@ class SnapshotTable:
     ) -> tuple[str, set[str]]:
         """Write one FLAT commit dir (``data/c-<uuid>/part-*.parquet``) with
         ``_bucket`` stored as a data column; per-file bucket membership and
-        stats go to the sidecar instead of physical ``_bucket=k`` subdirs.
-
-        Why flat (round-4 measurement): Spark's dynamic-partition write path
-        costs ~0.5-0.7 s of near-constant overhead per commit at 32 buckets
-        — per-partition-dir writer open/close plus the committer's per-dir
-        file moves — versus ~0.2 s for a plain parquet write of the same
-        batch. That constant is pure driver/FS tax on every micro-batch and
-        is exactly what caps N→4N scaling efficiency at small batch sizes
-        (BENCH/BASELINE.md batch-sizing note). It is also the pain Iceberg's
-        manifest-tracked files exist to avoid on object stores: one commit =
-        a handful of files in one directory, never hundreds of per-bucket
-        dir renames. Bucket pruning moves from directory names to sidecar
-        stats (file-level bucket ranges + row-group ``_bucket`` min-max via
-        the in-partition sort below), which at 100 TB prunes at FILE
-        granularity — strictly finer than dir granularity."""
+        stats go to the sidecar instead of physical per-bucket subdirs (why:
+        the module docstring). Bucket pruning reads the sidecar's file-level
+        bucket ranges and the row-group ``_bucket`` min-max that the
+        in-partition sort below produces — FILE granularity."""
         commit_rel = os.path.join(DATA_DIR, f"c-{uuid.uuid4().hex}")
         commit_abs = os.path.join(self.root, commit_rel)
         ordered = ["_bucket"] + [n for n in schema.fieldNames()]
@@ -1215,7 +1206,7 @@ class SnapshotTable:
                 out = out.repartition(F.col("_bucket"), salt).sortWithinPartitions(*sort_cols)
             # secondary-index blooms, resolved BEFORE the write so the
             # build rides the write job itself (ONE pass over the batch)
-            index_cols = [c for c in self.snapshot().get("index_cols", [])
+            index_cols = [c for c in self.snapshot()["index_cols"]
                           if c in schema.fieldNames()]
             if index_cols:
                 out, bloom_acc = self._attach_bloom_fold(out, index_cols)
@@ -1543,7 +1534,7 @@ class SnapshotTable:
         for _ in range(retries):
             if batch_id in self.committed_batch_ids():
                 return False
-            cur = self.snapshot()
+            cur = self._snapshot_log_entry() if kind == "rollback" else self.snapshot()
             # schema is re-resolved EVERY attempt (None keeps the schema
             # of the snapshot the attempt builds on; a callable re-runs
             # the union) so a commit that loses the pointer race to a
@@ -1556,15 +1547,13 @@ class SnapshotTable:
                 resolved_schema = (schema() if callable(schema) else schema).json()
             new_live = update_live({b: list(ds) for b, ds in cur["live"].items()})
             referenced = {d for ds in new_live.values() for d in ds}
-            prev_bytes = cur.get("commit_bytes", {})
-            if extra_commit_bytes:
-                # a branch merge adopts dirs whose byte stats live in the
-                # BRANCH's snapshot — fold them in so compaction pressure
-                # accounting survives the merge
-                prev_bytes = {**extra_commit_bytes, **prev_bytes}
-            commit_bytes = {d: prev_bytes[d] for d in referenced if d in prev_bytes}
-            if commit_meta is not None and commit_meta[0] in referenced:
-                commit_bytes[commit_meta[0]] = commit_meta[1]
+            # every live dir keeps its commit_bytes: a branch merge adopts
+            # stats from the BRANCH's snapshot, a rollback (maybe off a bad
+            # snapshot) from its TARGET; a KeyError here beats a bad snapshot
+            known = {**(extra_commit_bytes or {}), **cur["commit_bytes"]}
+            if commit_meta is not None:
+                known[commit_meta[0]] = commit_meta[1]
+            commit_bytes = {d: known[d] for d in referenced}
             snap = {
                 "version": cur["version"] + 1,
                 "batch_id": batch_id,
@@ -1573,7 +1562,7 @@ class SnapshotTable:
                 "schema": resolved_schema,
                 "n_buckets": n_buckets_override if n_buckets_override is not None else cur["n_buckets"],
                 "index_cols": (index_cols_override if index_cols_override is not None
-                               else cur.get("index_cols", [])),
+                               else cur["index_cols"]),
                 "live": new_live,
                 "commit_bytes": commit_bytes,
             }
@@ -1750,28 +1739,11 @@ class SnapshotTable:
         base dir}}`` — what partial compaction uses to pick ONLY the
         buckets worth rewriting (zipf-hot buckets stack deltas far faster
         than cold ones; folding everything on every trigger would be a
-        full-table rewrite). Served from commit_bytes stats; filesystem
-        fallback only for pre-stats dirs."""
+        full-table rewrite). Served from commit_bytes stats alone."""
         snap = self.snapshot()
-        cb = snap.get("commit_bytes", {})
-        out: dict[int, dict] = {}
-        dir_size: dict[str, int] = {}
-        for b, dirs in snap["live"].items():
-            total = 0
-            for d in dirs[1:]:
-                if d in cb and b in cb[d]:
-                    total += cb[d][b]
-                else:
-                    # pre-stats dir: attribute the WHOLE flat dir's bytes —
-                    # conservative (overstates pressure, never hides it)
-                    if d not in dir_size:
-                        dir_size[d] = sum(
-                            os.path.getsize(f)
-                            for f in glob.glob(os.path.join(self.root, d, "*.parquet"))
-                        )
-                    total += dir_size[d]
-            out[int(b)] = {"depth": len(dirs), "delta_bytes": total}
-        return out
+        cb = snap["commit_bytes"]
+        return {int(b): {"depth": len(dirs), "delta_bytes": sum(cb[d][b] for d in dirs[1:])}
+                for b, dirs in snap["live"].items()}
 
     def delta_bytes(self) -> int:
         """Max per-bucket bytes of stacked delta dirs (every dir beyond the
@@ -1783,25 +1755,12 @@ class SnapshotTable:
 
     def total_bytes(self) -> int:
         """Live table size from the manifest's commit_bytes stats (no
-        filesystem listing; filesystem fallback only for pre-stats dirs) —
-        the input to statistics-driven join planning
+        filesystem listing) — the input to statistics-driven join planning
         (operators.joins.read_with_stats)."""
         snap = self.snapshot()
-        cb = snap.get("commit_bytes", {})
-        total = 0
-        fallback_dirs: set[str] = set()  # pre-stats dirs: count each ONCE
-        for b, dirs in snap["live"].items():  # (dir, bucket) pairs are unique
-            for d in dirs:
-                if d in cb and b in cb[d]:
-                    total += cb[d][b]
-                else:
-                    fallback_dirs.add(d)
-        for d in fallback_dirs:
-            total += sum(
-                os.path.getsize(f)
-                for f in glob.glob(os.path.join(self.root, d, "*.parquet"))
-            )
-        return total
+        cb = snap["commit_bytes"]
+        # (dir, bucket) pairs are unique
+        return sum(cb[d][b] for b, dirs in snap["live"].items() for d in dirs)
 
     def history(self) -> list[dict]:
         """Snapshot log audit view (Iceberg ``table.history()``): one entry
@@ -1809,13 +1768,13 @@ class SnapshotTable:
         rows written (from commit_bytes presence)."""
         out = []
         for v in self._versions():
-            s = self.snapshot(v)
+            s = self._snapshot_log_entry(v)
             out.append(
                 {
                     "version": v,
                     "batch_id": s["batch_id"],
-                    "kind": s.get("kind"),
-                    "committed_at": s.get("committed_at"),
+                    "kind": s["kind"],
+                    "committed_at": s["committed_at"],
                     "n_buckets": s["n_buckets"],
                     "live_buckets": len(s["live"]),
                     "data_dirs": len({d for ds in s["live"].values() for d in ds}),
@@ -1850,6 +1809,7 @@ class SnapshotTable:
             lambda live: {b: list(ds) for b, ds in target["live"].items()},
             n_buckets_override=target["n_buckets"],
             kind="rollback",
+            extra_commit_bytes=target["commit_bytes"],
         )
 
     # ---------- maintenance: snapshot expiration + orphan GC ----------
@@ -1936,7 +1896,7 @@ class SnapshotTable:
             aged = []
             for v in to_expire:
                 try:
-                    at = self.snapshot(v).get("committed_at", 0.0)
+                    at = self._snapshot_log_entry(v)["committed_at"]
                 except FileNotFoundError:
                     continue  # racing expiration already removed it
                 if now - at > older_than_s:
@@ -1964,7 +1924,7 @@ class SnapshotTable:
             referenced: set[str] = self._other_logs_referenced()
             for v in survivors:
                 try:
-                    snap_v = self.snapshot(v)
+                    snap_v = self._snapshot_log_entry(v)
                 except FileNotFoundError:
                     continue  # a racing expiration (smaller retain window)
                     # removed it; any dirs only it referenced are protected
@@ -1981,7 +1941,7 @@ class SnapshotTable:
                 # have just re-referenced this dir (its mtime bump may also
                 # have raced past the check above)
                 try:
-                    cur_live = self.snapshot()["live"]
+                    cur_live = self._snapshot_log_entry()["live"]
                 except FileNotFoundError:
                     cur_live = {}
                 if rel in {d for ds in cur_live.values() for d in ds}:

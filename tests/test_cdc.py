@@ -821,37 +821,6 @@ def test_random_patch_stream_matches_oracle(spark, tmp_path):
     _assert_matches_oracle(spark, pipe2, events)
 
 
-def test_changes_since_legacy_rollback_sniffed(spark, tmp_path):
-    """Pre-kind snapshots (older table format) whose batch id matches the
-    maintenance CLI's derived rollback ids are sniffed as rollbacks — a
-    plain superset emission would silently keep rolled-back rows alive;
-    the sniffed rollback takes the synthetic-delete path instead and the
-    applied diff un-inserts cB downstream."""
-    import json
-    from hierarchical_to_relational_spark.operators.merge import changes_since
-
-    pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
-                       str(tmp_path / "ck"), n_buckets=2, text_mode="none")
-    pipe.apply_batch(_env_rows(spark, [(1, "insert", "cA", [(0, "user", "a", None)])]), "b0")
-    v1 = pipe.table.current_version()
-    pipe.apply_batch(_env_rows(spark, [(2, "insert", "cB", [(0, "user", "b", None)])]), "b1")
-    v_ckpt = pipe.table.current_version()
-    state_ckpt = _final_state(spark, pipe.table)
-    pipe.table.rollback(v1, batch_id=f"maintenance-rollback-{v1}-v{v1+1}")
-    # strip the kind field to simulate a snapshot from the pre-kind engine
-    path = pipe.table._snapshot_path(pipe.table.current_version())
-    with open(path) as fh:
-        snap = json.load(fh)
-    del snap["kind"]
-    with open(path, "w") as fh:
-        json.dump(snap, fh)
-    changes = changes_since(spark, pipe.table, v_ckpt).collect()
-    assert any(r["change_op"] == "d" and r["conv_id"] == "cB" for r in changes)
-    got = _apply_diff(state_ckpt, changes)
-    want = _final_state(spark, pipe.table)
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
-
-
 def test_csv_binlog_embedded_newlines(spark, tmp_path):
     """RFC-4180 quoted fields with EMBEDDED NEWLINES (routine in chat
     transcript text) must round-trip through the CSV source — the

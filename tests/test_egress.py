@@ -246,9 +246,10 @@ def test_follower_callback_before_cursor_advance(spark, tmp_path):
     assert f.cursor() == p["to"], "cursor advanced only after delivery"
 
 
-def test_follower_expired_cursor_needs_resync(spark, tmp_path):
+def test_follower_expired_cursor_needs_resync(spark, tmp_path, caplog):
     """A follower offline past the snapshot retention window surfaces
-    needs_resync instead of crashing with FileNotFoundError."""
+    needs_resync instead of crashing with FileNotFoundError, and logs a
+    warning naming the window and the reason."""
     pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
                        str(tmp_path / "ck"), n_buckets=2, text_mode="none")
     cursor = str(tmp_path / "cursor.json")
@@ -258,8 +259,41 @@ def test_follower_expired_cursor_needs_resync(spark, tmp_path):
     for i in range(4):
         pipe.apply_batch(_env_rows(spark, [(2 + i, "insert", f"c{i}", [(0, "user", "x", None)])]), f"b{1+i}")
     pipe.table.expire_snapshots(retain_last=2, orphan_grace_seconds=1e9)
-    p = f.poll_once()
+    with caplog.at_level("WARNING", logger="hierarchical_to_relational_spark.streaming.egress"):
+        p = f.poll_once()
     assert p["needs_resync"] is True
+    assert [r.getMessage() for r in caplog.records] == [
+        f"feed resync v{p['from']}..v{p['to']}: the cursor's snapshot expired"]
+
+
+def test_torn_sidecar_raises_instead_of_resync(spark, tmp_path):
+    """A torn _file_stats.json is a table-format error: read and poll_once
+    raise TableFormatError (a RuntimeError), so the poll neither reads the
+    dir unpruned nor reports a resync, and the cursor stays put."""
+    import json
+
+    from hierarchical_to_relational_spark.table.snapshot_table import (
+        FILE_STATS_NAME, SnapshotTable, TableFormatError,
+    )
+
+    pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
+                       str(tmp_path / "ck"), n_buckets=2, text_mode="none")
+    pipe.apply_batch(_env_rows(spark, [(1, "insert", "cA", [(0, "user", "a", None)])]), "b0")
+    before = {d for ds in pipe.table.snapshot()["live"].values() for d in ds}
+    f = ChangeFollower(spark, SnapshotTable(pipe.table.root), str(tmp_path / "cursor.json"))
+    v0 = f.poll_once()["to"]
+    pipe.apply_batch(_env_rows(spark, [(2, "insert", "cB", [(0, "user", "b", None)])]), "b1")
+    (d,) = {d for ds in pipe.table.snapshot()["live"].values() for d in ds} - before
+    sidecar = os.path.join(pipe.table.root, d, FILE_STATS_NAME)
+    with open(sidecar) as fh:
+        stats = json.dumps(json.load(fh))
+    with open(sidecar, "w") as fh:
+        fh.write(stats[: len(stats) // 2])
+    with pytest.raises(TableFormatError, match=d):
+        SnapshotTable(pipe.table.root).read(spark)
+    with pytest.raises(TableFormatError, match=d):
+        f.poll_once()
+    assert f.cursor() == v0
 
 
 def test_follower_since_ts_start(spark, tmp_path):

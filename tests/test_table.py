@@ -715,32 +715,132 @@ def test_lsn_range_pruning_skips_old_deltas(spark, tmp_path):
     assert {r["conv_id"] for r in recent.where(F.col("_lsn") >= 100).collect()} == {"d0", "d1", "d2"}
 
 
-def test_pruning_superset_without_sidecar(spark, tmp_path):
-    """Commit dirs without a sidecar (pre-feature tables) are never pruned:
-    key_range reads fall back to full scans — and a bucket read of such a
-    dir, read whole, still returns only that bucket's rows."""
-    import os as _os
-    from hierarchical_to_relational_spark.functions.xxh64 import bucket_of_key
-    from hierarchical_to_relational_spark.table.snapshot_table import FILE_STATS_NAME
+def test_legacy_table_formats_rejected(spark, tmp_path):
+    """One table format: a missing or torn sidecar, sidecar files under
+    ``_bucket=k/`` subdirs, a snapshot without ``kind`` and a live dir
+    without ``commit_bytes`` each raise TableFormatError naming the dir
+    or version — never an unpruned read or a filesystem walk."""
+    import json
+    import re
+
+    from hierarchical_to_relational_spark.table.snapshot_table import (
+        FILE_STATS_NAME, TableFormatError,
+    )
+
+    t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=4)
+    df = _bucketed(spark, t, [(f"k{i}", i) for i in range(8)])
+    t.commit_overwrite_buckets(df, _buckets(df), "b1")
+    v = t.current_version()
+    (d,) = {d for ds in t.snapshot()["live"].values() for d in ds}
+    sidecar = os.path.join(t.root, d, FILE_STATS_NAME)
+    with open(sidecar) as fh:
+        good_stats = fh.read()
+    with open(t._snapshot_path(v)) as fh:
+        good_snap = json.load(fh)
+    rel = next(iter(json.loads(good_stats)))
+
+    def rejected(match, stats=good_stats, snap=good_snap):
+        if stats is None:
+            os.unlink(sidecar)
+        else:
+            with open(sidecar, "w") as fh:
+                fh.write(stats)
+        with open(t._snapshot_path(v), "w") as fh:
+            json.dump(snap, fh)
+        with pytest.raises(TableFormatError, match=re.escape(match)):
+            SnapshotTable(t.root).read(spark)  # fresh instance: no sidecar memo
+
+    rejected(d, stats=None)
+    rejected(d, stats=good_stats[: len(good_stats) // 2])
+    rejected(d, stats=json.dumps({os.path.join("_bucket=0", rel): {}}))
+    rejected(f"v{v}", snap={k: x for k, x in good_snap.items() if k != "kind"})
+    rejected(d, snap={**good_snap, "commit_bytes": {}})
+    # the intact table reads again
+    with open(t._snapshot_path(v), "w") as fh:
+        json.dump(good_snap, fh)
+    assert SnapshotTable(t.root).read(spark).count() == 8
+
+
+def test_rollback_keeps_commit_bytes(spark, tmp_path):
+    """A rollback re-references dirs the current snapshot no longer
+    knows (a compaction folded them away). Their commit_bytes come from
+    the rollback target, so byte accounting, compaction pressure and
+    bin-packing keep seeing them."""
+    from hierarchical_to_relational_spark.operators.merge import compact
     from hierarchical_to_relational_spark.streaming.driver import CdcPipeline
 
-    nb = 4
-    ids = [f"c{i}" for i in range(8)]
-    assert len({bucket_of_key(c, nb) for c in ids}) >= 2
     pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
-                       str(tmp_path / "ck"), n_buckets=nb, text_mode="none")
-    pipe.apply_batch(_envs(spark, [(i + 1, "insert", c, [(0, "x")])
-                                   for i, c in enumerate(ids)]), "b0")
+                       str(tmp_path / "ck"), n_buckets=2, text_mode="none",
+                       compact_every=10_000)
+    pipe.apply_batch(_envs(spark, [(1, "insert", "c0", [(0, "x")])]), "b0")
+    pipe.apply_batch(_envs(spark, [(2, "insert", "c1", [(0, "y")])]), "b1")
     t = pipe.table
-    for d in {d for ds in t.snapshot()["live"].values() for d in ds}:
-        _os.unlink(_os.path.join(t.root, d, FILE_STATS_NAME))
-    t._file_stats_cache.clear()
-    pruned = t.read(spark, key_range=("c0", "c0"))
-    assert set(pruned.inputFiles()) == set(t.read(spark).inputFiles())
-    b = bucket_of_key("c0", nb)
-    rows = t.read(spark, buckets=[b]).select("_bucket", "conv_id").collect()
-    assert {r["_bucket"] for r in rows} == {b}
-    assert {r["conv_id"] for r in rows} == {c for c in ids if bucket_of_key(c, nb) == b}
+    v_pre = t.current_version()
+    target = t.snapshot(v_pre)["commit_bytes"]
+    assert compact(spark, t, batch_id="c0")
+    assert t.rollback(v_pre, batch_id="rb")
+    snap = t.snapshot()
+    live = {d for ds in snap["live"].values() for d in ds}
+    assert len(live) == 2 and live == set(target)
+    assert {d: snap["commit_bytes"].get(d) for d in live} == target
+    assert t.total_bytes() == sum(n for bs in target.values() for n in bs.values())
+
+
+def test_v0_without_commit_bytes_still_opens(spark, tmp_path):
+    """``create`` once wrote v0 with no ``commit_bytes`` key. Such a table
+    still reads, appends and expires that v0."""
+    import json
+
+    t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=4)
+    with open(t._snapshot_path(0)) as fh:
+        v0 = json.load(fh)
+    del v0["commit_bytes"]
+    with open(t._snapshot_path(0), "w") as fh:
+        json.dump(v0, fh)
+    t = SnapshotTable(t.root)
+    assert t.read(spark).count() == 0 and t.total_bytes() == 0
+    df = _bucketed(spark, t, [("a", 1), ("b", 2)])
+    assert t.commit_append(df, "b1")
+    assert t.read(spark).count() == 2
+    assert t.expire_snapshots(retain_last=1)["expired_snapshots"] == 1
+    assert t.read(spark).count() == 2
+
+
+def test_lost_commit_bytes_snapshot_rolls_back_and_expires(spark, tmp_path):
+    """A rollback after a compaction once wrote a snapshot whose
+    ``commit_bytes`` missed its live dirs. Reading that version raises
+    TableFormatError, but the log-only paths (history, the batch-id scan,
+    a rollback's base, expiration) still work, so rolling back from it
+    and expiring it brings the table back."""
+    import json
+
+    from hierarchical_to_relational_spark.table.snapshot_table import TableFormatError
+
+    t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
+    rows = [(f"k{i}", i) for i in range(6)]
+    for i in (0, 3):
+        assert t.commit_append(_bucketed(spark, t, rows[i: i + 3]), f"a{i}")
+    v_pre = t.current_version()
+    full = _bucketed(spark, t, rows)
+    assert t.commit_overwrite_buckets(full, _buckets(full), "compact")
+    assert t.rollback(v_pre, "rb")
+    v_bad = t.current_version()
+    with open(t._snapshot_path(v_bad)) as fh:
+        bad = json.load(fh)
+    bad["commit_bytes"] = {}  # what that rollback wrote: 0 of its live dirs
+    with open(t._snapshot_path(v_bad), "w") as fh:
+        json.dump(bad, fh)
+
+    t = SnapshotTable(t.root)
+    with pytest.raises(TableFormatError, match=f"v{v_bad}"):
+        t.read(spark)
+    assert t.history()[-1]["version"] == v_bad
+    assert t.rollback(v_pre, "rb2")
+    assert t.read(spark).count() == 6
+    assert t.commit_append(_bucketed(spark, t, [("k9", 9)]), "a9")
+    assert t.expire_snapshots(retain_last=2, orphan_grace_seconds=0)["expired_snapshots"] == v_bad + 1
+    assert not os.path.exists(t._snapshot_path(v_bad))
+    assert t.read(spark).count() == 7 and t.total_bytes() > 0
 
 
 def test_bloom_filters_on_delta_appends(spark, tmp_path, monkeypatch):
@@ -1055,54 +1155,6 @@ def test_col_ranges_pruning_and_scan_range(spark, tmp_path):
     # same answers through the z-ordered base
     assert {r["conv_id"] for r in scan_range(spark, t, "ts", lo=day(15)).collect()} == {"cD"}
     assert scan_range(spark, t, "ts", day(0), day(1)).count() == 0
-
-
-def test_pre_round4_bucket_dir_layout_still_readable(spark, tmp_path):
-    """Back-compat (round-4 migration hazard): a commit dir written by the
-    PRE-flat layout — files under physical ``_bucket=k/`` partition
-    subdirs, sidecar rel paths carrying the partition dir, no per-file
-    ``_bucket``/``cols`` sidecar keys, no ``_bucket`` data column — must
-    stay readable: the explicit-leaf-file read reconstructs ``_bucket``
-    via basePath, and bucket pruning falls back to the partition-dir
-    encoding in the rel path."""
-    import json as _json
-
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=4)
-    rows = [(f"k{i}", i) for i in range(12)]
-    df = _bucketed(spark, t, rows)
-    t.commit_overwrite_buckets(df, _buckets(df), "b1")
-    commit_dirs = {d for dirs in t.snapshot()["live"].values() for d in dirs}
-    assert len(commit_dirs) == 1
-    cdir = os.path.join(t.root, commit_dirs.pop())
-    # rewrite the commit dir on disk in the round-3 physical layout
-    old_stats: dict = {}
-    for i, f in enumerate(sorted(glob.glob(os.path.join(cdir, "*.parquet")))):
-        pdf = papq.read_table(f).to_pandas()
-        for b, grp in pdf.groupby("_bucket"):
-            rel = os.path.join(f"_bucket={int(b)}", f"part-{i:05d}.parquet")
-            os.makedirs(os.path.dirname(os.path.join(cdir, rel)), exist_ok=True)
-            papq.write_table(
-                pa.Table.from_pandas(grp.drop(columns=["_bucket"]),
-                                     preserve_index=False),
-                os.path.join(cdir, rel))
-            old_stats[rel] = {"conv_id": None, "_lsn": None}
-        os.remove(f)
-    with open(os.path.join(cdir, "_file_stats.json"), "w") as fh:
-        _json.dump(old_stats, fh)
-
-    t2 = SnapshotTable(t.root)  # fresh instance: no memoized sidecar
-    out = t2.read(spark)
-    assert {tuple(r) for r in out.select("k", "v").collect()} == set(rows)
-    # bucket-filtered read: partition-dir pruning + exact bucket filter
-    want_bucket = _buckets(df)[0]
-    sub = t2.read(spark, buckets=[want_bucket])
-    assert {r[0] for r in sub.select("_bucket").distinct().collect()} == {want_bucket}
-    with_all = {tuple(r) for r in out.where(F.col("_bucket") == want_bucket)
-                .select("k", "v").collect()}
-    assert {tuple(r) for r in sub.select("k", "v").collect()} == with_all
 
 
 def test_query_bound_matches_pyspark_naive_datetime_conversion():

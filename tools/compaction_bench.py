@@ -65,7 +65,7 @@ def run_policy(spark, segs, binlog, policy: str, work: str, n_batches: int, dept
     rewrites = {"commits": 0, "buckets": 0, "bytes": 0}
 
     def _new_dir_bytes(before_dirs: set) -> int:
-        cb = pipe.table.snapshot().get("commit_bytes", {})
+        cb = pipe.table.snapshot()["commit_bytes"]
         return sum(sum(bk.values()) for d, bk in cb.items() if d not in before_dirs)
 
     t0 = time.monotonic()
@@ -73,7 +73,7 @@ def run_policy(spark, segs, binlog, policy: str, work: str, n_batches: int, dept
         pipe.replay_batch(segs[b: b + per], f"{policy}-{i}")
         if policy == "none" or (i + 1) % depth != 0:
             continue
-        before = set(pipe.table.snapshot().get("commit_bytes", {}))
+        before = set(pipe.table.snapshot()["commit_bytes"])
         if policy == "partial":
             folded = compact_pressured(spark, pipe.table, f"{policy}-{i}::c",
                                        depth_threshold=10**9,
