@@ -269,7 +269,8 @@ def generate_binlog_fast(spec: BinlogSpec, out_dir: str, n_segments: int = 32) -
     kk = k[ev_of_row]
     m = np.maximum(base, 1)
     upd_r = rng.integers(0, 2**31, size=total)
-    # updates: k distinct slots in [0, max(prev_total, k)); inserts: append
+    # updates: k slots in [0, max(prev_total, k)), each from its own upd_r, so
+    # one event may write a slot twice (the later element wins); inserts: append
     upd_mod = np.maximum(m, kk)
     turn_idx = np.where(
         is_upd[ev_of_row],

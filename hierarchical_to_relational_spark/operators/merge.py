@@ -14,9 +14,10 @@ deletes into a SnapshotTable, in two physical strategies:
 Resolution itself generalizes the reference's dedup idiom — its
 groupBy(parent, child, level) + max/first aggregation
 (HierarchyFlattener.java:322-342) — into the CDC core: group on the primary
-key, keep the row with the maximum ``(lsn, commit_ts)`` via ``max_by`` (hash
-aggregation: map-side partial combine makes it skew-tolerant, no sort,
-unlike a row_number window). Resolution is order-insensitive and
+key and keep the row with the maximum ``(lsn, commit_ts)`` via ``max_by``
+(on a tie the later row: one event may write a turn twice), all on ONE
+(_bucket, conv_id) exchange — each exchange is a Spark job, and at serve
+sizes the job count sets read latency. Resolution is order-insensitive and
 idempotent: replaying events in any order, with duplicates, in any
 batching, converges to the same final state — this is how out-of-order and
 late binlog data is handled without event-time watermarks (SURVEY.md §2.2).
@@ -27,7 +28,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from hierarchical_to_relational_spark.operators.normalize import META_BUCKET, META_LSN, META_OP, META_TS
 from hierarchical_to_relational_spark.table.snapshot_table import (
@@ -78,22 +79,6 @@ def table_schema_for(upsert_cols: list[T.StructField]) -> T.StructType:
     return T.StructType(fields)
 
 
-def _tombstone_rows(deletes_b: DataFrame, schema: T.StructType) -> DataFrame:
-    """(bucket, conv_id, _lsn) delete watermarks → storable tombstone rows
-    (null payload, _op='d') matching the table schema. One select — a
-    withColumn per field would re-run Catalyst analysis per column
-    (measured tens of ms of per-batch driver constant)."""
-    cols = [F.col(META_BUCKET)]
-    for fld in schema.fields:
-        if fld.name in ("conv_id", META_LSN):
-            cols.append(F.col(fld.name))
-        elif fld.name == META_OP:
-            cols.append(F.lit("d").alias(META_OP))
-        else:
-            cols.append(F.lit(None).cast(fld.dataType).alias(fld.name))
-    return deletes_b.select(*cols)
-
-
 def resolve(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Collapse any pile of full-upsert rows (_op='u'), partial-upsert rows
     (_op='p', merge-patch: null column = keep previous) and tombstone rows
@@ -110,35 +95,35 @@ def resolve(df: DataFrame, schema: T.StructType) -> DataFrame:
     - one tombstone row per deleted conversation (kept to kill late
       arrivals); upserts AND patches below the delete LSN die.
 
+    One hash exchange on (_bucket, conv_id) carries the whole rule: a
+    window max of the delete LSN drops every other row at or below it; one
+    ``max_by`` aggregation on (turn, _op, patch LSN) keeps the newest
+    tombstone (its turn_idx is null), the newest full row per turn and one
+    row per patch LSN; a window max of the full-row LSN drops the patches
+    at or below it. ``collapse_patches`` groups on a finer key, so it
+    reuses the exchange. ``max_by``, not ``row_number``: on equal (_lsn,
+    _commit_ts) — one event writing a turn twice — it keeps the LAST row
+    read, the later element; a window keeps the first.
+
     Idempotent and order-insensitive: resolve(resolve(x) ∪ y) ==
     resolve(x ∪ y). The per-column fold for USER-facing reads is
     ``collapse_patches``; ``compact(squash_patches_below=...)`` bounds the
     retained patch set under a binlog-retention watermark."""
-    tomb = (
-        df.where(F.col(META_OP) == "d")
-        .groupBy(META_BUCKET, "conv_id")
-        .agg(F.max(META_LSN).alias("_del_lsn"))
-    )
-    keys = [META_BUCKET, "conv_id", "turn_idx"]
-    fulls = lww_latest(df.where(F.col(META_OP) == "u"), keys, [META_LSN, META_TS])
-    # duplicate patch rows are verbatim re-emits (same key+LSN) → collapse
-    patches = df.where(F.col(META_OP) == "p").dropDuplicates(keys + [META_LSN])
-    live_patches = (
-        patches.join(
-            fulls.select(*keys, F.col(META_LSN).alias("_full_lsn")), keys, "left"
-        )
-        .where(F.col("_full_lsn").isNull() | (F.col(META_LSN) > F.col("_full_lsn")))
-        .drop("_full_lsn")
-    )
-    ups = fulls.unionByName(live_patches.select(*fulls.columns))
-    live = (
-        ups.join(tomb, [META_BUCKET, "conv_id"], "left")
-        .where(F.col("_del_lsn").isNull() | (F.col(META_LSN) > F.col("_del_lsn")))
-        .drop("_del_lsn")
+    op, lsn = F.col(META_OP), F.col(META_LSN)
+    keys = [META_BUCKET, "conv_id", "turn_idx", META_OP]
+    payload = [c for c in schema.fieldNames() if c not in keys]
+    dead = F.max(F.when(op == "d", lsn)).over(Window.partitionBy(META_BUCKET, "conv_id"))
+    full = F.max(F.when(op == "u", lsn)).over(Window.partitionBy(META_BUCKET, "conv_id", "turn_idx"))
+    return (
+        df.withColumn("_del", dead)
+        .where((op == "d") | F.col("_del").isNull() | (lsn > F.col("_del")))
+        .groupBy(*keys, F.when(op == "p", lsn).alias("_p"))
+        .agg(F.max_by(F.struct(*payload), F.struct(META_LSN, META_TS)).alias("_r"))
+        .select(*keys, "_r.*")
+        .withColumn("_full", full)
+        .where((op != "p") | F.col("_full").isNull() | (lsn > F.col("_full")))
         .select(META_BUCKET, *schema.fieldNames())
     )
-    tomb_rows = _tombstone_rows(tomb.withColumnRenamed("_del_lsn", META_LSN), schema)
-    return live.unionByName(tomb_rows)
 
 
 def collapse_patches(df: DataFrame, schema: T.StructType) -> DataFrame:
@@ -149,7 +134,7 @@ def collapse_patches(df: DataFrame, schema: T.StructType) -> DataFrame:
     aggregation (``max_by ... FILTER``, map-side combinable — no window);
     output rows carry _op='u' and _lsn/_commit_ts of the newest
     contributing row, so the fold composes with resolve. Tombstone rows
-    must be excluded by the caller."""
+    are dropped."""
     keys = [META_BUCKET, "conv_id", "turn_idx"]
     order = f"struct(`{META_LSN}`, `{META_TS}`)"
     folded_cols = [
@@ -166,7 +151,8 @@ def collapse_patches(df: DataFrame, schema: T.StructType) -> DataFrame:
                     f"FILTER (WHERE `{META_OP}` = 'u' OR `{c}` IS NOT NULL)"
                 ).alias(c)
             )
-    out = df.groupBy(*keys).agg(*aggs).withColumn(META_OP, F.lit("u"))
+    out = (df.where(F.col(META_OP) != "d").groupBy(*keys).agg(*aggs)
+           .withColumn(META_OP, F.lit("u")))
     return out.select(META_BUCKET, *schema.fieldNames())
 
 
@@ -333,7 +319,7 @@ def compact(
                 F.col(META_LSN) >= F.lit(squash_patches_below)
             )
             keep_raw = resolved.where((F.col(META_OP) == "d") | is_young_patch)
-            foldable = resolved.where((F.col(META_OP) != "d") & ~is_young_patch)
+            foldable = resolved.where(~is_young_patch)
             resolved = collapse_patches(foldable, schema).unionByName(keep_raw)
         return resolved
 
@@ -562,8 +548,7 @@ def lookup_conversations(
     scan = table.read(
         spark, buckets=buckets, version=version, key_set=list(conv_ids)
     ).where(F.col("conv_id").isin(list(conv_ids)))
-    df = resolve(scan, schema)
-    folded = collapse_patches(df.where(F.col(META_OP) != "d"), schema)
+    folded = collapse_patches(resolve(scan, schema), schema)
     user_cols = [n for n in schema.fieldNames() if not n.startswith("_")]
     return folded.select(*user_cols)
 
@@ -645,9 +630,7 @@ def scan_range(
         keys = sorted({r["conv_id"] for r in probe})
         buckets = sorted({r[META_BUCKET] for r in probe})
         full = table.read(spark, version=version, buckets=buckets, key_set=keys)
-        resolved = resolve(full, schema)
-        live = (resolved.where(F.col(META_OP) != "d")
-                .where(F.col("conv_id").isin(keys)))
+        live = resolve(full, schema).where(F.col("conv_id").isin(keys))
         folded = collapse_patches(live, schema).where(pred)
         return folded.select(*user_cols)
     span = cand.agg(
@@ -656,9 +639,7 @@ def scan_range(
     full = table.read(
         spark, version=version, buckets=sorted(span[2]), key_range=(span[0], span[1])
     )
-    resolved = resolve(full, schema)
-    live = resolved.where(F.col(META_OP) != "d")
-    hits = live.join(cand, [META_BUCKET, "conv_id", "turn_idx"], "left_semi")
+    hits = resolve(full, schema).join(cand, [META_BUCKET, "conv_id", "turn_idx"], "left_semi")
     folded = collapse_patches(hits, schema).where(pred)
     return folded.select(*user_cols)
 
@@ -837,10 +818,9 @@ def changes_since(
     # phase 2: materialize current rows for affected buckets only
     buckets = sorted(int(b) for b in set(added) | superset)
     resolved = resolve(table.read(spark, buckets=buckets, version=v2), schema)
-    live = resolved.where(F.col(META_OP) != "d")
     is_super = F.col(META_BUCKET).isin([int(b) for b in superset]) if superset else F.lit(False)
     marked = (
-        live.join(changed_keys.withColumn("_mk", F.lit(1)), keys, "left")
+        resolved.join(changed_keys.withColumn("_mk", F.lit(1)), keys, "left")
         .join(
             tomb_added.select(META_BUCKET, "conv_id", F.lit(1).alias("_mc")).distinct(),
             [META_BUCKET, "conv_id"],
@@ -904,7 +884,6 @@ def read_transcripts(
     reshuffle on freshly-compacted tables), keep live rows, drop metadata.
     Stable (conv_id, turn_idx) ordering is left to the caller."""
     schema = table.schema(version)
-    df = resolve(table.read(spark, version=version), schema)
-    folded = collapse_patches(df.where(F.col(META_OP) != "d"), schema)
+    folded = collapse_patches(resolve(table.read(spark, version=version), schema), schema)
     user_cols = [n for n in schema.fieldNames() if not n.startswith("_")]
     return folded.select(*user_cols)

@@ -88,11 +88,11 @@ def normalize_envelopes_fused(
     tombstones. Upserts explode per turn (events with empty/null turn
     arrays drop). A delete event explodes a one-element null-turn array,
     so it yields exactly one row with every turn column null, null
-    ``_commit_ts`` and ``_lsn`` = the delete LSN — ``_tombstone_rows``'s
-    stored shape. Delete rows are not pre-aggregated: duplicate deletes
-    stay duplicate rows and ``resolve``'s tombstone max folds them
-    (associative, order-insensitive), so no per-batch ``groupBy`` adds an
-    exchange to the write job. Resolution semantics live in
+    ``_commit_ts`` and ``_lsn`` = the delete LSN — the stored tombstone
+    shape (``resolve`` groups tombstones on that null ``turn_idx``).
+    Delete rows are not pre-aggregated: duplicate deletes stay duplicate
+    rows and ``resolve`` keeps the newest (order-insensitive), so no
+    per-batch ``groupBy`` adds an exchange to the write job. Resolution semantics live in
     operators.merge.resolve / collapse_patches.
 
     ``text_mode`` "arrow" (the historical name of the full Unicode

@@ -617,6 +617,39 @@ def test_merge_patch_without_base_row(spark, tmp_path):
     assert _patch_state(spark, pipe.table) == {("cX", 0, None, "orphan-patch", None)}
 
 
+def test_same_event_writes_turn_twice_later_wins(spark, tmp_path):
+    """One update envelope carries turn 0 twice, so both rows share
+    (_lsn, _commit_ts). The later array element wins in lookups, full
+    reads and after compaction (the binlog generator emits such events;
+    the pandas reference keeps the last)."""
+    from hierarchical_to_relational_spark.operators.merge import compact, lookup_conversations
+
+    convs = [f"c{i}" for i in range(6)]
+    pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
+                       str(tmp_path / "ck"), n_buckets=4, text_mode="none")
+    pipe.apply_batch(_env_rows(spark, [
+        (1, "insert", c, [(0, "user", "base", None), (1, "assistant", "keep", None)])
+        for c in convs
+    ]), "b0")
+    # "z-first" sorts above "a-later": a pick by value would keep the wrong one
+    pipe.apply_batch(_env_rows(spark, [
+        (5, "update", c, [(0, "user", "z-first", None), (0, "tool", "a-later", "bash")])
+        for c in convs
+    ]), "b1")
+    want = {(c, 0, "tool", "a-later", "bash") for c in convs} | {
+        (c, 1, "assistant", "keep", None) for c in convs}
+
+    def looked_up():
+        return {(r["conv_id"], r["turn_idx"], r["role"], r["text"], r["tool"])
+                for r in lookup_conversations(spark, pipe.table, convs).collect()}
+
+    assert _patch_state(spark, pipe.table) == want
+    assert looked_up() == want
+    compact(spark, pipe.table, batch_id="c0")
+    assert _patch_state(spark, pipe.table) == want
+    assert looked_up() == want
+
+
 # ---------------------------------------------------------------------------
 # changes_since: incremental CDC egress (net-diff contract)
 # ---------------------------------------------------------------------------

@@ -1,0 +1,122 @@
+"""Spark-job budget per read and maintenance operation.
+
+Under adaptive execution every shuffle stage runs as its own Spark job,
+and at serve table sizes each job costs ~0.1-0.2 s of driver and
+scheduling wall time, so the job count of an operation sets its latency
+more than the bytes it moves. These tests pin the count for each
+operation on one small fixed table: a change that adds an exchange to
+``resolve`` (or anywhere on these paths) fails here instead of hiding in
+benchmark noise. Jobs are counted per Spark job group.
+"""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import functions as F
+
+from hierarchical_to_relational_spark.operators.merge import (
+    compact,
+    lookup_conversations,
+    read_transcripts,
+    resolve,
+    scan_range,
+)
+from hierarchical_to_relational_spark.operators.mview import ConvAggregateView
+from hierarchical_to_relational_spark.streaming.driver import CdcPipeline
+from hierarchical_to_relational_spark.streaming.egress import changes_since
+from tests.test_cdc import _env_rows
+
+N_CONVS = 40
+BUDGET = {
+    "lookup_1": 2,
+    "lookup_100": 2,
+    "read_transcripts": 2,
+    "scan_range": 4,
+    "changes_since_1_append": 8,
+    "view_refresh_incremental": 14,
+    "compact_full": 5,
+}
+
+
+def _batch(i: int):
+    """Append i: every conversation gets a full turn, every third a
+    patch, every seventh a delete then a re-insert above it."""
+    rows = []
+    lsn = 1000 * (i + 1)
+    for c in range(N_CONVS):
+        cid = f"c{c}"
+        rows.append((lsn + c, "insert" if i == 0 else "update", cid,
+                     [(i % 3, "user", f"t{i}-{c}", None)]))
+        if c % 3 == i % 3:
+            rows.append((lsn + 100 + c, "patch", cid, [(i % 3, None, f"p{i}-{c}", None)]))
+        if c % 7 == i:
+            rows.append((lsn + 200 + c, "delete", cid, None))
+            rows.append((lsn + 300 + c, "insert", cid, [(0, "user", f"r{i}-{c}", None)]))
+    return rows
+
+
+def _jobs(spark, name, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def _shuffles(df) -> int:
+    """Shuffle stages the executed plan of ``df`` ran. After a collect the
+    adaptive plan string prints each Exchange twice (final and initial
+    plan), and each shuffle query stage once."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString().count("ShuffleQueryStage")
+
+
+@pytest.fixture(scope="module")
+def measured(spark, tmp_path_factory):
+    """Job counts of every budgeted operation, measured in a fixed order
+    on one table: five MoR appends over 4 buckets, a view built after the
+    fourth, then the full compaction last (it rewrites the table). Also
+    the shuffle count of ``resolve`` and of ``read_transcripts`` over the
+    uncompacted table."""
+    d = tmp_path_factory.mktemp("budget")
+    pipe = CdcPipeline(spark, str(d / "binlog"), str(d / "t"), str(d / "ck"),
+                       n_buckets=4, text_mode="none")
+    t = pipe.table
+    for i in range(4):
+        pipe.apply_batch(_env_rows(spark, _batch(i)), f"b{i}")
+    view = ConvAggregateView(spark, t, str(d / "mv"), n_buckets=4)
+    view.refresh()
+    v_before = t.current_version()
+    pipe.apply_batch(_env_rows(spark, _batch(4)), "b4")
+    resolved = resolve(t.read(spark), t.schema())
+    shuffles = {"resolve": _shuffles(resolved),
+                "read_transcripts": _shuffles(read_transcripts(spark, t))}
+    assert resolved.where(F.col("_op") == "d").count() > 0
+    keys = [f"c{k}" for k in range(100)]
+    ops = {
+        "lookup_1": lambda: lookup_conversations(spark, t, ["c5"]).collect(),
+        "lookup_100": lambda: lookup_conversations(spark, t, keys).collect(),
+        "read_transcripts": lambda: read_transcripts(spark, t).collect(),
+        "scan_range": lambda: scan_range(spark, t, "turn_idx", 1, 2).collect(),
+        "changes_since_1_append": lambda: changes_since(spark, t, v_before).collect(),
+        "view_refresh_incremental": view.refresh,
+        "compact_full": lambda: compact(spark, t, "compact-0"),
+    }
+    counts = {name: _jobs(spark, f"budget-{name}", fn) for name, fn in ops.items()}
+    assert view.cursor() == v_before + 1
+    return counts, shuffles
+
+
+@pytest.mark.parametrize("op", sorted(BUDGET))
+def test_job_budget(measured, op):
+    counts, _ = measured
+    assert counts[op] == BUDGET[op], counts
+
+
+def test_resolve_plans_one_shuffle(measured):
+    """``resolve`` over a multi-bucket, multi-dir read runs on one hash
+    exchange, and the user-facing fold on top of it adds none."""
+    _, shuffles = measured
+    assert shuffles == {"resolve": 1, "read_transcripts": 1}

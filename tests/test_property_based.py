@@ -5,19 +5,28 @@ ARBITRARY inputs, not just the fixtures.
   (edges only i→j with i<j ⇒ acyclic by construction).
 - CDC merge: final state is invariant under arbitrary permutation,
   duplication, and batching of the same event set (order-insensitive
-  exactly-once convergence).
+  exactly-once convergence); stored-state ``resolve`` equals a pandas
+  statement of its rule.
 
 Example counts are small: every example spins real Spark jobs.
 """
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+import datetime
+
+import pandas as pd
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from hierarchical_to_relational_spark import FlattenConfig, flatten
-from hierarchical_to_relational_spark.operators.merge import lww_latest, merge_lww
+from hierarchical_to_relational_spark.operators.merge import (
+    lww_latest,
+    merge_lww,
+    resolve,
+    table_schema_for,
+)
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 
 # ---------- flatten vs pure-python reference ----------
@@ -146,6 +155,99 @@ def test_lww_latest_is_permutation_invariant(spark, events):
     a = {tuple(r) for r in lww_latest(df, ["conv", "turn"], ["lsn"]).collect()}
     b = {tuple(r) for r in lww_latest(df.orderBy(F.rand(7)), ["conv", "turn"], ["lsn"]).collect()}
     assert a == b
+
+
+# ---------- stored-state resolve vs a pandas statement of the rule ----------
+
+_T0 = datetime.datetime(2026, 1, 1)
+_RESOLVE_SCHEMA = table_schema_for([
+    T.StructField("conv_id", T.StringType(), False),
+    T.StructField("turn_idx", T.IntegerType(), True),
+    T.StructField("a", T.StringType(), True),
+    T.StructField("b", T.StringType(), True),
+])
+_STORED = T.StructType([T.StructField("_bucket", T.IntegerType(), False),
+                        *_RESOLVE_SCHEMA.fields])
+
+
+def _stored_row(conv, turn, op, lsn):
+    """One stored row. The payload is a function of (conv, turn, op, lsn),
+    so a repeated tuple is a verbatim re-emit and no two rows conflict at
+    one (key, _lsn, _commit_ts); tombstones have normalize's stored shape."""
+    if op == "d":
+        return (conv % 2, f"c{conv}", None, None, None, lsn, None, "d")
+    a, b = f"a{conv}.{turn}.{lsn}{op}", f"b{conv}.{turn}.{lsn}{op}"
+    if op == "p":  # merge-patch: a null column keeps the previous value
+        a, b = (a if lsn % 2 else None), (b if lsn % 3 else None)
+    return (conv % 2, f"c{conv}", turn, a, b, lsn, _T0 + datetime.timedelta(seconds=lsn), op)
+
+
+def _resolve_reference(rows):
+    """The stored-state rule: drop every non-tombstone row at or below its
+    conversation's newest delete; keep that delete, the newest full row per
+    turn, and one row per distinct patch LSN above the turn's full row."""
+    pdf = pd.DataFrame(rows, columns=_STORED.fieldNames(), dtype=object)
+    is_d = pdf["_op"] == "d"
+    del_lsn = pdf["conv_id"].map(pdf[is_d].groupby("conv_id")["_lsn"].max())
+    alive = pdf[~is_d & ~(pdf["_lsn"] <= del_lsn)]
+    tombs = pdf[is_d].sort_values("_lsn").drop_duplicates("conv_id", keep="last")
+    fulls = (alive[alive["_op"] == "u"].sort_values("_lsn")
+             .drop_duplicates(["conv_id", "turn_idx"], keep="last"))
+    patches = (alive[alive["_op"] == "p"].drop_duplicates(["conv_id", "turn_idx", "_lsn"])
+               .merge(fulls[["conv_id", "turn_idx", "_lsn"]], on=["conv_id", "turn_idx"],
+                      how="left", suffixes=("", "_full")))
+    patches = patches[~(patches["_lsn"] <= patches["_lsn_full"])].drop(columns="_lsn_full")
+    out = pd.concat([tombs, fulls, patches])
+    return _sorted(tuple(None if v is None or v != v else v for v in r)
+                   for r in out.itertuples(index=False))
+
+
+def _sorted(rows):
+    return sorted(rows, key=repr)
+
+
+def _resolved(df):
+    return _sorted(tuple(r) for r in resolve(df, _RESOLVE_SCHEMA).collect())
+
+
+resolve_inputs = st.lists(
+    st.tuples(st.integers(0, 2), st.integers(0, 1), st.sampled_from("uupd"),
+              st.integers(1, 8)),
+    min_size=1, max_size=24,
+)
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(events=resolve_inputs, cut=st.integers(0, 24), seed=st.integers(0, 10_000))
+@example(events=[(0, 0, "u", 3), (0, 0, "u", 3), (0, 0, "p", 5), (0, 0, "p", 5)],
+         cut=1, seed=0)  # verbatim re-emits collapse
+@example(events=[(0, 0, "u", 4), (0, 0, "p", 4), (0, 1, "p", 4)],
+         cut=1, seed=0)  # a patch at its full row's LSN is dropped
+@example(events=[(1, 1, "p", 3), (1, 1, "p", 5), (1, 0, "p", 2)],
+         cut=2, seed=0)  # patches with no full row stay
+@example(events=[(0, 0, "u", 2), (0, 0, "d", 4), (0, 0, "u", 6), (0, 1, "p", 3),
+                 (0, 1, "p", 7)],
+         cut=2, seed=0)  # re-insert after a delete
+@example(events=[(2, 0, "d", 7), (2, 0, "d", 3), (2, 0, "u", 5), (2, 0, "u", 8),
+                 (2, 0, "d", 5)],
+         cut=3, seed=1)  # deletes in any order
+def test_resolve_matches_reference_and_laws(spark, events, cut, seed):
+    """``resolve`` equals the pandas statement of the stored-state rule,
+    and obeys resolve(resolve(x) ∪ y) == resolve(x ∪ y) and permutation
+    invariance."""
+    import random
+
+    rows = [_stored_row(*e) for e in events]
+    frame = lambda rs: spark.createDataFrame(rs, _STORED)  # noqa: E731
+    got = _resolved(frame(rows))
+    assert got == _resolve_reference(rows)
+
+    x, y = rows[:cut], rows[cut:]
+    assert _resolved(resolve(frame(x), _RESOLVE_SCHEMA).unionByName(frame(y))) == got
+
+    shuffled = list(rows)
+    random.Random(seed).shuffle(shuffled)
+    assert _resolved(frame(shuffled)) == got
 
 
 # ---------- temporal joins vs pandas oracles ----------
