@@ -646,16 +646,17 @@ def scan_range(
 
 def _diff_live_dirs(
     table: SnapshotTable, since_version: int, version: int
-) -> tuple[dict[str, list[str]], set[str]]:
+) -> tuple[dict[str, list[str]], set[str], dict[str, set[str] | None]]:
     """Walk the snapshot log from ``since_version`` to ``version`` and
-    classify what changed per bucket:
+    classify what changed per bucket; returns ``(added, superset,
+    removed)``:
 
     - ``added[bucket] = [commit dirs]`` — dirs APPENDED by logical-change
       commits (MoR deltas): scanning exactly these files surfaces every
       key that could have changed;
     - ``superset`` — buckets rewritten by a commit we cannot diff
-      minimally (CoW overwrite, pre-``kind`` snapshots): every current
-      key in them counts as changed. Safe because every commit kind except
+      minimally (CoW overwrite, rollback): every current key in them
+      counts as changed. Safe because every commit kind except
       rollback preserves tombstones — rows never silently vanish, so
       re-emitting the bucket's current rows + tombstones is a correct
       (if non-minimal) net diff.
@@ -667,7 +668,8 @@ def _diff_live_dirs(
     ids incomparable → everything is superset.
 
     A ``rollback`` in the window marks its changed buckets superset AND
-    returns the dirs it un-referenced (``removed``): rolled-back rows
+    returns the dirs it un-referenced (``removed[dir] = buckets``, or None
+    = every row when a rebucket is in the window): rolled-back rows
     vanish without tombstones, but they physically live in those dirs —
     still GC-protected while the pre-rollback snapshot is retained — so
     the caller scans them and emits SYNTHETIC conversation deletes,
@@ -754,15 +756,19 @@ def changes_since(
       tombstone the consumer already saw) nets to nothing.
 
     Scale shape: the snapshot-log walk is driver-side metadata (bounded by
-    the retention window). Phase 1 scans ONLY the delta dirs appended by
-    logical-change commits in the window — on the MoR hot path that is
-    exactly the new batches, independent of table size. Buckets rewritten
-    by non-append commits (CoW merge, rollback) degrade to whole-bucket
-    re-emission — correct, just not minimal — while pure rewrites
-    (compaction, re-bucketing) are skipped entirely. A rollback in the
-    window emits through (synthetic deletes from the retracted dirs +
-    superset re-add; round 5) instead of forcing a resync. Phase 2
-    materializes current rows reading only the affected buckets. Raising
+    the retention window). The data side is ONE union of three tagged
+    scans: the affected buckets' current rows (``_src=0``), the delta dirs
+    appended in the window (``_src=1``; on the MoR hot path exactly the
+    new batches) and the dirs a rollback un-referenced (``_src=2``, whose
+    every conversation gets a synthetic delete). CoW and rollback buckets
+    degrade to whole-bucket re-emission; pure rewrites (compaction,
+    re-bucketing) are skipped. A window max of the newest tombstone LSN
+    per ``conv_id`` goes first, so every exchange in the plan is
+    ``hash(conv_id)``, which ``resolve`` and ``collapse_patches`` reuse;
+    the 'd' rows are one ``groupBy(conv_id)`` of those tombstone rows. No
+    join, no ``distinct``. Not ``(_bucket, conv_id)``: retracted rows
+    keep the bucket ids they were written with, so after a rebucket one
+    conversation can carry two and would get two deletes. Raising
     ``FileNotFoundError`` when ``since_version`` fell out of the retained
     snapshot window — or ``ValueError`` when a rollback's retracted dirs
     already expired — tells the consumer to fall back to a full
@@ -782,73 +788,43 @@ def changes_since(
     if not added and not superset and not removed:
         return spark.createDataFrame([], out_schema)
 
-    keys = [META_BUCKET, "conv_id", "turn_idx"]
     snap = table.snapshot(v2)
-    # phase 1: scan exactly the appended delta dirs, each for the buckets
-    # whose live entry gained it → candidate keys
-    by_dir: dict[str, list[str]] = {}
+    by_dir: dict[str, list[str]] = {}  # appended dir → buckets it gained
     for b, ds in added.items():
         for d in ds:
             by_dir.setdefault(d, []).append(b)
-    delta = table.scan_dirs(spark, by_dir, snap)
-    changed_keys = delta.where(F.col(META_OP) != "d").select(*keys).distinct()
-    tomb_added = (
-        delta.where(F.col(META_OP) == "d")
-        .groupBy(META_BUCKET, "conv_id")
-        .agg(F.max(META_LSN).alias("change_lsn"))
-    )
-
-    # rollback-retracted dirs → synthetic conversation deletes: any conv
-    # with a row in a dir the rollback un-referenced may have lost state
-    # with no tombstone to say so; emit 'd' (change_lsn = newest retracted
-    # LSN) and let the superset re-emission re-add whatever survives.
-    if removed:
-        for d in sorted(removed):
-            if not os.path.isdir(os.path.join(table.root, d)):
-                raise ValueError(
-                    f"rollback-retracted dir {d} expired before the window "
-                    f"({since_version}, {v2}] was consumed — the synthetic "
-                    "deletes are unrecoverable, full resync required"
-                )
-        tomb_rollback = (table.scan_dirs(spark, removed, snap)
-                         .groupBy(META_BUCKET, "conv_id")
-                         .agg(F.max(META_LSN).alias("change_lsn")))
-        tomb_added = tomb_added.unionByName(tomb_rollback)
-
-    # phase 2: materialize current rows for affected buckets only
+    for d in sorted(removed):
+        if not os.path.isdir(os.path.join(table.root, d)):
+            raise ValueError(
+                f"rollback-retracted dir {d} expired before the window "
+                f"({since_version}, {v2}] was consumed — the synthetic "
+                "deletes are unrecoverable, full resync required"
+            )
+    # _src: 0 = current rows of the affected buckets, 1 = appended dirs,
+    # 2 = rollback-retracted dirs (every conv in them is a synthetic delete)
     buckets = sorted(int(b) for b in set(added) | superset)
-    resolved = resolve(table.read(spark, buckets=buckets, version=v2), schema)
-    is_super = F.col(META_BUCKET).isin([int(b) for b in superset]) if superset else F.lit(False)
-    marked = (
-        resolved.join(changed_keys.withColumn("_mk", F.lit(1)), keys, "left")
-        .join(
-            tomb_added.select(META_BUCKET, "conv_id", F.lit(1).alias("_mc")).distinct(),
-            [META_BUCKET, "conv_id"],
-            "left",
-        )
-        .where(F.col("_mk").isNotNull() | F.col("_mc").isNotNull() | is_super)
-        .drop("_mk", "_mc")
+    rows = (
+        table.read(spark, buckets=buckets, version=v2).withColumn("_src", F.lit(0))
+        .unionByName(table.scan_dirs(spark, by_dir, snap).withColumn("_src", F.lit(1)))
+        .unionByName(table.scan_dirs(spark, removed, snap).withColumn("_src", F.lit(2)))
     )
-    ups_out = collapse_patches(marked, schema).select(
+    src, op, lsn = F.col("_src"), F.col(META_OP), F.col(META_LSN)
+    is_super = F.col(META_BUCKET).isin(sorted(int(b) for b in superset))
+    tomb = (src == 2) | ((op == "d") & ((src == 1) | ((src == 0) & is_super)))
+    # every tombstone stays for resolve's delete rule; otherwise whole turns
+    marked = (
+        rows.withColumn("_mc", F.max(F.when(tomb, lsn)).over(Window.partitionBy("conv_id")))
+        .withColumn("_mk", F.max(F.when((src == 1) & (op != "d"), 1)).over(
+            Window.partitionBy(META_BUCKET, "conv_id", "turn_idx")))
+        .where((src == 0) & ((op == "d") | F.col("_mk").isNotNull()
+                             | F.col("_mc").isNotNull() | is_super))
+    )
+    ups_out = collapse_patches(resolve(marked, schema), schema).select(
         *user_cols, F.col(META_LSN).alias("change_lsn"), F.lit("u").alias("change_op")
     )
-    # deletes: tombstones (re-)written in the window; superset buckets
-    # re-emit every retained tombstone (idempotent re-drop for consumers)
-    tomb_super = (
-        resolved.where((F.col(META_OP) == "d") & is_super)
-        .select(META_BUCKET, "conv_id", F.col(META_LSN).alias("change_lsn"))
-    )
-    dels = (
-        tomb_added.unionByName(tomb_super)
-        .groupBy("conv_id")
-        .agg(F.max("change_lsn").alias("change_lsn"))
-    )
-    dels_out = dels.select(
-        *[
-            F.col(c) if c == "conv_id" else F.lit(None).cast(schema[c].dataType).alias(c)
-            for c in user_cols
-        ],
-        F.col("change_lsn").cast("long").alias("change_lsn"),
+    dels_out = rows.where(tomb).groupBy("conv_id").agg(
+        *[F.lit(None).cast(schema[c].dataType).alias(c) for c in user_cols if c != "conv_id"],
+        F.max(lsn).cast("long").alias("change_lsn"),
         F.lit("d").alias("change_op"),
     )
     return ups_out.unionByName(dels_out)

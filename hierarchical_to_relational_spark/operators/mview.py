@@ -27,10 +27,11 @@ built from parts the engine already has:
   resolved rows is exact for any aggregate, and the per-window changed
   set is the micro-batch's conversations — small by construction.
 
-Scale shape at 100 TB: phase 1 is ``changes_since`` (scans only the
-window's delta dirs); phase 2 reads only the changed conversations'
-files (bucket + key-set sidecar pruning); the MV write shuffles only
-O(changed convs) rows. A full refresh happens exactly twice in a view's
+Scale shape at 100 TB: the changed conversations come from
+``changes_since`` (one tagged scan of the window's delta dirs and the
+affected buckets on one ``conv_id`` exchange); the recompute reads only
+the changed conversations' files (bucket + key-set sidecar pruning);
+the MV write shuffles only O(changed convs) rows. A full refresh happens exactly twice in a view's
 life: first build, and disaster fallback when the cursor's snapshot
 expired (same contract as every CDF follower).
 """
@@ -95,7 +96,7 @@ class ConvAggregateView:
         F.expr; what the CLI's ``--agg name=expr`` surfaces). Declared
         once at construction; the MV schema is derived from them on the
         first refresh. ``key_set_threshold``: changed-conversation count
-        up to which phase 2 uses the driver-pruned batched lookup (a
+        up to which the recompute uses the driver-pruned batched lookup (a
         bounded collect of conv_ids, same contract as
         ``lookup_conversations``); above it, one semi-join scan — the
         window is so wide that pruning would not pay.

@@ -275,7 +275,10 @@ class ChangeFollower:
             want = {k: w[k] for k in ("upserts", "deletes", "hash") if k in w}
             d = os.path.join(self.out_dir, f"inc-{w['from']:010d}-{w['to']:010d}")
             if os.path.isdir(d):
-                got = self._window_stats(self.spark.read.parquet(d))
+                # an export left with no part file is an empty window
+                parts = glob.glob(os.path.join(d, "*.parquet"))
+                got = (self._window_stats(self.spark.read.parquet(*parts))
+                       if parts else {"upserts": 0, "deletes": 0})
             elif recompute_retired:
                 try:
                     df = changes_since(self.spark, self.table,

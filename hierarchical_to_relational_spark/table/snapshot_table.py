@@ -1038,7 +1038,10 @@ class SnapshotTable:
         parts += [only(spark.read.schema(read_schema).parquet(*files), bs)
                   for bs, files in by_set.items()]
         if not parts:
-            return spark.createDataFrame([], read_schema)
+            # an empty local relation, pruned from any union: a frame made
+            # from a Python list would start Python workers when it runs
+            return spark.range(0).where(F.lit(False)).select(
+                *[F.lit(None).cast(f.dataType).alias(f.name) for f in read_schema.fields])
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

@@ -829,6 +829,69 @@ def test_changes_since_cow_overwrite_supersets(spark, tmp_path):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
+def _rebucket_batch(i: int):
+    """Append i over 12 conversations: every conversation gets turn i,
+    every other one a patch, and every third (shifted by i) a delete,
+    re-inserted above it when i is odd."""
+    rows = []
+    for c in range(12):
+        lsn, cid = 100 * (i + 1) + 4 * c, f"c{c}"
+        rows.append((lsn, "update", cid, [(i, "user", f"t{i}-{c}", None)]))
+        if c % 2 == i % 2:
+            rows.append((lsn + 1, "patch", cid, [(i, None, f"p{i}-{c}", None)]))
+        if c % 3 == i % 3:
+            rows.append((lsn + 2, "delete", cid, None))
+            if i % 2:
+                rows.append((lsn + 3, "insert", cid, [(0, "user", f"r{i}-{c}", None)]))
+    return rows
+
+
+def test_changes_since_across_rebucket(spark, tmp_path):
+    """A rebucket inside the window makes bucket ids incomparable across
+    it: the poll re-emits every bucket, and applying it to the
+    checkpointed state still gives the current state."""
+    from hierarchical_to_relational_spark.operators.merge import changes_since, evolve_buckets
+
+    pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
+                       str(tmp_path / "ck"), n_buckets=2, text_mode="none")
+    for i in range(2):
+        pipe.apply_batch(_env_rows(spark, _rebucket_batch(i)), f"b{i}")
+    v1 = pipe.table.current_version()
+    state1 = _final_state(spark, pipe.table)
+    pipe.apply_batch(_env_rows(spark, _rebucket_batch(2)), "b2")
+    assert evolve_buckets(spark, pipe.table, 4, "rebucket-0")
+    pipe.apply_batch(_env_rows(spark, _rebucket_batch(3)), "b3")
+    changes = changes_since(spark, pipe.table, v1).collect()
+    got = _apply_diff(state1, changes)
+    pd.testing.assert_frame_equal(got, _final_state(spark, pipe.table), check_dtype=False)
+
+
+def test_changes_since_rollback_across_rebucket(spark, tmp_path):
+    """A rollback to a version before a rebucket retracts dirs whose rows
+    carry the new bucket ids, while the restored rows (tombstones
+    included) carry the old ones. The poll still applies to the
+    checkpointed state, and a conversation seen under both bucket ids
+    gets exactly one 'd' row."""
+    from hierarchical_to_relational_spark.operators.merge import changes_since, evolve_buckets
+
+    pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
+                       str(tmp_path / "ck"), n_buckets=2, text_mode="none")
+    for i in range(2):
+        pipe.apply_batch(_env_rows(spark, _rebucket_batch(i)), f"b{i}")
+    v_good = pipe.table.current_version()
+    pipe.apply_batch(_env_rows(spark, _rebucket_batch(2)), "b2")
+    assert evolve_buckets(spark, pipe.table, 4, "rebucket-0")
+    pipe.apply_batch(_env_rows(spark, _rebucket_batch(3)), "b3")
+    v_ckpt = pipe.table.current_version()
+    state_ckpt = _final_state(spark, pipe.table)
+    pipe.table.rollback(v_good, batch_id="rb0")
+    changes = changes_since(spark, pipe.table, v_ckpt).collect()
+    dels = [r["conv_id"] for r in changes if r["change_op"] == "d"]
+    assert sorted(dels) == sorted(f"c{c}" for c in range(12))
+    got = _apply_diff(state_ckpt, changes)
+    pd.testing.assert_frame_equal(got, _final_state(spark, pipe.table), check_dtype=False)
+
+
 def test_random_patch_stream_matches_oracle(spark, tmp_path):
     """Randomized merge-patch gate: a zipf-skewed, shuffled, duplicated
     stream with 25% patch events replayed through the engine equals the

@@ -524,6 +524,34 @@ def test_journal_stats_and_audit_exports(spark, tmp_path):
         bad[0]["expected"]["upserts"] != bad[0]["found"]["upserts"]
 
 
+def test_audit_reports_export_with_no_part_file(spark, tmp_path):
+    """An export dir that lost every part file audits as an empty window
+    (0 upserts, 0 deletes, no hash): that window, and only it, is
+    reported as divergent."""
+    pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
+                       str(tmp_path / "ck"), n_buckets=2, text_mode="none")
+    f = ChangeFollower(spark, pipe.table, str(tmp_path / "cursor.json"),
+                       out_dir=str(tmp_path / "egress"))
+    pipe.apply_batch(_env_rows(spark, [(1, "insert", "cA", [(0, "user", "a0", None)])]), "b0")
+    f.poll_once()  # pin
+    polls = []
+    for i, rows in enumerate([
+        [(2, "insert", "cB", [(0, "user", "b0", None)]), (3, "delete", "cA", None)],
+        [(4, "insert", "cC", [(0, "user", "c0", None)])],
+    ]):
+        pipe.apply_batch(_env_rows(spark, rows), f"b{i + 1}")
+        polls.append(f.poll_once())
+    assert f.audit_exports() == []
+    p = polls[0]
+    for x in os.listdir(p["out_path"]):
+        if x.endswith(".parquet"):
+            os.unlink(os.path.join(p["out_path"], x))
+    bad = f.audit_exports()
+    assert [(b["from"], b["to"]) for b in bad] == [(p["from"], p["to"])]
+    assert bad[0]["expected"]["upserts"] == 1 and bad[0]["expected"]["deletes"] == 1
+    assert bad[0]["found"] == {"upserts": 0, "deletes": 0, "hash": None}
+
+
 def test_audit_recomputes_retired_windows(spark, tmp_path):
     """After retention deletes a published export, audit_exports with
     recompute_retired=True reproduces the window via changes_since and

@@ -32,8 +32,8 @@ BUDGET = {
     "lookup_100": 2,
     "read_transcripts": 2,
     "scan_range": 4,
-    "changes_since_1_append": 8,
-    "view_refresh_incremental": 14,
+    "changes_since_1_append": 3,
+    "view_refresh_incremental": 8,
     "compact_full": 5,
 }
 
@@ -65,12 +65,17 @@ def _jobs(spark, name, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(name))
 
 
-def _shuffles(df) -> int:
-    """Shuffle stages the executed plan of ``df`` ran. After a collect the
-    adaptive plan string prints each Exchange twice (final and initial
-    plan), and each shuffle query stage once."""
+def _executed_plan(df) -> str:
+    """The executed plan of ``df`` after a collect. The adaptive plan
+    string then prints each Exchange twice (final and initial plan), and
+    each shuffle query stage once."""
     df.collect()
-    return df._jdf.queryExecution().executedPlan().toString().count("ShuffleQueryStage")
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _shuffles(df) -> int:
+    """Shuffle stages the executed plan of ``df`` ran."""
+    return _executed_plan(df).count("ShuffleQueryStage")
 
 
 @pytest.fixture(scope="module")
@@ -79,7 +84,7 @@ def measured(spark, tmp_path_factory):
     on one table: five MoR appends over 4 buckets, a view built after the
     fourth, then the full compaction last (it rewrites the table). Also
     the shuffle count of ``resolve`` and of ``read_transcripts`` over the
-    uncompacted table."""
+    uncompacted table, and the executed plan of the one-append feed."""
     d = tmp_path_factory.mktemp("budget")
     pipe = CdcPipeline(spark, str(d / "binlog"), str(d / "t"), str(d / "ck"),
                        n_buckets=4, text_mode="none")
@@ -94,6 +99,7 @@ def measured(spark, tmp_path_factory):
     shuffles = {"resolve": _shuffles(resolved),
                 "read_transcripts": _shuffles(read_transcripts(spark, t))}
     assert resolved.where(F.col("_op") == "d").count() > 0
+    feed_plan = _executed_plan(changes_since(spark, t, v_before))
     keys = [f"c{k}" for k in range(100)]
     ops = {
         "lookup_1": lambda: lookup_conversations(spark, t, ["c5"]).collect(),
@@ -106,17 +112,29 @@ def measured(spark, tmp_path_factory):
     }
     counts = {name: _jobs(spark, f"budget-{name}", fn) for name, fn in ops.items()}
     assert view.cursor() == v_before + 1
-    return counts, shuffles
+    return counts, shuffles, feed_plan
 
 
 @pytest.mark.parametrize("op", sorted(BUDGET))
 def test_job_budget(measured, op):
-    counts, _ = measured
+    counts, _, _ = measured
     assert counts[op] == BUDGET[op], counts
 
 
 def test_resolve_plans_one_shuffle(measured):
     """``resolve`` over a multi-bucket, multi-dir read runs on one hash
     exchange, and the user-facing fold on top of it adds none."""
-    _, shuffles = measured
+    _, shuffles, _ = measured
     assert shuffles == {"resolve": 1, "read_transcripts": 1}
+
+
+def test_changes_since_plans_no_join(measured):
+    """The change feed is one tagged scan on one ``conv_id`` partitioning:
+    at most two shuffle stages (the delete branch aggregates the
+    tombstone rows on its own exchange) and no join. Its empty union leg
+    (no rollback in the window) is pruned, not run as a Python-side
+    frame that would start Python workers."""
+    _, _, plan = measured
+    assert plan.count("ShuffleQueryStage") <= 2
+    assert "BroadcastHashJoin" not in plan and "SortMergeJoin" not in plan
+    assert "ExistingRDD" not in plan
