@@ -28,12 +28,13 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F, types as T
 
 from hierarchical_to_relational_spark.operators.normalize import META_BUCKET, META_LSN, META_OP, META_TS
 from hierarchical_to_relational_spark.table.snapshot_table import (
     ConcurrentOverwriteError,
     SnapshotTable,
+    empty_frame,
 )
 
 
@@ -620,7 +621,7 @@ def scan_range(
     probe = (cand.select(META_BUCKET, "conv_id").distinct()
              .limit(key_set_threshold + 1).collect())
     if not probe:
-        return spark.createDataFrame([], T.StructType([schema[c] for c in user_cols]))
+        return empty_frame(spark, T.StructType([schema[c] for c in user_cols]))
     if len(probe) <= key_set_threshold:
         # key-set regime: per-key bisect file pruning; the candidate-turn
         # semi-join is replaced by an isin filter (equivalent: any turn
@@ -726,6 +727,46 @@ def _diff_live_dirs(
     return added, superset, removed
 
 
+def _window_rows(
+    spark: SparkSession, table: SnapshotTable, since_version: int, v2: int
+) -> tuple[DataFrame, Column, Column] | None:
+    """The tagged scan of the window ``(since_version, v2]`` that
+    ``changes_since`` and ``changed_conversations`` share: ``(rows, tomb,
+    is_super)``, or None when only pure rewrites landed. ``rows`` unions
+    the affected buckets' current rows (``_src=0``), the dirs appended in
+    the window (1) and the dirs a rollback un-referenced (2); ``tomb``
+    marks the rows that (re-)wrote a tombstone, ``is_super`` the rows of
+    re-emitted (CoW, rollback) buckets. Raises ``ValueError``, before any
+    job runs, when a retracted dir already expired."""
+    added, superset, removed = _diff_live_dirs(table, since_version, v2)
+    added = {b: ds for b, ds in added.items() if b not in superset and ds}
+    if not added and not superset and not removed:
+        return None
+
+    snap = table.snapshot(v2)
+    by_dir: dict[str, list[str]] = {}  # appended dir → buckets it gained
+    for b, ds in added.items():
+        for d in ds:
+            by_dir.setdefault(d, []).append(b)
+    for d in sorted(removed):
+        if not os.path.isdir(os.path.join(table.root, d)):
+            raise ValueError(
+                f"rollback-retracted dir {d} expired before the window "
+                f"({since_version}, {v2}] was consumed — the synthetic "
+                "deletes are unrecoverable, full resync required"
+            )
+    buckets = sorted(int(b) for b in set(added) | superset)
+    rows = (
+        table.read(spark, buckets=buckets, version=v2).withColumn("_src", F.lit(0))
+        .unionByName(table.scan_dirs(spark, by_dir, snap).withColumn("_src", F.lit(1)))
+        .unionByName(table.scan_dirs(spark, removed, snap).withColumn("_src", F.lit(2)))
+    )
+    src, op = F.col("_src"), F.col(META_OP)
+    is_super = F.col(META_BUCKET).isin(sorted(int(b) for b in superset))
+    tomb = (src == 2) | ((op == "d") & ((src == 1) | ((src == 0) & is_super)))
+    return rows, tomb, is_super
+
+
 def changes_since(
     spark: SparkSession,
     table: SnapshotTable,
@@ -756,23 +797,19 @@ def changes_since(
       tombstone the consumer already saw) nets to nothing.
 
     Scale shape: the snapshot-log walk is driver-side metadata (bounded by
-    the retention window). The data side is ONE union of three tagged
-    scans: the affected buckets' current rows (``_src=0``), the delta dirs
-    appended in the window (``_src=1``; on the MoR hot path exactly the
-    new batches) and the dirs a rollback un-referenced (``_src=2``, whose
-    every conversation gets a synthetic delete). CoW and rollback buckets
-    degrade to whole-bucket re-emission; pure rewrites (compaction,
-    re-bucketing) are skipped. A window max of the newest tombstone LSN
-    per ``conv_id`` goes first, so every exchange in the plan is
-    ``hash(conv_id)``, which ``resolve`` and ``collapse_patches`` reuse;
-    the 'd' rows are one ``groupBy(conv_id)`` of those tombstone rows. No
-    join, no ``distinct``. Not ``(_bucket, conv_id)``: retracted rows
-    keep the bucket ids they were written with, so after a rebucket one
+    the retention window). The data side is ``_window_rows``' one tagged
+    scan, shared with view refreshes. CoW and rollback buckets degrade to
+    whole-bucket re-emission; pure rewrites (compaction, re-bucketing) are
+    skipped. A window max of the newest tombstone LSN per ``conv_id`` goes
+    first, so every exchange in the plan is ``hash(conv_id)``, which
+    ``resolve`` and ``collapse_patches`` reuse; the 'd' rows are one
+    ``groupBy(conv_id)`` of those tombstone rows. No join, no
+    ``distinct``. Not ``(_bucket, conv_id)``: retracted rows keep the
+    bucket ids they were written with, so after a rebucket one
     conversation can carry two and would get two deletes. Raising
     ``FileNotFoundError`` when ``since_version`` fell out of the retained
     snapshot window — or ``ValueError`` when a rollback's retracted dirs
-    already expired — tells the consumer to fall back to a full
-    re-sync."""
+    already expired — tells the consumer to fall back to a full re-sync."""
     v2 = table.current_version() if version is None else version
     schema = table.schema(v2)
     user_cols = [n for n in schema.fieldNames() if not n.startswith("_")]
@@ -783,34 +820,11 @@ def changes_since(
             T.StructField("change_op", T.StringType(), False),
         ]
     )
-    added, superset, removed = _diff_live_dirs(table, since_version, v2)
-    added = {b: ds for b, ds in added.items() if b not in superset and ds}
-    if not added and not superset and not removed:
-        return spark.createDataFrame([], out_schema)
-
-    snap = table.snapshot(v2)
-    by_dir: dict[str, list[str]] = {}  # appended dir → buckets it gained
-    for b, ds in added.items():
-        for d in ds:
-            by_dir.setdefault(d, []).append(b)
-    for d in sorted(removed):
-        if not os.path.isdir(os.path.join(table.root, d)):
-            raise ValueError(
-                f"rollback-retracted dir {d} expired before the window "
-                f"({since_version}, {v2}] was consumed — the synthetic "
-                "deletes are unrecoverable, full resync required"
-            )
-    # _src: 0 = current rows of the affected buckets, 1 = appended dirs,
-    # 2 = rollback-retracted dirs (every conv in them is a synthetic delete)
-    buckets = sorted(int(b) for b in set(added) | superset)
-    rows = (
-        table.read(spark, buckets=buckets, version=v2).withColumn("_src", F.lit(0))
-        .unionByName(table.scan_dirs(spark, by_dir, snap).withColumn("_src", F.lit(1)))
-        .unionByName(table.scan_dirs(spark, removed, snap).withColumn("_src", F.lit(2)))
-    )
+    window = _window_rows(spark, table, since_version, v2)
+    if window is None:
+        return empty_frame(spark, out_schema)
+    rows, tomb, is_super = window
     src, op, lsn = F.col("_src"), F.col(META_OP), F.col(META_LSN)
-    is_super = F.col(META_BUCKET).isin(sorted(int(b) for b in superset))
-    tomb = (src == 2) | ((op == "d") & ((src == 1) | ((src == 0) & is_super)))
     # every tombstone stays for resolve's delete rule; otherwise whole turns
     marked = (
         rows.withColumn("_mc", F.max(F.when(tomb, lsn)).over(Window.partitionBy("conv_id")))
@@ -828,6 +842,33 @@ def changes_since(
         F.lit("d").alias("change_op"),
     )
     return ups_out.unionByName(dels_out)
+
+
+def changed_conversations(
+    spark: SparkSession,
+    table: SnapshotTable,
+    since_version: int,
+    version: int | None = None,
+) -> tuple[DataFrame, DataFrame] | None:
+    """``(live, touched)`` for the window ``(since_version, version]``, or
+    None when it changed no data: ``touched`` holds the ``conv_id`` of
+    every conversation with a row in an appended dir, a rollback-retracted
+    dir (a rolled-back conversation has no other) or a re-emitted bucket,
+    ``live`` their resolved current user rows. One window over ``conv_id``
+    marks them, on the exchange that ``resolve``, ``collapse_patches`` and
+    a ``groupBy(conv_id)`` reuse. Raises like ``changes_since``."""
+    v2 = table.current_version() if version is None else version
+    window = _window_rows(spark, table, since_version, v2)
+    if window is None:
+        return None
+    rows, _, is_super = window
+    schema = table.schema(v2)
+    user_cols = [n for n in schema.fieldNames() if not n.startswith("_")]
+    src = F.col("_src")
+    hit = rows.withColumn("_t", F.max(F.when((src != 0) | is_super, 1)).over(
+        Window.partitionBy("conv_id"))).where(F.col("_t").isNotNull())
+    live = collapse_patches(resolve(hit.where(src == 0), schema), schema).select(*user_cols)
+    return live, hit.select("conv_id").distinct()
 
 
 def changes_between_timestamps(

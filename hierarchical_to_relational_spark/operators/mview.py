@@ -2,10 +2,10 @@
 
 ``ConvAggregateView`` maintains a per-conversation aggregate table (any
 ``groupBy("conv_id").agg(...)`` the caller declares) INCREMENTALLY from
-the source table's CDF: each refresh reads ``changes_since(cursor, now]``
-to find the conversations a window touched, recomputes the aggregate for
-ONLY those conversations (key-set-pruned batched lookup below a
-threshold, one semi-join scan above it), and LWW-upserts the results —
+the source table's CDF: each refresh takes the conversations the window
+``(cursor, now]`` touched, with their current resolved rows, from ONE
+tagged scan of the window (``changed_conversations``), recomputes the
+aggregate for ONLY those conversations, and LWW-upserts the results —
 refresh cost is O(changed conversations), independent of table size.
 This is the lakehouse "incremental view maintenance" story (the same
 contract Materialize/DBSP-style engines and Databricks MVs provide)
@@ -27,13 +27,13 @@ built from parts the engine already has:
   resolved rows is exact for any aggregate, and the per-window changed
   set is the micro-batch's conversations — small by construction.
 
-Scale shape at 100 TB: the changed conversations come from
-``changes_since`` (one tagged scan of the window's delta dirs and the
-affected buckets on one ``conv_id`` exchange); the recompute reads only
-the changed conversations' files (bucket + key-set sidecar pruning);
-the MV write shuffles only O(changed convs) rows. A full refresh happens exactly twice in a view's
-life: first build, and disaster fallback when the cursor's snapshot
-expired (same contract as every CDF follower).
+Scale shape at 100 TB: one scan of the window's delta dirs and the
+affected buckets, on one ``conv_id`` exchange, yields both the changed
+conversations and their resolved rows — no conversation id reaches the
+driver and nothing is read twice; the MV write shuffles only O(changed
+convs) rows. A full refresh happens exactly twice in a view's life:
+first build, and disaster fallback when the cursor's snapshot expired
+(same contract as every CDF follower).
 """
 
 from __future__ import annotations
@@ -51,8 +51,7 @@ from hierarchical_to_relational_spark.operators.merge import (
     META_OP,
     META_TS,
     apply_cdc_batch,
-    changes_since,
-    lookup_conversations,
+    changed_conversations,
     read_transcripts,
     table_schema_for,
 )
@@ -72,13 +71,6 @@ def default_aggs() -> dict[str, Column]:
     }
 
 
-def _id_frame(spark: SparkSession, ids: list[str]) -> DataFrame:
-    """One-column ``conv_id`` frame of the given ids, built from a literal
-    array in the JVM: ``createDataFrame`` over Python rows plans a
-    PythonRDD, which starts Python workers on every refresh commit."""
-    return spark.range(1).select(F.explode(F.lit(ids)).alias("conv_id"))
-
-
 class ConvAggregateView:
     def __init__(
         self,
@@ -87,7 +79,6 @@ class ConvAggregateView:
         root: str,
         aggs: dict[str, Column | str] | None = None,
         n_buckets: int = 16,
-        key_set_threshold: int = 10_000,
         window_col: Column | None = None,
     ):
         """``aggs``: output column name → aggregate expression over the
@@ -95,11 +86,7 @@ class ConvAggregateView:
         a SQL aggregate string (``"sum(length(text))"``, parsed with
         F.expr; what the CLI's ``--agg name=expr`` surfaces). Declared
         once at construction; the MV schema is derived from them on the
-        first refresh. ``key_set_threshold``: changed-conversation count
-        up to which the recompute uses the driver-pruned batched lookup (a
-        bounded collect of conv_ids, same contract as
-        ``lookup_conversations``); above it, one semi-join scan — the
-        window is so wide that pruning would not pay.
+        first refresh.
 
         ``source`` may be ANOTHER ConvAggregateView (view chaining): the
         downstream view treats the upstream MV's own SnapshotTable as its
@@ -132,7 +119,6 @@ class ConvAggregateView:
         self.aggs = {n: (F.expr(c) if isinstance(c, str) else c)
                      for n, c in aggs.items()}
         self.n_buckets = n_buckets
-        self.key_set_threshold = key_set_threshold
         self.window_col = window_col
         self.table: SnapshotTable | None = (
             SnapshotTable(root) if SnapshotTable.exists(root) else None
@@ -225,7 +211,9 @@ class ConvAggregateView:
     def refresh(self) -> dict:
         """One maintenance step: advance the view to the source's current
         version. Returns the commit report plus {"mode": "noop" |
-        "incremental" | "full", "from", "to", "changed_convs"}."""
+        "incremental" | "full", "from", "to", "changed_convs"} — its
+        commit's tombstone count, one per touched conversation (None when
+        the commit was a replay)."""
         return refresh_many([self])[0]
 
     def full_refresh(self) -> dict:
@@ -320,30 +308,29 @@ def refresh_dag(views: list[ConvAggregateView]) -> list[dict]:
 
 
 def refresh_many(views: list[ConvAggregateView]) -> list[dict]:
-    """Refresh SEVERAL views over the same source table from ONE change
-    scan and ONE pruned read: ``changes_since`` runs once (from the oldest
-    cursor — a superset window for views that are further ahead, which is
-    safe: recompute is idempotent), the affected conversations' current
-    rows materialize once, and every view aggregates off that shared
-    slice. N views cost one scan + N small aggregations instead of N
-    scans — the natural shape when an ingest pipeline co-maintains a
+    """Refresh SEVERAL views over the same source table from ONE scan of
+    the change window: ``changed_conversations`` runs once (from the
+    oldest cursor — a superset window for views that are further ahead,
+    which is safe: recompute is idempotent), the touched conversations'
+    current rows materialize once, and every view aggregates off that
+    shared slice. N views cost one scan + N small aggregations instead of
+    N scans — the natural shape when an ingest pipeline co-maintains a
     dashboard's worth of aggregate views at one cadence.
 
-    Views that have never been built (no cursor) or whose cursor's
-    snapshot expired fall back to their own ``full_refresh``. Returns one
-    report per view, in order."""
+    A window that changed no data is a noop (the cursors advance, nothing
+    commits). Views that have never been built (no cursor) or whose
+    cursor's snapshot expired fall back to their own ``full_refresh``.
+    Returns one report per view, in order."""
     if not views:
         return []
     src_roots = {v.source.root for v in views}
     if len(src_roots) != 1:
         raise ValueError("refresh_many: views span different source tables")
     source = views[0].source
-    spark = views[0].spark
     v_now = source.current_version()
 
     reports: dict[int, dict] = {}
-    live: list[ConvAggregateView] = []
-    cursors: dict[int, int] = {}
+    cursors: dict[int, int] = {}  # view position → cursor, refreshed below
     for i, v in enumerate(views):
         cur = v.cursor()
         if cur is None:
@@ -352,53 +339,38 @@ def refresh_many(views: list[ConvAggregateView]) -> list[dict]:
             reports[i] = {"mode": "noop", "from": cur, "to": v_now,
                           "changed_convs": 0, "committed": False}
         else:
-            live.append(v)
             cursors[i] = cur
-    if live:
-        since = min(cursors[i] for i, v in enumerate(views) if v in live)
+    if cursors:
         try:
-            ch = changes_since(spark, source, since, version=v_now)
+            window = changed_conversations(views[0].spark, source, min(cursors.values()),
+                                           version=v_now)
         except (FileNotFoundError, ValueError):
             # cursor's snapshot expired / rollback dirs gone — the one
             # case that costs a full recompute (same contract as any CDF
             # follower losing its window)
-            for i, v in enumerate(views):
-                if v in live:
-                    reports[i] = v.full_refresh()
+            for i in cursors:
+                reports[i] = views[i].full_refresh()
             return [reports[i] for i in range(len(views))]
-        affected = ch.select("conv_id").distinct()
-        thr = min(v.key_set_threshold for v in live)
-        ids = [r[0] for r in affected.limit(thr + 1).collect()]
-        if not ids:
-            for i, v in enumerate(views):
-                if v in live:
-                    v._write_cursor(v_now)
-                    reports[i] = {"mode": "noop", "from": cursors[i],
-                                  "to": v_now, "changed_convs": 0,
-                                  "committed": False}
+        if window is None:
+            for i, cur in cursors.items():
+                views[i]._write_cursor(v_now)
+                reports[i] = {"mode": "noop", "from": cur, "to": v_now,
+                              "changed_convs": 0, "committed": False}
             return [reports[i] for i in range(len(views))]
-        if len(ids) <= thr:
-            current = lookup_conversations(spark, source, ids, version=v_now)
-            affected = _id_frame(spark, ids)
-            n_changed = len(ids)
-        else:
-            current = read_transcripts(spark, source, version=v_now).join(
-                affected, "conv_id", "semi")
-            n_changed = affected.count()
+        current, affected = window
         # the slice is read once and served to every view's aggregation;
         # a single view reads it once anyway, so only a shared slice is cached
-        shared = len(live) > 1
+        shared = len(cursors) > 1
         if shared:
             current = current.persist()
             affected = affected.persist()
         try:
-            for i, v in enumerate(views):
-                if v in live:
-                    rep = v._refresh_from(current, affected, v_now, cursors[i])
-                    rep["changed_convs"] = n_changed
-                    if shared:
-                        rep["shared_scan"] = True
-                    reports[i] = rep
+            for i, cur in cursors.items():
+                rep = views[i]._refresh_from(current, affected, v_now, cur)
+                rep["changed_convs"] = rep["deletes"]
+                if shared:
+                    rep["shared_scan"] = True
+                reports[i] = rep
         finally:
             if shared:
                 current.unpersist()

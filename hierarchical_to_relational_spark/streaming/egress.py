@@ -112,13 +112,8 @@ class ChangeFollower:
             # durable record of what was delivered, so adopt the max
             # published 'to' as the cursor whenever it is ahead of (or
             # missing from) the cursor file.
-            published_to, published_from = -1, None
-            for d in glob.glob(os.path.join(out_dir, "inc-*-*")):
-                m = re.fullmatch(r"inc-(\d+)-(\d+)", os.path.basename(d))
-                if m:
-                    published_to = max(published_to, int(m.group(2)))
-                    f = int(m.group(1))
-                    published_from = f if published_from is None else min(published_from, f)
+            published = self._published()
+            published_to = max((t for _, t, _ in published), default=-1)
             if published_to >= 0 and (self.cursor() is None or published_to > self.cursor()):
                 # Adopt the export cursor, but NOT the callback-ack cursor:
                 # the crash may have happened after the export and before
@@ -132,17 +127,16 @@ class ChangeFollower:
                 old_acked = self._acked()
                 if old_acked is None:
                     old_cursor = self.cursor()
-                    old_acked = old_cursor if old_cursor is not None else published_from
+                    old_acked = old_cursor if old_cursor is not None else published[0][0]
                 self._write_cursor(published_to, acked=old_acked)
             # journal backfill: exports published by a pre-journal follower
             # (or whose append was lost to a crash) get their boundaries
             # journaled now, while the dirs still exist — so retention can
             # later retire them without losing window-exact re-delivery
             jw = self._journal_windows()
-            for d in sorted(glob.glob(os.path.join(out_dir, "inc-*-*"))):
-                m = re.fullmatch(r"inc-(\d+)-(\d+)", os.path.basename(d))
-                if m and int(m.group(1)) not in jw:
-                    self._journal_append(int(m.group(1)), int(m.group(2)))
+            for f, t, _ in published:
+                if f not in jw:
+                    self._journal_append(f, t)
             # a crash between export and rename leaves _stage-* orphans
             # (readers only see inc-* dirs). Remove only STALE ones: a
             # supervisor may restart the follower while the old process is
@@ -156,6 +150,15 @@ class ChangeFollower:
                         shutil.rmtree(stale, ignore_errors=True)
                 except FileNotFoundError:
                     pass
+
+    def _published(self) -> list[tuple[int, int, str]]:
+        """Sorted ``(from, to, path)`` of every published export dir."""
+        wins = []
+        for d in glob.glob(os.path.join(self.out_dir, "inc-*-*")):
+            m = re.fullmatch(r"inc-(\d+)-(\d+)", os.path.basename(d))
+            if m:
+                wins.append((int(m.group(1)), int(m.group(2)), d))
+        return sorted(wins)
 
     # -- window journal --------------------------------------------------
     def _journal_path(self) -> str:
@@ -307,12 +310,7 @@ class ChangeFollower:
         is still owed to the callback — unless ``force=True`` (recompute
         from the journal still converges; it just costs a changes_since
         per window). Returns the removed paths."""
-        wins = []
-        for d in glob.glob(os.path.join(self.out_dir, "inc-*-*")):
-            m = re.fullmatch(r"inc-(\d+)-(\d+)", os.path.basename(d))
-            if m:
-                wins.append((int(m.group(1)), int(m.group(2)), d))
-        wins.sort()
+        wins = self._published()
         victims = wins[:-keep_last] if keep_last > 0 else wins
         acked = self._acked()
         removed = []
@@ -497,15 +495,13 @@ class ChangeFollower:
         for f, t in self._journal_windows().items():
             if f >= acked and t > acked and t <= upto:
                 chain[f] = (t, None)
-        for d in glob.glob(os.path.join(self.out_dir, "inc-*-*")):
-            m = re.fullmatch(r"inc-(\d+)-(\d+)", os.path.basename(d))
-            if m:
-                f, t = int(m.group(1)), int(m.group(2))
-                if f >= acked and t > acked and t <= upto:
-                    chain[f] = (t, d)  # a live export beats its journal line
+        for f, t, d in self._published():
+            if f >= acked and t > acked and t <= upto:
+                chain[f] = (t, d)  # a live export beats its journal line
         n, pos = 0, acked
-        while pos < upto and pos in chain:
-            t, d = chain[pos]
+        while pos < upto:
+            # past the chain's end: ONE recomputed catch-up window
+            t, d = chain.get(pos, (upto, None))
             if d is not None:
                 df = self.spark.read.parquet(d)
             else:
@@ -513,11 +509,13 @@ class ChangeFollower:
                 try:
                     df = changes_since(self.spark, self.table, pos, version=t)
                 except (ValueError, FileNotFoundError):
-                    break  # its dirs expired too → merged catch-up below
-            ops = {r["change_op"]: r["n"] for r in
-                   df.groupBy("change_op").count().withColumnRenamed("count", "n").collect()}
+                    if t == upto:
+                        return n, False  # rollback / expired — full resync needed
+                    del chain[pos]  # its dirs expired too → merged catch-up
+                    continue
+            stats = self._window_stats(df)
             res = {"from": pos, "to": t,
-                   "upserts": ops.get("u", 0), "deletes": ops.get("d", 0),
+                   "upserts": stats["upserts"], "deletes": stats["deletes"],
                    "out_path": d, "needs_resync": False, "redelivery": True,
                    "recomputed": d is None, "changes": df}
             if res["upserts"] or res["deletes"]:
@@ -525,21 +523,6 @@ class ChangeFollower:
                 n += 1
             pos = t
             self._write_cursor(upto, acked=t)
-        if pos < upto:
-            try:
-                df = changes_since(self.spark, self.table, pos, version=upto)
-            except (ValueError, FileNotFoundError):
-                return n, False  # rollback / expired — full resync needed
-            ops = {r["change_op"]: r["n"] for r in
-                   df.groupBy("change_op").count().withColumnRenamed("count", "n").collect()}
-            res = {"from": pos, "to": upto,
-                   "upserts": ops.get("u", 0), "deletes": ops.get("d", 0),
-                   "out_path": None, "needs_resync": False, "redelivery": True,
-                   "changes": df}
-            if res["upserts"] or res["deletes"]:
-                on_changes(res)
-                n += 1
-            self._write_cursor(upto, acked=upto)
         return n, True
 
     def run(

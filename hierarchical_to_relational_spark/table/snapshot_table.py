@@ -243,6 +243,13 @@ def scan_schema(schema: T.StructType) -> T.StructType:
     return T.StructType([T.StructField("_bucket", T.IntegerType(), True)] + list(schema.fields))
 
 
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """A frame of ``schema`` with no rows, as an empty local relation that
+    unions prune; a frame made from a Python list starts Python workers."""
+    return spark.range(0).where(F.lit(False)).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields])
+
+
 def _cast_equivalent(a: T.DataType, b: T.DataType) -> bool:
     """Types that are interchangeable by a value-preserving cast under the
     engine's UTC session timezone (parquet sources surface TIMESTAMP_NTZ
@@ -1038,10 +1045,7 @@ class SnapshotTable:
         parts += [only(spark.read.schema(read_schema).parquet(*files), bs)
                   for bs, files in by_set.items()]
         if not parts:
-            # an empty local relation, pruned from any union: a frame made
-            # from a Python list would start Python workers when it runs
-            return spark.range(0).where(F.lit(False)).select(
-                *[F.lit(None).cast(f.dataType).alias(f.name) for f in read_schema.fields])
+            return empty_frame(spark, read_schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

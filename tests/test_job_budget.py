@@ -33,7 +33,7 @@ BUDGET = {
     "read_transcripts": 2,
     "scan_range": 4,
     "changes_since_1_append": 3,
-    "view_refresh_incremental": 8,
+    "view_refresh_incremental": 4,
     "compact_full": 5,
 }
 
@@ -138,3 +138,23 @@ def test_changes_since_plans_no_join(measured):
     assert plan.count("ShuffleQueryStage") <= 2
     assert "BroadcastHashJoin" not in plan and "SortMergeJoin" not in plan
     assert "ExistingRDD" not in plan
+
+
+@pytest.mark.parametrize("case", ["feed_compaction_only", "scan_range_no_match"])
+def test_empty_result_plans_no_python_rdd(spark, tmp_path, case):
+    """An empty result is an empty local relation, not a frame made from
+    a Python list: its plan has no ``ExistingRDD`` scan, which would
+    start Python workers when it runs."""
+    pipe = CdcPipeline(spark, str(tmp_path / "binlog"), str(tmp_path / "t"),
+                       str(tmp_path / "ck"), n_buckets=2, text_mode="none")
+    t = pipe.table
+    pipe.apply_batch(_env_rows(spark, _batch(0)), "b0")
+    if case == "feed_compaction_only":
+        v = t.current_version()
+        assert compact(spark, t, "compact-0")
+        df = changes_since(spark, t, v)
+    else:
+        df = scan_range(spark, t, "turn_idx", 50, 60)
+    plan = _executed_plan(df)
+    assert df.count() == 0
+    assert "ExistingRDD" not in plan, plan

@@ -446,3 +446,57 @@ def test_incremental_refresh_batch_plans_no_python_rdd(spark, tmp_path, monkeypa
         rdd = batch._jdf.queryExecution().toRdd().toDebugString()
         assert "PythonRDD" not in rdd, rdd
     assert _mv_state(one) == _mv_state(two) == _recompute(spark, pipe.table)
+
+
+@pytest.mark.parametrize("case", ["compaction", "rollback", "rebucket", "cow", "late_upsert"])
+def test_refresh_over_rare_windows(spark, tmp_path, case):
+    """Windows the hot path never sees: a compaction alone is a noop with
+    no commit; a rollback retracting a conversation that lives only in
+    the retracted dir, a rebucket, a copy-on-write bucket rewrite and a
+    late upsert below a tombstone all leave the view equal to a
+    recompute."""
+    from hierarchical_to_relational_spark.operators.merge import compact, evolve_buckets
+    from tests.test_cdc import _rebucket_batch
+
+    pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
+                       str(tmp_path / "ck"), n_buckets=2, text_mode="none",
+                       mode="cow" if case == "cow" else "mor")
+    mv = ConvAggregateView(spark, pipe.table, str(tmp_path / "mv"))
+    for i in range(2):
+        pipe.apply_batch(_env_rows(spark, _rebucket_batch(i)), f"b{i}")
+    v_good = pipe.table.current_version()
+    assert mv.refresh()["mode"] == "full"
+    mv_version = mv.table.current_version()
+
+    if case == "compaction":
+        assert compact(spark, pipe.table, "compact-0")
+        r = mv.refresh()
+        assert r["mode"] == "noop" and not r["committed"]
+        assert mv.table.current_version() == mv_version
+        assert mv.cursor() == pipe.table.current_version()
+    elif case == "rollback":
+        pipe.apply_batch(_env_rows(spark, [
+            (900, "insert", "cNew", [(0, "user", "rolled back", None)]),
+        ]), "b2")
+        mv.refresh()
+        assert "cNew" in _mv_state(mv)
+        pipe.table.rollback(v_good, batch_id="rb0")
+        assert mv.refresh()["mode"] == "incremental"
+        assert "cNew" not in _mv_state(mv)
+    elif case == "rebucket":
+        pipe.apply_batch(_env_rows(spark, _rebucket_batch(2)), "b2")
+        assert evolve_buckets(spark, pipe.table, 4, "rebucket-0")
+        pipe.apply_batch(_env_rows(spark, _rebucket_batch(3)), "b3")
+        assert mv.refresh()["mode"] == "incremental"
+    elif case == "cow":
+        pipe.apply_batch(_env_rows(spark, _rebucket_batch(2)), "b2")
+        assert mv.refresh()["mode"] == "incremental"
+    else:
+        pipe.apply_batch(_env_rows(spark, [(5000, "delete", "c3", None)]), "b2")
+        mv.refresh()
+        pipe.apply_batch(_env_rows(spark, [
+            (4000, "update", "c3", [(7, "user", "late", None)]),
+        ]), "b3")
+        mv.refresh()
+        assert "c3" not in _mv_state(mv)
+    assert _mv_state(mv) == _recompute(spark, pipe.table)
