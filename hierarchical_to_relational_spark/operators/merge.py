@@ -34,8 +34,13 @@ from hierarchical_to_relational_spark.operators.normalize import META_BUCKET, ME
 from hierarchical_to_relational_spark.table.snapshot_table import (
     ConcurrentOverwriteError,
     SnapshotTable,
+    bucket_expr,
     empty_frame,
 )
+
+# scan_range phase 2 collects the candidate keys (key-set regime) when
+# they are at most this many distinct (bucket, key) pairs
+SCAN_RANGE_KEY_SET_MAX = 8192
 
 
 def lww_latest(df: DataFrame, keys: list[str], order_cols: list[str]) -> DataFrame:
@@ -493,9 +498,7 @@ def evolve_buckets(
     for _ in range(retries):
         base_v = table.current_version()
         resolved = resolve(table.read(spark, version=base_v), schema)
-        rebucketed = resolved.withColumn(
-            META_BUCKET, F.pmod(F.xxhash64(F.col("conv_id")), F.lit(new_n_buckets)).cast("int")
-        )
+        rebucketed = resolved.withColumn(META_BUCKET, bucket_expr(F.col("conv_id"), new_n_buckets))
         try:
             return table.commit_rebucket(
                 rebucketed, new_n_buckets, batch_id,
@@ -561,7 +564,6 @@ def scan_range(
     lo=None,
     hi=None,
     version: int | None = None,
-    key_set_threshold: int = 8192,
 ) -> DataFrame:
     """Resolution-SAFE value-range query over any scalar user column
     (``ts`` windows, ``role`` equality via lo==hi, ``turn_idx`` bands —
@@ -581,20 +583,21 @@ def scan_range(
        (tombstones and patches carry conv_id/_lsn), resolve LWW +
        tombstones + patch folds, and re-apply the row filter so keys
        whose current value moved OUT of the range drop away. When the
-       candidates are ≤ ``key_set_threshold`` distinct (bucket, key)
+       candidates are ≤ ``SCAN_RANGE_KEY_SET_MAX`` distinct (bucket, key)
        pairs, the keys themselves are collected and drive ``key_set``
        bisect file pruning — two far-apart candidate keys read only
        their OWN files, not everything between them, where the previous
        single global (min, max) envelope pruned nothing once candidates
        spanned the keyspace (e.g. a 30-day window touching most
-       conversations). Above the threshold, fall back to the envelope
-       (an unbounded key collect would be a driver-side data read).
+       conversations). Above that, fall back to the ``conv_id`` envelope
+       of the candidates (an unbounded key collect would be a driver-side
+       data read).
 
     At 100 TB on a time-ordered ingest this touches the delta/base files
     of the queried window plus the candidates' key neighborhoods — not
-    the table. Driver collect is bounded: ≤ threshold (bucket, key)
-    pairs in the key-set regime, 2 scalars + ≤ n_buckets ints in the
-    envelope regime."""
+    the table. Driver collect is bounded: ≤ ``SCAN_RANGE_KEY_SET_MAX``
+    (bucket, key) pairs in the key-set regime, 2 scalars + ≤ n_buckets
+    ints in the envelope regime."""
     schema = table.schema(version)
     pred = None
     if lo is not None:
@@ -617,12 +620,12 @@ def scan_range(
         .select(META_BUCKET, "conv_id", "turn_idx")
         .distinct()
     )
-    # bounded probe: ≤ threshold+1 distinct (bucket, key) pairs
+    # bounded probe: ≤ SCAN_RANGE_KEY_SET_MAX + 1 distinct (bucket, key) pairs
     probe = (cand.select(META_BUCKET, "conv_id").distinct()
-             .limit(key_set_threshold + 1).collect())
+             .limit(SCAN_RANGE_KEY_SET_MAX + 1).collect())
     if not probe:
         return empty_frame(spark, T.StructType([schema[c] for c in user_cols]))
-    if len(probe) <= key_set_threshold:
+    if len(probe) <= SCAN_RANGE_KEY_SET_MAX:
         # key-set regime: per-key bisect file pruning; the candidate-turn
         # semi-join is replaced by an isin filter (equivalent: any turn
         # whose CURRENT row matches pred is a phase-1 candidate, and
@@ -637,9 +640,8 @@ def scan_range(
     span = cand.agg(
         F.min("conv_id"), F.max("conv_id"), F.collect_set(META_BUCKET)
     ).first()  # 2 scalars + ≤ n_buckets ints — bounded driver collect
-    full = table.read(
-        spark, version=version, buckets=sorted(span[2]), key_range=(span[0], span[1])
-    )
+    full = table.read(spark, version=version, buckets=sorted(span[2]),
+                      col_ranges={"conv_id": (span[0], span[1])})
     hits = resolve(full, schema).join(cand, [META_BUCKET, "conv_id", "turn_idx"], "left_semi")
     folded = collapse_patches(hits, schema).where(pred)
     return folded.select(*user_cols)

@@ -74,6 +74,10 @@ log = logging.getLogger(__name__)
 SNAPSHOT_DIR = "_snapshots"
 DATA_DIR = "data"
 FILE_STATS_NAME = "_file_stats.json"  # per-commit-dir file min-max sidecar
+# sidecar layout: these columns' bounds sit at a file entry's top level,
+# every other column's under its "cols" (read and written by _sidecar_bound
+# and _footer_stats only)
+_TOP_BOUND_COLS = ("conv_id", "_lsn", "_bucket")
 _WRITE_SALT = 8  # salt domain of the append write shuffle (_write_commit_data)
 
 # Parquet bloom filters on the merge key, for point lookups on files the
@@ -133,6 +137,13 @@ def _bound_to_json(v):
     if isinstance(v, datetime.date):
         return v.toordinal()
     return None
+
+
+def _sidecar_bound(file_stat: dict, col: str) -> list | None:
+    """``col``'s recorded [min, max] in one sidecar file entry, or None."""
+    if col in _TOP_BOUND_COLS:
+        return file_stat.get(col)
+    return file_stat.get("cols", {}).get(col)
 
 
 def _query_bound_to_json(v):
@@ -241,6 +252,12 @@ def scan_schema(schema: T.StructType) -> T.StructType:
     schema. Passed to ``spark.read.schema`` so scans skip schema inference;
     Parquet's reader null-fills missing columns and casts widened ones up."""
     return T.StructType([T.StructField("_bucket", T.IntegerType(), True)] + list(schema.fields))
+
+
+def bucket_expr(key, n_buckets: int):
+    """The bucketing expression: ``_bucket = pmod(xxhash64(key), n_buckets)``
+    (``functions.xxh64.bucket_of_key`` is its driver-side twin)."""
+    return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
 
 
 def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
@@ -895,10 +912,9 @@ class SnapshotTable:
                             index_cols_override=list(cols), kind="evolve")
 
     def bucket_col(self):
-        """Bucketing expression factory — callers compute
-        ``_bucket = pmod(xxhash64(key), n_buckets)``."""
+        """``bucket_expr`` factory for the table's current bucket count."""
         nb = self.n_buckets
-        return lambda key_col: F.pmod(F.xxhash64(key_col), F.lit(nb)).cast("int")
+        return lambda key_col: bucket_expr(key_col, nb)
 
     # ---------- read ----------
 
@@ -907,9 +923,6 @@ class SnapshotTable:
         spark: SparkSession,
         buckets: list[int] | None = None,
         version: int | None = None,
-        key_range: tuple | None = None,
-        lsn_range: tuple | None = None,
-        as_of_ts: float | None = None,
         col_ranges: dict | None = None,
         key_set: list | None = None,
         col_eq: dict | None = None,
@@ -924,38 +937,31 @@ class SnapshotTable:
         buckets whose live entry lists it — LWW resolution happens in the
         caller (operators.merge.resolve) where required.
 
-        ``key_range=(lo, hi)`` / ``lsn_range=(lo, hi)`` (inclusive; either
-        end None = open) additionally skip FILES whose recorded conv_id /
-        _lsn min-max cannot intersect the range — manifest-level pruning
-        from the per-commit sidecar, no footer reads, no Spark job. This is
-        a SUPERSET file selection: surviving files may still hold
+        ``col_ranges={col: (lo, hi)}`` (inclusive; either end None = open)
+        additionally skips FILES whose recorded bounds of ``col`` cannot
+        intersect the range — manifest-level pruning from the per-commit
+        sidecar, no footer reads, no Spark job, on any scalar column
+        (conv_id, _lsn, ts, role, turn_idx, ...; timestamps/dates compare
+        as epoch micros / ordinal days, see _bound_to_json). This is a
+        SUPERSET file selection: surviving files may still hold
         out-of-range rows, so callers apply the row filter on top (point
         lookups should use ``operators.merge.lookup_conversation``). Files
-        without recorded bounds for a column (row groups whose writer
-        dropped the stats) are never pruned on it. At scale this is what
-        makes a point lookup touch one file per compacted base dir
-        (range-clustered) plus only the delta files whose batches actually
-        contained the key — not every file in the bucket.
+        without a recorded bound for a column are never pruned on it.
+        Ranges on ``conv_id`` / ``_lsn`` are resolution-safe (tombstones
+        and patches carry both). Ranges on any other column are NOT: a
+        pruned file may hold the tombstone or the NEWER version of a key
+        whose older in-range row survives in a kept file, so resolving
+        only the kept files could resurrect dead/stale rows. Use
+        ``operators.merge.scan_range`` (two-phase: pruned candidate scan →
+        full resolution of only the affected keys) for user-facing range
+        queries.
 
         ``key_set=[k1, k2, ...]`` prunes files against a SET of point keys
         (batched lookups): a file survives only if some key falls inside
         its recorded conv_id bounds (bisect per file — tighter than the
         single (min,max) envelope of the set, which would keep every file
-        between two far-apart keys). Mask-complete like ``key_range``.
-
-        ``col_ranges={col: (lo, hi)}`` prunes on ANY scalar user column's
-        recorded bounds (ts, role, turn_idx, ... — no secondary index
-        needed; timestamps/dates compare as epoch micros / ordinal days,
-        see _bound_to_json). SQL range semantics: NULL never matches.
-        CAUTION — value-range pruning is NOT LWW-resolution-safe on its
-        own: a pruned file may hold the tombstone or the NEWER version of
-        a key whose older in-range row survives in a kept file, so
-        resolving only the kept files could resurrect dead/stale rows.
-        Use ``operators.merge.scan_range`` (two-phase: pruned candidate
-        scan → full resolution of only the affected keys) for user-facing
-        range queries; raw ``col_ranges`` reads are for callers that
-        handle masking themselves. ``key_range``/``lsn_range`` do not
-        have this hazard (tombstones carry both columns).
+        between two far-apart keys). Resolution-safe like a ``conv_id``
+        range.
 
         Bucket pruning is sidecar-driven too: files are skipped when their
         recorded ``_bucket`` range cannot contain a wanted bucket —
@@ -963,14 +969,7 @@ class SnapshotTable:
         deltas — and ``scan_dirs`` filters ``_bucket`` per dir where a dir
         also holds other rows, which parquet row-group stats serve cheaply
         because writes sort within partitions by ``_bucket``. The returned
-        rows are therefore EXACTLY the wanted buckets' live rows.
-
-        ``as_of_ts`` (epoch seconds) is timestamp time travel — resolved to
-        the latest retained version committed at or before it."""
-        if as_of_ts is not None:
-            if version is not None:
-                raise ValueError("pass either version or as_of_ts, not both")
-            version = self.version_as_of(as_of_ts)
+        rows are therefore EXACTLY the wanted buckets' live rows."""
         snap = self.snapshot(version)
         live: dict[str, list[str]] = snap["live"]
         wanted = {str(b) for b in buckets} if buckets is not None else set(live)
@@ -980,16 +979,13 @@ class SnapshotTable:
             if b in wanted:
                 for commit_dir in commit_dirs:
                     dirs.setdefault(commit_dir, set()).add(b)
-        return self.scan_dirs(spark, dirs, snap, key_range, lsn_range,
-                              col_ranges, key_set, col_eq)
+        return self.scan_dirs(spark, dirs, snap, col_ranges, key_set, col_eq)
 
     def scan_dirs(
         self,
         spark: SparkSession,
         dirs: dict,
         snap: dict,
-        key_range: tuple | None = None,
-        lsn_range: tuple | None = None,
         col_ranges: dict | None = None,
         key_set: list | None = None,
         col_eq: dict | None = None,
@@ -1017,7 +1013,6 @@ class SnapshotTable:
         eff_ranges = dict(col_ranges or {})
         for c, v in (col_eq or {}).items():
             eff_ranges.setdefault(c, (v, v))
-        eff_ranges = eff_ranges or None
         sets = {d: None if bs is None else frozenset(int(b) for b in bs)
                 for d, bs in dirs.items()}
         union = frozenset().union(*(bs for bs in sets.values() if bs is not None))
@@ -1030,8 +1025,7 @@ class SnapshotTable:
 
         for d in sorted(sets):
             bs = sets[d]
-            paths = self._pruned_paths(d, bs, key_range, lsn_range, eff_ranges,
-                                       key_set, col_eq)
+            paths = self._pruned_paths(d, bs, eff_ranges, key_set, col_eq)
             if not paths:
                 continue  # every file in this commit dir pruned
             held = {int(b) for b in written[d]} if d in written else None
@@ -1075,28 +1069,23 @@ class SnapshotTable:
         self,
         commit_dir: str,
         wanted_buckets: set | None,
-        key_range: tuple | None,
-        lsn_range: tuple | None,
         col_ranges: dict | None = None,
         key_set: list | None = None,
         col_eq: dict | None = None,
     ) -> list[str]:
-        """File list for a commit dir after sidecar pruning: bucket range ∩
-        wanted buckets (None: no bucket pruning), then key/lsn min-max,
-        key-set bisect, any ``col_ranges`` bounds and ``col_eq`` blooms."""
+        """File list for a commit dir after sidecar pruning: bucket bounds
+        ∩ wanted buckets (None: no bucket pruning), then each
+        ``col_ranges`` range against its column's bounds (``conv_id`` and
+        ``_lsn`` included), the key-set bisect and ``col_eq`` blooms."""
         stats = self._file_stats(commit_dir)
         wanted_ints = None if wanted_buckets is None else {int(b) for b in wanted_buckets}
         sorted_keys = sorted(key_set) if key_set else None
-        norm_ranges = None
-        if col_ranges:
-            norm_ranges = {
-                c: (_query_bound_to_json(lo), _query_bound_to_json(hi))
-                for c, (lo, hi) in col_ranges.items()
-            }
+        ranges = {c: (_query_bound_to_json(lo), _query_bound_to_json(hi))
+                  for c, (lo, hi) in (col_ranges or {}).items()}
 
-        def overlaps(mm: list | None, rng: tuple | None) -> bool:
-            if rng is None or mm is None:
-                return True  # no predicate, or no recorded bounds → keep
+        def overlaps(mm: list | None, rng: tuple) -> bool:
+            if mm is None:
+                return True  # no recorded bounds → keep
             lo, hi = rng
             try:
                 return (lo is None or mm[1] >= lo) and (hi is None or mm[0] <= hi)
@@ -1109,24 +1098,20 @@ class SnapshotTable:
 
         keep = []
         for rel, st in sorted(stats.items()):
-            bmm = st.get("_bucket")
+            bmm = _sidecar_bound(st, "_bucket")
             if (bmm is not None and wanted_ints is not None
                     and not any(bmm[0] <= b <= bmm[1] for b in wanted_ints)):
                 continue
-            if not (overlaps(st.get("conv_id"), key_range) and overlaps(st.get("_lsn"), lsn_range)):
+            if not all(overlaps(_sidecar_bound(st, c), rng) for c, rng in ranges.items()):
                 continue
             if sorted_keys is not None:
-                kmm = st.get("conv_id")
+                kmm = _sidecar_bound(st, "conv_id")
                 if kmm is not None:
                     import bisect
 
                     i = bisect.bisect_left(sorted_keys, kmm[0])
                     if i >= len(sorted_keys) or sorted_keys[i] > kmm[1]:
                         continue  # no key of the set falls in this file's span
-            if norm_ranges is not None:
-                cols = st.get("cols", {})
-                if not all(overlaps(cols.get(c), rng) for c, rng in norm_ranges.items()):
-                    continue
             if col_eq:
                 from hierarchical_to_relational_spark.functions.xxh64 import xxh64
 
@@ -1142,16 +1127,17 @@ class SnapshotTable:
     def _write_commit_data(
         self,
         df: DataFrame,
-        schema: T.StructType,
-        repartition: bool,
         cluster_by: str | None = None,
     ) -> tuple[str, set[str]]:
-        """Write one FLAT commit dir (``data/c-<uuid>/part-*.parquet``) with
-        ``_bucket`` stored as a data column; per-file bucket membership and
-        stats go to the sidecar instead of physical per-bucket subdirs (why:
-        the module docstring). Bucket pruning reads the sidecar's file-level
-        bucket ranges and the row-group ``_bucket`` min-max that the
-        in-partition sort below produces — FILE granularity."""
+        """Write one FLAT commit dir (``data/c-<uuid>/part-*.parquet``) in
+        the current snapshot's schema, with ``_bucket`` stored as a data
+        column; per-file bucket membership and stats go to the sidecar
+        instead of physical per-bucket subdirs (why: the module docstring).
+        Bucket pruning reads the sidecar's file-level bucket ranges and the
+        row-group ``_bucket`` min-max that the in-partition sort below
+        produces — FILE granularity."""
+        snap = self.snapshot()
+        schema = T.StructType.fromJson(json.loads(snap["schema"]))
         commit_rel = os.path.join(DATA_DIR, f"c-{uuid.uuid4().hex}")
         commit_abs = os.path.join(self.root, commit_rel)
         ordered = ["_bucket"] + [n for n in schema.fieldNames()]
@@ -1192,7 +1178,7 @@ class SnapshotTable:
                 # zorder_expr for multi-column z-order).
                 cluster_col = cluster_by(out) if callable(cluster_by) else F.col(cluster_by)
                 out = out.repartitionByRange(F.col("_bucket"), cluster_col)
-            elif repartition:
+            else:
                 # one shuffle so the commit gets few files (not
                 # tasks×buckets). Salted: a zipf-hot conversation can own
                 # >15% of a batch, and repartition on _bucket alone would
@@ -1213,8 +1199,7 @@ class SnapshotTable:
                 out = out.repartition(F.col("_bucket"), salt).sortWithinPartitions(*sort_cols)
             # secondary-index blooms, resolved BEFORE the write so the
             # build rides the write job itself (ONE pass over the batch)
-            index_cols = [c for c in self.snapshot()["index_cols"]
-                          if c in schema.fieldNames()]
+            index_cols = [c for c in snap["index_cols"] if c in schema.fieldNames()]
             if index_cols:
                 out, bloom_acc = self._attach_bloom_fold(out, index_cols)
             writer = out.write.mode("overwrite")
@@ -1321,16 +1306,22 @@ class SnapshotTable:
 
         metrics — row count, max applied LSN (global AND per bucket — the
         north rule's per-partition applied-LSN watermark, EXACT: see
-        below), tombstone count (null-count of the key column, which is
-        null exactly on tombstone rows).
+        below; the global one is the max of the per-bucket ones),
+        tombstone count (null-count of ``turn_idx``, which is null
+        exactly on tombstone rows).
 
-        file_stats — {relative file path: {key_col: [min,max] | None,
-        lsn_col: [min,max] | None, bucket_col: [bmin,bmax]}} for read-side
-        file skipping. Bounds need only be VALID, not exact: the parquet
-        spec requires min_value/max_value to remain true lower/upper
-        bounds even when truncated, and superset pruning can never wrongly
-        skip a file on a bound interval that contains the true value
-        interval (see _prune_bounds). Absent stats → null → never pruned.
+        file_stats — {relative file path: bounds} for read-side file
+        skipping, one fold for every scalar leaf column: a column's
+        ``[min, max]`` is the union of its row groups' bounds (``_bound``),
+        or None once ANY row group lacks one — each column on its own, so
+        one column's missing stats never drop another's bound. Bounds need
+        only be VALID, not exact: the parquet spec requires
+        min_value/max_value to remain true lower/upper bounds even when
+        truncated, and superset pruning can never wrongly skip a file on a
+        bound interval that contains the true value interval. A None bound
+        is never pruned on. The ``_TOP_BOUND_COLS`` sit at the top level,
+        always present; every other column's non-None bound sits under
+        ``cols``.
 
         written — {bucket: bytes} manifest accounting, from ONE pyarrow
         read of the (bucket, lsn) integer columns of the just-written
@@ -1346,107 +1337,59 @@ class SnapshotTable:
         import numpy as np
         import pyarrow.parquet as papq
 
-        lsn_col, key_col, bucket_col = "_lsn", "conv_id", "_bucket"
+        lsn_col, bucket_col = "_lsn", "_bucket"
         tombstone_null_col = "turn_idx"
-        rows, max_lsn, nulls = 0, None, 0
+        rows, nulls = 0, 0
         bucket_max_lsn: dict[str, int] = {}
         bucket_rows: dict[int, int] = {}
         written: dict[str, float] = {}
         file_stats: dict[str, dict] = {}
 
-        def _prune_bounds(st) -> list | None:
-            # Safe-by-spec pruning bounds, exactness NOT required: the
-            # parquet format mandates that min_value/max_value, even when
-            # truncated, remain VALID lower/upper bounds of the chunk (the
-            # is_*_value_exact flags — not exposed by this pyarrow — only
-            # say whether the bound equals the true extremum). Superset
-            # file pruning needs valid bounds, nothing more: a stored
-            # [min,max] ⊇ the true value interval can never exclude a file
-            # holding an in-range row. Writers that cannot produce a valid
-            # bound (e.g. parquet-mr drops >4 KB binary stats) omit the
-            # stats entirely → has_min_max False → the file is never
-            # pruned. (pyarrow additionally hides legacy min/max written
-            # under the broken pre-PARQUET-686 binary sort order.)
+        def _bound(st) -> list | None:
+            # A row group's valid [min, max] as JSON-orderable values, or
+            # None. Writers that cannot produce a valid bound (e.g.
+            # parquet-mr drops >4 KB binary stats) omit the stats →
+            # has_min_max False (pyarrow also hides legacy min/max written
+            # under the broken pre-PARQUET-686 binary sort order).
             if st is None or not st.has_min_max:
                 return None
             try:
-                return [st.min, st.max]
+                mm = [_bound_to_json(st.min), _bound_to_json(st.max)]
             except NotImplementedError:
                 # pyarrow cannot decode stats of INT32/INT64-backed
-                # decimals (precision <= 18): no bound, never pruned
+                # decimals (precision <= 18)
                 return None
+            return None if mm[0] is None or mm[1] is None else mm
 
         # per-file work is independent (footer parse + two-column pyarrow
         # read, both GIL-releasing C++); a small thread pool cuts the
         # per-commit driver constant ~3x at 32 files/commit (r6). Results
         # are merged deterministically below (sums/max/dict-by-file).
         def _one_file(f: str) -> dict:
-            rows = nulls = 0
-            max_lsn = None
+            nulls = 0
             bucket_max_lsn: dict[str, int] = {}
             bucket_rows: dict[int, int] = {}
             written: dict[str, float] = {}
             pf = papq.ParquetFile(f)
             md = pf.metadata
-            rows += md.num_rows
             names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            key_mm: list | None = None
-            lsn_mm: list | None = None
-            bkt_mm: list | None = None
-            complete = True  # every row group must contribute valid bounds
-            # bounds for EVERY other scalar leaf column (non-key lookup
-            # pruning: a ts-range or role-equality read prunes files
-            # without any dedicated index); None once any row group lacks
-            # a JSON-orderable valid bound for that column
-            col_mm: dict[str, list | None] = {
-                c: None for c in names
-                if c not in (key_col, lsn_col, bucket_col) and "." not in c
-            }
-            col_ok: dict[str, bool] = {c: True for c in col_mm}
+            leaves = {c: i for c, i in names.items() if "." not in c}
+            bounds: dict[str, list | None] = {}
             for rg in range(md.num_row_groups):
                 g = md.row_group(rg)
-                if lsn_col in names:
-                    st = g.column(names[lsn_col]).statistics
-                    if st is not None and st.has_min_max:
-                        max_lsn = st.max if max_lsn is None else max(max_lsn, st.max)
-                    mm = _prune_bounds(st)
-                    if mm is None:
-                        complete = False
-                    else:
-                        lsn_mm = mm if lsn_mm is None else [min(lsn_mm[0], mm[0]), max(lsn_mm[1], mm[1])]
                 if tombstone_null_col in names:
                     st = g.column(names[tombstone_null_col]).statistics
                     if st is not None and st.null_count is not None:
                         nulls += st.null_count
-                if key_col in names:
-                    mm = _prune_bounds(g.column(names[key_col]).statistics)
-                    if mm is None:
-                        complete = False
-                    else:
-                        key_mm = mm if key_mm is None else [min(key_mm[0], mm[0]), max(key_mm[1], mm[1])]
-                if bucket_col in names:
-                    mm = _prune_bounds(g.column(names[bucket_col]).statistics)
-                    if mm is not None:
-                        bkt_mm = mm if bkt_mm is None else [min(bkt_mm[0], mm[0]), max(bkt_mm[1], mm[1])]
-                for c in col_mm:
-                    if not col_ok[c]:
-                        continue
-                    mm = _prune_bounds(g.column(names[c]).statistics)
-                    if mm is not None:
-                        mm = [_bound_to_json(mm[0]), _bound_to_json(mm[1])]
-                    if mm is None or mm[0] is None or mm[1] is None:
-                        col_ok[c] = False
-                        col_mm[c] = None
-                    else:
-                        prev = col_mm[c]
-                        col_mm[c] = mm if prev is None else [min(prev[0], mm[0]), max(prev[1], mm[1])]
-            rel = os.path.relpath(f, commit_abs)
-            file_stat = {
-                key_col: key_mm if complete else None,
-                lsn_col: lsn_mm if complete else None,
-                bucket_col: bkt_mm,
-                "cols": {c: mm for c, mm in col_mm.items() if mm is not None},
-            }
+                for c, i in leaves.items():
+                    if c in bounds and bounds[c] is None:
+                        continue  # an earlier row group had no valid bound
+                    mm, prev = _bound(g.column(i).statistics), bounds.get(c)
+                    bounds[c] = (mm if mm is None or prev is None
+                                 else [min(prev[0], mm[0]), max(prev[1], mm[1])])
+            file_stat = {c: bounds.get(c) for c in _TOP_BOUND_COLS}
+            file_stat["cols"] = {c: mm for c, mm in bounds.items()
+                                 if c not in _TOP_BOUND_COLS and mm is not None}
             # exact per-bucket rows + max-LSN from the data columns
             if bucket_col in names and md.num_rows > 0:
                 cols = [bucket_col] + ([lsn_col] if lsn_col in names else [])
@@ -1470,8 +1413,8 @@ class SnapshotTable:
                         prev = bucket_max_lsn.get(key)
                         bucket_max_lsn[key] = int(mx) if prev is None else max(prev, int(mx))
             return {
-                "rows": rows, "max_lsn": max_lsn, "nulls": nulls,
-                "rel": rel, "file_stat": file_stat,
+                "rows": md.num_rows, "nulls": nulls,
+                "rel": os.path.relpath(f, commit_abs), "file_stat": file_stat,
                 "bucket_rows": bucket_rows, "written": written,
                 "bucket_max_lsn": bucket_max_lsn,
             }
@@ -1487,8 +1430,6 @@ class SnapshotTable:
         for r in results:
             rows += r["rows"]
             nulls += r["nulls"]
-            if r["max_lsn"] is not None:
-                max_lsn = r["max_lsn"] if max_lsn is None else max(max_lsn, r["max_lsn"])
             file_stats[r["rel"]] = r["file_stat"]
             for bk, cnt in r["bucket_rows"].items():
                 bucket_rows[bk] = bucket_rows.get(bk, 0) + cnt
@@ -1499,7 +1440,7 @@ class SnapshotTable:
                 bucket_max_lsn[bk] = mx if prev is None else max(prev, mx)
         metrics = {
             "rows_written": rows,
-            "max_lsn": max_lsn,
+            "max_lsn": max(bucket_max_lsn.values(), default=None),
             "deletes": nulls,
             "upserts": rows - nulls,
             "bucket_max_lsn": bucket_max_lsn,
@@ -1610,9 +1551,7 @@ class SnapshotTable:
         if base_version is None:
             base_version = self.current_version()
         base_live: dict[str, list[str]] = self.snapshot(base_version)["live"]
-        commit_rel, written = self._write_commit_data(
-            df, self.schema(), repartition=True, cluster_by=cluster_by
-        )
+        commit_rel, written = self._write_commit_data(df, cluster_by=cluster_by)
 
         def update(live: dict) -> dict:
             for b in buckets:
@@ -1644,9 +1583,7 @@ class SnapshotTable:
         Idempotent on batch_id like every commit."""
         if batch_id in self.committed_batch_ids():
             return False
-        # repartition even for appends: batches are small and this keeps
-        # files-per-bucket at one instead of tasks×buckets
-        commit_rel, written = self._write_commit_data(df, self.schema(), repartition=True)
+        commit_rel, written = self._write_commit_data(df)
 
         def update(live: dict) -> dict:
             for b in written:
@@ -1678,9 +1615,7 @@ class SnapshotTable:
         if base_version is None:
             base_version = self.current_version()
         base_live = self.snapshot(base_version)["live"]
-        commit_rel, written = self._write_commit_data(
-            df, self.schema(), repartition=True, cluster_by=cluster_by,
-        )
+        commit_rel, written = self._write_commit_data(df, cluster_by=cluster_by)
 
         def update(live: dict) -> dict:
             if live != base_live:
@@ -1713,7 +1648,7 @@ class SnapshotTable:
         incremental readers."""
         if batch_id in self.committed_batch_ids():
             return False
-        commit_rel, written = self._write_commit_data(df, self.schema(), repartition=True)
+        commit_rel, written = self._write_commit_data(df)
 
         def update(live: dict) -> dict:
             for b, olds in replace.items():

@@ -433,7 +433,7 @@ def test_orphan_grace_protects_inflight_commit(spark, tmp_path):
     t.commit_append(_bucketed(spark, t, [("a", 1)]), "b0")
     # simulate in-flight: write data without committing the pointer
     df = _bucketed(spark, t, [("b", 2)])
-    t._write_commit_data(df, SCHEMA, repartition=True)
+    t._write_commit_data(df)
     assert len(glob.glob(os.path.join(t.root, "data", "c-*"))) == 2
     t.expire_snapshots(retain_last=1, orphan_grace_seconds=3600.0)
     assert len(glob.glob(os.path.join(t.root, "data", "c-*"))) == 2  # survived
@@ -672,7 +672,7 @@ def test_file_level_minmax_pruning(spark, tmp_path):
 
     t = pipe.table
     full_files = set(t.read(spark).inputFiles())
-    pruned = t.read(spark, key_range=("cAAA2", "cAAA2"))
+    pruned = t.read(spark, col_ranges={"conv_id": ("cAAA2", "cAAA2")})
     pruned_files = set(pruned.inputFiles())
     assert pruned_files < full_files, "pruning must drop files"
     rows_pruned = {
@@ -698,7 +698,7 @@ def test_file_level_minmax_pruning(spark, tmp_path):
     assert via_lookup == via_full and via_lookup
 
 
-def test_lsn_range_pruning_skips_old_deltas(spark, tmp_path):
+def test_lsn_bound_pruning_skips_old_deltas(spark, tmp_path):
     """Incremental 'changes since LSN' reads skip delta files whose max
     _lsn is below the watermark."""
     from hierarchical_to_relational_spark.streaming.driver import CdcPipeline
@@ -710,7 +710,7 @@ def test_lsn_range_pruning_skips_old_deltas(spark, tmp_path):
     pipe.apply_batch(_envs(spark, [(i + 100, "insert", f"d{i}", [(0, "y")]) for i in range(3)]), "b1")
     t = pipe.table
     full = set(t.read(spark).inputFiles())
-    recent = t.read(spark, lsn_range=(100, None))
+    recent = t.read(spark, col_ranges={"_lsn": (100, None)})
     assert set(recent.inputFiles()) < full
     assert {r["conv_id"] for r in recent.where(F.col("_lsn") >= 100).collect()} == {"d0", "d1", "d2"}
 
@@ -915,14 +915,14 @@ def test_zorder_compaction_prunes_both_dimensions(spark, tmp_path):
 
     full = set(t.read(spark).inputFiles())
     assert len(full) >= 4, "need multiple files for pruning to be observable"
-    by_key = set(t.read(spark, key_range=("c0100", "c0100")).inputFiles())
-    by_lsn = set(t.read(spark, lsn_range=(1350, None)).inputFiles())
+    by_key = set(t.read(spark, col_ranges={"conv_id": ("c0100", "c0100")}).inputFiles())
+    by_lsn = set(t.read(spark, col_ranges={"_lsn": (1350, None)}).inputFiles())
     assert by_key < full, (len(by_key), len(full))
     assert by_lsn < full, (len(by_lsn), len(full))
     # pruned reads stay supersets of the exact answers
-    assert {r["conv_id"] for r in t.read(spark, key_range=("c0100", "c0100"))
+    assert {r["conv_id"] for r in t.read(spark, col_ranges={"conv_id": ("c0100", "c0100")})
             .where(F.col("conv_id") == "c0100").collect()} == {"c0100"}
-    got_lsn = {r["conv_id"] for r in t.read(spark, lsn_range=(1350, None))
+    got_lsn = {r["conv_id"] for r in t.read(spark, col_ranges={"_lsn": (1350, None)})
                .where(F.col("_lsn") >= 1350).collect()}
     want_lsn = {f"c{i:04d}" for i in range(400) if (i * 37) % 400 + 1000 >= 1350}
     assert got_lsn == want_lsn
@@ -1034,7 +1034,7 @@ def test_partial_compaction_stale_dir_rows_stay_out_of_reads(spark, tmp_path):
 
 
 def test_timestamp_time_travel_and_age_expiry(spark, tmp_path, monkeypatch):
-    """version_as_of / read(as_of_ts): timestamp time travel resolves to
+    """version_as_of: timestamp time travel resolves to
     the latest snapshot committed at or before the given time;
     expire_snapshots(older_than_s) keeps young snapshots alive even
     beyond retain_last (wall-clock time-travel horizon)."""
@@ -1055,11 +1055,9 @@ def test_timestamp_time_travel_and_age_expiry(spark, tmp_path, monkeypatch):
     v3 = t.version_as_of(stamps[3])
     assert v3 == 3
     assert t.version_as_of(stamps[3] + 50) == 3
-    assert t.read(spark, as_of_ts=stamps[2]).select("v").collect()[0][0] == 1
+    assert t.read(spark, version=t.version_as_of(stamps[2])).select("v").collect()[0][0] == 1
     with pytest.raises(ValueError, match="no retained snapshot"):
         t.version_as_of(999_999.0)
-    with pytest.raises(ValueError, match="not both"):
-        t.read(spark, version=1, as_of_ts=stamps[2])
     assert all(h["committed_at"] for h in t.history())
 
     # age-restricted expiration: retain_last=1 would expire v0..v4, but
@@ -1069,7 +1067,7 @@ def test_timestamp_time_travel_and_age_expiry(spark, tmp_path, monkeypatch):
     assert res["expired_snapshots"] == 3
     assert t._versions() == [3, 4, 5]
     # the surviving window still time-travels
-    assert t.read(spark, as_of_ts=stamps[4]).select("v").collect()[0][0] == 3
+    assert t.read(spark, version=t.version_as_of(stamps[4])).select("v").collect()[0][0] == 3
 
 
 def _ts_envs(spark, rows):
@@ -1241,6 +1239,92 @@ def test_commit_accounting_exact_per_bucket(spark, tmp_path):
         assert m["bucket_max_lsn"] == want_lsn, kind
 
 
+def test_footer_stats_folds_each_column_bound_on_its_own(tmp_path):
+    """A column whose row groups carry no statistics loses only its OWN
+    sidecar bound: conv_id keeps its bound when _lsn has none, and the
+    commit's max_lsn is the max of the exact per-bucket maxima, not a
+    row-group statistic."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    commit = tmp_path / "c-x"
+    commit.mkdir()
+    data = pa.table({
+        "_bucket": pa.array([0, 0, 1, 1], pa.int32()),
+        "conv_id": ["a", "b", "c", "d"],
+        "turn_idx": pa.array([0, None, 1, 2], pa.int32()),
+        "_lsn": pa.array([5, 9, 7, 3], pa.int64()),
+    })
+    papq.write_table(data, str(commit / "part-00000.parquet"), row_group_size=2,
+                     write_statistics=["_bucket", "conv_id", "turn_idx"])
+    metrics, file_stats, _ = SnapshotTable._footer_stats(str(commit))
+    st = file_stats["part-00000.parquet"]
+    assert st["conv_id"] == ["a", "d"]
+    assert st["_lsn"] is None
+    assert st["_bucket"] == [0, 1]
+    assert st["cols"] == {"turn_idx": [0, 2]}
+    assert metrics["bucket_max_lsn"] == {"0": 9, "1": 7}
+    assert metrics["max_lsn"] == 9
+    assert metrics["rows_written"] == 4 and metrics["deletes"] == 1
+
+
+def _assert_sidecar_bounds_match_data(t, commit_dirs) -> int:
+    """Every bound in the sidecars of ``commit_dirs`` equals the min/max
+    of its file's data read with pyarrow (no bound for an all-null or
+    unorderable column). Returns the number of (file, column) pairs."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as papq
+
+    from hierarchical_to_relational_spark.table.snapshot_table import _bound_to_json
+
+    checked = 0
+    for d in commit_dirs:
+        for rel, st in t._file_stats(d).items():
+            assert set(st) == {"conv_id", "_lsn", "_bucket", "cols"}, st
+            data = papq.read_table(os.path.join(t.root, d, rel))
+            assert data.num_rows > 0
+            for name in data.column_names:
+                mm = pc.min_max(data[name]).as_py()
+                want = [_bound_to_json(mm["min"]), _bound_to_json(mm["max"])]
+                want = None if None in want else want
+                got = st[name] if name in ("conv_id", "_lsn", "_bucket") else st["cols"].get(name)
+                assert got == want, (d, rel, name)
+                checked += 1
+    return checked
+
+
+def test_sidecar_bounds_equal_file_data(spark, tmp_path):
+    """Pin: on an append commit and on a z-order compaction, each sidecar
+    bound is exactly the min/max of the file's data, for every column."""
+    from hierarchical_to_relational_spark.operators.merge import compact
+    from hierarchical_to_relational_spark.streaming.driver import CdcPipeline
+
+    pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
+                       str(tmp_path / "ck"), n_buckets=4, text_mode="none",
+                       compact_every=999)
+    pipe.apply_batch(_ts_envs(spark, [
+        (i + 1, "insert", f"c{i:02d}", [(0, "user", f"q{i}", i % 5), (1, "assistant", f"a{i}", i % 7)])
+        for i in range(24)]), "b0")
+    pipe.apply_batch(_ts_envs(spark, [
+        (30, "delete", "c03", None),
+        (31, "update", "c05", [(0, "user", "q5'", 9)]),
+    ]), "b1")
+    t = pipe.table
+    appended = {d for ds in t.snapshot()["live"].values() for d in ds}
+    assert len(appended) == 2
+    assert _assert_sidecar_bounds_match_data(t, appended) > 0
+
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        assert compact(spark, t, batch_id="z0", zorder=["conv_id", "ts"])
+    finally:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    compacted = {d for ds in t.snapshot()["live"].values() for d in ds}
+    assert compacted and not compacted & appended
+    assert len(t._file_stats(next(iter(compacted)))) > 1
+    assert _assert_sidecar_bounds_match_data(t, compacted) > 0
+
+
 def test_scan_range_key_set_phase2_prunes_far_apart_candidates(spark, tmp_path, monkeypatch):
     """Round-5 scan_range phase 2: when the candidate set is small, the
     DISTINCT candidate keys drive key_set bisect file pruning — two
@@ -1249,6 +1333,7 @@ def test_scan_range_key_set_phase2_prunes_far_apart_candidates(spark, tmp_path, 
     them."""
     import datetime
 
+    from hierarchical_to_relational_spark.operators import merge
     from hierarchical_to_relational_spark.operators.merge import compact, scan_range
     from hierarchical_to_relational_spark.streaming.driver import CdcPipeline
 
@@ -1285,20 +1370,22 @@ def test_scan_range_key_set_phase2_prunes_far_apart_candidates(spark, tmp_path, 
     assert got == {("c00", "t0"), ("c39", "t39")}
     # phase 2 ran in the key-set regime with exactly the candidate keys
     assert reads[-1].get("key_set") == ["c00", "c39"]
-    assert reads[-1].get("key_range") is None
+    assert reads[-1].get("col_ranges") is None
     monkeypatch.undo()
     # and it scanned strictly fewer files than the envelope would
     key_files = set(out.inputFiles())
     env_files = set(t.read(spark, buckets=reads[-1]["buckets"],
-                           key_range=("c00", "c39")).inputFiles())
+                           col_ranges={"conv_id": ("c00", "c39")}).inputFiles())
     assert key_files and key_files < env_files, (
         f"key_set kept {len(key_files)} files, envelope {len(env_files)}")
     # oversized candidate sets fall back to the envelope regime
     reads.clear()
     monkeypatch.setattr(SnapshotTable, "read", spy)
-    all_rows = scan_range(spark, t, "role", "user", "user", key_set_threshold=5)
+    monkeypatch.setattr(merge, "SCAN_RANGE_KEY_SET_MAX", 5)
+    all_rows = scan_range(spark, t, "role", "user", "user")
     assert all_rows.count() == 40
-    assert reads[-1].get("key_set") is None and reads[-1].get("key_range") is not None
+    assert reads[-1].get("key_set") is None
+    assert reads[-1]["col_ranges"] == {"conv_id": ("c00", "c39")}
 
 
 def test_bloom_index_equality_probe_prunes_files(spark, tmp_path):

@@ -16,7 +16,12 @@ import time
 
 import duckdb
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Python workers start from the environment, not from this sys.path: give
+# them the repo too, before the session starts, so the gate runs from any cwd
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
