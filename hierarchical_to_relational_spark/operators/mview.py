@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,7 +54,10 @@ from hierarchical_to_relational_spark.operators.merge import (
     read_transcripts,
     table_schema_for,
 )
-from hierarchical_to_relational_spark.table.snapshot_table import SnapshotTable
+from hierarchical_to_relational_spark.table.snapshot_table import (
+    SnapshotTable,
+    write_json_atomic,
+)
 
 CURSOR_NAME = "_mview_cursor.json"
 
@@ -148,12 +150,7 @@ class ConvAggregateView:
             return None
 
     def _write_cursor(self, v: int) -> None:
-        tmp = f"{self._cursor_path()}.tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"source_version": v}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._cursor_path())
+        write_json_atomic(self._cursor_path(), {"source_version": v})
 
     # -- refresh ---------------------------------------------------------
     def _agg_df(self, rows: DataFrame) -> DataFrame:

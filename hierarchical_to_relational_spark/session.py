@@ -55,18 +55,16 @@ def get_spark(
         # 207.7k/204.3k then 203.2k/156.1k ev/s, the one gap landing in
         # a loadavg-17 window AGAINST snappy — i.e. noise). Smaller
         # files mean less scan I/O everywhere downstream (guide §6:
-        # "smaller than snappy at similar read speed"); overridable for
-        # CPU-starved deployments.
-        .config("spark.sql.parquet.compression.codec",
-                os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"))
+        # "smaller than snappy at similar read speed"); a CPU-starved
+        # deployment overrides it through ``extra_conf``.
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # shuffle/spill codec (r6): zstd cuts the CDC write shuffle from
         # 72.5 to 44.7 bytes/row (-38%, measured via event-log Shuffle
         # Bytes Written on identical batches) at Spark's fast zstd level 1.
         # Locally the wall-clock is parity-to-better (host steal makes the
         # wall comparison noisy); at cluster scale shuffle bytes cross the
         # network once (guide §2.1), so the byte cut is the durable win.
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_SHUFFLE_CODEC", "zstd"))
+        .config("spark.io.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
     )

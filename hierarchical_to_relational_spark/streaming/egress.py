@@ -77,7 +77,10 @@ import uuid
 from pyspark.sql import SparkSession
 
 from hierarchical_to_relational_spark.operators.merge import changes_since
-from hierarchical_to_relational_spark.table.snapshot_table import SnapshotTable
+from hierarchical_to_relational_spark.table.snapshot_table import (
+    SnapshotTable,
+    write_json_atomic,
+)
 
 log = logging.getLogger(__name__)
 
@@ -165,22 +168,9 @@ class ChangeFollower:
         return os.path.join(self.out_dir, "_windows.jsonl")
 
     def _journal_windows(self) -> dict[int, int]:
-        """{from: to} of every journaled window. Tolerates a torn final
-        line (crash mid-append): malformed lines are skipped — the export
-        dir listing is unioned in by callers, so a window whose append
-        tore is still found while its dir lives."""
-        wins: dict[int, int] = {}
-        try:
-            with open(self._journal_path()) as f:
-                for line in f:
-                    try:
-                        w = json.loads(line)
-                        wins[int(w["from"])] = int(w["to"])
-                    except (ValueError, KeyError):
-                        continue
-        except FileNotFoundError:
-            pass
-        return wins
+        """{from: to} of every journaled window."""
+        return {int(w["from"]): int(w["to"]) for w in self._journal_lines()
+                if "from" in w and "to" in w}
 
     def _journal_append(self, frm: int, to: int,
                         stats: dict | None = None) -> None:
@@ -195,6 +185,10 @@ class ChangeFollower:
             os.fsync(f.fileno())
 
     def _journal_lines(self) -> list[dict]:
+        """Every parsed journal line. Tolerates a torn final line (crash
+        mid-append): malformed lines are skipped — the export dir listing
+        is unioned in by callers, so a window whose append tore is still
+        found while its dir lives."""
         out = []
         try:
             with open(self._journal_path()) as f:
@@ -349,13 +343,8 @@ class ChangeFollower:
         return None if st is None else st["acked"]
 
     def _write_cursor(self, version: int, acked: int | None = None) -> None:
-        tmp = f"{self.cursor_path}.tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"version": version,
-                       "acked": version if acked is None else acked}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self.cursor_path)
+        write_json_atomic(self.cursor_path, {
+            "version": version, "acked": version if acked is None else acked})
 
     def reset_cursor(self, version: int) -> None:
         """After a full resync: pin the cursor at the version the resync

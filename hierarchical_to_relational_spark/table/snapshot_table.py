@@ -103,6 +103,25 @@ class TableFormatError(RuntimeError):
     ValueError, which feed followers take as a resync signal."""
 
 
+def write_json_atomic(path: str, obj, exclusive: bool = False) -> None:
+    """Write ``obj`` as JSON to ``path`` via an fsynced temp file: a crash
+    leaves the old file or the new one, never a torn one. ``exclusive``
+    creates ``path`` instead of replacing it, raising FileExistsError
+    when it exists (a concurrent writer took that version)."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    if exclusive:
+        try:
+            os.link(tmp, path)
+        finally:
+            os.unlink(tmp)
+    else:
+        os.replace(tmp, path)
+
+
 # Lossless type widenings accepted by schema evolution (the Iceberg v2
 # promotion set): smaller int → bigger int, float → double, decimal
 # precision up at the SAME scale. Everything else (narrowing, string↔int,
@@ -330,7 +349,8 @@ class CommittedIds:
     __slots__ = ("ids", "numeric_floor")
 
     # Floor credit applies ONLY to pure numeric epoch ids and the engine's
-    # own derived suffixes (``N::compact``, ``N::evolve``). A caller-chosen
+    # own derived suffixes (``N::compact``, ``N::binpack``, ``N::evolve``).
+    # A caller-chosen
     # id that merely LOOKS numeric-prefixed ("7::manual") gets no credit:
     # the floor proves epoch 7 committed, not that every string starting
     # with "7::" did — crediting it would silently no-op a batch that never
@@ -344,9 +364,9 @@ class CommittedIds:
     # one redundant append commit (state still converges via LWW; commit
     # history/stats gain a duplicate). Acceptable because no table written
     # by this engine ever used such ids (the pipeline derives only
-    # ::compact/::evolve); foreign tables migrating in should re-commit
-    # under pure ids or accept the one-time replay.
-    _NUM = re.compile(r"^(\d+)(?:::(?:compact|evolve))?$")
+    # ::compact/::binpack/::evolve); foreign tables migrating in should
+    # re-commit under pure ids or accept the one-time replay.
+    _NUM = re.compile(r"^(\d+)(?:::(?:compact|binpack|evolve))?$")
 
     def __init__(self, ids: set[str] | None = None, numeric_floor: int = -1):
         self.ids = ids if ids is not None else set()
@@ -362,16 +382,28 @@ class CommittedIds:
         if batch_id not in self:
             self.ids.add(batch_id)
 
+    def update(self, other: "CommittedIds") -> None:
+        self.ids |= other.ids
+        self.numeric_floor = max(self.numeric_floor, other.numeric_floor)
+        self.compact()
+
+    def to_json(self) -> dict:
+        return {"ids": sorted(self.ids), "numeric_floor": self.numeric_floor}
+
+    @staticmethod
+    def from_json(d: dict) -> "CommittedIds":
+        return CommittedIds(set(d["ids"]), d["numeric_floor"])
+
     def compact(self) -> None:
         """Advance the floor over a contiguous run of PURE numeric ids and
         drop every id the floor now covers. Only bare epoch ids ("7") move
         the floor — a derived or caller-chosen id like "7::manual" proves
         nothing about epoch 7 having committed, and letting it advance the
         floor would silently no-op epoch 7 when it later arrives (data
-        loss). Derived ids (``N::compact``, ``N::evolve``) are still
-        DROPPED once the floor covers N: they can only re-fire when batch N
-        itself replays, which the floor suppresses — and a spurious
-        re-compaction is merely redundant work, never incorrect."""
+        loss). Derived ids (``N::compact``, ``N::binpack``, ``N::evolve``)
+        are still DROPPED once the floor covers N: they can only re-fire
+        when batch N itself replays, which the floor suppresses — and a
+        spurious re-compaction is merely redundant work, never incorrect."""
         present = {int(i) for i in self.ids if i.isdigit()}
         while self.numeric_floor + 1 in present:
             self.numeric_floor += 1
@@ -403,7 +435,7 @@ class SnapshotTable:
         # incremental batch-id cache: (last version scanned, ids seen so far)
         self._ids_scanned_to: int = -1
         self._ids_cache = CommittedIds()
-        self._ledger_stamp: tuple | None = None
+        self._ledger_stamp: int | None = None  # version of the ledger folded in
         # per-commit-dir min-max sidecar memo (dirs are immutable)
         self._file_stats_cache: dict[str, dict] = {}
 
@@ -509,18 +541,10 @@ class SnapshotTable:
         """Atomic create: write tmp, then exclusive-create the final name.
         Failure of the exclusive create means a concurrent writer won —
         surfaced as a conflict for the caller to retry on a fresh version."""
-        path = self._snapshot_path(snap["version"])
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(snap, f)
-            f.flush()
-            os.fsync(f.fileno())
         try:
-            os.link(tmp, path)  # fails with EEXIST if version already committed
+            write_json_atomic(self._snapshot_path(snap["version"]), snap, exclusive=True)
         except FileExistsError as e:
             raise CommitConflictError(f"snapshot v{snap['version']} already exists") from e
-        finally:
-            os.unlink(tmp)
 
     # ---------- named refs (Iceberg-style tags) ----------
 
@@ -534,14 +558,6 @@ class SnapshotTable:
                 return {k: int(v) for k, v in json.load(f).items()}
         except FileNotFoundError:
             return {}
-
-    def _write_refs(self, refs: dict[str, int]) -> None:
-        tmp = f"{self._refs_path()}.tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(refs, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._refs_path())
 
     def tag(self, name: str, version: int | None = None) -> int:
         """Pin a NAME to a snapshot version (Iceberg tag): ``expire_
@@ -557,7 +573,7 @@ class SnapshotTable:
             raise FileNotFoundError(f"cannot tag {name!r}: no retained snapshot v{v}")
         refs = self.refs()
         refs[name] = v
-        self._write_refs(refs)
+        write_json_atomic(self._refs_path(), refs)
         return v
 
     def drop_tag(self, name: str) -> bool:
@@ -565,7 +581,7 @@ class SnapshotTable:
         if name not in refs:
             return False
         del refs[name]
-        self._write_refs(refs)
+        write_json_atomic(self._refs_path(), refs)
         return True
 
     def ref(self, name: str) -> int:
@@ -624,11 +640,13 @@ class SnapshotTable:
         log (so the branch's history starts retained even after main
         expires that version — its data dirs stay GC-referenced through
         the branch log), the fork's live map is pinned in ``_branch.json``
-        (the merge base), and the batch ids main had committed AS OF the
-        fork version are seeded into the branch ledger so exactly-once
-        holds across the fork: a batch in the branch's lineage replays as
-        a no-op, while a batch main committed only AFTER the fork point
-        still applies to the branch (it was never part of its state)."""
+        (the merge base), and the copy's ``inherited_ids`` holds main's
+        ids AS OF the fork version (``_committed_as_of``): a batch in the
+        branch's lineage replays as a no-op, one main committed only
+        AFTER the fork point still applies. A fork at a tag older than
+        main's last expiration inherits no expired ids (logged as a
+        warning); replaying one re-applies it, and LWW resolves that to
+        the same state."""
         if self.branch is not None:
             raise ValueError("branch-off-branch is not supported; fork from main")
         if not re.fullmatch(r"[A-Za-z0-9._-]{1,64}", name):
@@ -643,41 +661,13 @@ class SnapshotTable:
         except FileExistsError:
             raise ValueError(f"branch {name!r} already exists") from None
         br = SnapshotTable(self.root, branch=name)
-        with open(br._branch_meta_path(), "w") as f:
-            json.dump({"name": name, "forked_from": v,
-                       "fork_live": fork["live"],
-                       "fork_n_buckets": fork["n_buckets"],
-                       "created_at": time.time()}, f)
-        # seed exactly-once AS OF THE FORK POINT: only ids from snapshots
-        # <= the fork version (plus the expiration ledger, whose ids all
-        # belong to expired — hence older — snapshots). Seeding ALL of
-        # main's current ids would make a batch main committed AFTER the
-        # fork silently no-op on the branch even though the branch's
-        # lineage never contained it (a silent data skip in the
-        # fork-at-older-version hotfix flow). Caveat, documented: the
-        # ledger has no per-id version provenance, so forking at an old
-        # TAG that survived expiration of NEWER snapshots inherits those
-        # expired post-fork ids too — unavoidable without a versioned
-        # ledger, and impossible in the ordinary retain-last flow.
-        ids = CommittedIds()
-        led_vs = self._ledger_versions()
-        if led_vs:
-            try:
-                with open(self._ledger_file(led_vs[-1])) as f:
-                    led = json.load(f)
-                ids.numeric_floor = led["numeric_floor"]
-                ids.ids.update(led["ids"])
-            except FileNotFoundError:
-                pass  # pruned under us; ids below come from snapshots
-        for ver in self._versions():
-            if ver <= v:
-                try:
-                    ids.add(self._snapshot_log_entry(ver)["batch_id"])
-                except FileNotFoundError:
-                    continue  # racing expiration: id is in the ledger
-        ids.compact()
-        br._write_ledger(ids, expired_through=None)
-        br._write_snapshot({**fork, "branch": name})
+        write_json_atomic(br._branch_meta_path(),
+                          {"name": name, "forked_from": v,
+                           "fork_live": fork["live"],
+                           "fork_n_buckets": fork["n_buckets"],
+                           "created_at": time.time()})
+        br._write_snapshot({**fork, "branch": name,
+                            "inherited_ids": self._committed_as_of(v).to_json()})
         return br
 
     def branch_table(self, name: str) -> "SnapshotTable":
@@ -705,35 +695,14 @@ class SnapshotTable:
     def merge_branch(self, name: str, batch_id: str) -> bool:
         """Fold branch ``name`` into main (see the section comment for the
         three-way rule). One atomic idempotent commit on main; the branch
-        log is left intact (drop it separately once merged). Schemas merge
-        by field-wise union under the evolution rules — either side may
-        have added/widened columns. Bucket-spec divergence (a rebucket on
-        either side) is rejected."""
+        log is left intact (drop it separately once merged); the merge
+        snapshot's ``inherited_ids`` holds the branch's ids as of the
+        merged branch snapshot. Schemas merge by field-wise union under
+        the evolution rules — either side may have added/widened columns.
+        Bucket-spec divergence (a rebucket on either side) is rejected."""
         if self.branch is not None:
             raise ValueError("merge_branch must be called on the main table")
         if batch_id in self.committed_batch_ids():
-            # Merge already committed. A crash BETWEEN _commit and the
-            # ledger fold below would have left the branch's batch ids
-            # out of main's ledger (a replay of a branch batch would then
-            # re-commit against main); recovery is deterministic — on
-            # merge replay, repair the fold before no-op'ing. Skipped
-            # when the fold is provably durable (all ids present) or the
-            # branch log is already gone (dropped after a healthy merge).
-            try:
-                br = self.branch_table(name)
-            except KeyError:
-                return False
-            br_ids = br.committed_batch_ids()
-            main_ids = self.committed_batch_ids()
-            if (br_ids.numeric_floor > main_ids.numeric_floor
-                    or any(i not in main_ids for i in br_ids.ids)):
-                self._write_ledger(
-                    CommittedIds(set(br_ids.ids), br_ids.numeric_floor),
-                    expired_through=None,
-                )
-                self._ids_cache = CommittedIds()
-                self._ids_scanned_to = -1
-                self._ledger_stamp = None
             return False
         br = self.branch_table(name)
         meta = br.branch_meta()
@@ -776,22 +745,9 @@ class SnapshotTable:
                     live.pop(b, None)
             return live
 
-        ok = self._commit(batch_id, schema, update, kind="merge",
-                          extra_commit_bytes=br_bytes)
-        if ok:
-            # exactly-once across the publish: batches committed on the
-            # branch are now part of MAIN's state, so fold the branch's
-            # ledger into main's — a post-merge replay of a branch batch
-            # must no-op against main too (mirror of create_branch's seed)
-            br_ids = br.committed_batch_ids()
-            self._write_ledger(
-                CommittedIds(set(br_ids.ids), br_ids.numeric_floor),
-                expired_through=None,
-            )
-            self._ids_cache = CommittedIds()  # force re-read incl. new ledger
-            self._ids_scanned_to = -1
-            self._ledger_stamp = None
-        return ok
+        return self._commit(batch_id, schema, update, kind="merge",
+                            extra_commit_bytes=br_bytes,
+                            inherited=br._committed_as_of(br_snap["version"]))
 
     # ---------- metadata ----------
 
@@ -811,60 +767,43 @@ class SnapshotTable:
     def _ledger_file(self, version: int) -> str:
         return os.path.join(self._snap_dir, f"ledger-v{version:010d}.json")
 
-    def _load_ledger(self) -> None:
-        """Merge the latest expiration ledger (ids of EXPIRED snapshots,
-        collapsed to a numeric floor) into the in-memory cache when a newer
-        ledger version appeared. One glob per call — the dir holds at most
-        a couple of ledger files."""
-        vs = self._ledger_versions()
-        if not vs:
-            return
-        path = self._ledger_file(vs[-1])
-        try:
-            st = os.stat(path)
-        except FileNotFoundError:  # concurrent cleanup; next call re-globs
-            return
-        stamp = (path, st.st_size)
-        if stamp == self._ledger_stamp:
-            return
-        try:
-            with open(path) as f:
-                led = json.load(f)
-        except FileNotFoundError:  # pruned under us after a newer write
-            return
-        self._ids_cache.numeric_floor = max(self._ids_cache.numeric_floor, led["numeric_floor"])
-        self._ids_cache.ids.update(led["ids"])
-        self._ids_cache.compact()
-        self._ledger_stamp = stamp
-
-    def _write_ledger(self, ids: "CommittedIds", expired_through) -> None:
-        """Versioned O_EXCL ledger write (same protocol as snapshots): a
-        losing concurrent expiration re-reads, re-merges its ids (set
-        union — order-free), and retries, so no expiration can overwrite
-        another's ids. Older ledger versions are pruned after the win."""
-        payload = {"ids": None, "numeric_floor": None, "expired_through": expired_through}
-        for _ in range(20):
-            self._load_ledger()  # fold in any newer ledger before writing
-            ids.ids.update(self._ids_cache.ids)
-            ids.numeric_floor = max(ids.numeric_floor, self._ids_cache.numeric_floor)
-            ids.compact()
-            payload["ids"] = sorted(ids.ids)
-            payload["numeric_floor"] = ids.numeric_floor
-            next_v = (self._ledger_versions()[-1] + 1) if self._ledger_versions() else 1
-            path = self._ledger_file(next_v)
-            tmp = path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(payload, f)
-                f.flush()
-                os.fsync(f.fileno())
+    def _latest_ledger(self, seen: int | None = None) -> tuple[int, dict] | None:
+        """(version, payload) of the newest expiration ledger; None when
+        there is none or it is version ``seen``. Ledger files are
+        immutable (O_EXCL), so their version tells a reader whether it
+        has already folded one in."""
+        while vs := self._ledger_versions():
+            if vs[-1] == seen:
+                return None
             try:
-                os.link(tmp, path)
+                with open(self._ledger_file(vs[-1])) as f:
+                    return vs[-1], json.load(f)
+            except FileNotFoundError:
+                continue  # pruned after a newer write: re-glob
+
+    def _load_ledger(self) -> None:
+        """Fold a ledger version this handle has not seen into the cache."""
+        if got := self._latest_ledger(seen=self._ledger_stamp):
+            self._ledger_stamp, led = got
+            self._ids_cache.update(CommittedIds.from_json(led))
+
+    def _write_ledger(self, ids: "CommittedIds", expired_through: int) -> None:
+        """Versioned O_EXCL ledger write (same protocol as snapshots),
+        merged with the newest ledger on disk: a losing concurrent
+        expiration re-merges (set union, order-free) and retries. Older
+        ledger versions are pruned after the win."""
+        for _ in range(20):
+            next_v, through = 1, expired_through
+            if got := self._latest_ledger():
+                next_v = got[0] + 1
+                ids.update(CommittedIds.from_json(got[1]))
+                through = max(through, got[1].get("expired_through") or -1)
+            try:
+                write_json_atomic(self._ledger_file(next_v),
+                                  {**ids.to_json(), "expired_through": through},
+                                  exclusive=True)
             except FileExistsError:
                 continue  # lost the race; re-merge against the winner
-            finally:
-                os.unlink(tmp)
-            st = os.stat(path)
-            self._ledger_stamp = (path, st.st_size)
             for v in self._ledger_versions()[:-1]:
                 try:
                     os.unlink(self._ledger_file(v))
@@ -872,6 +811,14 @@ class SnapshotTable:
                     pass
             return
         raise CommitConflictError("gave up writing the batch-id ledger after 20 attempts")
+
+    @staticmethod
+    def _fold_snapshot_ids(ids: CommittedIds, snap: dict) -> None:
+        """A snapshot's committed ids: its own batch id plus, on a fork or
+        merge snapshot, the ids it inherited from the other log."""
+        ids.add(snap["batch_id"])
+        if "inherited_ids" in snap:
+            ids.update(CommittedIds.from_json(snap["inherited_ids"]))
 
     def committed_batch_ids(self) -> CommittedIds:
         """Every batch_id ever committed (set-like; bounded — see
@@ -883,7 +830,7 @@ class SnapshotTable:
         for v in self._versions():
             if v > self._ids_scanned_to:
                 try:
-                    self._ids_cache.add(self._snapshot_log_entry(v)["batch_id"])
+                    self._fold_snapshot_ids(self._ids_cache, self._snapshot_log_entry(v))
                 except FileNotFoundError:
                     # a racing expiration unlinked v between our glob and
                     # open. Its id is NOT lost: expiration writes the
@@ -892,6 +839,29 @@ class SnapshotTable:
                     self._load_ledger()
                 self._ids_scanned_to = v
         return self._ids_cache
+
+    def _committed_as_of(self, v: int) -> CommittedIds:
+        """The batch ids this log had committed as of version ``v``: the
+        retained snapshots up to ``v``, then the latest ledger (read last:
+        expiration writes it before it unlinks snapshots), which counts
+        only if it cannot be newer than ``v``."""
+        ids = CommittedIds()
+        for ver in self._versions():
+            if ver > v:
+                break
+            try:
+                self._fold_snapshot_ids(ids, self._snapshot_log_entry(ver))
+            except FileNotFoundError:
+                continue  # racing expiration: its ids are in the ledger
+        if got := self._latest_ledger():
+            through = got[1].get("expired_through")
+            if through is None or through <= v:
+                ids.update(CommittedIds.from_json(got[1]))
+            else:
+                log.warning("%s: ids expired through v%d are not inherited at v%d; "
+                            "replaying one re-applies it", self._snap_dir, through, v)
+        ids.compact()
+        return ids
 
     @property
     def index_cols(self) -> list[str]:
@@ -1459,6 +1429,7 @@ class SnapshotTable:
         kind: str = "append",
         index_cols_override: list[str] | None = None,
         extra_commit_bytes: dict | None = None,
+        inherited: CommittedIds | None = None,
     ) -> bool:
         """Optimistic-concurrency commit (Iceberg-style): build the new
         ``live`` mapping from the CURRENT snapshot via ``update_live(live)``,
@@ -1478,7 +1449,8 @@ class SnapshotTable:
         incremental readers (``operators.merge.changes_since``) skip
         pure-rewrite kinds (compact, rebucket) — their live-map churn
         carries no logical change — and treat non-append live diffs from
-        the other kinds as whole-bucket changes."""
+        the other kinds as whole-bucket changes. ``inherited``: another
+        log's ids this commit brings in (a merge), kept in the snapshot."""
         for _ in range(retries):
             if batch_id in self.committed_batch_ids():
                 return False
@@ -1514,6 +1486,8 @@ class SnapshotTable:
                 "live": new_live,
                 "commit_bytes": commit_bytes,
             }
+            if inherited is not None:
+                snap["inherited_ids"] = inherited.to_json()
             try:
                 self._write_snapshot(snap)
                 return True
@@ -1790,10 +1764,12 @@ class SnapshotTable:
         """Expire old snapshots (Iceberg expire_snapshots + orphan cleanup):
         keeps the table's metadata bounded over an unbounded stream.
 
-        1. Fold every known batch id into ``_snapshots/ledger.json``
-           (atomic replace), collapsing the contiguous numeric prefix into
-           a floor — idempotence survives snapshot deletion with O(1)
-           memory for streaming epoch ids.
+        1. Fold the ids of every snapshot up to the newest one expiring
+           (tagged ones included, so a tag never stops the floor) into a
+           new ``ledger-v<N>.json`` — this method is its only writer, and
+           writes none when nothing expires — collapsing the contiguous
+           numeric prefix into a floor: idempotence survives snapshot
+           deletion with O(1) memory for streaming epoch ids.
         2. Delete all but the last ``retain_last`` snapshot files (time
            travel remains available within the retained window).
         3. Drop data dirs referenced by NO retained snapshot and older than
@@ -1846,11 +1822,11 @@ class SnapshotTable:
             to_expire = aged
         survivors = [v for v in versions if v not in set(to_expire)]
 
-        ids = self.committed_batch_ids()  # ledger ∪ every current snapshot
-        ids.compact()
-        # ledger BEFORE deleting snapshots: a crash in between merely
-        # re-merges ids next run (set union, order-free)
-        self._write_ledger(ids, expired_through=to_expire[-1] if to_expire else None)
+        if to_expire:
+            # ledger BEFORE deleting snapshots: a crash in between merely
+            # re-merges ids next run (set union, order-free)
+            self._write_ledger(self._committed_as_of(to_expire[-1]),
+                               expired_through=to_expire[-1])
 
         for v in to_expire:
             try:
@@ -1900,6 +1876,7 @@ class SnapshotTable:
                     continue  # another GC removed it
                 shutil.rmtree(p)
                 removed_dirs += 1
+        ids = self.committed_batch_ids()
         return {
             "expired_snapshots": len(to_expire),
             "removed_data_dirs": removed_dirs,

@@ -133,12 +133,16 @@ def test_branch_from_tag_and_bad_names(spark, tmp_path):
         br.create_branch("nested")  # branch-off-branch unsupported
 
 
-def test_merge_folds_branch_ids_into_main_ledger(spark, tmp_path):
+def test_merge_carries_branch_ids_to_main(spark, tmp_path):
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
     t.commit_append(_bucketed(spark, t, [("a", 1)]), "base")
     br = t.create_branch("exp")
     br.commit_append(_bucketed(spark, br, [("x", 2)]), "staged-batch")
+    led = t._ledger_versions()
     assert t.merge_branch("exp", "merge-ff") is True
+    # the branch's ids ride the merge snapshot; no ledger is written
+    assert t._ledger_versions() == led
+    assert "staged-batch" in t.snapshot()["inherited_ids"]["ids"]
     t.drop_branch("exp")
     # the staged batch is now part of MAIN's state: replaying it against
     # main must no-op (exactly-once survives the publish)
@@ -148,7 +152,7 @@ def test_merge_folds_branch_ids_into_main_ledger(spark, tmp_path):
 
 
 def test_fork_at_older_version_applies_post_fork_batches(spark, tmp_path):
-    """ADVICE r5: the branch ledger must seed only ids committed AS OF the
+    """ADVICE r5: the branch must inherit only ids committed AS OF the
     fork version — a batch main committed AFTER the fork point was never
     part of the branch's lineage, so applying it to the branch must be a
     real commit, not a silent no-op (the hotfix-fork data-skip bug)."""
@@ -167,42 +171,86 @@ def test_fork_at_older_version_applies_post_fork_batches(spark, tmp_path):
     assert _state(spark, t) == {("a", 1), ("b", 2)}
 
 
-def test_merge_replay_repairs_lost_ledger_fold(spark, tmp_path):
-    """ADVICE r5: a crash between merge_branch's _commit and its ledger
-    fold loses the fold; the replay (same batch_id) must repair it before
-    no-op'ing, so a staged branch batch can never re-commit against main."""
+def test_merge_replay_noops_and_writes_nothing(spark, tmp_path):
+    """A replayed merge (same batch_id) is a plain no-op: it writes no
+    snapshot and no ledger, and the staged branch batch stays committed
+    on main for a fresh handle."""
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
     t.commit_append(_bucketed(spark, t, [("a", 1)]), "base")
     br = t.create_branch("exp")
     br.commit_append(_bucketed(spark, br, [("x", 2)]), "staged-batch")
+    assert t.merge_branch("exp", "merge-once") is True
 
-    real = t._write_ledger
-
-    def crash(ids, expired_through=None):
-        raise RuntimeError("crash between _commit and ledger fold")
-
-    t._write_ledger = crash
-    with pytest.raises(RuntimeError, match="crash between"):
-        t.merge_branch("exp", "merge-crash")
-    del t._write_ledger  # restore the bound method
-    assert real == t._write_ledger
-
-    # the merge snapshot committed, but the fold was lost: a fresh handle
-    # does NOT see the staged branch id as committed on main yet
     t2 = SnapshotTable(str(tmp_path / "t"))
-    assert "merge-crash" in t2.committed_batch_ids()
-    assert "staged-batch" not in t2.committed_batch_ids()
-
-    # merge replay: no-op on state, but deterministically repairs the fold
-    assert t2.merge_branch("exp", "merge-crash") is False
-    assert "staged-batch" in t2.committed_batch_ids()
-    assert t2.commit_append(
+    v, led = t2.current_version(), t2._ledger_versions()
+    assert t2.merge_branch("exp", "merge-once") is False
+    assert (t2.current_version(), t2._ledger_versions()) == (v, led)
+    assert SnapshotTable(str(tmp_path / "t")).commit_append(
         _bucketed(spark, t2, [("x", 999)]), "staged-batch") is False
     assert _state(spark, t2) == {("a", 1), ("x", 2)}
-    # replay with a healthy ledger does not keep rewriting it
-    v_led = t2._ledger_versions()
-    assert t2.merge_branch("exp", "merge-crash") is False
-    assert t2._ledger_versions() == v_led
+
+
+def test_fork_after_expiry_applies_post_fork_batch(spark, tmp_path):
+    """Expiration writes only the ids of the snapshots it expires: a fork
+    at a still-retained version must not inherit a batch main committed
+    after it."""
+    t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
+    for i in (1, 2, 3):
+        t.commit_append(_bucketed(spark, t, [(f"k{i}", i)]), f"b{i}")
+    v_b2 = t.current_version() - 1
+    t.expire_snapshots(retain_last=2, clean_orphans=False)
+    br = t.create_branch("hotfix", from_version=v_b2)
+    assert br._ledger_versions() == []
+    fresh = t.branch_table("hotfix")
+    assert fresh.commit_append(_bucketed(spark, fresh, [("k3", 30)]), "b3") is True
+    # the expired pre-fork batch still no-ops on the branch
+    assert fresh.commit_append(_bucketed(spark, fresh, [("k1", 10)]), "b1") is False
+    assert _state(spark, fresh) == {("k1", 1), ("k2", 2), ("k3", 30)}
+
+
+def test_merge_replay_does_not_skip_later_branch_batch(spark, tmp_path):
+    """A merge carries the branch's ids as of the merged branch snapshot
+    only: a batch the branch commits after the merge still applies to
+    main, also after the merge is replayed."""
+    t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
+    t.commit_append(_bucketed(spark, t, [("a", 1)]), "base")
+    br = t.create_branch("exp")
+    br.commit_append(_bucketed(spark, br, [("x", 2)]), "staged")
+    assert t.merge_branch("exp", "m1") is True
+    br.commit_append(_bucketed(spark, br, [("y", 3)]), "later")
+    assert t.merge_branch("exp", "m1") is False
+    assert t.commit_append(_bucketed(spark, t, [("y", 3)]), "later") is True
+    assert t.commit_append(_bucketed(spark, t, [("x", 9)]), "staged") is False
+    assert _state(spark, t) == {("a", 1), ("x", 2), ("y", 3)}
+
+
+def test_create_branch_handle_noops_pre_fork_batch(spark, tmp_path):
+    """The handle create_branch returns knows the pre-fork ids at once."""
+    t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
+    t.commit_append(_bucketed(spark, t, [("a", 1)]), "b1")
+    led = t._ledger_versions()
+    br = t.create_branch("exp")
+    assert t._ledger_versions() == led and br._ledger_versions() == []
+    assert br.commit_append(_bucketed(spark, br, [("a", 999)]), "b1") is False
+    assert _state(spark, br) == {("a", 1)}
+
+
+def test_fork_at_tag_older_than_expiry_warns_and_applies(spark, tmp_path, caplog):
+    """A tag older than main's last expiration is older than the ledger:
+    the fork inherits no expired ids (one warning), so a post-fork batch
+    applies to the branch instead of being silently skipped."""
+    t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
+    t.commit_append(_bucketed(spark, t, [("a", 1)]), "pre")
+    t.tag("rel")
+    for i in range(3):
+        t.commit_append(_bucketed(spark, t, [(f"m{i}", i)]), f"post-{i}")
+    t.expire_snapshots(retain_last=1, clean_orphans=False)
+    with caplog.at_level("WARNING", logger="hierarchical_to_relational_spark.table.snapshot_table"):
+        br = t.create_branch("hotfix", from_version="rel")
+    assert len([r for r in caplog.records if r.levelname == "WARNING"]) == 1
+    assert br.commit_append(_bucketed(spark, br, [("m0", 10)]), "post-0") is True
+    assert br.commit_append(_bucketed(spark, br, [("a", 9)]), "pre") is False
+    assert _state(spark, br) == {("a", 1), ("m0", 10)}
 
 
 def test_merge_retry_folds_concurrent_schema_evolution(spark, tmp_path):

@@ -4,6 +4,7 @@ time travel, orphan tolerance (SURVEY.md §7.1 M1)."""
 from __future__ import annotations
 
 import glob
+import json
 import os
 import time
 
@@ -383,11 +384,12 @@ def test_committed_ids_floor_collapse():
     for i in [0, 1, 2, 3, 5]:
         ids.add(str(i))
     ids.add("3::compact")
+    ids.add("3::binpack")
     ids.add("replay-abc")
     ids.compact()
     assert ids.numeric_floor == 3
     assert ids.ids == {"5", "replay-abc"}  # contiguous prefix + derived ids collapsed
-    for covered in ["0", "2", "3", "3::compact", "1::evolve", "5", "replay-abc"]:
+    for covered in ["0", "2", "3", "3::compact", "3::binpack", "1::evolve", "5", "replay-abc"]:
         assert covered in ids
     assert "4" not in ids and "6" not in ids and "replay-xyz" not in ids
 
@@ -560,6 +562,54 @@ def test_concurrent_expirations_merge_ledgers(tmp_path):
     for i in range(40):
         assert str(i) in ids, f"batch {i} lost by racing expirations"
     assert glob.glob(os.path.join(t.root, "_snapshots", "ledger-v*.json"))
+
+
+def test_expiry_ledger_floor_passes_a_tag(tmp_path):
+    """Expiration folds the ids of every snapshot up to the newest one it
+    expires, tagged ones included: a tag on an early numeric batch must
+    not stop the ledger's floor."""
+    t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
+    for i in range(30):
+        t._commit(str(i), SCHEMA, lambda live: live)
+        if i == 2:
+            t.tag("early")
+        if i % 10 == 9:
+            t.expire_snapshots(retain_last=3, clean_orphans=False)
+    with open(t._ledger_file(t._ledger_versions()[-1])) as f:
+        led = json.load(f)
+    assert led["numeric_floor"] >= 26 and led["ids"] == ["__create__"]
+
+
+def test_expire_with_nothing_to_expire_writes_no_ledger(tmp_path):
+    t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
+    for i in range(5):
+        t._commit(str(i), SCHEMA, lambda live: live)
+    assert t.expire_snapshots(retain_last=10, clean_orphans=False)["expired_snapshots"] == 0
+    assert t._ledger_versions() == []
+    t.expire_snapshots(retain_last=2, clean_orphans=False)
+    led = t._ledger_versions()
+    with open(t._ledger_file(led[-1])) as f:  # the first ledger is collapsed too
+        assert json.load(f)["numeric_floor"] == 2
+    assert t.expire_snapshots(retain_last=2, clean_orphans=False)["expired_snapshots"] == 0
+    assert t._ledger_versions() == led
+
+
+def test_old_ledger_without_expired_through_still_loads(tmp_path):
+    """A ledger with no ``expired_through`` mark (written before expiration
+    recorded it) still counts, for the log and for a fork."""
+    t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
+    t._commit("7", SCHEMA, lambda live: live)
+    with open(t._ledger_file(1), "w") as f:
+        json.dump({"ids": ["old-batch"], "numeric_floor": 5, "expired_through": None}, f)
+    cold = SnapshotTable(t.root)
+    ids = cold.committed_batch_ids()
+    assert all(i in ids for i in ("old-batch", "3", "7")) and "6" not in ids
+    br = cold.create_branch("b")
+    assert "old-batch" in br.committed_batch_ids() and "4" in br.committed_batch_ids()
+    cold.expire_snapshots(retain_last=1, clean_orphans=False)
+    with open(cold._ledger_file(2)) as f:
+        led = json.load(f)
+    assert "old-batch" in led["ids"] and led["expired_through"] == 0
 
 
 def test_rollback_protects_rereferenced_dirs_from_orphan_gc(spark, tmp_path):
