@@ -1,15 +1,12 @@
 """Key-partitioned MERGE: last-write-wins upsert + whole-key tombstone
-deletes into a SnapshotTable, in two physical strategies:
-
-- **copy-on-write** (``mode="cow"``): read affected buckets, resolve, and
-  rewrite them per batch — reads stay resolution-free, but a batch touching
-  every bucket rewrites the whole table (Iceberg CoW MERGE shape).
-- **merge-on-read** (``mode="mor"``): append the batch as per-bucket delta
-  files — O(batch) write cost independent of table size; readers resolve
-  LWW over base+deltas; ``compact`` folds deltas down copy-on-write style.
-  At 10^10-event scale with hot conversations spread across all buckets,
-  this is the strategy that keeps apply throughput linear (the Iceberg MoR
-  MERGE shape); compaction cost is amortized over many batches.
+deletes into a SnapshotTable, on one write path: ``apply_cdc_batch``
+appends every batch as per-bucket delta files (merge-on-read) — O(batch)
+write cost independent of table size; readers resolve LWW over
+base+deltas. At 10^10-event scale with hot conversations spread across
+all buckets, this keeps apply throughput linear (the Iceberg MoR MERGE
+shape). ``compact`` folds deltas down copy-on-write, amortized over many
+appends; pressure compaction at depth 2 rewrites every bucket a batch
+touched right after that batch, which is the copy-on-write layout.
 
 Resolution itself generalizes the reference's dedup idiom — its
 groupBy(parent, child, level) + max/first aggregation
@@ -167,7 +164,6 @@ def apply_cdc_batch(
     table: SnapshotTable,
     batch: DataFrame,
     batch_id: str,
-    mode: str = "mor",
 ) -> dict:
     """Apply one normalized change batch to the table, exactly-once.
 
@@ -179,10 +175,10 @@ def apply_cdc_batch(
     Widens the target schema first (``SnapshotTable.evolve_to``, a
     metadata commit ``<batch_id>::evolve``) when the batch has a new
     column or a losslessly wider type; a batch that lacks table columns
-    lands with them null, a narrower type is cast up. The commit (append
-    or bucket-rewrite per ``mode``) is idempotent on ``batch_id``. Commit
-    stats (rows, max applied LSN, tombstone/upsert counts) come from the
-    written files' parquet footers — no extra Spark job.
+    lands with them null, a narrower type is cast up. The append commit
+    is idempotent on ``batch_id``. Commit stats (rows, max applied LSN,
+    tombstone/upsert counts) come from the written files' parquet
+    footers — no extra Spark job.
     """
     t0 = time.monotonic()
     # widen the target before the merge under the table's one rule; a
@@ -202,36 +198,14 @@ def apply_cdc_batch(
             cols.append(F.col(fld.name).cast(fld.dataType).alias(fld.name))
         else:  # older-schema batches: null-fill evolved cols
             cols.append(F.lit(None).cast(fld.dataType).alias(fld.name))
-    batch = batch.select(*cols)
+    committed = table.commit_append(batch.select(*cols), batch_id=batch_id)
 
-    if mode == "mor":
-        committed = table.commit_append(batch, batch_id=batch_id)
-        buckets: list[int] = []
-    elif mode == "cow":
-        batch = batch.persist()
-        buckets = sorted(r[0] for r in batch.select(META_BUCKET).distinct().collect())
-        if buckets:
-            committed = _overwrite_resolved(
-                spark, table, schema, buckets, batch_id,
-                lambda current: resolve(batch.unionByName(current, allowMissingColumns=True), schema),
-            )
-        else:
-            committed = False
-        batch.unpersist()
-    else:
-        raise ValueError(f"unknown merge mode {mode!r}")
-
-    stats = (
-        table.last_commit_stats
-        if committed and getattr(table, "last_commit_stats", None)
-        else {"rows_written": None, "upserts": None, "deletes": None, "max_lsn": None,
-              "bucket_max_lsn": {}}
-    )
+    stats = table.last_commit_stats if committed else {
+        "rows_written": None, "upserts": None, "deletes": None, "max_lsn": None,
+        "bucket_max_lsn": {}}
     return {
         "batch_id": batch_id,
-        "mode": mode,
         "committed": committed,
-        "buckets": buckets,
         "duration_s": time.monotonic() - t0,
         **stats,
     }
@@ -246,7 +220,6 @@ def _overwrite_resolved(
     resolve_fn,
     retries: int = 5,
     cluster_by: str | None = None,
-    kind: str = "overwrite",
 ) -> bool:
     """Copy-on-write commit loop with concurrent-writer validation: read the
     listed buckets AT a pinned version, resolve via ``resolve_fn(current)``,
@@ -261,7 +234,7 @@ def _overwrite_resolved(
         try:
             return table.commit_overwrite_buckets(
                 resolved, buckets, batch_id=batch_id, base_version=base_v,
-                cluster_by=cluster_by, kind=kind,
+                cluster_by=cluster_by, kind="compact",
             )
         except ConcurrentOverwriteError:
             continue
@@ -339,7 +312,7 @@ def compact(
         cluster = "conv_id"
     return _overwrite_resolved(
         spark, table, schema, live_buckets, batch_id, resolve_fn,
-        cluster_by=cluster, kind="compact",
+        cluster_by=cluster,
     )
 
 
@@ -658,7 +631,7 @@ def _diff_live_dirs(
       commits (MoR deltas): scanning exactly these files surfaces every
       key that could have changed;
     - ``superset`` — buckets rewritten by a commit we cannot diff
-      minimally (CoW overwrite, rollback): every current key in them
+      minimally (branch merge, rollback): every current key in them
       counts as changed. Safe because every commit kind except
       rollback preserves tombstones — rows never silently vanish, so
       re-emitting the bucket's current rows + tombstones is a correct
@@ -738,8 +711,8 @@ def _window_rows(
     the affected buckets' current rows (``_src=0``), the dirs appended in
     the window (1) and the dirs a rollback un-referenced (2); ``tomb``
     marks the rows that (re-)wrote a tombstone, ``is_super`` the rows of
-    re-emitted (CoW, rollback) buckets. Raises ``ValueError``, before any
-    job runs, when a retracted dir already expired."""
+    re-emitted (branch merge, rollback) buckets. Raises ``ValueError``,
+    before any job runs, when a retracted dir already expired."""
     added, superset, removed = _diff_live_dirs(table, since_version, v2)
     added = {b: ds for b, ds in added.items() if b not in superset and ds}
     if not added and not superset and not removed:
@@ -800,13 +773,13 @@ def changes_since(
 
     Scale shape: the snapshot-log walk is driver-side metadata (bounded by
     the retention window). The data side is ``_window_rows``' one tagged
-    scan, shared with view refreshes. CoW and rollback buckets degrade to
-    whole-bucket re-emission; pure rewrites (compaction, re-bucketing) are
-    skipped. A window max of the newest tombstone LSN per ``conv_id`` goes
-    first, so every exchange in the plan is ``hash(conv_id)``, which
-    ``resolve`` and ``collapse_patches`` reuse; the 'd' rows are one
-    ``groupBy(conv_id)`` of those tombstone rows. No join, no
-    ``distinct``. Not ``(_bucket, conv_id)``: retracted rows keep the
+    scan, shared with view refreshes. Buckets a merge or rollback rewrote
+    degrade to whole-bucket re-emission; pure rewrites (compaction,
+    re-bucketing) are skipped. A window max of the newest tombstone LSN
+    per ``conv_id`` goes first, so every exchange in the plan is
+    ``hash(conv_id)``, which ``resolve`` and ``collapse_patches`` reuse;
+    the 'd' rows are one ``groupBy(conv_id)`` of those tombstone rows. No
+    join, no ``distinct``. Not ``(_bucket, conv_id)``: retracted rows keep the
     bucket ids they were written with, so after a rebucket one
     conversation can carry two and would get two deletes. Raising
     ``FileNotFoundError`` when ``since_version`` fell out of the retained

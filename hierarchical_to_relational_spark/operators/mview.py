@@ -199,9 +199,7 @@ class ConvAggregateView:
         tombs = dead.select("conv_id", F.lit(2 * v_now - 1).alias(META_LSN),
                             F.lit("d").alias(META_OP))
         batch = ups.unionByName(tombs, allowMissingColumns=True)
-        rep = apply_cdc_batch(self.spark, table, batch,
-                              batch_id=batch_id, mode="mor")
-        rep["commit_mode"] = rep.pop("mode")
+        rep = apply_cdc_batch(self.spark, table, batch, batch_id=batch_id)
         self._write_cursor(v_now)
         return rep
 

@@ -83,7 +83,6 @@ class CdcPipeline:
         n_buckets: int = 16,
         text_mode: str = "builtin",
         envelope_schema: T.StructType | None = None,
-        mode: str = "mor",
         compact_every: int = 16,
         compact_min_bytes: int | None = None,
         compact_zorder: list[str] | None = None,
@@ -101,7 +100,6 @@ class CdcPipeline:
         self.binlog_dir = binlog_dir
         self.checkpoint_dir = checkpoint_dir
         self.text_mode = text_mode
-        self.mode = mode
         self.compact_every = compact_every
         self.compact_min_bytes = compact_min_bytes
         self.compact_zorder = compact_zorder
@@ -137,24 +135,20 @@ class CdcPipeline:
         # fused single-scan normalize (r6): upsert + tombstone rows from
         # ONE pass over the segment files instead of two scan legs
         batch = normalize_envelopes_fused(envelopes, text_mode=self.text_mode)
-        metrics = apply_cdc_batch(
-            self.spark, self.table, batch, batch_id=str(batch_id), mode=self.mode,
-        )
-        # merge-on-read: fold deltas down once they stack too deep (count
-        # trigger) or grow too heavy (size trigger) — PARTIAL: only the
-        # buckets over a threshold rewrite (manifest stats pick them, no
-        # filesystem listing). A zipf-hot bucket folds often; cold buckets
+        metrics = apply_cdc_batch(self.spark, self.table, batch, batch_id=str(batch_id))
+        # fold deltas down once they stack too deep or grow too heavy —
+        # PARTIAL: only the buckets over a threshold rewrite (manifest
+        # stats pick them). A zipf-hot bucket folds often; cold buckets
         # with shallow stacks are never rewritten along for the ride.
-        if self.mode == "mor":
-            folded = compact_pressured(
-                self.spark, self.table, batch_id=f"{batch_id}::compact",
-                depth_threshold=self.compact_every,
-                bytes_threshold=self.compact_min_bytes,
-                zorder=self.compact_zorder,
-            )
-            if folded:
-                metrics["compacted"] = True
-                metrics["compacted_buckets"] = folded
+        folded = compact_pressured(
+            self.spark, self.table, batch_id=f"{batch_id}::compact",
+            depth_threshold=self.compact_every,
+            bytes_threshold=self.compact_min_bytes,
+            zorder=self.compact_zorder,
+        )
+        if folded:
+            metrics["compacted"] = True
+            metrics["compacted_buckets"] = folded
         # unbounded-stream hygiene: expire old snapshots + orphan data dirs
         # every N applied batches so _snapshots/ and the id set stay bounded
         self._batches_applied += 1

@@ -12,11 +12,11 @@ north rule needs:
 - **Idempotent commits keyed by batch_id** (the exactly-once primitive):
   re-committing an already-applied batch_id is a no-op — replays after
   failure/restart converge instead of duplicating.
-- **Bucket-partition copy-on-write**: rows are hash-bucketed on the merge
-  key (``conv_id``); each commit rewrites only the buckets the batch
-  touches and re-points the bucket→files mapping. Readers prune to the
-  buckets they need. This is the same physical shape Iceberg copy-on-write
-  MERGE produces.
+- **One write path per bucket**: rows are hash-bucketed on the merge key
+  (``conv_id``); a data batch appends delta files to the buckets it touches
+  (merge-on-read), and compaction rewrites buckets copy-on-write and
+  re-points the bucket→files mapping. Readers prune to the buckets they
+  need. These are the shapes of Iceberg MoR and CoW MERGE.
 - **Additive schema evolution**: one rule, ``_union_schema`` — new
   columns append nullable and existing columns may only widen losslessly
   (mirroring the reference's additive output-schema generation,
@@ -606,7 +606,7 @@ class SnapshotTable:
     #   union (fork + main's + branch's): LWW resolution is
     #   order-insensitive, so the union resolves to exactly the state of
     #   applying both sides' batches to one table;
-    # - either side REWROTE the bucket (compaction/CoW/rollback) while
+    # - either side REWROTE the bucket (compaction/rollback) while
     #   the other changed it at all → ``BranchDivergedError``: a rewrite
     #   bakes one side's resolution in, the other side's rows cannot be
     #   grafted under it without a re-resolve. Caller re-branches or
@@ -844,15 +844,20 @@ class SnapshotTable:
         """The batch ids this log had committed as of version ``v``: the
         retained snapshots up to ``v``, then the latest ledger (read last:
         expiration writes it before it unlinks snapshots), which counts
-        only if it cannot be newer than ``v``."""
-        ids = CommittedIds()
+        only if it cannot be newer than ``v``, minus the own ids of the
+        snapshots after ``v`` (a log commits an id once; older ledgers hold
+        them). A dropped numeric id lowers the floor below it: a replayed
+        batch re-applies (LWW-safe) rather than being skipped."""
+        ids, newer = CommittedIds(), []
         for ver in self._versions():
-            if ver > v:
-                break
             try:
-                self._fold_snapshot_ids(ids, self._snapshot_log_entry(ver))
+                snap = self._snapshot_log_entry(ver)
             except FileNotFoundError:
                 continue  # racing expiration: its ids are in the ledger
+            if ver <= v:
+                self._fold_snapshot_ids(ids, snap)
+            else:
+                newer.append(snap["batch_id"])
         if got := self._latest_ledger():
             through = got[1].get("expired_through")
             if through is None or through <= v:
@@ -860,6 +865,10 @@ class SnapshotTable:
             else:
                 log.warning("%s: ids expired through v%d are not inherited at v%d; "
                             "replaying one re-applies it", self._snap_dir, through, v)
+        for batch_id in newer:
+            ids.ids.discard(batch_id)
+            if batch_id.isdigit():
+                ids.numeric_floor = min(ids.numeric_floor, int(batch_id) - 1)
         ids.compact()
         return ids
 
@@ -1174,7 +1183,7 @@ class SnapshotTable:
                 out, bloom_acc = self._attach_bloom_fold(out, index_cols)
             writer = out.write.mode("overwrite")
             if cluster_by is None:
-                # hash-ordered writes (appends / CoW batches): key bloom
+                # hash-ordered writes (appends, unclustered rewrites): key bloom
                 # filters cover what min-max pruning can't (see
                 # PARQUET_BLOOM_OPTS); range-clustered rewrites already
                 # yield tight min-max bounds

@@ -7,7 +7,7 @@ Package + submit:
     spark-submit --master local[32] --py-files /tmp/h2r.zip \\
         jobs/cdc_ingest_job.py \\
         --binlog-dir /data/binlog --table /data/transcripts \\
-        --checkpoint /data/ck --mode mor --n-buckets 256 [--stream]
+        --checkpoint /data/ck --n-buckets 256 [--stream]
 
 On a real cluster only ``--master``/resource flags change; the engine's
 partitioning (hash buckets on conv_id, one LWW shuffle per batch, AQE skew
@@ -26,9 +26,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--binlog-dir", required=True)
     p.add_argument("--table", required=True)
     p.add_argument("--checkpoint", required=True)
-    p.add_argument("--mode", choices=["mor", "cow"], default="mor")
     p.add_argument("--n-buckets", type=int, default=256)
-    p.add_argument("--compact-every", type=int, default=16)
+    p.add_argument("--compact-every", type=int, default=16,
+                   help="fold a bucket at this many dirs; 2 = copy-on-write layout")
     p.add_argument("--compact-min-mb", type=float, default=None,
                    help="also compact when any bucket's stacked deltas exceed this "
                         "many MiB (manifest byte stats; no filesystem listing)")
@@ -89,7 +89,6 @@ def main(argv: list[str] | None = None) -> int:
         args.checkpoint,
         n_buckets=args.n_buckets,
         text_mode=args.text_mode,
-        mode=args.mode,
         compact_every=args.compact_every,
         compact_min_bytes=(int(args.compact_min_mb * 2**20)
                            if args.compact_min_mb is not None else None),

@@ -4,11 +4,14 @@ safety, and exactly-once across the fork."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F, types as T
 
 from hierarchical_to_relational_spark.table.snapshot_table import (
     BranchDivergedError,
+    CommittedIds,
     SnapshotTable,
 )
 from tests.conftest import rows_as_set
@@ -206,6 +209,31 @@ def test_fork_after_expiry_applies_post_fork_batch(spark, tmp_path):
     # the expired pre-fork batch still no-ops on the branch
     assert fresh.commit_append(_bucketed(spark, fresh, [("k1", 10)]), "b1") is False
     assert _state(spark, fresh) == {("k1", 1), ("k2", 2), ("k3", 30)}
+
+
+@pytest.mark.parametrize("ids", [("b1", "b2", "b3"), ("1", "2", "3")])
+def test_fork_on_older_ledger_applies_post_fork_batch(tmp_path, ids):
+    """Ledgers written before expiration recorded only the expired ids
+    also hold the ids of snapshots still retained. A fork at a retained
+    version drops the own id of every snapshot after it, so a post-fork
+    batch applies to the branch; a numeric id lowers the floor below it.
+    Pre-fork batches still no-op."""
+    t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
+    for b in ids:
+        t._commit(b, None, lambda live: live)
+    v_b2 = t.current_version() - 1
+    t.expire_snapshots(retain_last=2, clean_orphans=False)
+    (v,) = t._ledger_versions()
+    with open(t._ledger_file(v)) as f:
+        led = json.load(f)
+    old = CommittedIds(set(led["ids"]) | set(ids), led["numeric_floor"])
+    old.compact()
+    with open(t._ledger_file(v), "w") as f:
+        json.dump({**old.to_json(), "expired_through": led["expired_through"]}, f)
+    br = t.create_branch("hf", from_version=v_b2)
+    assert br._commit(ids[2], None, lambda live: live) is True
+    assert br._commit(ids[1], None, lambda live: live) is False
+    assert br._commit(ids[0], None, lambda live: live) is False
 
 
 def test_merge_replay_does_not_skip_later_branch_batch(spark, tmp_path):

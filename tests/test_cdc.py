@@ -327,7 +327,7 @@ def test_lineage_records(spark, tmp_path, binlog):
         pipe.replay_batch(p, f"seg-{i}")
     entries = pipe.lineage.entries()
     assert len(entries) == 3
-    assert all({"batch_id", "rows_written", "buckets", "max_lsn", "table_version"} <= set(e) for e in entries)
+    assert all({"batch_id", "rows_written", "max_lsn", "table_version"} <= set(e) for e in entries)
     assert pipe.lineage.applied_lsn_watermark() is not None
 
 
@@ -356,12 +356,15 @@ def test_arrow_normalize_text(spark, tmp_path):
     assert got[:2] == ["hello world !", "Caf\u00e9"]
 
 
-def test_cow_mode_matches_oracle(spark, tmp_path, binlog):
-    """Copy-on-write strategy converges to the same state as merge-on-read."""
+def test_per_batch_compaction_matches_oracle(spark, tmp_path, binlog):
+    """Pressure compaction at depth 2 rewrites every bucket a batch
+    touched right after that batch (the copy-on-write layout): no bucket
+    ever stacks a delta, and the state equals the oracle."""
     pipe = CdcPipeline(spark, binlog["dir"], str(tmp_path / "t"), str(tmp_path / "ck"),
-                       n_buckets=8, text_mode="none", mode="cow")
+                       n_buckets=8, text_mode="none", compact_every=2)
     for i, p in enumerate(binlog["paths"]):
         pipe.replay_batch(p, f"seg-{i}")
+        assert pipe.table.delta_depth() <= 1
     _assert_matches_oracle(spark, pipe, binlog["events"])
 
 
@@ -369,7 +372,7 @@ def test_mor_compaction_preserves_state(spark, tmp_path, binlog):
     """Appended deltas stack; compaction folds them without changing the
     resolved state; reads are identical before/after."""
     pipe = CdcPipeline(spark, binlog["dir"], str(tmp_path / "t"), str(tmp_path / "ck"),
-                       n_buckets=8, text_mode="none", mode="mor", compact_every=1000)
+                       n_buckets=8, text_mode="none", compact_every=1000)
     for i, p in enumerate(binlog["paths"]):
         pipe.replay_batch(p, f"seg-{i}")
     assert pipe.table.delta_depth() >= len(binlog["paths"]) - 1
@@ -803,26 +806,53 @@ def test_changes_since_emits_through_rollback(spark, tmp_path):
         changes_since(spark, pipe.table, v_ckpt).collect()
 
 
-def test_changes_since_cow_overwrite_supersets(spark, tmp_path):
-    """A CoW-mode merge commit in the window (non-append live change)
-    degrades to whole-bucket re-emission; applying the poll to the
-    checkpointed state still reproduces the current table state."""
-    from hierarchical_to_relational_spark.operators.merge import changes_since
+def _merge_branch_window(spark, pipe, branch_rows, main_rows=None) -> None:
+    """Fork ``pipe.table``, apply ``branch_rows`` on the branch and merge
+    it back. With ``main_rows`` main appends them after the fork, so the
+    merge unions both sides' appended dirs; without, the branch is
+    compacted first, so the merge adopts its rewritten buckets (a
+    non-append change to main's live map)."""
+    from hierarchical_to_relational_spark.operators.merge import apply_cdc_batch, compact
+    from hierarchical_to_relational_spark.operators.normalize import normalize_envelopes_fused
+
+    br = pipe.table.create_branch("fix")
+    batch = normalize_envelopes_fused(_env_rows(spark, branch_rows), text_mode="none")
+    assert apply_cdc_batch(spark, br, batch, "br-0")["committed"]
+    if main_rows is None:
+        assert compact(spark, br, "br-compact")
+    else:
+        pipe.apply_batch(_env_rows(spark, main_rows), "main-0")
+    assert pipe.table.merge_branch("fix", "merge-fix")
+
+
+@pytest.mark.parametrize("case", ["adopt", "union"])
+def test_changes_since_over_branch_merge(spark, tmp_path, case):
+    """A branch merge in the window: adopting a compacted branch's
+    buckets is a non-append change, so those buckets re-emit whole; a
+    merge of two appended sides unions their dirs, so only the appended
+    dirs are scanned. Either way, applying the poll to the checkpointed
+    state reproduces the current table state."""
+    from hierarchical_to_relational_spark.operators.merge import _diff_live_dirs, changes_since
 
     pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
-                       str(tmp_path / "ck"), n_buckets=2, text_mode="none",
-                       mode="cow")
+                       str(tmp_path / "ck"), n_buckets=2, text_mode="none")
     pipe.apply_batch(_env_rows(spark, [
         (1, "insert", "cA", [(0, "user", "v1", None)]),
         (2, "insert", "cB", [(0, "user", "stays", None)]),
     ]), "b0")
     v1 = pipe.table.current_version()
     state1 = _final_state(spark, pipe.table)
-    pipe.apply_batch(_env_rows(spark, [
+    _merge_branch_window(spark, pipe, [
         (3, "update", "cA", [(0, "user", "v2", None)]),
         (4, "delete", "cB", None),
         (5, "insert", "cC", [(0, "user", "new", None)]),
-    ]), "b1")
+    ], None if case == "adopt" else [
+        (6, "update", "cA", [(0, "user", "v3", None)]),
+        (7, "insert", "cD", [(0, "user", "main", None)]),
+    ])
+    added, superset, removed = _diff_live_dirs(pipe.table, v1, pipe.table.current_version())
+    assert bool(superset) == (case == "adopt") and not removed
+    assert case == "adopt" or added
     changes = changes_since(spark, pipe.table, v1).collect()
     got = _apply_diff(state1, changes)
     want = _final_state(spark, pipe.table)

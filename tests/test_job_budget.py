@@ -1,4 +1,4 @@
-"""Spark-job budget per read and maintenance operation.
+"""Spark-job budget per write, read and maintenance operation.
 
 Under adaptive execution every shuffle stage runs as its own Spark job,
 and at serve table sizes each job costs ~0.1-0.2 s of driver and
@@ -28,6 +28,7 @@ from tests.test_cdc import _env_rows
 
 N_CONVS = 40
 BUDGET = {
+    "apply_batch_1_append": 2,
     "lookup_1": 2,
     "lookup_100": 2,
     "read_transcripts": 2,
@@ -81,10 +82,11 @@ def _shuffles(df) -> int:
 @pytest.fixture(scope="module")
 def measured(spark, tmp_path_factory):
     """Job counts of every budgeted operation, measured in a fixed order
-    on one table: five MoR appends over 4 buckets, a view built after the
-    fourth, then the full compaction last (it rewrites the table). Also
-    the shuffle count of ``resolve`` and of ``read_transcripts`` over the
-    uncompacted table, and the executed plan of the one-append feed."""
+    on one table: five appends over 4 buckets (the fifth counted), a view
+    built after the fourth, then the full compaction last (it rewrites the
+    table). Also the shuffle count of ``resolve`` and of
+    ``read_transcripts`` over the uncompacted table, and the executed plan
+    of the one-append feed."""
     d = tmp_path_factory.mktemp("budget")
     pipe = CdcPipeline(spark, str(d / "binlog"), str(d / "t"), str(d / "ck"),
                        n_buckets=4, text_mode="none")
@@ -94,7 +96,9 @@ def measured(spark, tmp_path_factory):
     view = ConvAggregateView(spark, t, str(d / "mv"), n_buckets=4)
     view.refresh()
     v_before = t.current_version()
-    pipe.apply_batch(_env_rows(spark, _batch(4)), "b4")
+    env = _env_rows(spark, _batch(4))
+    appended = _jobs(spark, "budget-apply_batch_1_append",
+                     lambda: pipe.apply_batch(env, "b4"))
     resolved = resolve(t.read(spark), t.schema())
     shuffles = {"resolve": _shuffles(resolved),
                 "read_transcripts": _shuffles(read_transcripts(spark, t))}
@@ -111,6 +115,7 @@ def measured(spark, tmp_path_factory):
         "compact_full": lambda: compact(spark, t, "compact-0"),
     }
     counts = {name: _jobs(spark, f"budget-{name}", fn) for name, fn in ops.items()}
+    counts["apply_batch_1_append"] = appended
     assert view.cursor() == v_before + 1
     return counts, shuffles, feed_plan
 

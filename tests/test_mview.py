@@ -448,19 +448,18 @@ def test_incremental_refresh_batch_plans_no_python_rdd(spark, tmp_path, monkeypa
     assert _mv_state(one) == _mv_state(two) == _recompute(spark, pipe.table)
 
 
-@pytest.mark.parametrize("case", ["compaction", "rollback", "rebucket", "cow", "late_upsert"])
+@pytest.mark.parametrize("case", ["compaction", "rollback", "rebucket", "merge", "late_upsert"])
 def test_refresh_over_rare_windows(spark, tmp_path, case):
     """Windows the hot path never sees: a compaction alone is a noop with
     no commit; a rollback retracting a conversation that lives only in
-    the retracted dir, a rebucket, a copy-on-write bucket rewrite and a
-    late upsert below a tombstone all leave the view equal to a
-    recompute."""
+    the retracted dir, a rebucket, a branch merge that adopts the
+    branch's compacted buckets and a late upsert below a tombstone all
+    leave the view equal to a recompute."""
     from hierarchical_to_relational_spark.operators.merge import compact, evolve_buckets
-    from tests.test_cdc import _rebucket_batch
+    from tests.test_cdc import _merge_branch_window, _rebucket_batch
 
     pipe = CdcPipeline(spark, str(tmp_path / "bl"), str(tmp_path / "t"),
-                       str(tmp_path / "ck"), n_buckets=2, text_mode="none",
-                       mode="cow" if case == "cow" else "mor")
+                       str(tmp_path / "ck"), n_buckets=2, text_mode="none")
     mv = ConvAggregateView(spark, pipe.table, str(tmp_path / "mv"))
     for i in range(2):
         pipe.apply_batch(_env_rows(spark, _rebucket_batch(i)), f"b{i}")
@@ -488,8 +487,8 @@ def test_refresh_over_rare_windows(spark, tmp_path, case):
         assert evolve_buckets(spark, pipe.table, 4, "rebucket-0")
         pipe.apply_batch(_env_rows(spark, _rebucket_batch(3)), "b3")
         assert mv.refresh()["mode"] == "incremental"
-    elif case == "cow":
-        pipe.apply_batch(_env_rows(spark, _rebucket_batch(2)), "b2")
+    elif case == "merge":
+        _merge_branch_window(spark, pipe, _rebucket_batch(2))
         assert mv.refresh()["mode"] == "incremental"
     else:
         pipe.apply_batch(_env_rows(spark, [(5000, "delete", "c3", None)]), "b2")
