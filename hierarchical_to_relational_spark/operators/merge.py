@@ -198,7 +198,7 @@ def apply_cdc_batch(
             cols.append(F.col(fld.name).cast(fld.dataType).alias(fld.name))
         else:  # older-schema batches: null-fill evolved cols
             cols.append(F.lit(None).cast(fld.dataType).alias(fld.name))
-    committed = table.commit_append(batch.select(*cols), batch_id=batch_id)
+    committed = table.commit_data(batch.select(*cols), batch_id=batch_id)
 
     stats = table.last_commit_stats if committed else {
         "rows_written": None, "upserts": None, "deletes": None, "max_lsn": None,
@@ -211,35 +211,35 @@ def apply_cdc_batch(
     }
 
 
-def _overwrite_resolved(
+def _rewrite(
     spark: SparkSession,
     table: SnapshotTable,
-    schema: T.StructType,
-    buckets: list[int],
     batch_id: str,
-    resolve_fn,
+    rewrite_fn,
+    buckets: list[int] | None = None,
+    cluster_by=None,
+    n_buckets: int | None = None,
     retries: int = 5,
-    cluster_by: str | None = None,
 ) -> bool:
-    """Copy-on-write commit loop with concurrent-writer validation: read the
-    listed buckets AT a pinned version, resolve via ``resolve_fn(current)``,
-    and commit against that base version. Deltas appended meanwhile are
-    merged into the new live entry by the table; a racing OVERWRITE raises
-    ``ConcurrentOverwriteError`` and we re-read + re-resolve from the new
-    state (the losing attempt's data files become unreferenced orphans)."""
+    """The copy-on-write retry loop: read ``buckets`` (None: all) at one
+    snapshot, commit ``rewrite_fn(rows)`` replacing exactly the dirs read
+    (``SnapshotTable.commit_data``). Deltas appended meanwhile stay
+    stacked on the rewrite; a racing rewrite that folded a read dir away
+    raises ``ConcurrentOverwriteError`` and we re-read + re-resolve from
+    the new state (the losing attempt's data files become unreferenced
+    orphans)."""
     for _ in range(retries):
-        base_v = table.current_version()
-        current = table.read(spark, buckets=buckets, version=base_v)
-        resolved = resolve_fn(current)
+        snap = table.snapshot()
+        replace = {b: ds for b, ds in snap["live"].items()
+                   if buckets is None or int(b) in buckets}
+        rows = table.read(spark, buckets=buckets, version=snap["version"])
         try:
-            return table.commit_overwrite_buckets(
-                resolved, buckets, batch_id=batch_id, base_version=base_v,
-                cluster_by=cluster_by, kind="compact",
-            )
+            return table.commit_data(rewrite_fn(rows), batch_id, replace=replace,
+                                     cluster_by=cluster_by, n_buckets=n_buckets)
         except ConcurrentOverwriteError:
             continue
     raise ConcurrentOverwriteError(
-        f"gave up overwriting buckets for {batch_id!r} after {retries} re-reads"
+        f"gave up rewriting for {batch_id!r} after {retries} re-reads"
     )
 
 
@@ -252,9 +252,10 @@ def compact(
     zorder: list[str] | None = None,
     buckets: list[int] | None = None,
 ) -> bool:
-    """Fold merge-on-read deltas down: read + resolve live buckets,
-    rewrite copy-on-write. Amortized over many appends; idempotent on
-    batch_id like any commit.
+    """Fold merge-on-read deltas down: read + resolve live buckets and
+    commit the result replacing the dirs read (``_rewrite``) — a delta
+    appended meanwhile stays stacked on top. Amortized over many appends;
+    idempotent on batch_id like any commit.
 
     ``buckets`` restricts the rewrite to a subset — PARTIAL compaction,
     the shape that matters at scale: zipf-hot buckets stack deltas far
@@ -310,10 +311,8 @@ def compact(
         cluster = lambda out: zorder_expr(out, zorder)
     else:
         cluster = "conv_id"
-    return _overwrite_resolved(
-        spark, table, schema, live_buckets, batch_id, resolve_fn,
-        cluster_by=cluster,
-    )
+    return _rewrite(spark, table, batch_id, resolve_fn, buckets=live_buckets,
+                    cluster_by=cluster)
 
 
 def compact_pressured(
@@ -352,8 +351,13 @@ def binpack_deltas(
 ) -> list[int]:
     """Size-aware delta BIN-PACKING (round 5): per bucket, merge the
     smallest delta dirs below ``target_bytes`` into one packed dir —
-    verbatim rows, no resolution shuffle, no base rewrite (see
-    SnapshotTable.commit_binpack). This is the cheap first line of
+    verbatim rows, no resolution shuffle, no base rewrite: one
+    ``SnapshotTable.commit_data`` whose ``replace`` names the picked dirs,
+    so the packed dir takes the first one's slot and a concurrent
+    compaction that folded a picked dir away wins (ConcurrentOverwriteError:
+    the caller re-selects). LWW resolution is order-insensitive, so
+    concatenating delta files never changes the resolved state; tombstones
+    and patches pass through untouched. This is the cheap first line of
     defense against the many-tiny-files problem a steady micro-batch
     stream creates: a real compaction folds state (resolve + rewrite of
     the whole bucket), bin-packing only reduces file/dir counts, so it
@@ -391,7 +395,7 @@ def binpack_deltas(
         for d in ds:
             by_dir.setdefault(d, []).append(int(b))
     packed = table.scan_dirs(spark, by_dir, snap)
-    if table.commit_binpack(packed, picked, batch_id):
+    if table.commit_data(packed, batch_id, replace=picked):
         return sorted(int(b) for b in picked)
     return []
 
@@ -459,29 +463,23 @@ def evolve_buckets(
     table: SnapshotTable,
     new_n_buckets: int,
     batch_id: str,
-    retries: int = 5,
 ) -> bool:
-    """Re-bucketing migration: read the full state at a pinned version,
+    """Re-bucketing migration: read the full state at one snapshot,
     resolve it (the rewrite doubles as a compaction), recompute ``_bucket``
     under the new count, and commit the whole table with the flipped bucket
-    spec. Subsequent writes and bucket-pruned reads use the new bucketing.
-    One full-table shuffle+rewrite — the same cost Iceberg pays to rewrite
-    into an evolved partition spec; amortized over the table's lifetime."""
+    spec — ``_rewrite`` with ``n_buckets``, which re-reads when a dir lands
+    after the read. Subsequent writes and bucket-pruned reads use the new
+    bucketing. One full-table shuffle+rewrite — the same cost Iceberg pays
+    to rewrite into an evolved partition spec; amortized over the table's
+    lifetime."""
     schema = table.schema()
-    for _ in range(retries):
-        base_v = table.current_version()
-        resolved = resolve(table.read(spark, version=base_v), schema)
-        rebucketed = resolved.withColumn(META_BUCKET, bucket_expr(F.col("conv_id"), new_n_buckets))
-        try:
-            return table.commit_rebucket(
-                rebucketed, new_n_buckets, batch_id,
-                base_version=base_v, cluster_by="conv_id",
-            )
-        except ConcurrentOverwriteError:
-            continue
-    raise ConcurrentOverwriteError(
-        f"gave up re-bucketing for {batch_id!r} after {retries} re-reads"
-    )
+
+    def rebucket(rows: DataFrame) -> DataFrame:
+        return resolve(rows, schema).withColumn(
+            META_BUCKET, bucket_expr(F.col("conv_id"), new_n_buckets))
+
+    return _rewrite(spark, table, batch_id, rebucket, cluster_by="conv_id",
+                    n_buckets=new_n_buckets)
 
 
 def lookup_conversation(

@@ -12,11 +12,12 @@ north rule needs:
 - **Idempotent commits keyed by batch_id** (the exactly-once primitive):
   re-committing an already-applied batch_id is a no-op — replays after
   failure/restart converge instead of duplicating.
-- **One write path per bucket**: rows are hash-bucketed on the merge key
-  (``conv_id``); a data batch appends delta files to the buckets it touches
-  (merge-on-read), and compaction rewrites buckets copy-on-write and
-  re-points the bucket→files mapping. Readers prune to the buckets they
-  need. These are the shapes of Iceberg MoR and CoW MERGE.
+- **One data commit** (``commit_data``): rows are hash-bucketed on the
+  merge key (``conv_id``); a data batch appends a delta dir to the buckets
+  it touches (merge-on-read), and compaction, bin-packing and re-bucketing
+  write a dir that REPLACES named live dirs (copy-on-write), conflicting
+  only when one of those is no longer live — Iceberg's ``RewriteFiles``
+  rule. Readers prune to the buckets they need.
 - **Additive schema evolution**: one rule, ``_union_schema`` — new
   columns append nullable and existing columns may only widen losslessly
   (mirroring the reference's additive output-schema generation,
@@ -333,10 +334,10 @@ def _union_schema(cur: T.StructType, incoming: T.StructType) -> T.StructType:
 
 
 class ConcurrentOverwriteError(RuntimeError):
-    """A bucket this overwrite wants to replace was itself overwritten (or
-    rewritten in a non-append way) since the base version the rewrite was
-    computed from. The caller must re-read and re-resolve — retrying the
-    pointer swap alone would drop the other writer's data."""
+    """A dir this rewrite replaces is no longer live (another rewrite
+    folded it away since the read), or a re-bucketing missed a dir
+    committed after its read. The caller must re-read and re-resolve —
+    retrying the pointer swap alone would drop the other writer's data."""
 
 
 class CommittedIds:
@@ -1454,7 +1455,7 @@ class SnapshotTable:
         snapshot (re-bucketing migration).
 
         ``kind`` labels the commit's LOGICAL effect in the snapshot
-        (append / overwrite / compact / rebucket / rollback / evolve):
+        (append / compact / rebucket / merge / rollback / evolve):
         incremental readers (``operators.merge.changes_since``) skip
         pure-rewrite kinds (compact, rebucket) — their live-map churn
         carries no logical change — and treat non-append live diffs from
@@ -1504,154 +1505,67 @@ class SnapshotTable:
                 continue
         raise CommitConflictError(f"gave up committing {batch_id!r} after {retries} attempts")
 
-    def commit_overwrite_buckets(
+    def commit_data(
         self,
         df: DataFrame,
-        buckets: list[int],
         batch_id: str,
-        base_version: int | None = None,
-        cluster_by: str | None = None,
-        kind: str = "overwrite",
+        replace: dict[str, list[str]] | None = None,
+        cluster_by=None,
+        n_buckets: int | None = None,
     ) -> bool:
-        """Copy-on-write commit: replace the listed buckets' contents with
-        ``df`` (which must carry a ``_bucket`` column and only rows in those
-        buckets). Returns False (no-op) if ``batch_id`` was already
-        committed — the idempotence/exactly-once primitive.
+        """The one data commit: write ``df`` (with a ``_bucket`` column) as
+        ONE commit dir and publish it. Returns False (no-op) if
+        ``batch_id`` was already committed — the exactly-once primitive.
 
-        ``base_version`` is the snapshot version the rewrite was computed
-        from (callers should ``read(version=v)`` and pass the same ``v``).
-        Concurrent-writer safety (Iceberg-style validation): at pointer-swap
-        time each listed bucket's dir list is compared to the base —
+        ``replace`` maps bucket → the live dirs whose rows ``df`` carries
+        for that bucket (None: an append). Per bucket the new dir takes the
+        slot of the first dir it replaces, or goes last when it replaces
+        none; the rest of the list is kept, so a delta appended after the
+        rewrite read its input stays stacked on the new dir — correct
+        because readers LWW-resolve: resolve(rewrite ∪ delta) ==
+        resolve(replaced ∪ delta). A bucket left with no dir is dropped.
+        The one conflict rule (Iceberg ``RewriteFiles``): a replaced dir
+        that is no longer live for its bucket raises
+        ``ConcurrentOverwriteError`` — the caller re-reads and retries.
 
-        - unchanged → replaced by the rewrite;
-        - grown by appended deltas → the rewrite PLUS the unseen delta dirs
-          become the new entry (correct because readers LWW-resolve:
-          resolve(rewrite ∪ delta) == resolve(base ∪ batch ∪ delta));
-        - changed any other way (a racing overwrite) →
-          ``ConcurrentOverwriteError`` — the caller must re-read+re-resolve."""
+        ``n_buckets`` re-buckets: ``df`` is the whole table under the new
+        count, flipped in the same atomic snapshot (Iceberg bucket-spec
+        evolution); ``replace`` names every live dir, and a live dir it
+        does not name (committed after the read) conflicts.
+
+        The snapshot's kind follows: ``append`` without ``replace``,
+        ``rebucket`` with ``n_buckets``, else ``compact`` — a pure rewrite
+        that feeds and view refreshes skip, so a replacing commit must hold
+        the same logical rows as the dirs it replaces."""
         if batch_id in self.committed_batch_ids():
             return False
-        if base_version is None:
-            base_version = self.current_version()
-        base_live: dict[str, list[str]] = self.snapshot(base_version)["live"]
+        replace = replace or {}
         commit_rel, written = self._write_commit_data(df, cluster_by=cluster_by)
-
-        def update(live: dict) -> dict:
-            for b in buckets:
-                key = str(b)
-                cur_dirs = live.get(key, [])
-                base_dirs = base_live.get(key, [])
-                if cur_dirs[: len(base_dirs)] != base_dirs:
-                    raise ConcurrentOverwriteError(
-                        f"bucket {key} changed non-append-wise since base "
-                        f"v{base_version}; re-read and re-resolve"
-                    )
-                unseen = cur_dirs[len(base_dirs):]  # deltas landed after our read
-                new_dirs = ([commit_rel] if key in written else []) + unseen
-                if new_dirs:
-                    live[key] = new_dirs
-                else:
-                    live.pop(key, None)  # bucket emptied (all rows deleted)
-            return live
-
-        return self._commit(
-            batch_id, None, update, commit_meta=(commit_rel, written), kind=kind
-        )
-
-    def commit_append(self, df: DataFrame, batch_id: str) -> bool:
-        """Merge-on-read commit: append ``df`` (with ``_bucket`` column) as
-        delta files on top of each touched bucket — O(batch) write cost,
-        independent of table size. Readers union base + deltas and resolve
-        LWW; ``compact`` (a copy-on-write commit) folds deltas back down.
-        Idempotent on batch_id like every commit."""
-        if batch_id in self.committed_batch_ids():
-            return False
-        commit_rel, written = self._write_commit_data(df)
-
-        def update(live: dict) -> dict:
-            for b in written:
-                live.setdefault(b, []).append(commit_rel)
-            return live
-
-        return self._commit(
-            batch_id, None, update, commit_meta=(commit_rel, written), kind="append"
-        )
-
-    def commit_rebucket(
-        self,
-        df: DataFrame,
-        new_n_buckets: int,
-        batch_id: str,
-        base_version: int | None = None,
-        cluster_by: str | None = None,
-    ) -> bool:
-        """Bucket-spec evolution: replace the ENTIRE table with ``df``
-        (already re-bucketed under ``new_n_buckets``) and flip the bucket
-        count in the same atomic snapshot — a table sized at small scale
-        can re-bucket when data grows 100× (Iceberg bucket-spec evolution).
-
-        Strictest validation: ANY commit since ``base_version`` conflicts
-        (the rewrite covered the whole table, so nothing can be merged) —
-        callers re-read and retry via ``operators.merge.evolve_buckets``."""
-        if batch_id in self.committed_batch_ids():
-            return False
-        if base_version is None:
-            base_version = self.current_version()
-        base_live = self.snapshot(base_version)["live"]
-        commit_rel, written = self._write_commit_data(df, cluster_by=cluster_by)
-
-        def update(live: dict) -> dict:
-            if live != base_live:
-                raise ConcurrentOverwriteError(
-                    f"table changed since rebucket base v{base_version}; re-read and retry"
-                )
-            return {b: [commit_rel] for b in written}
-
-        return self._commit(
-            batch_id, None, update,
-            commit_meta=(commit_rel, written), n_buckets_override=new_n_buckets,
-            kind="rebucket",
-        )
-
-    def commit_binpack(self, df: DataFrame, replace: dict[str, list[str]],
-                       batch_id: str) -> bool:
-        """BIN-PACK commit (round 5): replace, per bucket, a set of small
-        delta dirs with ONE packed dir holding exactly their rows —
-        verbatim, NO resolution. LWW resolution is order-insensitive, so
-        concatenating delta files never changes the resolved state; what
-        it buys is fewer dirs/files per bucket (read fan-in, manifest
-        size, open() count on an object store) at a fraction of a real
-        compaction's cost — no resolve shuffle, no base rewrite, and
-        tombstones/patches pass through untouched so their retention
-        semantics are unaffected. ``replace`` maps bucket → the dirs whose
-        rows for that bucket ``df`` carries. Conflict rule: every replaced
-        dir must still be live for its bucket at commit time (a concurrent
-        compaction that folded one away wins — ConcurrentOverwriteError,
-        caller re-selects). kind='compact': a pure rewrite, skipped by
-        incremental readers."""
-        if batch_id in self.committed_batch_ids():
-            return False
-        commit_rel, written = self._write_commit_data(df)
 
         def update(live: dict) -> dict:
             for b, olds in replace.items():
-                cur = live.get(b, [])
-                if not set(olds) <= set(cur):
+                if not set(olds) <= set(live.get(b, [])):
                     raise ConcurrentOverwriteError(
-                        f"bucket {b}: a packed delta was rewritten since "
-                        "selection; re-select and retry")
-                pos = min(cur.index(d) for d in olds)
+                        f"bucket {b}: a replaced dir is no longer live; re-read and retry")
+            if n_buckets is not None:
+                if any(set(ds) - set(replace.get(b, [])) for b, ds in live.items()):
+                    raise ConcurrentOverwriteError(
+                        "a dir was committed after the rebucket read; re-read and retry")
+                return {b: [commit_rel] for b in written}
+            for b in dict.fromkeys([*written, *replace]):
+                cur, olds = live.get(b, []), replace.get(b, [])
                 new = [d for d in cur if d not in olds]
                 if b in written:
-                    new.insert(pos, commit_rel)
+                    new.insert(min((cur.index(d) for d in olds), default=len(new)), commit_rel)
                 if new:
                     live[b] = new
                 else:
                     live.pop(b, None)
             return live
 
-        return self._commit(batch_id, None, update,
-                            commit_meta=(commit_rel, written), kind="compact")
+        kind = "rebucket" if n_buckets is not None else "compact" if replace else "append"
+        return self._commit(batch_id, None, update, commit_meta=(commit_rel, written),
+                            n_buckets_override=n_buckets, kind=kind)
 
     def delta_depth(self) -> int:
         """Max commit dirs stacked on any bucket (compaction trigger)."""
@@ -1786,7 +1700,7 @@ class SnapshotTable:
            concurrent writer that has written data but not yet swapped its
            snapshot pointer (crash leftovers are collected on a later run).
 
-        Safe against concurrent forward COMMITS (appends/overwrites only
+        Safe against concurrent forward COMMITS (data commits only
         reference their own freshly-written dirs, which the grace window
         protects). ``rollback`` is the one commit that re-references OLD
         dirs: it bumps their mtimes before committing, the orphan loop

@@ -1072,8 +1072,8 @@ def test_feed_binpack_and_rollback_share_one_scan(spark, tmp_path, monkeypatch):
     assert wide.where(F.col("change_op") == "u").count() == 4 * 5
 
     captured = []
-    real = t.commit_binpack
-    monkeypatch.setattr(t, "commit_binpack",
+    real = t.commit_data
+    monkeypatch.setattr(t, "commit_data",
                         lambda df, *a, **k: captured.append(df) or real(df, *a, **k))
     assert binpack_deltas(spark, t, "bp0", target_bytes=10 << 20, min_dirs=3)
     assert len(captured) == 1 and _file_scans(captured[0]) == 1

@@ -15,7 +15,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from hierarchical_to_relational_spark.operators.merge import (
+    binpack_deltas,
     compact,
+    evolve_buckets,
     lookup_conversations,
     read_transcripts,
     resolve,
@@ -36,6 +38,8 @@ BUDGET = {
     "changes_since_1_append": 3,
     "view_refresh_incremental": 4,
     "compact_full": 5,
+    "binpack": 2,
+    "rebucket": 5,
 }
 
 
@@ -84,7 +88,8 @@ def measured(spark, tmp_path_factory):
     """Job counts of every budgeted operation, measured in a fixed order
     on one table: five appends over 4 buckets (the fifth counted), a view
     built after the fourth, then the full compaction last (it rewrites the
-    table). Also the shuffle count of ``resolve`` and of
+    table). The bin-pack and then the re-bucketing to 8 run on a second
+    table of the same five appends. Also the shuffle count of ``resolve`` and of
     ``read_transcripts`` over the uncompacted table, and the executed plan
     of the one-append feed."""
     d = tmp_path_factory.mktemp("budget")
@@ -95,6 +100,10 @@ def measured(spark, tmp_path_factory):
         pipe.apply_batch(_env_rows(spark, _batch(i)), f"b{i}")
     view = ConvAggregateView(spark, t, str(d / "mv"), n_buckets=4)
     view.refresh()
+    rw = CdcPipeline(spark, str(d / "binlog"), str(d / "rw"), str(d / "rw-ck"),
+                     n_buckets=4, text_mode="none")
+    for i in range(5):
+        rw.apply_batch(_env_rows(spark, _batch(i)), f"b{i}")
     v_before = t.current_version()
     env = _env_rows(spark, _batch(4))
     appended = _jobs(spark, "budget-apply_batch_1_append",
@@ -113,10 +122,13 @@ def measured(spark, tmp_path_factory):
         "changes_since_1_append": lambda: changes_since(spark, t, v_before).collect(),
         "view_refresh_incremental": view.refresh,
         "compact_full": lambda: compact(spark, t, "compact-0"),
+        "binpack": lambda: binpack_deltas(spark, rw.table, "binpack-0", min_dirs=3),
+        "rebucket": lambda: evolve_buckets(spark, rw.table, 8, "rebucket-0"),
     }
     counts = {name: _jobs(spark, f"budget-{name}", fn) for name, fn in ops.items()}
     counts["apply_batch_1_append"] = appended
     assert view.cursor() == v_before + 1
+    assert [h["kind"] for h in rw.table.history()][-2:] == ["compact", "rebucket"]
     return counts, shuffles, feed_plan
 
 

@@ -145,7 +145,7 @@ def test_read_with_stats_broadcast_hint(spark, tmp_path):
         F.concat(F.lit("c"), F.col("id")).alias("conv_id"),
         F.col("id").alias("v"),
     )
-    t.commit_append(dim, batch_id="b0")
+    t.commit_data(dim, batch_id="b0")
     assert 0 < t.total_bytes() < 32 * 1024 * 1024
 
     fact = spark.range(10_000).select(

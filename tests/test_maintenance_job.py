@@ -237,7 +237,7 @@ def test_maintain_cycle_action(spark, tmp_path, capsys, table):
 
     live = t.read(spark).limit(6).persist()
     for i in range(3):
-        t.commit_append(live.withColumn("_lsn", F.col("_lsn") + 0), f"dribble-{i}")
+        t.commit_data(live.withColumn("_lsn", F.col("_lsn") + 0), f"dribble-{i}")
     live.unpersist()
     m2 = _run(capsys, "--table", root, "maintain", "--compact-depth", "99",
               "--min-dirs", "2", "--batch-id", "cycle-2")

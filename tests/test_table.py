@@ -30,13 +30,22 @@ def _buckets(df):
     return sorted(r[0] for r in df.select("_bucket").distinct().collect())
 
 
+def _overwrite(t, df, buckets, batch_id, as_of=None):
+    """Commit ``df`` replacing ``buckets``' live dirs as of version
+    ``as_of`` (None: the current snapshot) — a copy-on-write rewrite of
+    those buckets."""
+    live = t.snapshot(as_of)["live"]
+    return t.commit_data(df, batch_id,
+                         replace={str(b): live[str(b)] for b in buckets if str(b) in live})
+
+
 def test_create_and_first_commit(spark, tmp_path):
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=4)
     assert t.current_version() == 0
     assert t.read(spark).count() == 0
 
     df = _bucketed(spark, t, [("a", 1), ("b", 2), ("c", 3)])
-    assert t.commit_overwrite_buckets(df, _buckets(df), "b1") is True
+    assert _overwrite(t, df, _buckets(df), "b1") is True
     out = t.read(spark)
     assert {tuple(r) for r in out.select("k", "v").collect()} == {("a", 1), ("b", 2), ("c", 3)}
 
@@ -44,11 +53,11 @@ def test_create_and_first_commit(spark, tmp_path):
 def test_idempotent_commit_same_batch_id(spark, tmp_path):
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=4)
     df = _bucketed(spark, t, [("a", 1)])
-    assert t.commit_overwrite_buckets(df, _buckets(df), "b1") is True
+    assert _overwrite(t, df, _buckets(df), "b1") is True
     v = t.current_version()
     # replaying the same batch must be a no-op (exactly-once primitive)
     df2 = _bucketed(spark, t, [("a", 999)])
-    assert t.commit_overwrite_buckets(df2, _buckets(df2), "b1") is False
+    assert _overwrite(t, df2, _buckets(df2), "b1") is False
     assert t.current_version() == v
     assert t.read(spark).select("v").collect()[0][0] == 1
 
@@ -56,12 +65,12 @@ def test_idempotent_commit_same_batch_id(spark, tmp_path):
 def test_copy_on_write_only_affected_buckets(spark, tmp_path):
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=8)
     df = _bucketed(spark, t, [(f"k{i}", i) for i in range(20)])
-    t.commit_overwrite_buckets(df, _buckets(df), "b1")
+    _overwrite(t, df, _buckets(df), "b1")
     live_before = dict(t.snapshot()["live"])
 
     upd = _bucketed(spark, t, [("k0", 100)])
     (b0,) = _buckets(upd)
-    t.commit_overwrite_buckets(upd, [b0], "b2")
+    _overwrite(t, upd, [b0], "b2")
     live_after = dict(t.snapshot()["live"])
     # only k0's bucket re-pointed; all others untouched
     changed = {b for b in live_before if live_before[b] != live_after.get(b)}
@@ -75,9 +84,9 @@ def test_bucket_emptied_is_dropped(spark, tmp_path):
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=4)
     df = _bucketed(spark, t, [("a", 1)])
     (b,) = _buckets(df)
-    t.commit_overwrite_buckets(df, [b], "b1")
+    _overwrite(t, df, [b], "b1")
     empty = spark.createDataFrame([], df.schema)
-    t.commit_overwrite_buckets(empty, [b], "b2")
+    _overwrite(t, empty, [b], "b2")
     assert t.read(spark).count() == 0
 
 
@@ -86,7 +95,7 @@ def test_orphan_files_invisible(spark, tmp_path):
     snapshot references; reads never see them."""
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=4)
     df = _bucketed(spark, t, [("a", 1)])
-    t.commit_overwrite_buckets(df, _buckets(df), "b1")
+    _overwrite(t, df, _buckets(df), "b1")
     # simulate a crashed writer: data lands, snapshot never created
     orphan_dir = os.path.join(t.root, "data", "c-orphan")
     _bucketed(spark, t, [("zz", 999)]).write.parquet(orphan_dir)
@@ -98,7 +107,7 @@ def test_orphan_files_invisible(spark, tmp_path):
 def test_additive_evolution_and_null_fill(spark, tmp_path):
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=4)
     df = _bucketed(spark, t, [("a", 1)])
-    t.commit_overwrite_buckets(df, _buckets(df), "b1")
+    _overwrite(t, df, _buckets(df), "b1")
 
     assert t.evolve_to(t.schema().add("w", T.StringType()), "b2") is True
     assert t.schema().fieldNames() == ["k", "v", "w"]
@@ -111,7 +120,7 @@ def test_additive_evolution_and_null_fill(spark, tmp_path):
 
     wide = spark.createDataFrame([("b", 2, "x")], "k string, v int, w string")
     wide = wide.withColumn("_bucket", t.bucket_col()(F.col("k")))
-    t.commit_overwrite_buckets(wide, _buckets(wide), "b3")
+    _overwrite(t, wide, _buckets(wide), "b3")
     out = {tuple(r) for r in t.read(spark).select("k", "v", "w").collect()}
     assert out == {("a", 1, None), ("b", 2, "x")}
 
@@ -134,7 +143,7 @@ def test_mixed_schema_dirs_read_in_one_scan(spark, tmp_path):
 
     def append(rows, schema, batch_id):
         df = spark.createDataFrame(rows, schema)
-        assert t.commit_append(df.withColumn("_bucket", t.bucket_col()(F.col("k"))), batch_id)
+        assert t.commit_data(df.withColumn("_bucket", t.bucket_col()(F.col("k"))), batch_id)
 
     append([("a", 1, 1.5, Decimal("1.25"))], narrow, "b1")
     assert t.evolve_to(t.schema().add("w", T.StringType()), "b2")
@@ -183,13 +192,13 @@ def test_non_additive_evolution_rejected(spark, tmp_path):
     and a frame that lacks a column lands with that column null."""
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=4)
     df = _bucketed(spark, t, [("a", 1)])
-    t.commit_overwrite_buckets(df, _buckets(df), "b1")
+    _overwrite(t, df, _buckets(df), "b1")
     v = t.current_version()
     narrower = T.StructType([T.StructField("k", T.StringType(), False)])
     assert t.evolve_to(narrower, "b2") is False
     assert t.current_version() == v and t.schema() == SCHEMA
     narrow = spark.createDataFrame([("b",)], "k string")
-    assert t.commit_append(narrow.withColumn("_bucket", t.bucket_col()(F.col("k"))), "b3")
+    assert t.commit_data(narrow.withColumn("_bucket", t.bucket_col()(F.col("k"))), "b3")
     assert t.schema() == SCHEMA
     out = {tuple(r) for r in t.read(spark).select("k", "v").collect()}
     assert out == {("a", 1), ("b", None)}
@@ -204,7 +213,7 @@ def test_evolve_to_is_the_union_rule(spark, tmp_path):
     from hierarchical_to_relational_spark.operators.merge import apply_cdc_batch
 
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
-    t.commit_append(_bucketed(spark, t, [("a", 1)]), "b0")
+    t.commit_data(_bucketed(spark, t, [("a", 1)]), "b0")
     br = t.create_branch("exp")
 
     # a non-nullable new field is recorded nullable: old rows read null
@@ -264,9 +273,9 @@ def test_data_commit_keeps_a_concurrent_evolution(spark, tmp_path):
         t._write_commit_data = racing_write
         df = _bucketed(spark, t, [("a", 1)])
         if kind == "append":
-            assert t.commit_append(df, "b1")
+            assert t.commit_data(df, "b1")
         else:
-            assert t.commit_overwrite_buckets(df, _buckets(df), "b1")
+            assert _overwrite(t, df, _buckets(df), "b1")
         assert t.schema().fieldNames() == ["k", "v", "w"], kind
         assert [tuple(r) for r in t.read(spark).select("k", "v", "w").collect()] == [("a", 1, None)]
 
@@ -274,10 +283,10 @@ def test_data_commit_keeps_a_concurrent_evolution(spark, tmp_path):
 def test_time_travel(spark, tmp_path):
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=4)
     d1 = _bucketed(spark, t, [("a", 1)])
-    t.commit_overwrite_buckets(d1, _buckets(d1), "b1")
+    _overwrite(t, d1, _buckets(d1), "b1")
     v1 = t.current_version()
     d2 = _bucketed(spark, t, [("a", 2)])
-    t.commit_overwrite_buckets(d2, _buckets(d2), "b2")
+    _overwrite(t, d2, _buckets(d2), "b2")
     assert t.read(spark).select("v").collect()[0][0] == 2
     assert t.read(spark, version=v1).select("v").collect()[0][0] == 1
 
@@ -297,7 +306,7 @@ def test_concurrent_appends_both_commit(spark, tmp_path):
     results = {}
 
     def go(handle, df, bid):
-        results[bid] = handle.commit_append(df, batch_id=bid)
+        results[bid] = handle.commit_data(df, batch_id=bid)
 
     th1 = threading.Thread(target=go, args=(t1, d1, "w1"))
     th2 = threading.Thread(target=go, args=(t2, d2, "w2"))
@@ -314,7 +323,7 @@ def test_overwrite_merges_concurrent_append_deltas(spark, tmp_path):
     the rewritten base (readers LWW-resolve), so no committed data is lost."""
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=1)
     d1 = _bucketed(spark, t, [("a", 1), ("b", 2)])
-    t.commit_append(d1, "w1")
+    t.commit_data(d1, "w1")
 
     base_v = t.current_version()
     rewrite = _bucketed(spark, t, [("a", 10), ("b", 20)])  # compactor's output
@@ -322,13 +331,73 @@ def test_overwrite_merges_concurrent_append_deltas(spark, tmp_path):
     # concurrent writer appends to the same bucket after the read
     other = SnapshotTable(t.root)
     d2 = _bucketed(spark, other, [("c", 3)])
-    assert other.commit_append(d2, "w2") is True
+    assert other.commit_data(d2, "w2") is True
 
-    assert t.commit_overwrite_buckets(rewrite, [0], "compact", base_version=base_v) is True
+    assert _overwrite(t, rewrite, [0], "compact", as_of=base_v) is True
     live = t.snapshot()["live"]["0"]
     assert len(live) == 2  # rewrite dir + the unseen delta dir
     out = {tuple(r) for r in t.read(spark).select("k", "v").collect()}
     assert out == {("a", 10), ("b", 20), ("c", 3)}
+
+
+def test_commit_data_replace_rule(spark, tmp_path):
+    """``commit_data``'s one placement and conflict rule, on a one-bucket
+    table: an append goes last; a replacing dir takes the slot of the
+    first dir it replaces and the rest keep their order; a delta appended
+    after a rewrite's read stays after the rewrite; a replaced dir that is
+    gone, or a re-bucketing that misses a live dir, conflicts and writes
+    no snapshot; a bucket left with no dir is dropped."""
+    from hierarchical_to_relational_spark.table.snapshot_table import (
+        ConcurrentOverwriteError,
+        bucket_expr,
+    )
+
+    t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=1)
+
+    def dirs():
+        return t.snapshot()["live"].get("0", [])
+
+    for i in range(4):
+        assert t.commit_data(_bucketed(spark, t, [(f"k{i}", i)]), f"a{i}")
+        assert len(dirs()) == i + 1
+    a0, a1, a2, a3 = dirs()
+    # bin-pack the two middle dirs: the packed dir takes a1's slot
+    assert t.commit_data(_bucketed(spark, t, [("k1", 1), ("k2", 2)]), "pack",
+                         replace={"0": [a1, a2]})
+    first, packed, last = dirs()
+    assert (first, last) == (a0, a3) and packed not in (a1, a2)
+    # a compaction reads, an append lands, then the compaction commits
+    read = dirs()
+    assert t.commit_data(_bucketed(spark, t, [("k4", 4)]), "a4")
+    a4 = dirs()[-1]
+    assert t.commit_data(_bucketed(spark, t, [(f"k{i}", i) for i in range(4)]), "compact",
+                         replace={"0": read})
+    c = dirs()[0]
+    assert dirs() == [c, a4]
+    assert {tuple(r) for r in t.read(spark).select("k", "v").collect()} == {
+        (f"k{i}", i) for i in range(5)}
+
+    v = t.current_version()
+    with pytest.raises(ConcurrentOverwriteError):  # a0 was compacted away
+        t.commit_data(_bucketed(spark, t, [("k0", 0)]), "stale", replace={"0": [a0]})
+    with pytest.raises(ConcurrentOverwriteError):  # a4 landed after the read
+        t.commit_data(_bucketed(spark, t, [("k0", 0)]), "rb-stale", replace={"0": [c]},
+                      n_buckets=2)
+    assert t.current_version() == v and dirs() == [c, a4]
+
+    # a rewrite holding no row of the bucket (every row a GC'd tombstone)
+    empty = spark.createDataFrame([], "k string, v int").withColumn("_bucket", F.lit(0))
+    assert t.commit_data(empty, "drop", replace={"0": [c, a4]})
+    assert t.snapshot()["live"] == {}
+
+    assert t.commit_data(_bucketed(spark, t, [("k5", 5), ("k6", 6)]), "a5")
+    two = (spark.createDataFrame([("k5", 5), ("k6", 6)], "k string, v int")
+           .withColumn("_bucket", bucket_expr(F.col("k"), 2)))
+    assert t.commit_data(two, "rebucket", replace={"0": dirs()}, n_buckets=2)
+    assert t.n_buckets == 2
+    assert len({d for ds in t.snapshot()["live"].values() for d in ds}) == 1
+    assert [h["kind"] for h in t.history()][1:] == (
+        ["append"] * 4 + ["compact", "append", "compact", "compact", "append", "rebucket"])
 
 
 def test_racing_overwrites_raise_conflict(spark, tmp_path):
@@ -337,27 +406,25 @@ def test_racing_overwrites_raise_conflict(spark, tmp_path):
     from hierarchical_to_relational_spark.table.snapshot_table import ConcurrentOverwriteError
 
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=1)
-    t.commit_append(_bucketed(spark, t, [("a", 1)]), "w1")
+    t.commit_data(_bucketed(spark, t, [("a", 1)]), "w1")
     base_v = t.current_version()
 
     winner, loser = SnapshotTable(t.root), SnapshotTable(t.root)
-    assert winner.commit_overwrite_buckets(
-        _bucketed(spark, winner, [("a", 2)]), [0], "c1", base_version=base_v
-    ) is True
+    assert _overwrite(winner, _bucketed(spark, winner, [("a", 2)]), [0], "c1",
+                      as_of=base_v) is True
     with pytest.raises(ConcurrentOverwriteError):
-        loser.commit_overwrite_buckets(
-            _bucketed(spark, loser, [("a", 3)]), [0], "c2", base_version=base_v
-        )
+        _overwrite(loser, _bucketed(spark, loser, [("a", 3)]), [0], "c2",
+                   as_of=base_v)
     assert t.read(spark).select("v").collect()[0][0] == 2
 
 
 def test_overwrite_retry_rereads_and_wins(spark, tmp_path):
     """The merge layer's copy-on-write loop re-reads + re-resolves after a
     conflicting overwrite and converges on the union of both writers."""
-    from hierarchical_to_relational_spark.operators.merge import _overwrite_resolved
+    from hierarchical_to_relational_spark.operators.merge import _rewrite
 
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=1)
-    t.commit_append(_bucketed(spark, t, [("a", 1)]), "w1")
+    t.commit_data(_bucketed(spark, t, [("a", 1)]), "w1")
 
     other = SnapshotTable(t.root)
     calls = {"n": 0}
@@ -365,13 +432,11 @@ def test_overwrite_retry_rereads_and_wins(spark, tmp_path):
     def resolve_fn(current):
         calls["n"] += 1
         if calls["n"] == 1:  # inject a racing overwrite between read and commit
-            other.commit_overwrite_buckets(
-                _bucketed(spark, other, [("z", 9)]), [0], "racer"
-            )
+            _overwrite(other, _bucketed(spark, other, [("z", 9)]), [0], "racer")
         # rewrite = current state with v bumped by 100
         return current.withColumn("v", F.col("v") + 100)
 
-    assert _overwrite_resolved(spark, t, SCHEMA, [0], "compact", resolve_fn) is True
+    assert _rewrite(spark, t, "compact", resolve_fn, buckets=[0]) is True
     assert calls["n"] == 2
     out = {tuple(r) for r in t.read(spark).select("k", "v").collect()}
     assert out == {("z", 109)}  # second attempt read the racer's state
@@ -402,10 +467,10 @@ def test_expire_snapshots_bounds_metadata_and_keeps_idempotence(spark, tmp_path)
 
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
     for i in range(12):
-        t.commit_append(_bucketed(spark, t, [(f"k{i}", i)]), str(i))
+        t.commit_data(_bucketed(spark, t, [(f"k{i}", i)]), str(i))
     # fold deltas so old append dirs become dereferenced
     full = _bucketed(spark, t, [(f"k{i}", i) for i in range(12)])
-    t.commit_overwrite_buckets(full, [0, 1], "12")
+    _overwrite(t, full, [0, 1], "12")
 
     n_dirs_before = len(glob.glob(os.path.join(t.root, "data", "c-*")))
     # retain only the current snapshot: historical snapshots stop pinning
@@ -419,8 +484,8 @@ def test_expire_snapshots_bounds_metadata_and_keeps_idempotence(spark, tmp_path)
     # fresh handle (cold cache): every old batch id still reads committed
     t2 = SnapshotTable(t.root)
     for i in range(13):
-        assert t2.commit_append(_bucketed(spark, t2, [("dup", 99)]), str(i)) is False
-    assert t2.commit_append(_bucketed(spark, t2, [("new", 1)]), "13") is True
+        assert t2.commit_data(_bucketed(spark, t2, [("dup", 99)]), str(i)) is False
+    assert t2.commit_data(_bucketed(spark, t2, [("new", 1)]), "13") is True
     got = {tuple(r) for r in t2.read(spark).select("k", "v").collect()}
     assert got == {(f"k{i}", i) for i in range(12)} | {("new", 1)}
 
@@ -432,7 +497,7 @@ def test_orphan_grace_protects_inflight_commit(spark, tmp_path):
     import os
 
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
-    t.commit_append(_bucketed(spark, t, [("a", 1)]), "b0")
+    t.commit_data(_bucketed(spark, t, [("a", 1)]), "b0")
     # simulate in-flight: write data without committing the pointer
     df = _bucketed(spark, t, [("b", 2)])
     t._write_commit_data(df)
@@ -446,10 +511,10 @@ def test_orphan_grace_protects_inflight_commit(spark, tmp_path):
 def test_delta_bytes_from_manifest(spark, tmp_path):
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=1)
     assert t.delta_bytes() == 0
-    t.commit_overwrite_buckets(_bucketed(spark, t, [("base", 0)]), [0], "b0")
+    _overwrite(t, _bucketed(spark, t, [("base", 0)]), [0], "b0")
     assert t.delta_bytes() == 0  # base only, no deltas
-    t.commit_append(_bucketed(spark, t, [("d1", 1)]), "b1")
-    t.commit_append(_bucketed(spark, t, [("d2", 2)]), "b2")
+    t.commit_data(_bucketed(spark, t, [("d1", 1)]), "b1")
+    t.commit_data(_bucketed(spark, t, [("d2", 2)]), "b2")
     n = t.delta_bytes()
     assert n > 0
     # matches the filesystem truth
@@ -483,7 +548,7 @@ def test_rebucket_migration(spark, tmp_path):
     rows = [(f"c{i}", 0, i, i + 1, None, "u") for i in range(40)]
     df = spark.createDataFrame(rows, schema).withColumn(
         "_bucket", t.bucket_col()(F.col("conv_id")))
-    t.commit_append(df.select("_bucket", *schema.fieldNames()), "b0")
+    t.commit_data(df.select("_bucket", *schema.fieldNames()), "b0")
     before = {tuple(r) for r in t.read(spark).select("conv_id", "v").collect()}
 
     assert evolve_buckets(spark, t, 16, batch_id="rebucket-16") is True
@@ -500,14 +565,14 @@ def test_rebucket_migration(spark, tmp_path):
     # appends after migration land under the new bucketing
     extra = spark.createDataFrame([("c99", 0, 99, 100, None, "u")], schema).withColumn(
         "_bucket", t.bucket_col()(F.col("conv_id")))
-    t.commit_append(extra.select("_bucket", *schema.fieldNames()), "b1")
+    t.commit_data(extra.select("_bucket", *schema.fieldNames()), "b1")
     assert int(extra.select("_bucket").first()[0]) in [int(b) for b in t.snapshot()["live"]]
 
     # a rebucket computed against a stale base conflicts
     stale_base = t.current_version() - 1
     with pytest.raises(ConcurrentOverwriteError):
-        t.commit_rebucket(df.select("_bucket", *schema.fieldNames()), 8,
-                          "rebucket-8", base_version=stale_base)
+        t.commit_data(df.select("_bucket", *schema.fieldNames()), "rebucket-8",
+                      replace=t.snapshot(stale_base)["live"], n_buckets=8)
 
 
 def test_rollback_and_history(spark, tmp_path):
@@ -515,10 +580,10 @@ def test_rollback_and_history(spark, tmp_path):
     commit (history preserved, idempotent); history() lists the log."""
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
     d1 = _bucketed(spark, t, [("a", 1)])
-    t.commit_overwrite_buckets(d1, _buckets(d1), "b1")
+    _overwrite(t, d1, _buckets(d1), "b1")
     v1 = t.current_version()
     d2 = _bucketed(spark, t, [("a", 2), ("b", 9)])
-    t.commit_overwrite_buckets(d2, _buckets(d2), "b2")
+    _overwrite(t, d2, _buckets(d2), "b2")
     assert {tuple(r) for r in t.read(spark).select("k", "v").collect()} == {("a", 2), ("b", 9)}
 
     assert t.rollback(v1, batch_id="rb1") is True
@@ -532,7 +597,7 @@ def test_rollback_and_history(spark, tmp_path):
 
     # writes continue normally after rollback
     d3 = _bucketed(spark, t, [("c", 3)])
-    t.commit_append(d3, "b3")
+    t.commit_data(d3, "b3")
     got = {tuple(r) for r in t.read(spark).select("k", "v").collect()}
     assert got == {("a", 1), ("c", 3)}
 
@@ -621,11 +686,11 @@ def test_rollback_protects_rereferenced_dirs_from_orphan_gc(spark, tmp_path):
 
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
     d1 = _bucketed(spark, t, [("a", 1)])
-    t.commit_overwrite_buckets(d1, _buckets(d1), "b1")
+    _overwrite(t, d1, _buckets(d1), "b1")
     v1 = t.current_version()
     dirs_v1 = {d for ds in t.snapshot(v1)["live"].values() for d in ds}
     d2 = _bucketed(spark, t, [("a", 2)])
-    t.commit_overwrite_buckets(d2, _buckets(d2), "b2")
+    _overwrite(t, d2, _buckets(d2), "b2")
 
     # age the v1 dirs far past any grace window
     old = time.time() - 7200
@@ -779,7 +844,7 @@ def test_legacy_table_formats_rejected(spark, tmp_path):
 
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=4)
     df = _bucketed(spark, t, [(f"k{i}", i) for i in range(8)])
-    t.commit_overwrite_buckets(df, _buckets(df), "b1")
+    _overwrite(t, df, _buckets(df), "b1")
     v = t.current_version()
     (d,) = {d for ds in t.snapshot()["live"].values() for d in ds}
     sidecar = os.path.join(t.root, d, FILE_STATS_NAME)
@@ -850,7 +915,7 @@ def test_v0_without_commit_bytes_still_opens(spark, tmp_path):
     t = SnapshotTable(t.root)
     assert t.read(spark).count() == 0 and t.total_bytes() == 0
     df = _bucketed(spark, t, [("a", 1), ("b", 2)])
-    assert t.commit_append(df, "b1")
+    assert t.commit_data(df, "b1")
     assert t.read(spark).count() == 2
     assert t.expire_snapshots(retain_last=1)["expired_snapshots"] == 1
     assert t.read(spark).count() == 2
@@ -869,10 +934,10 @@ def test_lost_commit_bytes_snapshot_rolls_back_and_expires(spark, tmp_path):
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
     rows = [(f"k{i}", i) for i in range(6)]
     for i in (0, 3):
-        assert t.commit_append(_bucketed(spark, t, rows[i: i + 3]), f"a{i}")
+        assert t.commit_data(_bucketed(spark, t, rows[i: i + 3]), f"a{i}")
     v_pre = t.current_version()
     full = _bucketed(spark, t, rows)
-    assert t.commit_overwrite_buckets(full, _buckets(full), "compact")
+    assert _overwrite(t, full, _buckets(full), "compact")
     assert t.rollback(v_pre, "rb")
     v_bad = t.current_version()
     with open(t._snapshot_path(v_bad)) as fh:
@@ -887,7 +952,7 @@ def test_lost_commit_bytes_snapshot_rolls_back_and_expires(spark, tmp_path):
     assert t.history()[-1]["version"] == v_bad
     assert t.rollback(v_pre, "rb2")
     assert t.read(spark).count() == 6
-    assert t.commit_append(_bucketed(spark, t, [("k9", 9)]), "a9")
+    assert t.commit_data(_bucketed(spark, t, [("k9", 9)]), "a9")
     assert t.expire_snapshots(retain_last=2, orphan_grace_seconds=0)["expired_snapshots"] == v_bad + 1
     assert not os.path.exists(t._snapshot_path(v_bad))
     assert t.read(spark).count() == 7 and t.total_bytes() > 0
@@ -919,7 +984,7 @@ def test_bloom_filters_on_delta_appends(spark, tmp_path, monkeypatch):
     def commit_bytes(root, opts):
         monkeypatch.setattr(st, "PARQUET_BLOOM_OPTS", opts)
         t = st.SnapshotTable.create(str(root), schema, n_buckets=1)
-        t.commit_append(df, batch_id="b0")
+        t.commit_data(df, batch_id="b0")
         d = t.snapshot()["live"]["0"][0]
         import glob as g, os as o
         return sum(o.path.getsize(p)
@@ -1098,7 +1163,7 @@ def test_timestamp_time_travel_and_age_expiry(spark, tmp_path, monkeypatch):
     for i in range(5):
         clock["now"] += 100
         df = _bucketed(spark, t, [("a", i)])
-        t.commit_overwrite_buckets(df, _buckets(df), f"b{i}")
+        _overwrite(t, df, _buckets(df), f"b{i}")
         stamps[t.current_version()] = clock["now"]
 
     # exact stamp, between stamps, and before-history
@@ -1245,7 +1310,7 @@ def test_pruning_keeps_file_on_incomparable_bounds(spark, tmp_path):
     TypeError or wrongly pruning."""
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
     df = _bucketed(spark, t, [("a", 1), ("b", 2)])
-    t.commit_overwrite_buckets(df, _buckets(df), "b1")
+    _overwrite(t, df, _buckets(df), "b1")
     out = t.read(spark, col_ranges={"v": ("not-a-number", None)})
     assert out.count() == 2, "incomparable bound kept every file"
 
@@ -1279,9 +1344,9 @@ def test_commit_accounting_exact_per_bucket(spark, tmp_path):
         assert len(want_rows) > 1, "the keys must spread over several buckets"
 
         if kind == "append":
-            t.commit_append(df, "b1")
+            t.commit_data(df, "b1")
         else:
-            t.commit_overwrite_buckets(df, sorted(int(b) for b in want_rows), "b1")
+            _overwrite(t, df, sorted(int(b) for b in want_rows), "b1")
         m = t.last_commit_stats
         assert m["rows_written"] == 42 and m["deletes"] == 2 and m["upserts"] == 40
         assert m["max_lsn"] == 501
