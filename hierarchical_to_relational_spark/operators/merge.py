@@ -22,6 +22,8 @@ late binlog data is handled without event-time watermarks (SURVEY.md §2.2).
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 import time
 
@@ -32,8 +34,13 @@ from hierarchical_to_relational_spark.table.snapshot_table import (
     ConcurrentOverwriteError,
     SnapshotTable,
     bucket_expr,
+    delta_stats_of,
+    dirs_of,
     empty_frame,
+    live_of,
 )
+
+log = logging.getLogger(__name__)
 
 # scan_range phase 2 collects the candidate keys (key-set regime) when
 # they are at most this many distinct (bucket, key) pairs
@@ -211,36 +218,34 @@ def apply_cdc_batch(
     }
 
 
-def _rewrite(
-    spark: SparkSession,
-    table: SnapshotTable,
-    batch_id: str,
-    rewrite_fn,
-    buckets: list[int] | None = None,
-    cluster_by=None,
-    n_buckets: int | None = None,
-    retries: int = 5,
-) -> bool:
-    """The copy-on-write retry loop: read ``buckets`` (None: all) at one
-    snapshot, commit ``rewrite_fn(rows)`` replacing exactly the dirs read
-    (``SnapshotTable.commit_data``). Deltas appended meanwhile stay
-    stacked on the rewrite; a racing rewrite that folded a read dir away
-    raises ``ConcurrentOverwriteError`` and we re-read + re-resolve from
-    the new state (the losing attempt's data files become unreferenced
-    orphans)."""
-    for _ in range(retries):
+REWRITE_ATTEMPTS = 5  # picks before a rewrite that keeps losing races gives up
+
+
+def _rewrite(spark: SparkSession, table: SnapshotTable, batch_id: str, pick, fn,
+             cluster_by=None, n_buckets: int | None = None) -> dict[str, list[str]]:
+    """The one loop of every maintenance commit. Per attempt: read one
+    snapshot ``snap``; ``pick(snap)`` names the live dirs to replace
+    (``{bucket: [dirs]}``; empty: stop); commit ``fn(rows, schema)`` —
+    those dirs' rows and the schema, both as of ``snap`` — replacing them
+    (``SnapshotTable.commit_data``). A racing rewrite that replaced a
+    picked dir makes the commit raise ``ConcurrentOverwriteError``, and
+    the next attempt picks again. Returns the ``replace`` committed; ``{}``
+    when the pick was empty or ``batch_id`` was already committed."""
+    for attempt in range(1, REWRITE_ATTEMPTS + 1):
         snap = table.snapshot()
-        replace = {b: ds for b, ds in snap["live"].items()
-                   if buckets is None or int(b) in buckets}
-        rows = table.read(spark, buckets=buckets, version=snap["version"])
+        replace = pick(snap)
+        if not replace:
+            return {}
+        rows = table.scan_dirs(spark, dirs_of(replace), snap)
+        schema = T.StructType.fromJson(json.loads(snap["schema"]))
         try:
-            return table.commit_data(rewrite_fn(rows), batch_id, replace=replace,
-                                     cluster_by=cluster_by, n_buckets=n_buckets)
-        except ConcurrentOverwriteError:
-            continue
-    raise ConcurrentOverwriteError(
-        f"gave up rewriting for {batch_id!r} after {retries} re-reads"
-    )
+            committed = table.commit_data(fn(rows, schema), batch_id, replace=replace,
+                                          cluster_by=cluster_by, n_buckets=n_buckets)
+            return replace if committed else {}
+        except ConcurrentOverwriteError as e:
+            log.warning("rewrite %r: attempt %d of %d lost a race: %s",
+                        batch_id, attempt, REWRITE_ATTEMPTS, e)
+    raise ConcurrentOverwriteError(f"gave up rewriting {batch_id!r} after {REWRITE_ATTEMPTS} picks")
 
 
 def compact(
@@ -252,10 +257,10 @@ def compact(
     zorder: list[str] | None = None,
     buckets: list[int] | None = None,
 ) -> bool:
-    """Fold merge-on-read deltas down: read + resolve live buckets and
-    commit the result replacing the dirs read (``_rewrite``) — a delta
-    appended meanwhile stays stacked on top. Amortized over many appends;
-    idempotent on batch_id like any commit.
+    """Fold merge-on-read deltas down: resolve every live dir of the
+    wanted buckets and commit the result replacing them (``_rewrite``;
+    False when none is live) — a delta appended meanwhile stays stacked on
+    top. Amortized over many appends; idempotent on batch_id like any commit.
 
     ``buckets`` restricts the rewrite to a subset — PARTIAL compaction,
     the shape that matters at scale: zipf-hot buckets stack deltas far
@@ -281,15 +286,16 @@ def compact(
     EVERY listed column simultaneously, so the sidecar prunes point/range
     reads on any of them (e.g. ``["conv_id", "_lsn"]`` serves both key
     lookups and "changed since LSN" range scans from the same base)."""
-    schema = table.schema()
-    live_buckets = [int(b) for b in table.snapshot()["live"].keys()]
-    if buckets is not None:
-        live_buckets = sorted(set(buckets) & set(live_buckets))
-    if not live_buckets:
-        return False
+    return bool(_fold(spark, table, batch_id, lambda snap: live_of(snap, buckets),
+                      expire_tombstones_below, squash_patches_below, zorder))
 
-    def resolve_fn(current: DataFrame) -> DataFrame:
-        resolved = resolve(current, schema)
+
+def _fold(spark, table, batch_id, pick, expire_tombstones_below=None,
+          squash_patches_below=None, zorder=None) -> dict[str, list[str]]:
+    """``compact``'s rewrite of the dirs ``pick`` names (see there)."""
+
+    def resolve_fn(rows: DataFrame, schema: T.StructType) -> DataFrame:
+        resolved = resolve(rows, schema)
         if expire_tombstones_below is not None:
             resolved = resolved.where(
                 (F.col(META_OP) != "d") | (F.col(META_LSN) >= F.lit(expire_tombstones_below))
@@ -311,8 +317,7 @@ def compact(
         cluster = lambda out: zorder_expr(out, zorder)
     else:
         cluster = "conv_id"
-    return _rewrite(spark, table, batch_id, resolve_fn, buckets=live_buckets,
-                    cluster_by=cluster)
+    return _rewrite(spark, table, batch_id, pick, resolve_fn, cluster_by=cluster)
 
 
 def compact_pressured(
@@ -325,20 +330,17 @@ def compact_pressured(
 ) -> list[int]:
     """Partial compaction driven by manifest pressure stats: fold ONLY the
     buckets whose delta stack is at least ``depth_threshold`` dirs deep
-    (or ``bytes_threshold`` delta bytes heavy). Returns the buckets
-    rewritten ([] = nothing exceeded a threshold). O(pressured buckets)
+    (or ``bytes_threshold`` delta bytes heavy) in the snapshot each pick
+    reads. Returns the buckets rewritten ([] = none). O(pressured buckets)
     rewrite cost instead of O(table) — on a zipf-skewed stream the hot
     buckets fold often while cold buckets keep shallow stacks untouched."""
-    stats = table.delta_stats()
-    pressured = sorted(
-        b for b, s in stats.items()
-        if s["depth"] >= depth_threshold
-        or (bytes_threshold is not None and s["delta_bytes"] >= bytes_threshold)
-    )
-    if not pressured:
-        return []
-    compact(spark, table, batch_id=batch_id, buckets=pressured, **compact_kwargs)
-    return pressured
+
+    def pick(snap: dict) -> dict[str, list[str]]:
+        return {str(b): snap["live"][str(b)] for b, s in delta_stats_of(snap).items()
+                if s["depth"] >= depth_threshold
+                or (bytes_threshold is not None and s["delta_bytes"] >= bytes_threshold)}
+
+    return sorted(int(b) for b in _fold(spark, table, batch_id, pick, **compact_kwargs))
 
 
 def binpack_deltas(
@@ -351,11 +353,10 @@ def binpack_deltas(
 ) -> list[int]:
     """Size-aware delta BIN-PACKING (round 5): per bucket, merge the
     smallest delta dirs below ``target_bytes`` into one packed dir —
-    verbatim rows, no resolution shuffle, no base rewrite: one
-    ``SnapshotTable.commit_data`` whose ``replace`` names the picked dirs,
-    so the packed dir takes the first one's slot and a concurrent
-    compaction that folded a picked dir away wins (ConcurrentOverwriteError:
-    the caller re-selects). LWW resolution is order-insensitive, so
+    verbatim rows, no resolution shuffle, no base rewrite: a ``_rewrite``
+    whose pick names the chosen dirs, so the packed dir takes the first
+    one's slot; a concurrent compaction that folded one away wins and the
+    pack picks again. LWW resolution is order-insensitive, so
     concatenating delta files never changes the resolved state; tombstones
     and patches pass through untouched. This is the cheap first line of
     defense against the many-tiny-files problem a steady micro-batch
@@ -372,32 +373,21 @@ def binpack_deltas(
     compaction pressure threshold but accumulate dribble files forever —
     are exactly who this sweeps; schedule it wide (``buckets=None``) on a
     slow cadence beside pressure-driven partial compaction."""
-    snap = table.snapshot()
-    cb = snap["commit_bytes"]
-    want = None if buckets is None else {int(b) for b in buckets}
-    picked: dict[str, list[str]] = {}
-    for b, ds in snap["live"].items():
-        if want is not None and int(b) not in want:
-            continue
-        sized = sorted((cb[d][b], d) for d in ds if cb[d][b] < target_bytes)
-        chosen, acc = [], 0
-        for sz, d in sized:
-            if acc + sz > target_bytes and chosen:
-                break
-            chosen.append(d)
-            acc += sz
-        if len(chosen) >= min_dirs:
-            picked[b] = chosen
-    if not picked:
-        return []
-    by_dir: dict[str, list[int]] = {}
-    for b, ds in picked.items():
-        for d in ds:
-            by_dir.setdefault(d, []).append(int(b))
-    packed = table.scan_dirs(spark, by_dir, snap)
-    if table.commit_data(packed, batch_id, replace=picked):
-        return sorted(int(b) for b in picked)
-    return []
+
+    def pick(snap: dict) -> dict[str, list[str]]:
+        cb, picked = snap["commit_bytes"], {}
+        for b, ds in live_of(snap, buckets).items():
+            chosen, acc = [], 0
+            for sz, d in sorted((cb[d][b], d) for d in ds if cb[d][b] < target_bytes):
+                if acc + sz > target_bytes and chosen:
+                    break
+                chosen.append(d)
+                acc += sz
+            if len(chosen) >= min_dirs:
+                picked[b] = chosen
+        return picked
+
+    return sorted(int(b) for b in _rewrite(spark, table, batch_id, pick, lambda rows, _: rows))
 
 
 def maintain_cycle(
@@ -430,8 +420,10 @@ def maintain_cycle(
     Each step is its own idempotent commit keyed off ``batch_id`` with a
     step suffix (``::compact`` / ``::binpack``), so a crashed cycle
     re-runs cleanly: finished steps no-op, the unfinished one retries —
-    the same exactly-once contract as ingest. Steps that find nothing to
-    do are metadata-only (no Spark job). Returns a per-step report.
+    the same exactly-once contract as ingest; a race with another
+    writer's rewrite makes a step pick again (``_rewrite``), not fail.
+    Steps that find nothing to do are metadata-only (no Spark job).
+    Returns a per-step report.
 
     Cadence guidance (compaction_bench evidence, BENCH/BASELINE.md):
     run the cycle every ~N micro-batches with ``compact_depth`` ≈ N so
@@ -464,22 +456,21 @@ def evolve_buckets(
     new_n_buckets: int,
     batch_id: str,
 ) -> bool:
-    """Re-bucketing migration: read the full state at one snapshot,
-    resolve it (the rewrite doubles as a compaction), recompute ``_bucket``
-    under the new count, and commit the whole table with the flipped bucket
-    spec — ``_rewrite`` with ``n_buckets``, which re-reads when a dir lands
-    after the read. Subsequent writes and bucket-pruned reads use the new
-    bucketing. One full-table shuffle+rewrite — the same cost Iceberg pays
-    to rewrite into an evolved partition spec; amortized over the table's
-    lifetime."""
-    schema = table.schema()
+    """Re-bucketing migration: resolve every live dir (the rewrite doubles
+    as a compaction), recompute ``_bucket`` under the new count, and commit
+    the whole table with the flipped bucket spec — ``_rewrite`` with
+    ``n_buckets``, which picks again when a dir lands after its read; a
+    table with no live dir stays as it is (False). Subsequent writes and
+    bucket-pruned reads use the new bucketing. One full-table
+    shuffle+rewrite — the same cost Iceberg pays to rewrite into an
+    evolved partition spec; amortized over the table's lifetime."""
 
-    def rebucket(rows: DataFrame) -> DataFrame:
+    def rebucket(rows: DataFrame, schema: T.StructType) -> DataFrame:
         return resolve(rows, schema).withColumn(
             META_BUCKET, bucket_expr(F.col("conv_id"), new_n_buckets))
 
-    return _rewrite(spark, table, batch_id, rebucket, cluster_by="conv_id",
-                    n_buckets=new_n_buckets)
+    return bool(_rewrite(spark, table, batch_id, live_of, rebucket, cluster_by="conv_id",
+                         n_buckets=new_n_buckets))
 
 
 def lookup_conversation(
@@ -717,10 +708,6 @@ def _window_rows(
         return None
 
     snap = table.snapshot(v2)
-    by_dir: dict[str, list[str]] = {}  # appended dir → buckets it gained
-    for b, ds in added.items():
-        for d in ds:
-            by_dir.setdefault(d, []).append(b)
     for d in sorted(removed):
         if not os.path.isdir(os.path.join(table.root, d)):
             raise ValueError(
@@ -731,7 +718,7 @@ def _window_rows(
     buckets = sorted(int(b) for b in set(added) | superset)
     rows = (
         table.read(spark, buckets=buckets, version=v2).withColumn("_src", F.lit(0))
-        .unionByName(table.scan_dirs(spark, by_dir, snap).withColumn("_src", F.lit(1)))
+        .unionByName(table.scan_dirs(spark, dirs_of(added), snap).withColumn("_src", F.lit(1)))
         .unionByName(table.scan_dirs(spark, removed, snap).withColumn("_src", F.lit(2)))
     )
     src, op = F.col("_src"), F.col(META_OP)

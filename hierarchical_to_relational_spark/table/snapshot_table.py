@@ -280,6 +280,33 @@ def bucket_expr(key, n_buckets: int):
     return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
 
 
+def live_of(snap: dict, buckets: list[int] | None = None) -> dict[str, list[str]]:
+    """``snap``'s live dirs of ``buckets`` (None: every bucket)."""
+    want = None if buckets is None else {str(b) for b in buckets}
+    return {b: ds for b, ds in snap["live"].items() if want is None or b in want}
+
+
+def dirs_of(live: dict[str, list[str]]) -> dict[str, list[str]]:
+    """``{bucket: [dirs]}`` → ``{dir: [buckets it serves]}``, the map
+    ``SnapshotTable.scan_dirs`` reads: each dir returns exactly those."""
+    out: dict[str, list[str]] = {}
+    for b, ds in live.items():
+        for d in ds:
+            out.setdefault(d, []).append(b)
+    return out
+
+
+def delta_stats_of(snap: dict) -> dict[int, dict]:
+    """Per-bucket compaction pressure of ``snap`` from its commit_bytes
+    stats alone: ``{bucket: {"depth": dirs stacked, "delta_bytes": bytes
+    beyond the base dir}}``. Partial compaction picks by it, so only the
+    buckets worth rewriting fold (zipf-hot buckets stack deltas far faster
+    than cold ones)."""
+    cb = snap["commit_bytes"]
+    return {int(b): {"depth": len(dirs), "delta_bytes": sum(cb[d][b] for d in dirs[1:])}
+            for b, dirs in snap["live"].items()}
+
+
 def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
     """A frame of ``schema`` with no rows, as an empty local relation that
     unions prune; a frame made from a Python list starts Python workers."""
@@ -951,15 +978,8 @@ class SnapshotTable:
         because writes sort within partitions by ``_bucket``. The returned
         rows are therefore EXACTLY the wanted buckets' live rows."""
         snap = self.snapshot(version)
-        live: dict[str, list[str]] = snap["live"]
-        wanted = {str(b) for b in buckets} if buckets is not None else set(live)
-        # each commit dir contributes exactly the wanted buckets listing it
-        dirs: dict[str, set[str]] = {}
-        for b, commit_dirs in live.items():
-            if b in wanted:
-                for commit_dir in commit_dirs:
-                    dirs.setdefault(commit_dir, set()).add(b)
-        return self.scan_dirs(spark, dirs, snap, col_ranges, key_set, col_eq)
+        return self.scan_dirs(spark, dirs_of(live_of(snap, buckets)), snap,
+                              col_ranges, key_set, col_eq)
 
     def scan_dirs(
         self,
@@ -1573,16 +1593,8 @@ class SnapshotTable:
         return max((len(ds) for ds in live.values()), default=0)
 
     def delta_stats(self) -> dict[int, dict]:
-        """Per-bucket compaction pressure from the manifest alone:
-        ``{bucket: {"depth": dirs stacked, "delta_bytes": bytes beyond the
-        base dir}}`` — what partial compaction uses to pick ONLY the
-        buckets worth rewriting (zipf-hot buckets stack deltas far faster
-        than cold ones; folding everything on every trigger would be a
-        full-table rewrite). Served from commit_bytes stats alone."""
-        snap = self.snapshot()
-        cb = snap["commit_bytes"]
-        return {int(b): {"depth": len(dirs), "delta_bytes": sum(cb[d][b] for d in dirs[1:])}
-                for b, dirs in snap["live"].items()}
+        """``delta_stats_of`` the current snapshot."""
+        return delta_stats_of(self.snapshot())
 
     def delta_bytes(self) -> int:
         """Max per-bucket bytes of stacked delta dirs (every dir beyond the

@@ -5,10 +5,11 @@ alias-matched (the driver sorts columns by name before hashing)."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import __spark_entry__ as E
 
 SF = "/root/testdata/sf0.001"

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from hierarchical_to_relational_spark.operators.merge import (
     binpack_deltas,
     compact,
+    compact_pressured,
     evolve_buckets,
     lookup_conversations,
     read_transcripts,
@@ -38,6 +39,8 @@ BUDGET = {
     "changes_since_1_append": 3,
     "view_refresh_incremental": 4,
     "compact_full": 5,
+    "compact_pressured": 5,
+    "compact_pressured_miss": 0,
     "binpack": 2,
     "rebucket": 5,
 }
@@ -87,11 +90,14 @@ def _shuffles(df) -> int:
 def measured(spark, tmp_path_factory):
     """Job counts of every budgeted operation, measured in a fixed order
     on one table: five appends over 4 buckets (the fifth counted), a view
-    built after the fourth, then the full compaction last (it rewrites the
+    built after the fourth, then a pressure compaction that folds no
+    bucket, the full compaction, and a pressure compaction at depth 1 that
+    folds every bucket again (the rewrites come last: they rewrite the
     table). The bin-pack and then the re-bucketing to 8 run on a second
     table of the same five appends. Also the shuffle count of ``resolve`` and of
-    ``read_transcripts`` over the uncompacted table, and the executed plan
-    of the one-append feed."""
+    ``read_transcripts`` over the uncompacted table, the executed plan
+    of the one-append feed, and what the pressure compactions, the
+    incremental refresh and ``delta_stats`` returned."""
     d = tmp_path_factory.mktemp("budget")
     pipe = CdcPipeline(spark, str(d / "binlog"), str(d / "t"), str(d / "ck"),
                        n_buckets=4, text_mode="none")
@@ -114,14 +120,19 @@ def measured(spark, tmp_path_factory):
     assert resolved.where(F.col("_op") == "d").count() > 0
     feed_plan = _executed_plan(changes_since(spark, t, v_before))
     keys = [f"c{k}" for k in range(100)]
+    got = {"delta_stats": t.delta_stats()}
     ops = {
         "lookup_1": lambda: lookup_conversations(spark, t, ["c5"]).collect(),
         "lookup_100": lambda: lookup_conversations(spark, t, keys).collect(),
         "read_transcripts": lambda: read_transcripts(spark, t).collect(),
         "scan_range": lambda: scan_range(spark, t, "turn_idx", 1, 2).collect(),
         "changes_since_1_append": lambda: changes_since(spark, t, v_before).collect(),
-        "view_refresh_incremental": view.refresh,
+        "view_refresh_incremental": lambda: got.update(refresh=view.refresh()),
+        "compact_pressured_miss": lambda: got.update(
+            miss=compact_pressured(spark, t, "pressure-0", depth_threshold=6)),
         "compact_full": lambda: compact(spark, t, "compact-0"),
+        "compact_pressured": lambda: got.update(
+            hit=compact_pressured(spark, t, "pressure-1", depth_threshold=1)),
         "binpack": lambda: binpack_deltas(spark, rw.table, "binpack-0", min_dirs=3),
         "rebucket": lambda: evolve_buckets(spark, rw.table, 8, "rebucket-0"),
     }
@@ -129,19 +140,45 @@ def measured(spark, tmp_path_factory):
     counts["apply_batch_1_append"] = appended
     assert view.cursor() == v_before + 1
     assert [h["kind"] for h in rw.table.history()][-2:] == ["compact", "rebucket"]
-    return counts, shuffles, feed_plan
+    return counts, shuffles, feed_plan, got
 
 
 @pytest.mark.parametrize("op", sorted(BUDGET))
 def test_job_budget(measured, op):
-    counts, _, _ = measured
+    counts, _, _, _ = measured
     assert counts[op] == BUDGET[op], counts
+
+
+def test_perfbench_surface(measured):
+    """``perfbench/workload.py`` (frozen) wraps or calls these engine
+    names and reads these result shapes; a rename would make a traced run
+    fail or read 0 for a layer, so it fails here first."""
+    from hierarchical_to_relational_spark.lineage import LineageStore
+    from hierarchical_to_relational_spark.operators import merge
+    from hierarchical_to_relational_spark.streaming import driver, egress
+    from hierarchical_to_relational_spark.streaming.egress import ChangeFollower
+    from hierarchical_to_relational_spark.table.snapshot_table import SnapshotTable
+
+    for owner, name in [
+        (driver, "normalize_envelopes_fused"), (driver, "apply_cdc_batch"),
+        (driver, "compact_pressured"), (merge, "binpack_deltas"),
+        (merge, "lookup_conversation"), (merge, "lookup_conversations"),
+        (merge, "read_transcripts"), (egress, "changes_since"),
+        (SnapshotTable, "expire_snapshots"), (SnapshotTable, "delta_stats"),
+        (LineageStore, "record"), (ChangeFollower, "poll_once"),
+        (ConvAggregateView, "refresh"),
+    ]:
+        assert callable(getattr(owner, name, None)), f"{owner.__name__}.{name}"
+    _, _, _, got = measured
+    assert got["miss"] == [] and got["hit"] == [0, 1, 2, 3]
+    assert got["delta_stats"] and all(s["depth"] == 5 for s in got["delta_stats"].values())
+    assert got["refresh"]["mode"] == "incremental"
 
 
 def test_resolve_plans_one_shuffle(measured):
     """``resolve`` over a multi-bucket, multi-dir read runs on one hash
     exchange, and the user-facing fold on top of it adds none."""
-    _, shuffles, _ = measured
+    _, shuffles, _, _ = measured
     assert shuffles == {"resolve": 1, "read_transcripts": 1}
 
 
@@ -151,7 +188,7 @@ def test_changes_since_plans_no_join(measured):
     tombstone rows on its own exchange) and no join. Its empty union leg
     (no rollback in the window) is pruned, not run as a Python-side
     frame that would start Python workers."""
-    _, _, plan = measured
+    _, _, plan, _ = measured
     assert plan.count("ShuffleQueryStage") <= 2
     assert "BroadcastHashJoin" not in plan and "SortMergeJoin" not in plan
     assert "ExistingRDD" not in plan

@@ -5,12 +5,14 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/jobs")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "jobs"))
 
 from hierarchical_to_relational_spark import datagen
 from hierarchical_to_relational_spark.operators.merge import read_transcripts

@@ -10,8 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import __spark_entry__ as E
 from hierarchical_to_relational_spark.operators.merge import lww_latest
 

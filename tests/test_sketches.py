@@ -9,7 +9,9 @@ import os
 from pyspark.sql import functions as F
 
 import sys
-sys.path.insert(0, "/root/repo")
+from pathlib import Path
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import __spark_entry__ as E
 
 SF = "/root/testdata/sf0.001"

@@ -419,8 +419,9 @@ def test_racing_overwrites_raise_conflict(spark, tmp_path):
 
 
 def test_overwrite_retry_rereads_and_wins(spark, tmp_path):
-    """The merge layer's copy-on-write loop re-reads + re-resolves after a
-    conflicting overwrite and converges on the union of both writers."""
+    """The merge layer's rewrite loop picks again, re-reads and re-resolves
+    after a conflicting overwrite and converges on the union of both
+    writers."""
     from hierarchical_to_relational_spark.operators.merge import _rewrite
 
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=1)
@@ -429,17 +430,107 @@ def test_overwrite_retry_rereads_and_wins(spark, tmp_path):
     other = SnapshotTable(t.root)
     calls = {"n": 0}
 
-    def resolve_fn(current):
+    def resolve_fn(current, schema):
         calls["n"] += 1
         if calls["n"] == 1:  # inject a racing overwrite between read and commit
             _overwrite(other, _bucketed(spark, other, [("z", 9)]), [0], "racer")
         # rewrite = current state with v bumped by 100
         return current.withColumn("v", F.col("v") + 100)
 
-    assert _rewrite(spark, t, "compact", resolve_fn, buckets=[0]) is True
+    replaced = _rewrite(spark, t, "compact", lambda snap: snap["live"], resolve_fn)
+    assert replaced == t.snapshot(t.current_version() - 1)["live"]  # the racer's dirs
     assert calls["n"] == 2
     out = {tuple(r) for r in t.read(spark).select("k", "v").collect()}
     assert out == {("z", 109)}  # second attempt read the racer's state
+
+
+CDC_SCHEMA = T.StructType([
+    T.StructField("conv_id", T.StringType(), False),
+    T.StructField("turn_idx", T.IntegerType(), True),
+    T.StructField("v", T.IntegerType(), True),
+    T.StructField("_lsn", T.LongType(), False),
+    T.StructField("_commit_ts", T.TimestampType(), True),
+    T.StructField("_op", T.StringType(), False),
+])
+
+
+def _cdc_table(spark, root, n_appends):
+    """A one-bucket table of ``CDC_SCHEMA``: append i writes conversation ci."""
+    from hierarchical_to_relational_spark.operators.merge import apply_cdc_batch
+
+    t = SnapshotTable.create(root, CDC_SCHEMA, n_buckets=1)
+    for i in range(n_appends):
+        batch = spark.createDataFrame([(f"c{i}", 0, i, i + 1, None, "u")], CDC_SCHEMA)
+        apply_cdc_batch(spark, t, batch, f"a{i}")
+    return t
+
+
+def _race_first_commit(monkeypatch, t, racer):
+    """Run ``racer()`` just before ``t``'s first ``commit_data`` goes on."""
+    commit, calls = t.commit_data, []
+
+    def raced(*a, **k):
+        calls.append(1)
+        if len(calls) == 1:
+            racer()
+        return commit(*a, **k)
+
+    monkeypatch.setattr(t, "commit_data", raced)
+    return calls
+
+
+def test_binpack_conflict_picks_again(spark, tmp_path, monkeypatch, caplog):
+    """A compaction by another writer that lands between the bin-pack's
+    pick and its commit makes the pack pick again, with one warning; on
+    the compacted bucket there is nothing left to pack, so it returns []
+    and the table is unchanged."""
+    import logging
+
+    from hierarchical_to_relational_spark.operators import merge
+
+    t = _cdc_table(spark, str(tmp_path / "t"), 4)
+    before = sorted(map(tuple, t.read(spark).select("conv_id", "v").collect()))
+    other = SnapshotTable(t.root)
+    calls = _race_first_commit(monkeypatch, t, lambda: merge.compact(spark, other, "racer"))
+    with caplog.at_level(logging.WARNING, logger=merge.__name__):
+        assert merge.binpack_deltas(spark, t, "pack", min_dirs=3) == []
+    assert len(calls) == 1  # the second pick was empty: no second commit
+    assert sorted(map(tuple, t.read(spark).select("conv_id", "v").collect())) == before
+    assert [h["batch_id"] for h in t.history()][-1] == "racer"
+    [rec] = [r for r in caplog.records if r.name == merge.__name__]
+    assert rec.levelno == logging.WARNING
+    assert "'pack'" in rec.getMessage() and "no longer live" in rec.getMessage()
+
+
+@pytest.mark.parametrize("op", ["compact", "evolve_buckets"])
+def test_retried_rewrite_keeps_a_racing_column(spark, tmp_path, monkeypatch, op):
+    """A rewrite that loses its first commit to a writer that added a
+    column (and then compacted) resolves its second read under the new
+    snapshot's schema: the racer's value survives instead of reading
+    NULL."""
+    from hierarchical_to_relational_spark.operators.merge import (
+        apply_cdc_batch,
+        compact,
+        evolve_buckets,
+    )
+
+    t = _cdc_table(spark, str(tmp_path / "t"), 2)
+    other = SnapshotTable(t.root)
+    wide = T.StructType(CDC_SCHEMA.fields + [T.StructField("x", T.StringType(), True)])
+
+    def racer():
+        batch = spark.createDataFrame([("cx", 0, 9, 100, None, "u", "X-VALUE")], wide)
+        assert apply_cdc_batch(spark, other, batch, "racer-append")["committed"]
+        assert compact(spark, other, "racer-compact")
+
+    calls = _race_first_commit(monkeypatch, t, racer)
+    if op == "compact":
+        assert compact(spark, t, "rewrite")
+    else:
+        assert evolve_buckets(spark, t, 4, "rewrite") and t.n_buckets == 4
+    assert len(calls) == 2
+    got = {r["conv_id"]: r["x"] for r in t.read(spark).select("conv_id", "x").collect()}
+    assert got == {"c0": None, "c1": None, "cx": "X-VALUE"}
 
 
 def test_committed_ids_floor_collapse():
