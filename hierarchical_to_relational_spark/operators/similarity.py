@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from hierarchical_to_relational_spark.functions import vecalg
-from hierarchical_to_relational_spark.operators.dedup import cosine
 
 
 def brute_force_topk(
@@ -207,10 +206,6 @@ def _unit_select(df: DataFrame, id_col: str, id_alias: str, vec_col: str,
     return staged.select(id_alias, F.when(n > 0, div).alias(v_alias))
 
 
-def _dot(a, b, dim: int | None = None):
-    return vecalg.dot(a, b, dim=dim)
-
-
 def ivf_centroid_list(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -221,8 +216,7 @@ def ivf_centroid_list(
     train_sample: int | None = None,
 ) -> list[tuple[int, list[float]]]:
     """Deterministic spherical k-means centroids as a driver-local list
-    ``[(cell, unit_vector), ...]`` (see ivf_centroids for the DataFrame
-    view).
+    ``[(cell, unit_vector), ...]``.
 
     **Training scans a sample, not the corpus.** Lloyd iterations run over
     the ``train_sample`` (default ``100 × n_cells``) corpus vectors with
@@ -288,22 +282,6 @@ def ivf_centroid_list(
     return [(cell_id, [float(x) for x in vec]) for cell_id, vec in cents]
 
 
-def ivf_centroids(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    n_iters: int = 4,
-    seed: int = 0,
-    train_sample: int | None = None,
-) -> DataFrame:
-    """DataFrame view ``(cell, cvec)`` of ivf_centroid_list."""
-    return corpus.sparkSession.createDataFrame(
-        ivf_centroid_list(corpus, id_col, vec_col, n_cells, n_iters, seed, train_sample),
-        "cell int, cvec array<double>",
-    )
-
-
 def _assign_cells(v: DataFrame, cent: DataFrame, dim: int | None = None) -> DataFrame:
     """(id, v) × broadcast(centroids) → nearest cell per vector (max dot on
     unit vectors == max cosine), pure JVM: map-side broadcast join + one
@@ -314,7 +292,7 @@ def _assign_cells(v: DataFrame, cent: DataFrame, dim: int | None = None) -> Data
     n_cells × dim literals into the plan makes Catalyst compile time, not
     execution, the bottleneck — interpreted higher-order funcs over a
     multi-thousand-node tree.)"""
-    j = v.crossJoin(F.broadcast(cent)).withColumn("_d", _dot(F.col("v"), F.col("cvec"), dim=dim))
+    j = v.crossJoin(F.broadcast(cent)).withColumn("_d", vecalg.dot(F.col("v"), F.col("cvec"), dim=dim))
     packed = j.groupBy("_id").agg(
         F.max_by(F.struct("cell", "v"), F.struct(F.col("_d"), (-F.col("cell")).alias("_t"))).alias("_r")
     )
@@ -393,7 +371,8 @@ def ivf_topk(
     ``assign``: the corpus indexing strategy — ``"join"`` (default,
     100 % JVM: broadcast join + max_by, one corpus exchange) or
     ``"arrow"`` (map-only vectorized numpy argmax, ZERO corpus shuffle —
-    the 10^10-scale path; same result, tested equal)."""
+    the 10^10-scale path; same result — ``test_ivf_recall_contract``
+    pins the two equal)."""
     if assign not in ("join", "arrow"):  # before any expensive work
         raise ValueError(f"unknown assign strategy {assign!r} (join | arrow)")
     cents = ivf_centroid_list(corpus, id_col, vec_col, n_cells, n_iters, seed, train_sample)
@@ -401,32 +380,14 @@ def ivf_topk(
         return brute_force_topk(queries, corpus, id_col, vec_col, k)
     dim = len(cents[0][1])
     cent = corpus.sparkSession.createDataFrame(cents, "cell int, cvec array<double>")
-    c = _unit_select(corpus, id_col, "_id", vec_col, "v", dim=dim)
     if assign == "join":
+        c = _unit_select(corpus, id_col, "_id", vec_col, "v", dim=dim)
         c_cells = _assign_cells(c, cent, dim=dim)
-    elif assign == "arrow":
-        c_cells = _assign_cells_arrow(corpus, cents, id_col, vec_col)
     else:
-        raise ValueError(f"unknown assign strategy {assign!r} (join | arrow)")
+        c_cells = _assign_cells_arrow(corpus, cents, id_col, vec_col)
     c_cells = c_cells.select(F.col("_id").alias("neighbor_id"), "cell", F.col("v").alias("cv"))
-    return _ivf_search(queries, c_cells, cent, id_col, vec_col, k, n_probe, dim=dim)
-
-
-def _ivf_search(
-    queries: DataFrame,
-    c_cells: DataFrame,
-    cent: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    n_probe: int,
-    dim: int | None = None,
-) -> DataFrame:
-    """Probe+score stage over a prebuilt inverted file ``c_cells``
-    (neighbor_id, cell, cv) — split out so the index builds once and can
-    be searched at several probe settings (ivf_auto_probe)."""
     q = _unit_select(queries, id_col, "query_id", vec_col, "qv", dim=dim)
-    qc = q.crossJoin(F.broadcast(cent)).withColumn("_d", _dot(F.col("qv"), F.col("cvec"), dim=dim))
+    qc = q.crossJoin(F.broadcast(cent)).withColumn("_d", vecalg.dot(F.col("qv"), F.col("cvec"), dim=dim))
     wq = Window.partitionBy("query_id").orderBy(F.col("_d").desc(), F.col("cell"))
     probes = (
         qc.withColumn("_r", F.row_number().over(wq))
@@ -436,7 +397,7 @@ def _ivf_search(
     scored = (
         c_cells.join(F.broadcast(probes), "cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", _dot(F.col("qv"), F.col("cv"), dim=dim).alias("cos"))
+        .select("query_id", "neighbor_id", vecalg.dot(F.col("qv"), F.col("cv"), dim=dim).alias("cos"))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
@@ -444,55 +405,6 @@ def _ivf_search(
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos"))
     )
-
-
-def ivf_auto_probe(
-    sample_queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_cells: int = 16,
-    target_recall: float = 0.8,
-    n_iters: int = 4,
-    seed: int = 0,
-    train_sample: int | None = None,
-    assign: str = "join",
-) -> tuple[int, float]:
-    """Recall-tuned probe selection: the smallest ``n_probe`` on the
-    doubling ladder 1, 2, 4, … ``n_cells`` whose MEASURED recall@k against
-    brute force on the given held-out query sample meets ``target_recall``.
-    Returns ``(n_probe, measured_recall)``; recall 1.0 is guaranteed at
-    ``n_probe == n_cells`` (every cell probed ⇒ brute force), so the
-    ladder always terminates with a valid setting.
-
-    Cost discipline: centroids train once, the inverted file builds once
-    (pinned via localCheckpoint — at production scale you'd persist the
-    index anyway); each rung re-runs only the probe+score stage over the
-    SAMPLE queries, and brute-force ground truth is O(sample × corpus) —
-    size the sample accordingly (tens of queries suffice: recall is a
-    per-query average)."""
-    if assign not in ("join", "arrow"):  # before the expensive ground truth
-        raise ValueError(f"unknown assign strategy {assign!r} (join | arrow)")
-    exact = brute_force_topk(sample_queries, corpus, id_col, vec_col, k).localCheckpoint()
-    cents = ivf_centroid_list(corpus, id_col, vec_col, n_cells, n_iters, seed, train_sample)
-    if not cents:
-        return 1, 1.0  # degenerate corpus: brute-force fallback is exact
-    dim = len(cents[0][1])
-    cent = corpus.sparkSession.createDataFrame(cents, "cell int, cvec array<double>")
-    c = _unit_select(corpus, id_col, "_id", vec_col, "v", dim=dim)
-    c_cells = (_assign_cells(c, cent, dim=dim) if assign == "join"
-               else _assign_cells_arrow(corpus, cents, id_col, vec_col))
-    c_cells = c_cells.select(
-        F.col("_id").alias("neighbor_id"), "cell", F.col("v").alias("cv")
-    ).localCheckpoint()
-    probe = 1
-    while True:
-        approx = _ivf_search(sample_queries, c_cells, cent, id_col, vec_col, k, probe, dim=dim)
-        r = recall_at_k(approx, exact, k)
-        if r >= target_recall or probe >= n_cells:
-            return probe, r
-        probe = min(probe * 2, n_cells)
 
 
 def recall_at_k(approx: DataFrame, exact: DataFrame, k: int) -> float:
@@ -503,320 +415,3 @@ def recall_at_k(approx: DataFrame, exact: DataFrame, k: int) -> float:
     e = exact.where(F.col("rank") <= k).select("query_id", "neighbor_id")
     denom = e.count()
     return (a.intersect(e).count() / denom) if denom else 1.0
-
-
-# -- persisted IVF index ---------------------------------------------------
-
-
-class IvfIndex:
-    """Persisted inverted-file ANN index: centroids + the cell-assigned
-    inverted file written once to a directory, so repeated queries skip
-    both centroid training and the full-corpus assignment pass (the two
-    corpus-scale stages of ``ivf_topk``).
-
-    Layout (one directory):
-
-    - ``_meta.json`` — centroids (metadata-scale: n_cells × dim doubles),
-      build parameters, and an optional caller-supplied provenance dict
-      (e.g. ``{"table_version": 41}`` when the corpus came from a
-      SnapshotTable — the index is a snapshot-pinned derived artifact,
-      like every other view of the table).
-    - ``invfile/cell=<k>/part-*.parquet`` — (neighbor_id, cv) hive-
-      partitioned by cell. A probe touching ``n_probe`` of ``n_cells``
-      cells reads ONLY those directories: the search prunes at the scan
-      (collected probe cells → ``isin`` partition filter), so per-query
-      IO drops by ~n_probe/n_cells at ANY corpus size. The dynamic-
-      partition write tax (~0.5 s/commit, BENCH/BASELINE.md) is paid once
-      per index build — a background job — not per query.
-
-    Publication is atomic (stage dir + rename): readers either see the
-    complete index or the previous one, never a half-written invfile —
-    the same tmp+rename discipline as the table's snapshot commits.
-    """
-
-    META = "_meta.json"
-
-    def __init__(self, path: str, meta: dict):
-        self.path = path
-        self.meta = meta
-        self.centroids: list[tuple[int, list[float]]] = [
-            (int(c), v) for c, v in meta["centroids"]
-        ]
-
-    # -- build / load ----------------------------------------------------
-    @staticmethod
-    def build(
-        corpus: DataFrame,
-        path: str,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        n_cells: int = 16,
-        n_iters: int = 4,
-        seed: int = 0,
-        train_sample: int | None = None,
-        assign: str = "join",
-        provenance: dict | None = None,
-        overwrite: bool = False,
-    ) -> "IvfIndex":
-        if assign not in ("join", "arrow"):
-            raise ValueError(f"unknown assign strategy {assign!r} (join | arrow)")
-        import json
-        import os
-        import shutil
-        import uuid
-
-        if os.path.exists(path) and not overwrite:
-            raise FileExistsError(f"index exists at {path}; pass overwrite=True")
-        cents = ivf_centroid_list(corpus, id_col, vec_col, n_cells, n_iters, seed, train_sample)
-        if not cents:
-            raise ValueError("degenerate corpus (no non-null vectors): nothing to index")
-        spark = corpus.sparkSession
-        dim = len(cents[0][1])
-        cent = spark.createDataFrame(cents, "cell int, cvec array<double>")
-        c = _unit_select(corpus, id_col, "_id", vec_col, "v", dim=dim)
-        c_cells = (_assign_cells(c, cent, dim=dim) if assign == "join"
-                   else _assign_cells_arrow(corpus, cents, id_col, vec_col))
-        stage = f"{path.rstrip('/')}.stage-{uuid.uuid4().hex}"
-        try:
-            (
-                c_cells.select(F.col("_id").alias("neighbor_id"), "cell", F.col("v").alias("cv"))
-                # one file per cell dir (cells are ~corpus/n_cells rows;
-                # size n_cells so a cell fits a task): repartition on cell
-                # BEFORE partitionBy, or every task opens every cell's file
-                .repartition("cell")
-                .write.partitionBy("cell")
-                .parquet(os.path.join(stage, "invfile"))
-            )
-            meta = {
-                "id_col": id_col,
-                "vec_col": vec_col,
-                "n_cells_requested": n_cells,
-                "n_iters": n_iters,
-                "seed": seed,
-                "train_sample": train_sample,
-                "assign": assign,
-                "dim": len(cents[0][1]),
-                "centroids": [[c0, v0] for c0, v0 in cents],
-                "provenance": provenance or {},
-            }
-            with open(os.path.join(stage, IvfIndex.META), "w") as f:
-                json.dump(meta, f)
-                f.flush()
-                os.fsync(f.fileno())
-            if os.path.exists(path):
-                old = f"{path.rstrip('/')}.old-{uuid.uuid4().hex}"
-                os.replace(path, old)
-                os.replace(stage, path)
-                shutil.rmtree(old, ignore_errors=True)
-            else:
-                os.replace(stage, path)
-        except BaseException:
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        return IvfIndex(path, meta)
-
-    @staticmethod
-    def load(path: str) -> "IvfIndex":
-        import json
-        import os
-
-        with open(os.path.join(path, IvfIndex.META)) as f:
-            return IvfIndex(path, json.load(f))
-
-    # -- search ----------------------------------------------------------
-    def _cent(self, spark) -> DataFrame:
-        return spark.createDataFrame(self.centroids, "cell int, cvec array<double>")
-
-    def search(
-        self,
-        queries: DataFrame,
-        k: int = 5,
-        n_probe: int = 4,
-        id_col: str | None = None,
-        vec_col: str | None = None,
-    ) -> DataFrame:
-        """Top-k over the persisted inverted file. Two stages:
-
-        1. probe selection — queries × broadcast(centroids), then the
-           union of probed cells is collected (bounded by n_cells, a
-           metadata-scale driver list) and pushed into the invfile scan
-           as an ``isin`` PARTITION filter: only n_probe-ish of n_cells
-           directories are read;
-        2. the standard probe+score stage (``_ivf_search``) over that
-           pruned scan.
-
-        Matches ``ivf_topk(...)`` built with the same parameters exactly
-        (tested) — the index just makes the corpus-side work one-time."""
-        import os
-
-        spark = queries.sparkSession
-        id_col = id_col or self.meta["id_col"]
-        vec_col = vec_col or self.meta["vec_col"]
-        cent = self._cent(spark)
-        dim = self.meta.get("dim")
-        q = _unit_select(queries, id_col, "query_id", vec_col, "qv", dim=dim)
-        qc = q.crossJoin(F.broadcast(cent)).withColumn("_d", _dot(F.col("qv"), F.col("cvec"), dim=dim))
-        wq = Window.partitionBy("query_id").orderBy(F.col("_d").desc(), F.col("cell"))
-        probes = (
-            qc.withColumn("_r", F.row_number().over(wq))
-            .where(F.col("_r") <= n_probe)
-            .select("query_id", "qv", "cell")
-            .localCheckpoint()  # probe set is reused twice (cell collect + join)
-        )
-        cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
-        # base invfile + any MoR-style append deltas: each root is its own
-        # hive-partitioned dir (no common base path), so read-and-union —
-        # every read prunes to the probed cells' directories
-        parts = []
-        for p in self._inv_paths():
-            parts.append(
-                spark.read.parquet(p)
-                .where(F.col("cell").isin(cells))  # static partition pruning
-                .select("neighbor_id", F.col("cell").cast("int").alias("cell"), "cv")
-            )
-        inv = parts[0]
-        for extra in parts[1:]:
-            inv = inv.unionByName(extra)
-        scored = (
-            inv.join(F.broadcast(probes), "cell")
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id", _dot(F.col("qv"), F.col("cv"), dim=dim).alias("cos"))
-        )
-        w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos"))
-        )
-
-    # -- incremental maintenance (append / compact / retrain trigger) ----
-    def _inv_paths(self) -> list[str]:
-        import os
-
-        return [os.path.join(self.path, self.meta.get("invfile", "invfile"))] + [
-            os.path.join(self.path, d) for d in self.meta.get("deltas", [])
-        ]
-
-    def _write_meta(self) -> None:
-        import json
-        import os
-        import uuid
-
-        tmp = os.path.join(self.path, f"{IvfIndex.META}.tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(self.meta, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(self.path, IvfIndex.META))
-
-    def append(
-        self,
-        new_vectors: DataFrame,
-        id_col: str | None = None,
-        vec_col: str | None = None,
-    ) -> dict:
-        """Incrementally index NEW vectors without retraining or touching
-        the base inverted file: assign them to the EXISTING centroids
-        (broadcast join — one pass over only the new batch) and publish
-        the result as an append delta dir (``inv-delta-*``, same
-        cell-partitioned layout, staged + renamed atomically). Search
-        unions base + deltas with the same probed-cell pruning — the
-        merge-on-read pattern the snapshot table uses, applied to the
-        index. Cell residents drift as the corpus grows away from the
-        training distribution; ``needs_retrain`` bounds that, and
-        ``compact_deltas`` bounds the dir count between retrains.
-        Single-writer (like every maintenance op here): concurrent
-        appends could drop each other's meta update."""
-        import os
-        import shutil
-        import uuid
-
-        spark = new_vectors.sparkSession
-        id_col = id_col or self.meta["id_col"]
-        vec_col = vec_col or self.meta["vec_col"]
-        cent = self._cent(spark)
-        dim = self.meta.get("dim")
-        c = _unit_select(new_vectors, id_col, "_id", vec_col, "v", dim=dim)
-        assigned = (
-            _assign_cells(c, cent, dim=dim) if self.meta.get("assign", "join") == "join"
-            else _assign_cells_arrow(new_vectors, self.centroids, id_col, vec_col)
-        )
-        name = f"inv-delta-{uuid.uuid4().hex}"
-        stage = os.path.join(self.path, f"_stage-{uuid.uuid4().hex}")
-        try:
-            (
-                assigned.select(F.col("_id").alias("neighbor_id"), "cell",
-                                F.col("v").alias("cv"))
-                .repartition("cell")
-                .write.partitionBy("cell")
-                .parquet(stage)
-            )
-            os.replace(stage, os.path.join(self.path, name))
-        except BaseException:
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        self.meta.setdefault("deltas", []).append(name)
-        self._write_meta()
-        return {"delta": name, "n_deltas": len(self.meta["deltas"])}
-
-    def _dir_rows(self, path: str) -> int:
-        """Row count from parquet FOOTERS (metadata pages only)."""
-        import pyarrow.dataset as ds
-
-        return sum(f.count_rows() for f in ds.dataset(path, format="parquet",
-                                                      partitioning="hive").get_fragments())
-
-    def needs_retrain(self, max_delta_fraction: float = 0.5) -> bool:
-        """True when the appended-but-untrained share of the corpus
-        exceeds ``max_delta_fraction`` — past that, centroids trained on
-        the original distribution stop representing the corpus and probe
-        recall decays; rebuild with ``IvfIndex.build(..., overwrite=True)``
-        from the full corpus. Counts come from parquet footers (metadata
-        read, no Spark job)."""
-        if not self.meta.get("deltas"):
-            return False
-        base = self._dir_rows(self._inv_paths()[0])
-        delta = sum(self._dir_rows(p) for p in self._inv_paths()[1:])
-        total = base + delta
-        return total > 0 and (delta / total) > max_delta_fraction
-
-    def compact_deltas(self) -> dict:
-        """Fold append deltas into a NEW base inverted file (read base +
-        deltas once, rewrite cell-partitioned) — no retraining, search
-        results bit-identical (tested). Commit point is the atomic meta
-        rewrite: meta names the active invfile, so a crash before it
-        leaves the old base + deltas fully live; retired dirs are removed
-        best-effort after (a reader holding the OLD meta object should
-        reload after compaction)."""
-        import os
-        import shutil
-        import uuid
-
-        if not self.meta.get("deltas"):
-            return {"compacted": False, "invfile": self.meta.get("invfile", "invfile")}
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        parts = [
-            spark.read.parquet(p)
-            .select("neighbor_id", F.col("cell").cast("int").alias("cell"), "cv")
-            for p in self._inv_paths()
-        ]
-        merged = parts[0]
-        for extra in parts[1:]:
-            merged = merged.unionByName(extra)
-        new_name = f"invfile-{uuid.uuid4().hex}"
-        stage = os.path.join(self.path, f"_stage-{uuid.uuid4().hex}")
-        try:
-            (merged.repartition("cell").write.partitionBy("cell").parquet(stage))
-            os.replace(stage, os.path.join(self.path, new_name))
-        except BaseException:
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        retired = self._inv_paths()
-        self.meta["invfile"] = new_name
-        self.meta["deltas"] = []
-        self._write_meta()  # <-- the commit
-        for p in retired:
-            shutil.rmtree(p, ignore_errors=True)
-        return {"compacted": True, "invfile": new_name}

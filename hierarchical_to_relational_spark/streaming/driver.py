@@ -19,6 +19,7 @@ order-insensitive and convergent (SURVEY.md §2.2 streaming row).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession, types as T
@@ -31,7 +32,12 @@ from hierarchical_to_relational_spark.operators.merge import (
 from hierarchical_to_relational_spark.operators.normalize import normalize_envelopes_fused
 from hierarchical_to_relational_spark.plans import plan_cdc_table
 from hierarchical_to_relational_spark.sources import binlog as binlog_source
-from hierarchical_to_relational_spark.table.snapshot_table import SnapshotTable
+from hierarchical_to_relational_spark.table.snapshot_table import (
+    ConcurrentOverwriteError,
+    SnapshotTable,
+)
+
+log = logging.getLogger(__name__)
 
 
 def make_progress_listener(lineage: LineageStore, query_name: str):
@@ -140,8 +146,8 @@ class CdcPipeline:
         # PARTIAL: only the buckets over a threshold rewrite (manifest
         # stats pick them). A zipf-hot bucket folds often; cold buckets
         # with shallow stacks are never rewritten along for the ride.
-        folded = compact_pressured(
-            self.spark, self.table, batch_id=f"{batch_id}::compact",
+        folded = self._inline_step(
+            batch_id, "compact", compact_pressured,
             depth_threshold=self.compact_every,
             bytes_threshold=self.compact_min_bytes,
             zorder=self.compact_zorder,
@@ -156,8 +162,8 @@ class CdcPipeline:
                 and self._batches_applied % self.binpack_every == 0):
             from hierarchical_to_relational_spark.operators.merge import binpack_deltas
 
-            packed = binpack_deltas(
-                self.spark, self.table, batch_id=f"{batch_id}::binpack",
+            packed = self._inline_step(
+                batch_id, "binpack", binpack_deltas,
                 target_bytes=self.binpack_target_bytes,
                 min_dirs=self.binpack_min_dirs,
             )
@@ -182,6 +188,18 @@ class CdcPipeline:
         metrics["table_version"] = self.table.current_version()
         self.lineage.record(metrics)
         return metrics
+
+    def _inline_step(self, batch_id, step: str, fn, **kw) -> list[int]:
+        """One inline maintenance rewrite after ``batch_id`` committed;
+        returns the buckets rewritten. A rewrite that loses every race to
+        another writer is skipped with a warning (``[]``), so the committed
+        batch still returns and gets its lineage line; the next batch picks
+        again."""
+        try:
+            return fn(self.spark, self.table, batch_id=f"{batch_id}::{step}", **kw)
+        except ConcurrentOverwriteError as e:
+            log.warning("batch %s: inline %s skipped: %s", batch_id, step, e)
+            return []
 
     # -- streaming entry point --
     def run_stream(

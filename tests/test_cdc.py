@@ -368,6 +368,38 @@ def test_per_batch_compaction_matches_oracle(spark, tmp_path, binlog):
     _assert_matches_oracle(spark, pipe, binlog["events"])
 
 
+def test_inline_maintenance_losing_every_race_skips(spark, tmp_path, binlog, caplog):
+    """An inline compaction or bin-pack that loses every race (here: every
+    replacing commit raises) is skipped with a warning: the batch that
+    already committed still returns and gets its lineage line."""
+    import logging
+
+    from hierarchical_to_relational_spark.table.snapshot_table import ConcurrentOverwriteError
+
+    pipe = CdcPipeline(spark, binlog["dir"], str(tmp_path / "t"), str(tmp_path / "ck"),
+                       n_buckets=8, text_mode="none", compact_every=1,
+                       binpack_every=1, binpack_min_dirs=2)
+    commit = pipe.table.commit_data
+
+    def racing_commit(df, batch_id, replace=None, **kw):
+        if replace:
+            raise ConcurrentOverwriteError(f"{batch_id}: a picked dir is gone")
+        return commit(df, batch_id, replace=replace, **kw)
+
+    pipe.table.commit_data = racing_commit
+    with caplog.at_level(logging.WARNING, logger="hierarchical_to_relational_spark"):
+        for i, p in enumerate(binlog["paths"]):
+            m = pipe.replay_batch(p, f"seg-{i}")
+            assert m["committed"] is True and "compacted" not in m
+    _assert_matches_oracle(spark, pipe, binlog["events"])
+    assert [e["batch_id"] for e in pipe.lineage.entries()] == [
+        f"seg-{i}" for i in range(len(binlog["paths"]))]
+    skipped = [r.getMessage() for r in caplog.records if "skipped" in r.getMessage()]
+    assert any(s.startswith("batch seg-0: inline compact skipped") for s in skipped)
+    assert any(s.startswith("batch seg-1: inline binpack skipped") for s in skipped)
+    assert {h["kind"] for h in pipe.table.history()} == {"create", "append"}
+
+
 def test_mor_compaction_preserves_state(spark, tmp_path, binlog):
     """Appended deltas stack; compaction folds them without changing the
     resolved state; reads are identical before/after."""

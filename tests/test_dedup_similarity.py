@@ -152,21 +152,33 @@ def _embeddings(spark):
     return spark.read.parquet(os.path.join(sf, "embeddings.parquet"))
 
 
-def test_ivf_recall_contract(spark):
+@pytest.mark.parametrize("assign", ["join", "arrow"])
+def test_ivf_recall_contract(spark, assign):
     """The ANN recall contract: IVF with (16 cells, 4 probes) must reach
     recall@10 >= 0.6 vs brute force on the embeddings fixture, and probing
     ALL cells must recover recall 1.0 (the knob degrades gracefully to
-    exact search)."""
+    exact search). Both corpus assignments give the same rows, and an
+    unknown one is rejected before any Spark job runs."""
     emb = _embeddings(spark)
     queries = emb.where(F.col("vec_id") % 50 == 0)  # 10 queries
     exact = sim.brute_force_topk(queries, emb, k=10).cache()
 
-    approx = sim.ivf_topk(queries, emb, k=10, n_cells=16, n_probe=4)
+    approx = sim.ivf_topk(queries, emb, k=10, n_cells=16, n_probe=4, assign=assign)
     r = sim.recall_at_k(approx, exact, k=10)
     assert r >= 0.6, f"IVF recall@10 = {r:.3f} < 0.6"
 
-    full = sim.ivf_topk(queries, emb, k=10, n_cells=16, n_probe=16)
+    full = sim.ivf_topk(queries, emb, k=10, n_cells=16, n_probe=16, assign=assign)
     assert sim.recall_at_k(full, exact, k=10) == 1.0
+
+    got = {tuple(r) for r in approx.collect()}
+    assert got
+    if assign == "arrow":
+        join = sim.ivf_topk(queries, emb, k=10, n_cells=16, n_probe=4, assign="join")
+        assert got == {tuple(r) for r in join.collect()}
+
+    # no frames at all: the check must come before anything reads them
+    with pytest.raises(ValueError, match="unknown assign strategy 'bogus'"):
+        sim.ivf_topk(None, None, k=10, assign="bogus")
 
 
 def test_ivf_training_scans_sample_not_corpus(spark):
@@ -193,10 +205,8 @@ def test_ivf_training_scans_sample_not_corpus(spark):
     )
     clean_sample = base.where(F.col("vec_id").isin(sample_ids))
 
-    got = {r["cell"]: r["cvec"] for r in
-           sim.ivf_centroids(poisoned, n_cells=n_cells, train_sample=samp_n).collect()}
-    want = {r["cell"]: r["cvec"] for r in
-            sim.ivf_centroids(clean_sample, n_cells=n_cells, train_sample=samp_n).collect()}
+    got = dict(sim.ivf_centroid_list(poisoned, n_cells=n_cells, train_sample=samp_n))
+    want = dict(sim.ivf_centroid_list(clean_sample, n_cells=n_cells, train_sample=samp_n))
     assert got.keys() == want.keys()
     for cell in want:
         assert got[cell] == pytest.approx(want[cell], rel=1e-9), (
@@ -227,147 +237,3 @@ def test_simhash_production_hash_variant(spark):
     out = {r["doc_id"]: r["simhash"]
            for r in dd.simhash_fingerprint(d, "doc_id", "text", hash_fn="xxhash64").collect()}
     assert all(len(v) == 16 and set(v) <= {"0", "1"} for v in out.values())
-
-
-def test_ivf_auto_probe_hits_target(spark):
-    """The probe selector returns the smallest ladder rung whose MEASURED
-    recall meets the target; the returned setting actually delivers that
-    recall when re-run, and an impossible-to-miss target (recall 1.0)
-    resolves because probing all cells degrades to exact search."""
-    emb = _embeddings(spark)
-    queries = emb.where(F.col("vec_id") % 50 == 0)  # held-out sample
-    probe, measured = sim.ivf_auto_probe(
-        queries, emb, k=10, n_cells=16, target_recall=0.6
-    )
-    assert measured >= 0.6 and 1 <= probe <= 16
-    # the selected setting reproduces the measured recall end-to-end
-    exact = sim.brute_force_topk(queries, emb, k=10)
-    again = sim.recall_at_k(
-        sim.ivf_topk(queries, emb, k=10, n_cells=16, n_probe=probe), exact, k=10
-    )
-    assert again == measured
-    # smaller rung (if any) must miss the target — minimality of the ladder
-    if probe > 1:
-        below = sim.recall_at_k(
-            sim.ivf_topk(queries, emb, k=10, n_cells=16, n_probe=probe // 2), exact, k=10
-        )
-        assert below < 0.6
-    # target 1.0 terminates (all-cells probe == brute force)
-    p_full, r_full = sim.ivf_auto_probe(queries, emb, k=10, n_cells=16, target_recall=1.0)
-    assert r_full == 1.0 and p_full <= 16
-
-
-def test_ivf_index_persist_matches_inline(spark, tmp_path):
-    """IvfIndex: build → load → search must equal the inline ivf_topk with
-    identical parameters (same centroids, same tiebreaks), and the probe
-    stage must PRUNE the invfile scan to the probed cell partitions —
-    repeated queries pay n_probe/n_cells of the corpus IO, not a full scan."""
-    import os
-
-    emb = _embeddings(spark)
-    queries = emb.where(F.col("vec_id") % 50 == 0)
-    path = str(tmp_path / "ivf")
-    idx = sim.IvfIndex.build(
-        emb, path, n_cells=16, provenance={"source": "sf0.001/embeddings"}
-    )
-    loaded = sim.IvfIndex.load(path)
-    assert loaded.meta["provenance"] == {"source": "sf0.001/embeddings"}
-    assert [c for c, _ in loaded.centroids] == [c for c, _ in idx.centroids]
-
-    got = loaded.search(queries, k=10, n_probe=4)
-    want = sim.ivf_topk(queries, emb, k=10, n_cells=16, n_probe=4)
-    assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}
-
-    # scan pruning: the search's invfile read touches only the probed
-    # cells' partition dirs, not all of them
-    cells_total = {d for d in os.listdir(os.path.join(path, "invfile")) if d.startswith("cell=")}
-    assert len(cells_total) > 4
-    cent = loaded._cent(spark)
-    one = queries.orderBy("vec_id").limit(1)  # 1 query probes 4 of 16 cells
-    q = one.select(F.col("vec_id").alias("query_id"),
-                   sim._unit(F.col("embedding").cast("array<double>")).alias("qv"))
-    qc = q.crossJoin(F.broadcast(cent)).withColumn("_d", sim._dot(F.col("qv"), F.col("cvec")))
-    from pyspark.sql import Window
-    wq = Window.partitionBy("query_id").orderBy(F.col("_d").desc(), F.col("cell"))
-    probed = {r["cell"] for r in qc.withColumn("_r", F.row_number().over(wq))
-              .where(F.col("_r") <= 4).select("cell").distinct().collect()}
-    pruned = (spark.read.parquet(os.path.join(path, "invfile"))
-              .where(F.col("cell").isin(list(probed))))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    # hive-partitioned by cell → the isin is a PARTITION filter: the scan
-    # plans only the probed dirs (inputFiles() is logical-level and would
-    # not show pruning)
-    assert "PartitionFilters: [cell" in plan
-    import re as _re
-    m = _re.search(r"PartitionFilters: \[cell#\d+ IN? ?\(([^)]*)\)", plan)
-    assert m, plan
-    assert {s.strip() for s in m.group(1).split(",")} == {str(c) for c in probed}
-    assert len(probed) < len(cells_total)
-    assert pruned.count() == sum(
-        1 for r in spark.read.parquet(os.path.join(path, "invfile"))
-        .select("cell").collect() if r["cell"] in probed)
-
-    # atomic rebuild: overwrite=True swaps in a complete new index;
-    # without the flag a rebuild refuses to clobber
-    with pytest.raises(FileExistsError):
-        sim.IvfIndex.build(emb, path, n_cells=16)
-    sim.IvfIndex.build(emb, path, n_cells=8, overwrite=True)
-    re = sim.IvfIndex.load(path)
-    assert re.meta["n_cells_requested"] == 8
-    got8 = re.search(queries, k=10, n_probe=8)
-    want8 = sim.ivf_topk(queries, emb, k=10, n_cells=8, n_probe=8)
-    assert {tuple(r) for r in got8.collect()} == {tuple(r) for r in want8.collect()}
-
-
-def test_ivf_index_append_compact_retrain(spark, tmp_path):
-    """Incremental IVF maintenance: append indexes new vectors against the
-    EXISTING centroids as a merge-on-read delta dir (no base rewrite);
-    search unions base+deltas and finds the appended vectors; the result
-    equals assigning the whole corpus to the same centroids in one build;
-    compact_deltas folds deltas into a new base bit-identically; and
-    needs_retrain trips once the untrained share crosses the threshold."""
-    import os
-
-    emb = _embeddings(spark)
-    old = emb.where(F.col("vec_id") % 2 == 0)
-    new = emb.where(F.col("vec_id") % 2 == 1)
-    queries = emb.where(F.col("vec_id") % 50 == 0)
-    path = str(tmp_path / "ivf")
-
-    idx = sim.IvfIndex.build(old, path, n_cells=8)
-    assert not idx.needs_retrain()
-    rep = idx.append(new)
-    assert rep["n_deltas"] == 1
-    assert os.path.isdir(os.path.join(path, rep["delta"]))
-
-    got = idx.search(queries, k=10, n_probe=8)
-    want_rows = {tuple(r) for r in got.collect()}
-    assert any(r for r in want_rows), "search returns results"
-    # all-cells probe over base+delta == exact brute force over the UNION
-    # corpus: the append made the index complete, not just larger
-    exact = sim.brute_force_topk(queries, emb, k=10)
-    assert sim.recall_at_k(got, exact, k=10) == 1.0
-    appended_ids = {r["vec_id"] for r in new.select("vec_id").collect()}
-    assert {r[1] for r in want_rows} & appended_ids, \
-        "appended vectors are discoverable as neighbors"
-
-    # a reloaded index sees the delta (meta persisted atomically)
-    re = sim.IvfIndex.load(path)
-    assert re.meta["deltas"] == [rep["delta"]]
-    got2 = {tuple(r) for r in re.search(queries, k=10, n_probe=8).collect()}
-    assert got2 == want_rows
-
-    # 50/50 split: appended share == 0.5 > 0.4 threshold, <= 0.6 not
-    assert re.needs_retrain(max_delta_fraction=0.4)
-    assert not re.needs_retrain(max_delta_fraction=0.6)
-
-    # compaction: results bit-identical, deltas gone, one new base
-    crep = re.compact_deltas()
-    assert crep["compacted"] and re.meta["deltas"] == []
-    assert os.path.isdir(os.path.join(path, crep["invfile"]))
-    assert not os.path.isdir(os.path.join(path, "invfile")), "old base retired"
-    got3 = {tuple(r) for r in re.search(queries, k=10, n_probe=8).collect()}
-    assert got3 == want_rows
-    assert not re.needs_retrain(max_delta_fraction=0.0), "no deltas left"
-    # idempotent no-op on an already-compacted index
-    assert re.compact_deltas()["compacted"] is False

@@ -93,3 +93,36 @@ def test_whole_stage_codegen_on_scan_pipeline(spark):
     df.collect()  # finalize the adaptive plan
     plan = plan_of(df)
     assert "*(" in plan and "isFinalPlan=true" in plan
+
+
+PY_WORKER_CALLS = ("pandas_udf", "udtf", "mapInPandas", "mapInArrow",
+                   "applyInPandas", "applyInArrow")
+
+
+def test_python_worker_call_sites_are_pinned():
+    """Every use in the package of an API that starts Python workers
+    (vectorized UDFs, UDTFs, map/apply-in-Pandas/Arrow, their stateful
+    forms; called or as a bare decorator) is one of three known sites. A
+    new one must be added here on purpose; the plan check above only sees
+    the contract queries."""
+    import ast
+
+    sites = set()
+
+    def visit(node, scope):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            scope = scope + (node.name,)
+        name = getattr(node, "attr", None) or getattr(node, "id", None)
+        if isinstance(node, (ast.Name, ast.Attribute)) and name.startswith(PY_WORKER_CALLS):
+            sites.add(".".join(scope))
+        for child in ast.iter_child_nodes(node):
+            visit(child, scope)
+
+    pkg = Path(__file__).resolve().parents[1] / "hierarchical_to_relational_spark"
+    for path in sorted(pkg.rglob("*.py")):
+        visit(ast.parse(path.read_text()), (path.stem,))
+    assert sites == {
+        "similarity._assign_cells_arrow",
+        "multimodal.decode_and_featurize",
+        "snapshot_table.SnapshotTable._attach_bloom_fold",
+    }
