@@ -22,7 +22,6 @@ late binlog data is handled without event-time watermarks (SURVEY.md §2.2).
 
 from __future__ import annotations
 
-import json
 import logging
 import os
 import time
@@ -38,6 +37,7 @@ from hierarchical_to_relational_spark.table.snapshot_table import (
     dirs_of,
     empty_frame,
     live_of,
+    schema_of,
 )
 
 log = logging.getLogger(__name__)
@@ -237,9 +237,8 @@ def _rewrite(spark: SparkSession, table: SnapshotTable, batch_id: str, pick, fn,
         if not replace:
             return {}
         rows = table.scan_dirs(spark, dirs_of(replace), snap)
-        schema = T.StructType.fromJson(json.loads(snap["schema"]))
         try:
-            committed = table.commit_data(fn(rows, schema), batch_id, replace=replace,
+            committed = table.commit_data(fn(rows, schema_of(snap)), batch_id, replace=replace,
                                           cluster_by=cluster_by, n_buckets=n_buckets)
             return replace if committed else {}
         except ConcurrentOverwriteError as e:

@@ -355,10 +355,10 @@ class ChangeFollower:
     def poll_once(self, on_changes=None) -> dict:
         """One poll: diff (cursor, current], export/emit, DELIVER, then
         advance the cursor. Returns {from, to, upserts, deletes, out_path,
-        needs_resync}. First poll with no cursor emits nothing and pins the
-        cursor at the current version (a brand-new consumer starts from a
-        full read it performs itself — emitting the whole table as a 'diff'
-        would duplicate that read).
+        needs_resync, redelivered}. First poll with no cursor emits nothing
+        and pins the cursor at the current version (a brand-new consumer
+        starts from a full read it performs itself — emitting the whole
+        table as a 'diff' would duplicate that read).
 
         ``on_changes(result)`` — invoked for a non-empty window BEFORE the
         cursor advances: if the callback raises, the cursor stays put and
@@ -371,6 +371,13 @@ class ChangeFollower:
         st = self._state()
         since = st["version"] if st else None
         acked = st["acked"] if st else None
+        redelivered = 0
+
+        def result(to: int, needs_resync: bool = False, **window) -> dict:
+            # every return reports this poll's start and re-deliveries
+            return {"from": since, "to": to, "upserts": 0, "deletes": 0, "out_path": None,
+                    "needs_resync": needs_resync, "redelivered": redelivered, **window}
+
         if since is None and self.since_ts is not None:
             # timestamp start point: resume as if a cursor had been pinned
             # at the snapshot current at since_ts — the first poll emits
@@ -379,9 +386,7 @@ class ChangeFollower:
             acked = since
         if since is None:
             self._write_cursor(v_now)
-            return {"from": None, "to": v_now, "upserts": 0, "deletes": 0,
-                    "out_path": None, "needs_resync": False, "redelivered": 0}
-        redelivered = 0
+            return result(v_now)
         if on_changes is not None and self.out_dir and acked is not None and acked < since:
             # published-but-unacked windows (crash between export and
             # callback, or a prior callback error): re-deliver them FROM
@@ -393,20 +398,15 @@ class ChangeFollower:
             if not ok:
                 log.warning("feed resync v%s..v%s: unacked windows from v%s cannot be "
                             "re-delivered", since, v_now, acked)
-                return {"from": since, "to": v_now, "upserts": 0, "deletes": 0,
-                        "out_path": None, "needs_resync": True,
-                        "redelivered": redelivered}
+                return result(v_now, needs_resync=True)
         if v_now <= since:
-            return {"from": since, "to": since, "upserts": 0, "deletes": 0,
-                    "out_path": None, "needs_resync": False,
-                    "redelivered": redelivered}
+            return result(since)
         try:
             df = changes_since(self.spark, self.table, since, version=v_now)
         except ValueError as e:
             # a rollback whose retracted dirs already expired: full resync
             log.warning("feed resync v%s..v%s: %s", since, v_now, e)
-            return {"from": since, "to": v_now, "upserts": 0, "deletes": 0,
-                    "out_path": None, "needs_resync": True}
+            return result(v_now, needs_resync=True)
         except FileNotFoundError:
             # Resync ONLY if the cursor's snapshot really expired (offline
             # past the retention window); a transient FS blip on some other
@@ -414,8 +414,7 @@ class ChangeFollower:
             # spurious resync is a full-table rebuild at scale.
             if not os.path.exists(self.table._snapshot_path(since)):
                 log.warning("feed resync v%s..v%s: the cursor's snapshot expired", since, v_now)
-                return {"from": since, "to": v_now, "upserts": 0, "deletes": 0,
-                        "out_path": None, "needs_resync": True}
+                return result(v_now, needs_resync=True)
             raise
         out_path = None
         if self.out_dir:
@@ -435,10 +434,8 @@ class ChangeFollower:
         stats = self._window_stats(df)
         if out_path is not None:
             self._journal_append(since, v_now, stats)  # outlives retention
-        res = {"from": since, "to": v_now,
-               "upserts": stats["upserts"], "deletes": stats["deletes"],
-               "out_path": out_path, "needs_resync": False,
-               "redelivered": redelivered, "changes": df}
+        res = result(v_now, upserts=stats["upserts"], deletes=stats["deletes"],
+                     out_path=out_path, changes=df)
         # deliver BEFORE advancing the ack: a crash (or callback error)
         # between delivery and cursor write re-delivers the same window —
         # at-least-once for callback consumers instead of the at-most-once

@@ -12,6 +12,10 @@ north rule needs:
 - **Idempotent commits keyed by batch_id** (the exactly-once primitive):
   re-committing an already-applied batch_id is a no-op — replays after
   failure/restart converge instead of duplicating.
+- **One snapshot commit** (``_commit``, Iceberg's ``TableOperations.commit``):
+  every commit — data, evolution, index, merge, rollback — states its
+  change against the snapshot it lands on, and restates it on the new one
+  after losing the version race.
 - **One data commit** (``commit_data``): rows are hash-bucketed on the
   merge key (``conv_id``); a data batch appends a delta dir to the buckets
   it touches (merge-on-read), and compaction, bin-packing and re-bucketing
@@ -80,6 +84,7 @@ FILE_STATS_NAME = "_file_stats.json"  # per-commit-dir file min-max sidecar
 # and _footer_stats only)
 _TOP_BOUND_COLS = ("conv_id", "_lsn", "_bucket")
 _WRITE_SALT = 8  # salt domain of the append write shuffle (_write_commit_data)
+COMMIT_ATTEMPTS = 20  # tries of one optimistic snapshot or ledger write
 
 # Parquet bloom filters on the merge key, for point lookups on files the
 # min-max sidecar CANNOT prune (hash-ordered delta appends span the full
@@ -284,6 +289,11 @@ def live_of(snap: dict, buckets: list[int] | None = None) -> dict[str, list[str]
     """``snap``'s live dirs of ``buckets`` (None: every bucket)."""
     want = None if buckets is None else {str(b) for b in buckets}
     return {b: ds for b, ds in snap["live"].items() if want is None or b in want}
+
+
+def schema_of(snap: dict) -> T.StructType:
+    """``snap``'s table schema."""
+    return T.StructType.fromJson(json.loads(snap["schema"]))
 
 
 def dirs_of(live: dict[str, list[str]]) -> dict[str, list[str]]:
@@ -736,21 +746,18 @@ class SnapshotTable:
         meta = br.branch_meta()
         fork_live: dict[str, list[str]] = meta["fork_live"]
         br_snap = br.snapshot()
-        br_schema = T.StructType.fromJson(json.loads(br_snap["schema"]))
+        br_schema = schema_of(br_snap)
         if br_snap["n_buckets"] != meta["fork_n_buckets"]:
             raise BranchDivergedError(
                 f"branch {name!r} was rebucketed since fork; merge manually")
-        # callable: _commit re-resolves per retry attempt, so losing the
-        # pointer race to a concurrent schema evolution on main can't
-        # publish a stale union that reverts the winner's columns
-        schema = lambda: _union_schema(self.schema(), br_schema)  # noqa: E731
         br_live = br_snap["live"]
-        br_bytes = br_snap["commit_bytes"]
+        inherited = br._committed_as_of(br_snap["version"]).to_json()
 
-        def update(live: dict) -> dict:
-            if self.snapshot()["n_buckets"] != meta["fork_n_buckets"]:
+        def change(nxt: dict) -> dict:
+            if nxt["n_buckets"] != meta["fork_n_buckets"]:
                 raise BranchDivergedError(
                     f"main was rebucketed since branch {name!r} forked")
+            live = nxt["live"]
             for b in set(live) | set(br_live):
                 fork_d = fork_live.get(b, [])
                 main_d = live.get(b, [])
@@ -771,16 +778,18 @@ class SnapshotTable:
                     live[b] = new
                 else:
                     live.pop(b, None)
-            return live
+            # the union is over the schema this attempt lands on: a lost
+            # race to an evolution on main keeps the winner's columns
+            return {"schema": _union_schema(schema_of(nxt), br_schema).json(),
+                    "live": live, "commit_bytes": br_snap["commit_bytes"],
+                    "inherited_ids": inherited}
 
-        return self._commit(batch_id, schema, update, kind="merge",
-                            extra_commit_bytes=br_bytes,
-                            inherited=br._committed_as_of(br_snap["version"]))
+        return self._commit(batch_id, "merge", change)
 
     # ---------- metadata ----------
 
     def schema(self, version: int | None = None) -> T.StructType:
-        return T.StructType.fromJson(json.loads(self.snapshot(version)["schema"]))
+        return schema_of(self.snapshot(version))
 
     @property
     def n_buckets(self) -> int:
@@ -820,7 +829,7 @@ class SnapshotTable:
         merged with the newest ledger on disk: a losing concurrent
         expiration re-merges (set union, order-free) and retries. Older
         ledger versions are pruned after the win."""
-        for _ in range(20):
+        for _ in range(COMMIT_ATTEMPTS):
             next_v, through = 1, expired_through
             if got := self._latest_ledger():
                 next_v = got[0] + 1
@@ -838,7 +847,8 @@ class SnapshotTable:
                 except FileNotFoundError:
                     pass
             return
-        raise CommitConflictError("gave up writing the batch-id ledger after 20 attempts")
+        raise CommitConflictError(
+            f"gave up writing the batch-id ledger after {COMMIT_ATTEMPTS} attempts")
 
     @staticmethod
     def _fold_snapshot_ids(ids: CommittedIds, snap: dict) -> None:
@@ -915,8 +925,7 @@ class SnapshotTable:
             f = schema[c]  # KeyError for unknown columns — deliberate
             if f.dataType.typeName() not in ("string", "byte", "short", "integer", "long"):
                 raise ValueError(f"bloom index needs a string/int column, {c} is {f.dataType}")
-        return self._commit(batch_id, None, lambda live: live,
-                            index_cols_override=list(cols), kind="evolve")
+        return self._commit(batch_id, "evolve", lambda nxt: {"index_cols": list(cols)})
 
     def bucket_col(self):
         """``bucket_expr`` factory for the table's current bucket count."""
@@ -1007,7 +1016,7 @@ class SnapshotTable:
         (dirs compacted away before ``snap``, rollback-retracted dirs) —
         is read by one scan per distinct bucket set, filtered by that set
         (None: unfiltered)."""
-        read_schema = scan_schema(T.StructType.fromJson(json.loads(snap["schema"])))
+        read_schema = scan_schema(schema_of(snap))
         written = snap["commit_bytes"]
         # an equality probe also implies a [v, v] bounds check for free
         eff_ranges = dict(col_ranges or {})
@@ -1137,7 +1146,7 @@ class SnapshotTable:
         row-group ``_bucket`` min-max that the in-partition sort below
         produces — FILE granularity."""
         snap = self.snapshot()
-        schema = T.StructType.fromJson(json.loads(snap["schema"]))
+        schema = schema_of(snap)
         commit_rel = os.path.join(DATA_DIR, f"c-{uuid.uuid4().hex}")
         commit_abs = os.path.join(self.root, commit_rel)
         ordered = ["_bucket"] + [n for n in schema.fieldNames()]
@@ -1448,82 +1457,50 @@ class SnapshotTable:
         }
         return metrics, file_stats, {b: int(round(v)) for b, v in written.items()}
 
-    def _commit(
-        self,
-        batch_id: str,
-        schema,  # StructType, () -> StructType, or None: the current one
-        update_live,
-        commit_meta: tuple[str, dict] | None = None,
-        retries: int = 20,
-        n_buckets_override: int | None = None,
-        kind: str = "append",
-        index_cols_override: list[str] | None = None,
-        extra_commit_bytes: dict | None = None,
-        inherited: CommittedIds | None = None,
-    ) -> bool:
-        """Optimistic-concurrency commit (Iceberg-style): build the new
-        ``live`` mapping from the CURRENT snapshot via ``update_live(live)``,
-        try to exclusively create the next version file; on losing the race,
-        re-read and retry — the data files are already on disk, only the
-        pointer swap repeats. Idempotence on batch_id is re-checked every
-        attempt (the winner may have been our own batch replayed).
+    def _commit(self, batch_id: str, kind: str, change) -> bool:
+        """The one snapshot commit (optimistic concurrency, Iceberg's
+        ``TableOperations.commit(base, updated)``). Each attempt reads the
+        snapshot it lands on, ``cur`` (a rollback reads it unchecked, so it
+        can leave a bad one), and starts the next snapshot ``nxt`` from
+        ``cur``'s ``schema``, ``n_buckets`` and ``index_cols`` and a copy of
+        its ``live`` — nothing else carries forward, so a merge's
+        ``inherited_ids`` stays on the merge snapshot. ``change(nxt)``
+        returns the fields it sets: ``schema`` (JSON), ``n_buckets``,
+        ``index_cols``, ``live``, ``commit_bytes`` (stats of the dirs the
+        new ``live`` brings in; ``cur``'s own stats win) and
+        ``inherited_ids`` (another log's ids a merge brings in). The
+        snapshot's ``commit_bytes`` is pruned to the dirs ``live``
+        references (a KeyError beats publishing a bad snapshot), so the
+        manifest stays O(live dirs). Losing the version race re-reads
+        ``cur`` and calls ``change`` again — data files are already on
+        disk, only the pointer swap repeats — up to ``COMMIT_ATTEMPTS``
+        times; idempotence on ``batch_id`` is re-checked every attempt.
 
-        ``commit_meta`` = (commit_rel, per-bucket bytes) for the new data
-        dir; the snapshot's ``commit_bytes`` stats are pruned to dirs still
-        referenced by ``live`` so manifest size stays O(live dirs).
-        ``n_buckets_override`` flips the bucket spec in the same atomic
-        snapshot (re-bucketing migration).
-
-        ``kind`` labels the commit's LOGICAL effect in the snapshot
-        (append / compact / rebucket / merge / rollback / evolve):
-        incremental readers (``operators.merge.changes_since``) skip
-        pure-rewrite kinds (compact, rebucket) — their live-map churn
-        carries no logical change — and treat non-append live diffs from
-        the other kinds as whole-bucket changes. ``inherited``: another
-        log's ids this commit brings in (a merge), kept in the snapshot."""
-        for _ in range(retries):
+        ``kind`` labels the commit's LOGICAL effect: ``append``,
+        ``compact``, ``rebucket`` (``commit_data``), ``evolve``
+        (``evolve_to``, ``enable_index``), ``merge`` and ``rollback``.
+        Incremental readers (``operators.merge.changes_since``) skip the
+        pure rewrites (compact, rebucket) and treat a non-append live diff
+        of the other kinds as whole-bucket changes."""
+        for _ in range(COMMIT_ATTEMPTS):
             if batch_id in self.committed_batch_ids():
                 return False
             cur = self._snapshot_log_entry() if kind == "rollback" else self.snapshot()
-            # schema is re-resolved EVERY attempt (None keeps the schema
-            # of the snapshot the attempt builds on; a callable re-runs
-            # the union) so a commit that loses the pointer race to a
-            # concurrent schema evolution keeps the winner's columns
-            # instead of publishing a stale schema. Data commits pass None:
-            # only evolve_to, merge_branch and rollback change the schema.
-            if schema is None:
-                resolved_schema = cur["schema"]
-            else:
-                resolved_schema = (schema() if callable(schema) else schema).json()
-            new_live = update_live({b: list(ds) for b, ds in cur["live"].items()})
-            referenced = {d for ds in new_live.values() for d in ds}
-            # every live dir keeps its commit_bytes: a branch merge adopts
-            # stats from the BRANCH's snapshot, a rollback (maybe off a bad
-            # snapshot) from its TARGET; a KeyError here beats a bad snapshot
-            known = {**(extra_commit_bytes or {}), **cur["commit_bytes"]}
-            if commit_meta is not None:
-                known[commit_meta[0]] = commit_meta[1]
-            commit_bytes = {d: known[d] for d in referenced}
-            snap = {
-                "version": cur["version"] + 1,
-                "batch_id": batch_id,
-                "kind": kind,
-                "committed_at": time.time(),
-                "schema": resolved_schema,
-                "n_buckets": n_buckets_override if n_buckets_override is not None else cur["n_buckets"],
-                "index_cols": (index_cols_override if index_cols_override is not None
-                               else cur["index_cols"]),
-                "live": new_live,
-                "commit_bytes": commit_bytes,
-            }
-            if inherited is not None:
-                snap["inherited_ids"] = inherited.to_json()
+            nxt = {"version": cur["version"] + 1, "batch_id": batch_id, "kind": kind,
+                   "committed_at": time.time(), "schema": cur["schema"],
+                   "n_buckets": cur["n_buckets"], "index_cols": cur["index_cols"],
+                   "live": {b: list(ds) for b, ds in cur["live"].items()},
+                   "commit_bytes": {}}
+            nxt.update(change(nxt))
+            known = {**nxt["commit_bytes"], **cur["commit_bytes"]}
+            nxt["commit_bytes"] = {d: known[d] for ds in nxt["live"].values() for d in ds}
             try:
-                self._write_snapshot(snap)
+                self._write_snapshot(nxt)
                 return True
             except CommitConflictError:
                 continue
-        raise CommitConflictError(f"gave up committing {batch_id!r} after {retries} attempts")
+        raise CommitConflictError(
+            f"gave up committing {batch_id!r} after {COMMIT_ATTEMPTS} attempts")
 
     def commit_data(
         self,
@@ -1562,7 +1539,8 @@ class SnapshotTable:
         replace = replace or {}
         commit_rel, written = self._write_commit_data(df, cluster_by=cluster_by)
 
-        def update(live: dict) -> dict:
+        def change(nxt: dict) -> dict:
+            live = nxt["live"]
             for b, olds in replace.items():
                 if not set(olds) <= set(live.get(b, [])):
                     raise ConcurrentOverwriteError(
@@ -1571,7 +1549,8 @@ class SnapshotTable:
                 if any(set(ds) - set(replace.get(b, [])) for b, ds in live.items()):
                     raise ConcurrentOverwriteError(
                         "a dir was committed after the rebucket read; re-read and retry")
-                return {b: [commit_rel] for b in written}
+                return {"n_buckets": n_buckets, "live": {b: [commit_rel] for b in written},
+                        "commit_bytes": {commit_rel: written}}
             for b in dict.fromkeys([*written, *replace]):
                 cur, olds = live.get(b, []), replace.get(b, [])
                 new = [d for d in cur if d not in olds]
@@ -1581,11 +1560,10 @@ class SnapshotTable:
                     live[b] = new
                 else:
                     live.pop(b, None)
-            return live
+            return {"live": live, "commit_bytes": {commit_rel: written}}
 
         kind = "rebucket" if n_buckets is not None else "compact" if replace else "append"
-        return self._commit(batch_id, None, update, commit_meta=(commit_rel, written),
-                            n_buckets_override=n_buckets, kind=kind)
+        return self._commit(batch_id, kind, change)
 
     def delta_depth(self) -> int:
         """Max commit dirs stacked on any bucket (compaction trigger)."""
@@ -1640,7 +1618,6 @@ class SnapshotTable:
         data files move, and the rollback itself is idempotent on
         batch_id. Fails if the target snapshot was expired."""
         target = self.snapshot(version)  # raises if expired/unknown
-        schema = T.StructType.fromJson(json.loads(target["schema"]))
         # Freshen the mtime of every data dir the rollback re-references
         # BEFORE committing: those dirs may be old enough to look like
         # orphans to a concurrent expire_snapshots whose retained window no
@@ -1654,14 +1631,9 @@ class SnapshotTable:
                 except FileNotFoundError:
                     pass  # already expired: the commit below still records it;
                     # reads will surface the missing dir rather than hide it
-        return self._commit(
-            batch_id,
-            schema,
-            lambda live: {b: list(ds) for b, ds in target["live"].items()},
-            n_buckets_override=target["n_buckets"],
-            kind="rollback",
-            extra_commit_bytes=target["commit_bytes"],
-        )
+        return self._commit(batch_id, "rollback", lambda nxt: {
+            "schema": target["schema"], "n_buckets": target["n_buckets"],
+            "live": target["live"], "commit_bytes": target["commit_bytes"]})
 
     # ---------- maintenance: snapshot expiration + orphan GC ----------
 
@@ -1832,7 +1804,7 @@ class SnapshotTable:
         cur = self.schema()
         if _union_schema(cur, target) == cur:
             return False  # nothing to evolve; checked before the ledger
-        # re-resolved per commit attempt, so losing the race to another
-        # evolution folds the winner's columns in instead of reverting them
-        return self._commit(batch_id, lambda: _union_schema(self.schema(), target),
-                            lambda live: live, kind="evolve")
+        # the union is over the schema each attempt lands on, so losing the
+        # race to another evolution folds the winner's columns in
+        return self._commit(batch_id, "evolve", lambda nxt: {
+            "schema": _union_schema(schema_of(nxt), target).json()})

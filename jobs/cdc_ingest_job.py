@@ -128,7 +128,7 @@ def main(argv: list[str] | None = None) -> int:
                 file=sys.stderr,
             )
     if args.final_compact:
-        compact(spark, pipe.table, batch_id="final-compact",
+        compact(spark, pipe.table, batch_id=f"final-compact-v{pipe.table.current_version()}",
                 zorder=args.compact_zorder.split(",") if args.compact_zorder else None)
 
     print(json.dumps({

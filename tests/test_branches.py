@@ -219,7 +219,7 @@ def test_fork_on_older_ledger_applies_post_fork_batch(tmp_path, ids):
     Pre-fork batches still no-op."""
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
     for b in ids:
-        t._commit(b, None, lambda live: live)
+        t._commit(b, "append", lambda nxt: {})
     v_b2 = t.current_version() - 1
     t.expire_snapshots(retain_last=2, clean_orphans=False)
     (v,) = t._ledger_versions()
@@ -230,9 +230,9 @@ def test_fork_on_older_ledger_applies_post_fork_batch(tmp_path, ids):
     with open(t._ledger_file(v), "w") as f:
         json.dump({**old.to_json(), "expired_through": led["expired_through"]}, f)
     br = t.create_branch("hf", from_version=v_b2)
-    assert br._commit(ids[2], None, lambda live: live) is True
-    assert br._commit(ids[1], None, lambda live: live) is False
-    assert br._commit(ids[0], None, lambda live: live) is False
+    assert br._commit(ids[2], "append", lambda nxt: {}) is True
+    assert br._commit(ids[1], "append", lambda nxt: {}) is False
+    assert br._commit(ids[0], "append", lambda nxt: {}) is False
 
 
 def test_merge_replay_does_not_skip_later_branch_batch(spark, tmp_path):
@@ -300,8 +300,7 @@ def test_merge_retry_folds_concurrent_schema_evolution(spark, tmp_path):
             # a concurrent committer wins the version race with a schema
             # evolution while our merge is mid-commit
             other = SnapshotTable(str(tmp_path / "t"))
-            assert other._commit("race-evolve", wide,
-                                 lambda live: live, kind="evolve") is True
+            assert other.evolve_to(wide, "race-evolve") is True
         return real_write(snap)
 
     t._write_snapshot = racing_write

@@ -262,6 +262,7 @@ def test_follower_expired_cursor_needs_resync(spark, tmp_path, caplog):
     with caplog.at_level("WARNING", logger="hierarchical_to_relational_spark.streaming.egress"):
         p = f.poll_once()
     assert p["needs_resync"] is True
+    assert p["redelivered"] == 0
     assert [r.getMessage() for r in caplog.records] == [
         f"feed resync v{p['from']}..v{p['to']}: the cursor's snapshot expired"]
 

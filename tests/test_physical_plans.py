@@ -126,3 +126,30 @@ def test_python_worker_call_sites_are_pinned():
         "multimodal.decode_and_featurize",
         "snapshot_table.SnapshotTable._attach_bloom_fold",
     }
+
+
+def test_snapshot_log_writers_are_pinned():
+    """Only the one snapshot commit (``_commit``) and the two writers with
+    no base snapshot to state a change against (``create``: v0;
+    ``create_branch``: a copy into another log) write a snapshot, so no
+    commit path can bypass the rule ``_commit`` keeps."""
+    import ast
+
+    sites = set()
+
+    def visit(node, scope):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            scope = scope + (node.name,)
+        if isinstance(node, ast.Attribute) and node.attr == "_write_snapshot":
+            sites.add(".".join(scope))
+        for child in ast.iter_child_nodes(node):
+            visit(child, scope)
+
+    pkg = Path(__file__).resolve().parents[1] / "hierarchical_to_relational_spark"
+    for path in sorted(pkg.rglob("*.py")):
+        visit(ast.parse(path.read_text()), (path.stem,))
+    assert sites == {
+        "snapshot_table.SnapshotTable._commit",
+        "snapshot_table.SnapshotTable.create",
+        "snapshot_table.SnapshotTable.create_branch",
+    }

@@ -41,7 +41,7 @@ def test_metadata_soak_2000_commits_bounded(tmp_path):
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=4)
     max_snaps = 0
     for i in range(2000):
-        committed = t._commit(str(i), SCHEMA, lambda live: live)
+        committed = t._commit(str(i), "append", lambda nxt: {})
         assert committed is True
         if (i + 1) % 100 == 0:
             t.expire_snapshots(retain_last=50, clean_orphans=False)
@@ -55,8 +55,8 @@ def test_metadata_soak_2000_commits_bounded(tmp_path):
 
     cold = SnapshotTable(t.root)
     for i in (0, 1, 999, 1500, 1999):
-        assert cold._commit(str(i), SCHEMA, lambda live: live) is False
-    assert cold._commit("2000", SCHEMA, lambda live: live) is True
+        assert cold._commit(str(i), "append", lambda nxt: {}) is False
+    assert cold._commit("2000", "append", lambda nxt: {}) is True
 
 
 def _run_stream_soak(spark, tmp_path, n_events: int, n_batches: int, expire_every: int):

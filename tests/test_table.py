@@ -701,7 +701,7 @@ def test_concurrent_expirations_merge_ledgers(tmp_path):
 
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
     for i in range(40):
-        t._commit(str(i), SCHEMA, lambda live: live)
+        t._commit(str(i), "append", lambda nxt: {})
     h1, h2 = SnapshotTable(t.root), SnapshotTable(t.root)
 
     def expire(h):
@@ -726,7 +726,7 @@ def test_expiry_ledger_floor_passes_a_tag(tmp_path):
     not stop the ledger's floor."""
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
     for i in range(30):
-        t._commit(str(i), SCHEMA, lambda live: live)
+        t._commit(str(i), "append", lambda nxt: {})
         if i == 2:
             t.tag("early")
         if i % 10 == 9:
@@ -739,7 +739,7 @@ def test_expiry_ledger_floor_passes_a_tag(tmp_path):
 def test_expire_with_nothing_to_expire_writes_no_ledger(tmp_path):
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
     for i in range(5):
-        t._commit(str(i), SCHEMA, lambda live: live)
+        t._commit(str(i), "append", lambda nxt: {})
     assert t.expire_snapshots(retain_last=10, clean_orphans=False)["expired_snapshots"] == 0
     assert t._ledger_versions() == []
     t.expire_snapshots(retain_last=2, clean_orphans=False)
@@ -754,7 +754,7 @@ def test_old_ledger_without_expired_through_still_loads(tmp_path):
     """A ledger with no ``expired_through`` mark (written before expiration
     recorded it) still counts, for the log and for a fork."""
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=2)
-    t._commit("7", SCHEMA, lambda live: live)
+    t._commit("7", "append", lambda nxt: {})
     with open(t._ledger_file(1), "w") as f:
         json.dump({"ids": ["old-batch"], "numeric_floor": 5, "expired_through": None}, f)
     cold = SnapshotTable(t.root)
@@ -766,6 +766,43 @@ def test_old_ledger_without_expired_through_still_loads(tmp_path):
     with open(cold._ledger_file(2)) as f:
         led = json.load(f)
     assert "old-batch" in led["ids"] and led["expired_through"] == 0
+
+
+def test_metadata_commit_restates_its_change_after_a_lost_race(tmp_path, monkeypatch):
+    """A commit that loses the version race states its change again on
+    the winner's snapshot: enable_index racing evolve_to, and evolve_to
+    racing enable_index, both publish the index columns AND the new
+    column. Only the merge snapshot carries inherited_ids; the commit
+    after it does not. (Pure-metadata commits — no Spark needed.)"""
+    from hierarchical_to_relational_spark.table.snapshot_table import CommittedIds
+
+    wide = T.StructType(SCHEMA.fields + [T.StructField("w", T.StringType(), True)])
+    ops = {"index": lambda h: h.enable_index(["k"], "index"),
+           "evolve": lambda h: h.evolve_to(wide, "evolve")}
+    for first, racer in (("index", "evolve"), ("evolve", "index")):
+        t = SnapshotTable.create(str(tmp_path / first), SCHEMA, n_buckets=2)
+        real_write, raced = t._write_snapshot, []
+
+        def racing_write(snap):
+            if not raced:
+                raced.append(snap["version"])
+                assert ops[racer](SnapshotTable(t.root)) is True
+            return real_write(snap)
+
+        monkeypatch.setattr(t, "_write_snapshot", racing_write)
+        assert ops[first](t) is True
+        assert raced == [1]
+        assert [h["batch_id"] for h in t.history()] == ["__create__", racer, first]
+        assert t.index_cols == ["k"]
+        assert [f.name for f in t.schema().fields] == ["k", "v", "w"]
+
+    t = SnapshotTable.create(str(tmp_path / "merged"), SCHEMA, n_buckets=2)
+    br = t.create_branch("exp")
+    assert br._commit("br-1", "append", lambda nxt: {}) is True
+    assert t.merge_branch("exp", "m1") is True
+    assert "br-1" in CommittedIds.from_json(t.snapshot()["inherited_ids"])
+    assert t._commit("after-merge", "append", lambda nxt: {}) is True
+    assert "inherited_ids" not in t.snapshot()
 
 
 def test_rollback_protects_rereferenced_dirs_from_orphan_gc(spark, tmp_path):
